@@ -15,6 +15,7 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from .manifest import (
@@ -23,7 +24,7 @@ from .manifest import (
     fsync_file_and_dir as _fsync_file_and_dir,
     offset_bounds_from_footer,
 )
-from .stream import Stream
+from .stream import _SEGMENT_SCHEMA, Stream, read_segment
 
 # Reference thresholds, src/segment.ts:61-65.
 MAX_SEGMENTS = 10
@@ -120,12 +121,15 @@ def compact(
     # care about the extension.
     name = f"{epoch:016d}-{uuid.uuid4().hex}.compacted"
     dst = os.path.join(stream.segments_dir, name)
-    tables = [
-        pq.read_table(os.path.join(stream.segments_dir, s.name)) for s in window
-    ]
-    import pyarrow as pa
-
-    merged = pa.concat_tables(tables)
+    # Point segments and produce_bulk parts differ in nullability and
+    # ts time zone; cast every window segment to the point schema so
+    # a mixed window concatenates (and the output has one schema).
+    merged = pa.concat_tables(
+        [
+            read_segment(os.path.join(stream.segments_dir, s.name)).cast(_SEGMENT_SCHEMA)
+            for s in window
+        ]
+    )
     pq.write_table(merged, dst, compression="zstd")
     _fsync_file_and_dir(dst)  # same invariant as Stream._write_segment:
     # the manifest must never reference bytes that didn't hit disk

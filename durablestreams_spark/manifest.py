@@ -23,6 +23,20 @@ rows ≈ a few tens of MB of JSON: driver-side folding stays cheap, and
 `checkpoint` commits (full-state snapshots, written every
 ``CHECKPOINT_INTERVAL`` commits) bound recovery to O(1) reads + the
 tail of the log, the same trick Delta/Iceberg use.
+
+Refresh contract: a handle that already holds a fold catches up by
+reading only the commits after it (``load(base=...)``).  That is sound
+because commit files are immutable once linked and their versions are
+contiguous (commit ``v + 1`` can only be linked on top of a fold at
+``v``), so the new commits are exactly ``base.version + 1, + 2, ...``
+up to the first missing file.  The one thing it cannot see is a stream
+destroyed and recreated under the same name by another handle, whose
+version numbers start over.  Every fold therefore carries a stamp, the
+``(st_ino, st_mtime_ns)`` of the last manifest file it read, and the
+incremental path runs only while that file still carries that stamp.
+A fold with no stamp, a stamp that no longer matches (the file was
+removed or replaced), and ``as_of`` reads all take the full fold:
+newest readable checkpoint plus the commits after it.
 """
 
 from __future__ import annotations
@@ -30,7 +44,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field, asdict, replace
 
 CHECKPOINT_INTERVAL = 50
 MANIFEST_DIR = "_manifest"
@@ -80,6 +94,12 @@ def offset_bounds_from_footer(md, label: str = "segment"):
         last = hi if last is None or hi > last else last
         n += md.row_group(rg).num_rows
     return first, last, n
+
+
+def _stamp(path: str, f) -> tuple[str, int, int]:
+    """Stamp of the manifest file ``path``, open as ``f``."""
+    s = os.fstat(f.fileno())
+    return path, s.st_ino, s.st_mtime_ns
 
 
 class CommitConflict(Exception):
@@ -141,6 +161,19 @@ class StreamState:
     # (Delta txnAppId/txnVersion analog; generalizes the reference's
     # producer fencing token to exactly-once foreachBatch replay).
     txns: dict[str, int] = field(default_factory=dict)
+    # (path, st_ino, st_mtime_ns) of the last manifest file this fold
+    # read or wrote; None = not stamped, the next refresh refolds.
+    stamp: tuple[str, int, int] | None = field(default=None, compare=False, repr=False)
+
+    def copy(self) -> "StreamState":
+        """A copy whose containers can be changed without touching
+        this state, which other threads may be reading."""
+        return replace(
+            self,
+            active=dict(self.active),
+            tombstones=dict(self.tombstones),
+            txns=dict(self.txns),
+        )
 
     def active_sorted(self) -> list[SegmentMeta]:
         """Active segments in offset order (ranges are disjoint, so
@@ -210,10 +243,17 @@ class Manifest:
         out.sort()
         return out
 
-    def load(self, as_of: int | None = None) -> StreamState:
+    def load(
+        self, as_of: int | None = None, base: StreamState | None = None
+    ) -> StreamState:
         """Fold the log into a StreamState (recovery path — the analogue
         of the reference's ``buildIndexFromStorage``,
         ``src/stream_manager.ts:503-511``).
+
+        ``base`` is the caller's last fold: when its stamp still
+        matches, only the commits after it are read and applied to a
+        copy (``base`` itself is never changed); otherwise, and with
+        ``as_of``, the whole log is folded (module docstring).
 
         ``as_of`` replays only commits with version <= as_of — VERSION
         AS OF time travel.  Validity window: an old version's segments
@@ -223,6 +263,8 @@ class Manifest:
         ValueError (the Delta VERSION AS OF contract): silently
         serving the nearest snapshot would turn a typo'd version into
         a read of the wrong data."""
+        if as_of is None and base is not None and self._stamp_holds(base):
+            return self._advance(base)
         entries = self._entries()
         if as_of is not None:
             known = {v for v, kind, _p in entries if kind == "commit"}
@@ -255,6 +297,7 @@ class Manifest:
             try:
                 with open(path) as f:
                     st = StreamState.from_json(ver, json.load(f))
+                    st.stamp = _stamp(path, f)
                 start = i + 1
                 break
             except (ValueError, KeyError, TypeError, OSError):
@@ -266,8 +309,38 @@ class Manifest:
                 continue
             with open(path) as f:
                 self._apply(st, json.load(f))
+                st.stamp = _stamp(path, f)
             st.version = ver
         return st
+
+    @staticmethod
+    def _stamp_holds(st: StreamState) -> bool:
+        if st.stamp is None:
+            return False
+        path, ino, mtime_ns = st.stamp
+        try:
+            s = os.stat(path)
+        except OSError:
+            return False
+        return (s.st_ino, s.st_mtime_ns) == (ino, mtime_ns)
+
+    def _advance(self, base: StreamState) -> StreamState:
+        """``base`` plus the commits linked after it: open
+        ``base.version + 1``, ``+ 2``, ... until one does not exist."""
+        st = base
+        while True:
+            ver = st.version + 1
+            path = self._commit_path(ver)
+            try:
+                with open(path) as f:
+                    actions = json.load(f)
+                    stamp = _stamp(path, f)
+            except FileNotFoundError:
+                return st
+            if st is base:
+                st = base.copy()
+            self._apply(st, actions)
+            st.version, st.stamp = ver, stamp
 
     @staticmethod
     def _apply(st: StreamState, actions: dict) -> None:
@@ -313,13 +386,15 @@ class Manifest:
         """
         os.makedirs(self.dir, exist_ok=True)
         version = base.version + 1
-        dst = os.path.join(self.dir, f"{version:0{VERSION_DIGITS}d}.json")
+        dst = self._commit_path(version)
         fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".tmp")
         try:
             with os.fdopen(fd, "w") as f:
                 json.dump(actions, f, separators=(",", ":"))
                 f.flush()
                 os.fsync(f.fileno())
+                # dst will be a second link to this inode: same stamp
+                stamp = _stamp(dst, f)
             try:
                 os.link(tmp, dst)  # put-if-absent: the commit point
             except FileExistsError:
@@ -329,15 +404,9 @@ class Manifest:
             self._fsync_dir()
         finally:
             os.unlink(tmp)
-        new = StreamState(
-            version=version,
-            producer_version=base.producer_version,
-            last_epoch_ms=base.last_epoch_ms,
-            active=dict(base.active),
-            tombstones=dict(base.tombstones),
-            txns=dict(base.txns),
-        )
+        new = base.copy()
         self._apply(new, actions)
+        new.version, new.stamp = version, stamp
         if version > 0 and version % CHECKPOINT_INTERVAL == 0:
             # Checkpoints are DERIVED data: the commit above is already
             # durably published (link + dir fsync), so a checkpoint
@@ -350,6 +419,9 @@ class Manifest:
             except OSError:
                 pass
         return new
+
+    def _commit_path(self, version: int) -> str:
+        return os.path.join(self.dir, f"{version:0{VERSION_DIGITS}d}.json")
 
     def _fsync_dir(self) -> None:
         dfd = os.open(self.dir, os.O_RDONLY)

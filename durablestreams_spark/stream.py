@@ -10,6 +10,11 @@ The public contract replicates the reference's API semantics
   (exclusive start, ``src/stream_manager.ts:358``), in offset order,
   crossing segment boundaries until ``limit`` is reached
   (``src/stream_manager.ts:376-379``). ``offset="-"`` = beginning.
+  The reference serves it as a ``lowerBound`` seek to the first
+  segment plus a slice inside it that skips lines at or before the
+  offset (``src/stream_manager.ts:356-362``); here manifest pruning is
+  the first half and a binary search over the segment's sorted
+  ``offset`` column the second, so only the returned rows are decoded.
 - ``tail(limit, timeout_sec)`` → long-poll for records produced after
   the call (``src/stream_manager.ts:295-326``).
 - ``destroy()`` → drop everything; the same name can be recreated
@@ -40,6 +45,7 @@ time.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import random
@@ -76,6 +82,15 @@ _SEGMENT_SCHEMA = pa.schema(
         pa.field("data", pa.string(), nullable=False),
     ]
 )
+
+
+def read_segment(path: str, columns: list[str] | None = None) -> pa.Table:
+    """One segment file as an Arrow table.  ``ParquetFile`` opens just
+    this file, where ``pq.read_table`` builds a dataset around it on
+    every call.  Point segments are written with ``_SEGMENT_SCHEMA``;
+    ``produce_bulk`` parts come from Spark (nullable columns, ``ts``
+    in UTC), so callers that need one schema cast to it."""
+    return pq.ParquetFile(path).read(columns=columns)
 
 
 @dataclass(frozen=True)
@@ -116,10 +131,12 @@ class Stream:
         return self._state
 
     def refresh(self) -> StreamState:
-        """Re-fold the manifest (cross-process recovery, reference
-        ``ensureSetup``/``buildIndexFromStorage``,
-        ``src/stream_manager.ts:130-179``)."""
-        self._state = self.manifest.load()
+        """Bring the folded state up to date with the manifest on disk
+        (cross-process recovery, reference ``ensureSetup``/
+        ``buildIndexFromStorage``, ``src/stream_manager.ts:130-179``).
+        Only commits newer than the cached fold are read; see
+        ``Manifest.load`` for when it falls back to a full fold."""
+        self._state = self.manifest.load(base=self._state)
         return self._state
 
     def _commit(self, actions: dict, guard=None) -> StreamState:
@@ -141,7 +158,7 @@ class Stream:
                 self._state = self.manifest.commit(actions, base)
                 return self._state
             except CommitConflict:
-                self._state = None  # lost the race: refold and retry
+                self.refresh()  # lost the race: catch up and retry
                 time.sleep(delay * (0.5 + random.random()))
                 delay = min(delay * 2, 0.05)
         raise CommitConflict(f"manifest contention on stream {self.name}")
@@ -188,7 +205,7 @@ class Stream:
         for attempt in range(32):
             if attempt:  # jittered backoff breaks producer livelock
                 time.sleep(random.uniform(0, 0.002 * attempt))
-                self._state = None  # refold — our fold is known-stale
+                self.refresh()  # our fold is known-stale
             state = self._load()
             if txn is not None and state.txns.get(str(txn[0]), -1) >= txn[1]:
                 # Replay detection: this (app, batch) is already durably
@@ -296,30 +313,42 @@ class Stream:
     # -- consume ----------------------------------------------------------
 
     def consume(self, offset: str = BEGINNING, limit: int = 10) -> list[Record]:
-        """Scan records strictly after ``offset``, up to ``limit``."""
+        """Scan records strictly after ``offset``, up to ``limit``.
+
+        Seek, then slice, as the reference does with its RB-tree
+        ``lowerBound`` and the in-segment line slice
+        (``src/stream_manager.ts:356-362``): manifest pruning skips
+        every segment whose range ends at or before ``offset``; inside
+        the first segment read, offsets are sorted, so the rows at or
+        before ``offset`` are a prefix whose end a binary search finds.
+        Only the rows returned are converted to Python and parsed."""
         state = self._load()
         start = "" if offset == BEGINNING else offset
         if start:
             parse_offset(start)  # validate
         out: list[Record] = []
-        # Manifest pruning replaces the reference's tree lowerBound:
-        # only segments whose range can contain rows > start are read.
         for seg in state.active_sorted():
-            if len(out) >= limit:
+            want = limit - len(out)
+            if want <= 0:
                 break
             if start and seg.last_offset <= start:
                 continue
-            table = pq.read_table(
-                os.path.join(self.segments_dir, seg.name), columns=["offset", "data"]
+            table = read_segment(
+                os.path.join(self.segments_dir, seg.name), ["offset", "data"]
             )
-            offs = table.column("offset").to_pylist()
-            datas = table.column("data").to_pylist()
-            for o, d in zip(offs, datas):
-                if start and o <= start:  # exclusive start
-                    continue
-                out.append(Record(offset=o, data=json.loads(d)))
-                if len(out) >= limit:
-                    break
+            skip = 0
+            if start and seg.first_offset <= start:  # exclusive start
+                offs = table.column("offset")
+                skip = bisect.bisect_right(
+                    range(table.num_rows), start, key=lambda i: offs[i].as_py()
+                )
+            page = table.slice(skip, want)
+            out.extend(
+                Record(offset=o, data=json.loads(d))
+                for o, d in zip(
+                    page.column("offset").to_pylist(), page.column("data").to_pylist()
+                )
+            )
         return out
 
     def consume_since(self, epoch_ms: int, limit: int = 10) -> list[Record]:

@@ -187,6 +187,33 @@ def test_concurrent_compactors_never_double_swap(catalog):
     assert [r.data["v"] for r in s1.consume("-", 10)] == [0, 1, 2]
 
 
+def test_compact_mixed_point_and_bulk_window(catalog, spark):
+    """A window holding both point segments (non-null columns, naive
+    ts) and produce_bulk parts (nullable, ts in UTC) merges into one
+    segment with the point schema, every record once and in order."""
+    import pyarrow.parquet as _pq
+
+    from durablestreams_spark.ingest import produce_bulk
+    from durablestreams_spark.stream import _SEGMENT_SCHEMA
+
+    s = catalog.stream(uuid.uuid4().hex)
+    s.produce([{"v": i} for i in range(3)])
+    df = spark.createDataFrame([(i, i) for i in range(3, 23)], "k long, v long")
+    produce_bulk(s, df, order_by=["k"], batch_records=10)
+    s.produce([{"v": 23}])
+    before = s.consume("-", limit=100)
+    window = s.refresh().active_sorted()
+    assert any(g.name.startswith("bulk-") for g in window)
+
+    merged = compact(s)
+    assert merged is not None and merged.records == 24
+    assert list(s.refresh().active) == [merged.name]
+    out = _pq.read_table(os.path.join(s.segments_dir, merged.name))
+    assert out.schema.equals(_SEGMENT_SCHEMA)
+    assert s.consume("-", limit=100) == before
+    assert [r.data["v"] for r in before] == list(range(24))
+
+
 def test_compact_by_key_keeps_latest_and_null_keys(spark, tmp_path):
     """Kafka compacted-topic semantics: one survivor per key (highest
     offset), keyless records always retained at their original

@@ -102,3 +102,49 @@ def test_checkpoint_bounds_recovery_reads(tmp_path):
     st = man.load()
     # every tail commit applied exactly once on top of the checkpoint
     assert len(st.active) == N_SEGMENTS + CHECKPOINT_INTERVAL - 1
+
+
+def test_refresh_of_a_vacuumed_log_reads_only_new_commits(tmp_path, monkeypatch):
+    """A fold of the vacuumed log (no commit 0, no commit at the
+    checkpoint version) catches up on three new commits by opening
+    exactly those three files: no listing, no checkpoint parse."""
+    import durablestreams_spark.manifest as manifest_mod
+
+    man = _build_big_manifest(str(tmp_path / "s"))
+    held = man.load()
+    writer = Manifest(man.stream_dir)
+    st = writer.load()
+    new_paths = []
+    for k in range(3):
+        idx = st.version
+        add = SegmentMeta(
+            name=f"new-{k}.parquet",
+            first_offset=_offset(idx * ROWS_PER_SEG),
+            last_offset=_offset((idx + 1) * ROWS_PER_SEG - 1),
+            created_ms=1_800_000_000_000 + k,
+            records=ROWS_PER_SEG,
+            bytes=1 << 30,
+        )
+        st = writer.commit({"add": [add.to_json()]}, st)
+        new_paths.append(os.path.join(man.dir, f"{st.version:020d}.json"))
+
+    opened, missing = [], []
+
+    def counting_open(path, *a, **kw):
+        try:
+            f = open(path, *a, **kw)
+        except FileNotFoundError:
+            missing.append(path)
+            raise
+        opened.append(path)
+        return f
+
+    monkeypatch.setattr(manifest_mod, "open", counting_open, raising=False)
+    caught_up = man.load(base=held)
+    monkeypatch.undo()
+
+    assert opened == new_paths
+    assert len(missing) <= 1  # the probe for the next, unwritten version
+    fresh = Manifest(man.stream_dir).load()
+    assert caught_up.version == fresh.version == held.version + 3
+    assert caught_up.to_json() == fresh.to_json()
