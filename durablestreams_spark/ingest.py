@@ -15,7 +15,8 @@ single-partition sort:
 2. per-partition ``row_number`` over ``Window.partitionBy(pid)`` —
    parallel, no skew beyond the range partitioner's;
 3. partition row-counts (a tiny agg) → driver-side prefix sums →
-   broadcast-joined back to turn local row numbers into global ones.
+   a literal partition→prefix map that turns local row numbers into
+   global ones.
 
 That is the textbook distributed zip-with-index; the only global
 barrier is the O(partitions) count collect.  Records land in segment
@@ -26,8 +27,6 @@ ONE manifest commit (group commit taken to its logical extreme).
 from __future__ import annotations
 
 import os
-import sys
-import time
 import uuid
 
 import pyarrow.parquet as pq
@@ -74,17 +73,18 @@ def assign_offsets(
     for p in sorted(sizes):
         prefix[p] = acc
         acc += sizes[p]
-    pref_df = df.sparkSession.createDataFrame(
-        [(p, n) for p, n in prefix.items()], "__pid int, __prefix long"
-    )
-    rn = (F.col("__prefix") + F.col("__local")).alias("__rn")
+    # The prefix table is O(partitions): a literal map lookup, not a
+    # join (a broadcast of a driver-side DataFrame costs its own job).
+    prefix_of = F.create_map(
+        *[F.lit(x) for p, n in prefix.items() for x in (p, n)]
+    ).cast("map<int,bigint>")
+    rn = (prefix_of[F.col("__pid")] + F.col("__local")).alias("__rn")
     epoch = (F.lit(base_epoch) + (F.col("__rn") / batch_records).cast("long")).alias(
         "__epoch"
     )
     counter = (F.col("__rn") % batch_records).alias("__counter")
     out = (
-        with_local.join(F.broadcast(pref_df), "__pid")
-        .select("*", rn)
+        with_local.select("*", rn)
         .select("*", epoch, counter)
         .withColumn(
             "offset",
@@ -95,7 +95,7 @@ def assign_offsets(
         )
         .withColumn("ts", F.timestamp_millis(F.col("__epoch")))
         .withColumn("batch", F.col("__epoch"))
-        .drop("__pid", "__local", "__rn", "__epoch", "__counter", "__prefix")
+        .drop("__pid", "__local", "__rn", "__epoch", "__counter")
     )
     # Hand the persisted intermediate + total row count to the caller
     # (unpersist-after-write; file-count planning without a second scan).
@@ -154,15 +154,6 @@ def produce_bulk(
     write, never a dynamic ``partitionBy`` (measured 3-10× slower and
     high-variance for many small partitions).
     """
-    trace = os.environ.get("DS_TIMING")
-
-    def _t(label: str, t0: float) -> float:
-        t1 = time.perf_counter()
-        if trace:
-            print(f"## produce_bulk {label}: {t1 - t0:.2f}s", file=sys.stderr)
-        return t1
-
-    t0 = time.perf_counter()
     state = stream.refresh()
     if txn is not None and state.txns.get(str(txn[0]), -1) >= txn[1]:
         # Replay detection (Delta txnAppId/txnVersion): this (app,
@@ -176,13 +167,12 @@ def produce_bulk(
         F.struct(*[F.col(c) for c in (payload_cols or df.columns)])
     ).alias("data")
     with_offsets = assign_offsets(df, order_by, batch_records, base_epoch)
-    t0 = _t("assign", t0)
     assigned = with_offsets.select("offset", "ts", payload)
     total = with_offsets._ds_total  # type: ignore[attr-defined]
     max_records_per_file = 0
     if segment_rows is None:
-        # Partition-contiguous fast path: broadcast-join + projections
-        # preserved assign_offsets' range partitioning, so offsets are
+        # Partition-contiguous fast path: projections preserved
+        # assign_offsets' range partitioning, so offsets are
         # contiguous per partition — local sort, no second shuffle.
         writer_df = assigned.sortWithinPartitions("offset")
     else:
@@ -242,7 +232,7 @@ def produce_bulk(
     try:
         return _finish_bulk(
             stream, writer_df, with_offsets, out, marker, state, base_epoch,
-            txn, _t, t0, max_records_per_file,
+            txn, max_records_per_file,
         )
     finally:
         # EVERY exit — including a failed write or a metadata-scan
@@ -256,7 +246,7 @@ def produce_bulk(
 
 
 def _finish_bulk(
-    stream, writer_df, with_offsets, out, marker, state, base_epoch, txn, _t, t0,
+    stream, writer_df, with_offsets, out, marker, state, base_epoch, txn,
     max_records_per_file=0,
 ):
     try:
@@ -264,7 +254,6 @@ def _finish_bulk(
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", max_records_per_file)
         w.parquet(out)
-        t0 = _t("write", t0)
     finally:
         with_offsets._ds_persisted.unpersist()  # type: ignore[attr-defined]
     # Refresh the marker after the write lands: the fsync+metadata scan
@@ -348,7 +337,6 @@ def _finish_bulk(
             )
         )
     metas.sort(key=lambda m: m.first_offset)
-    t0 = _t("fsync+scan", t0)
     last_epoch = int(metas[-1].last_offset[:16]) if metas else state.last_epoch_ms
     actions = {
         "add": [m.to_json() for m in metas],

@@ -36,6 +36,23 @@ def get_spark(app_name: str = "durablestreams_spark", shuffle_partitions: int | 
         # Segment files are read by both Spark and pyarrow (compaction
         # concatenates across writers) — pin µs int64 so schemas agree.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # Streaming checkpoint metadata (offset/commit logs, state
+        # files) goes through the FileSystem API, not the default
+        # FileContext one.  On a JVM without the native Hadoop library
+        # the FileContext manager forks `readlink`/`chmod` child
+        # processes for every temp-file create and rename, so a trigger
+        # that does nothing still forked ~60 processes: `walCommit`
+        # 30 ms and `commitOffsets` 32 ms of a 157 ms trigger at a
+        # 10-files/s source (4-core VM).  Through FileSystem: 13 forks,
+        # 8 + 9 ms, 83 ms per trigger.  Both managers write a temp file
+        # and rename it; the rename is atomic on local FS and HDFS, and
+        # neither is on object stores.  This applies to every
+        # streaming query the engine starts.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # Long sessions compile one generated class per codegen stage;
         # the JVM default code cache (240 MB) fills after a few hundred

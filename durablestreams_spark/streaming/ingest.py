@@ -8,6 +8,16 @@ a Structured Streaming micro-batch IS that group commit (SURVEY.md
 ``foreachBatch`` is the flush function, and one manifest commit per
 batch is the durability/ack point.
 
+A flush pays for what the batch holds, not for fixed scheduling: its
+first Spark action is ONE bounded probe — a single task that reads at
+most ``SMALL_BATCH_ROWS + 1`` rows, sorts them and ships them as JSON.
+That probe is both the point/bulk decision and, for the common small
+batch, the whole data read, so the point path runs exactly one Spark
+job and needs no ``persist`` (nothing reads the batch twice).  Only a
+batch too big for the point path is read again, by ``produce_bulk``;
+re-reading a micro-batch is safe because exactly-once already requires
+a replayable source (a restart replays the same batch from it).
+
 Exactly-once across failures: Structured Streaming replays an
 unacknowledged micro-batch after restart, so the flush must be
 idempotent.  Each commit records ``(app_id → batch_id)`` in the
@@ -25,12 +35,14 @@ import json
 from pyspark.sql import DataFrame
 
 from ..ingest import produce_bulk
+from ..manifest import CommitConflict
 from ..stream import Stream
 
 #: Below this row count the flush is a driver-side point produce (one
-#: small file, no Spark job) — the same observation as SURVEY.md §2.1
-#: #7: launching a distributed write for a 200 ms trickle batch is the
-#: wrong physical plan.  Above it, the distributed bulk path takes over.
+#: small file, one single-task Spark job) — the same observation as
+#: SURVEY.md §2.1 #7: launching a distributed write for a 200 ms
+#: trickle batch is the wrong physical plan.  Above it, the
+#: distributed bulk path takes over.
 SMALL_BATCH_ROWS = 10_000
 
 
@@ -43,59 +55,59 @@ def flush_batch(
 ) -> bool:
     """Commit one micro-batch; returns False if it was a replay (skip).
 
-    Small batches collect to the driver and go through the point
-    ``produce`` (one segment per flush, like the reference's alarm);
-    large batches go through the distributed ``produce_bulk``.
+    One bounded probe decides the path and fetches a small batch in the
+    same single-task job: ``coalesce(1).limit(SMALL_BATCH_ROWS + 1)``,
+    sorted within that one partition by ``order_by`` (ascending, NULLS
+    FIRST — the order a global ``orderBy`` gives), then ``toJSON``
+    (payload serialization stays on the Spark side: timestamps,
+    nesting).  No row count, cache or range shuffle runs first.
+
+    - 0 rows: a txn-only commit advances the watermark;
+    - up to ``SMALL_BATCH_ROWS`` rows: the probe's rows ARE the batch,
+      written by one point ``produce`` (one segment per flush, like the
+      reference's alarm) — no ``persist``, since nothing reads the
+      batch again;
+    - more: the distributed ``produce_bulk``, which reads the batch a
+      second time (safe: the source is replayable, as exactly-once
+      requires) under a ``persist`` so its own jobs share one read.
     """
     state = stream.refresh()
     if state.txns.get(app_id, -1) >= batch_id:
         return False  # replayed batch — already durable, ack and move on
-    # Strategy decision must NOT ship rows to the driver: a count() is
-    # O(1) result size regardless of batch width, and the persist
-    # ensures the decision scan is reused by whichever flush path runs
-    # (rows stay in executors until the point-produce path — which
-    # needs them driver-side by design — pulls its <=10k rows).
-    batch_df.persist()
-    try:
-        n = batch_df.count()
-        if n == 0:
-            # Guarded like the data paths: a concurrent replayer that
-            # already advanced the watermark past batch_id must not
-            # regress it (the guard aborts; _apply's max-merge is the
-            # second line of defense).  Watermark already there ⇒ this
-            # was a replay: ack-and-skip, same as the pre-check above.
-            from ..manifest import CommitConflict
-
-            try:
-                stream._commit(
-                    {"txn": {"app": app_id, "batch": batch_id}},
-                    guard=lambda st: st.txns.get(app_id, -1) < batch_id,
-                )
-            except CommitConflict:
-                if stream.refresh().txns.get(app_id, -1) >= batch_id:
-                    return False  # replay — already durable
-                raise
-        elif n <= SMALL_BATCH_ROWS:
-            # toJSON keeps payload serialization on the Spark side
-            # (timestamps, nesting).  The sort runs ONLY here: on the
-            # collect path row order determines offsets; the bulk path
-            # below re-sorts inside assign_offsets anyway, so a global
-            # orderBy before the size decision would be a wasted
-            # range-shuffle of every large batch.
-            small = batch_df.orderBy(*order_by) if order_by else batch_df
-            stream.produce(
-                [json.loads(s) for s in small.toJSON().collect()],
-                txn=(app_id, batch_id),
+    probe = batch_df.coalesce(1).limit(SMALL_BATCH_ROWS + 1)
+    if order_by:
+        probe = probe.sortWithinPartitions(*order_by)
+    rows = probe.toJSON().collect()
+    if not rows:
+        # Guarded like the data paths: a concurrent replayer that
+        # already advanced the watermark past batch_id must not
+        # regress it (the guard aborts; _apply's max-merge is the
+        # second line of defense).  Watermark already there ⇒ this
+        # was a replay: ack-and-skip, same as the pre-check above.
+        try:
+            stream._commit(
+                {"txn": {"app": app_id, "batch": batch_id}},
+                guard=lambda st: st.txns.get(app_id, -1) < batch_id,
             )
-        else:
+        except CommitConflict:
+            if stream.refresh().txns.get(app_id, -1) >= batch_id:
+                return False  # replay — already durable
+            raise
+    elif len(rows) <= SMALL_BATCH_ROWS:
+        stream.produce([json.loads(r) for r in rows], txn=(app_id, batch_id))
+    else:
+        # assign_offsets re-sorts by order_by itself, so the bulk path
+        # takes the batch unsorted.
+        batch_df.persist()
+        try:
             produce_bulk(
                 stream,
                 batch_df,
                 order_by=order_by or batch_df.columns[:1],
                 txn=(app_id, batch_id),
             )
-    finally:
-        batch_df.unpersist()
+        finally:
+            batch_df.unpersist()
     return True
 
 

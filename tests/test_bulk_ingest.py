@@ -36,6 +36,19 @@ def test_bulk_offsets_equal_serial_point_produce(spark, catalog, n, batch):
     assert got == want and len(got) == n
 
 
+def test_bulk_of_empty_input_commits_no_segment(spark, catalog):
+    """An empty DataFrame has no partition prefix sums: the write
+    commits nothing and leaves the stream's clock where it was."""
+    stream = catalog.stream("bulk_empty")
+    stream.produce([{"i": 0}])
+    before = stream.refresh()
+    empty = spark.createDataFrame([], "i long, k string")
+    assert produce_bulk(stream, empty, order_by=["i"]) == 0
+    after = stream.refresh()
+    assert list(after.active) == list(before.active)
+    assert after.last_epoch_ms == before.last_epoch_ms
+
+
 @settings(
     max_examples=8,
     deadline=None,

@@ -89,6 +89,156 @@ def test_ingest_exactly_once_replay(spark, catalog, tmp_path):
     assert len(stream.consume("-", limit=100)) == 6
 
 
+@pytest.mark.parametrize(
+    "order_by", [["k", "sub"], ["k", "sub", "event_id"]], ids=["ties", "total"]
+)
+def test_flush_batch_order_matches_order_by(spark, catalog, order_by):
+    """Point-path offsets follow ``orderBy(*order_by)`` — ascending,
+    NULLS FIRST — even though the batch arrives in 4 partitions."""
+    from durablestreams_spark.streaming.ingest import flush_batch
+
+    # k and sub hold NULLs and ties; event_id is unique
+    rows = [
+        (i, None if i % 7 == 0 else (i * 13) % 5, None if i % 4 == 0 else i % 3)
+        for i in range(300)
+    ]
+    batch = spark.createDataFrame(
+        rows, "event_id long, k long, sub long"
+    ).repartition(4)
+    stream = catalog.stream("ordered")
+    assert flush_batch(stream, batch, 0, "app", order_by) is True
+
+    got = [r.data for r in stream.consume("-", limit=1000)]
+    ref = [json.loads(s) for s in batch.orderBy(*order_by).toJSON().collect()]
+
+    def keys(records):
+        return [tuple(d.get(c) for c in order_by) for d in records]
+
+    # Rows tied on every order_by key have no defined relative order.
+    assert keys(got) == keys(ref)
+    assert sorted(d["event_id"] for d in got) == list(range(300))
+    if "event_id" in order_by:
+        assert got == ref
+
+
+def test_flush_batch_path_boundary(spark, catalog, monkeypatch):
+    """SMALL_BATCH_ROWS rows take the point path (one segment), one
+    more row takes produce_bulk; both are exactly-once with strictly
+    increasing offsets."""
+    from durablestreams_spark.streaming import ingest as s_ingest
+
+    monkeypatch.setattr(s_ingest, "SMALL_BATCH_ROWS", 50)
+    bulk_calls = []
+    real_bulk = s_ingest.produce_bulk
+
+    def spy(*args, **kwargs):
+        bulk_calls.append(kwargs["txn"])
+        return real_bulk(*args, **kwargs)
+
+    monkeypatch.setattr(s_ingest, "produce_bulk", spy)
+
+    def batch(first, n):
+        return spark.range(first, first + n).selectExpr(
+            "id AS event_id", "id % 3 AS user_id"
+        ).repartition(3)
+
+    stream = catalog.stream("boundary")
+    assert s_ingest.flush_batch(stream, batch(0, 50), 0, "app", ["event_id"])
+    assert bulk_calls == [] and len(stream.refresh().active) == 1
+    assert s_ingest.flush_batch(stream, batch(50, 51), 1, "app", ["event_id"])
+    assert bulk_calls == [("app", 1)]
+
+    # replays of either batch are acked without writing
+    assert s_ingest.flush_batch(stream, batch(0, 50), 0, "app", ["event_id"]) is False
+    assert s_ingest.flush_batch(stream, batch(50, 51), 1, "app", ["event_id"]) is False
+    assert bulk_calls == [("app", 1)]
+
+    recs = stream.consume("-", limit=1000)
+    offsets = [r.offset for r in recs]
+    assert all(a < b for a, b in zip(offsets, offsets[1:]))
+    assert [r.data["event_id"] for r in recs] == list(range(101))
+
+
+def test_flush_batch_empty_batch_advances_watermark(spark, catalog):
+    """An empty micro-batch commits only its txn watermark; replaying
+    it is a no-op."""
+    from durablestreams_spark.streaming.ingest import flush_batch
+
+    empty = spark.createDataFrame([], "event_id long, value double")
+    stream = catalog.stream("empty")
+    assert flush_batch(stream, empty, 4, "app", ["event_id"]) is True
+    state = stream.refresh()
+    assert state.txns["app"] == 4 and not state.active
+    assert flush_batch(stream, empty, 4, "app", ["event_id"]) is False
+    assert stream.refresh().version == state.version
+
+
+def test_flush_batch_point_path_is_one_job(spark, catalog, tmp_path):
+    """A point-path flush is one bounded Spark job: the probe that
+    decides the path also fetches the rows.  Counted per job group."""
+    from durablestreams_spark.streaming.ingest import flush_batch
+
+    src = str(tmp_path / "src")
+    total = _write_json_files(src, n_files=3, rows_per_file=100)
+    batch = spark.read.schema(EVENTS_SCHEMA).json(src)
+    stream = catalog.stream("one_job")
+    sc = spark.sparkContext
+    sc.setJobGroup("flush-one-job", "point-path flush")
+    try:
+        assert flush_batch(stream, batch, 0, "app", ["event_id"]) is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("flush-one-job")) == 1
+    assert len(stream.consume("-", limit=1000)) == total
+
+
+def test_ingest_restart_on_filesystem_checkpoint(spark, catalog, tmp_path):
+    """Checkpoints are written through the FileSystem-based manager; a
+    restart on the same checkpoint dir picks up only the new file, and
+    no temp file is left behind."""
+    from durablestreams_spark.streaming import start_ingest
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    stream = catalog.stream("restarted")
+
+    def drain():
+        source = (
+            spark.readStream.schema(EVENTS_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+        )
+        q = start_ingest(
+            stream, source, ckpt, "restart", order_by=["event_id"],
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    _write_json_files(src, n_files=2)
+    for k in range(2):  # the source takes files in mtime order
+        os.utime(os.path.join(src, f"f{k}.json"), (time.time() - 10 + k,) * 2)
+    drain()
+    with open(os.path.join(src, "f2.json"), "w") as f:
+        for eid in range(10, 15):
+            f.write(json.dumps({"event_id": eid, "user_id": 0, "value": 0.0}) + "\n")
+    drain()
+
+    assert len(stream.refresh().active) == 3
+    assert [r.data["event_id"] for r in stream.consume("-", limit=100)] == list(range(15))
+    leftovers = [
+        os.path.join(d, fn)
+        for d, _dirs, files in os.walk(ckpt)
+        for fn in files
+        if ".tmp" in fn
+    ]
+    assert leftovers == []
+
+
 def test_tail_receives_concurrent_produce(spark, catalog, tmp_path):
     """Streaming tail delivers records produced after it starts
     (reference long-poll e2e, tests/index.test.ts:130-163)."""
