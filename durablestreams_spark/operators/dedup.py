@@ -879,7 +879,6 @@ def _loose_parts(spark, sf_dir):
     with_norm = _spread(emb).select(
         "vec_id",
         "emb",
-        # r16: unrolled codegen sum-of-squares (see _tight_corpus)
         F.sqrt(_sim_dot("emb", "emb")).alias("norm"),
     )
     # Candidate phase: 16-bit SRP signature, split into bands, pair up
@@ -1178,9 +1177,6 @@ def _tight_corpus(spark, sf_dir, mod: int):
     return u.select(
         "vec_id",
         "emb",
-        # r16: unrolled codegen sum-of-squares — same op sequence as
-        # the interpreted ``s + x * x`` fold (each term is
-        # emb[j] * emb[j], accumulated in ascending j from 0.0).
         F.sqrt(_sim_dot("emb", "emb")).alias("norm"),
     )
 
@@ -1237,14 +1233,11 @@ def _tight_verify(with_norm, cand):
         F.col("emb").alias("vb"),
         F.col("norm").alias("nb"),
     )
-    # Deliberately NOT the Arrow pair-dot (r15 A/B): on the loose
-    # point's ~7M candidate pairs the Arrow stage REGRESSED wall
+    # Deliberately the JVM fold, not an Arrow pair-dot (r15 A/B): on
+    # the loose point's ~7M candidate pairs the Arrow stage REGRESSED wall
     # 3.5 s -> 6.0 s at sf1 (two 64-double vectors per pair through
-    # the Python boundary) while CPU stayed flat.  r16: the
-    # interpreted fold is replaced by similarity._dot's UNROLLED
-    # 64-term codegen sum — identical IEEE op sequence (pinned by
-    # test_dot_unrolled_matches_fold), no per-element lambda
-    # dispatch, no Python boundary.
+    # the Python boundary) while CPU stayed flat.  The interpreted
+    # fold stays: unrolling it loses too (similarity._dot).
     from .similarity import _dot as _sim_dot
 
     cos = _sim_dot("va", "vb") / (F.col("na") * F.col("nb"))

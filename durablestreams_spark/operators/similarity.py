@@ -27,7 +27,6 @@ from __future__ import annotations
 import hashlib
 import os
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import Window as W
@@ -118,7 +117,7 @@ def _srp_planes() -> list[list[int]]:
 _PLANES = _srp_planes()
 
 
-def _dot(vec_col: str, other: str, dim: int = None) -> F.Column:
+def _dot(vec_col: str, other: str) -> F.Column:
     """Sequential-order dot product (same accumulation order as the
     oracle's list_reduce/list_cosine path).  Deliberately NOT routed
     through the Arrow kernel (r15 A/B): a 64-step fold's interpreted
@@ -128,48 +127,44 @@ def _dot(vec_col: str, other: str, dim: int = None) -> F.Column:
     the join.  The Arrow kernels earn their stage only where the
     per-row op count is far above the transfer cost: signatures
     (srp_sig_arrow, 1k-16k steps/row) and the K-centroid assignment
-    (seq_multi_dot_arrow).
-
-    r16 negative result (measured, kept out): unrolling the fold
-    into an explicit 64-term ``a[0]*b[0] + ...`` sum — identical
-    IEEE op order, pinned by test_dot_unrolled_matches_fold — LOSES
-    by 7-11x (microbench 2M rows: fold 1.5 s, element_at chain
-    16.0 s, bracket chain 10.5 s; dedup_embedding_cosine sf1
-    interleaved A/B: 3.5 s -> 22 s wall, 69 -> 558 s CPU).  The
-    128-GetArrayItem expression tree defeats whole-stage codegen
-    (fallback/JIT bailout) while the HOF fold's per-element loop is
-    a tight single method.  ``dim`` therefore stays None at every
-    call site; the unrolled branch remains only as the measured
-    artifact (SPARK_GRAFT_DOT=unroll to reproduce the A/B)."""
-    if dim is not None and os.environ.get("SPARK_GRAFT_DOT") == "unroll":
-        terms = " + ".join(
-            f"element_at({vec_col}, {j + 1}) * element_at({other}, {j + 1})"
-            for j in range(dim)
-        )
-        return F.expr(f"CAST(0.0 AS DOUBLE) + {terms}")
+    (seq_multi_dot_arrow).  Unrolling the fold into an explicit
+    64-term sum loses 7-11x (OPTIMIZATION_r16.md)."""
     return F.expr(
         f"aggregate(zip_with({vec_col}, {other}, (x, y) -> x * y), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
 
-def srp_sig_fold(emb_col, signs) -> F.Column:
-    """Interpreted-fold form of srp_sig_arrow (the pre-r15 shape),
-    kept callable for A/B measurement (SPARK_GRAFT_SRP=fold): one
-    sequential 64-step fold per plane, concatenated to the signature
-    string.  Bit-identical to the Arrow kernel by the shared-order
-    argument (test_srp_sig_arrow_matches_fold pins both)."""
-    vec_sql = emb_col if isinstance(emb_col, str) else "emb"
-    parts = []
-    for row in signs:
-        arr = "array(" + ", ".join(
-            f"CAST({float(x)!r} AS DOUBLE)" for x in row
-        ) + ")"
-        parts.append(
-            f"IF(aggregate(zip_with({vec_sql}, {arr}, (x, y) -> x * y), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) >= 0, '1', '0')"
+def _stack_rows(embs: pa.Array, width: int):
+    """The one list -> matrix step of the embedding kernels.  Returns
+    ``(live, E, nulls)``: the indices of the non-NULL rows of the
+    Arrow list array ``embs``, their ``(len(live), width)`` float64
+    matrix gathered from the flattened values by the list offsets,
+    and the matching mask of NULL elements read from the values'
+    validity bitmap (those cells of ``E`` hold NaN, so a NULL element
+    and a real NaN differ only in ``nulls``).  A non-NULL row whose
+    length is not ``width`` raises ValueError.  The kernels take Arrow
+    input, not pandas: the pandas edge turns a NULL element into NaN,
+    so the two could not be told apart."""
+    import numpy as np
+
+    live = np.flatnonzero(embs.is_valid().to_numpy(zero_copy_only=False))
+    offs = embs.offsets.to_numpy()
+    lens = (offs[1:] - offs[:-1])[live]
+    bad = np.flatnonzero(lens != width)
+    if len(bad):
+        raise ValueError(
+            f"embedding row {int(live[bad[0]])} has {int(lens[bad[0]])} "
+            f"elements, expected {width}"
         )
-    return F.expr("concat(" + ", ".join(parts) + ")")
+    idx = offs[:-1][live, None] + np.arange(width)
+    vals = embs.values
+    E = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)[idx]
+    if vals.null_count:
+        nulls = vals.is_null().to_numpy(zero_copy_only=False)[idx]
+    else:
+        nulls = np.zeros(idx.shape, dtype=bool)
+    return live, E, nulls
 
 
 def srp_sig_arrow(emb_col, signs) -> F.Column:
@@ -186,100 +181,37 @@ def srp_sig_arrow(emb_col, signs) -> F.Column:
     same IEEE multiply-then-add elementwise, and only the loop ORDER
     over j is shared, never a reassociated reduction (np.sum's
     pairwise summation would NOT be).  Exactness is pinned by
-    test_srp_sig_arrow_matches_fold.
+    tests/test_srp_arrow.py against a pure-Python fold.
+
+    A NULL embedding, or one holding a NULL element, gets the
+    all-'0' signature, as in the fold: its plane sums are NULL and
+    ``IF(NULL >= 0, '1', '0')`` is '0'.
 
     ``signs`` is a list of per-plane ±1 sequences (ints or floats).
     """
     import numpy as np
 
-    if os.environ.get("SPARK_GRAFT_SRP") == "fold":
-        return srp_sig_fold(emb_col, signs)
-
     S = np.asarray(signs, dtype=np.float64)  # (P, D)
+    n_planes, width = S.shape
 
-    @F.pandas_udf("string")
-    def _sig(embs: pd.Series) -> pd.Series:
-        vals = list(embs)
-        live = [i for i, e in enumerate(vals) if e is not None]
-        # NULL emb -> all-'0' signature, exactly like the fold it
-        # replaced: the per-plane IF(NULL >= 0, '1', '0') evaluates
-        # to '0' (r15 ADVICE — the kernel used to emit NULL here).
-        out = ["0" * S.shape[0] if e is None else None for e in vals]
-        if live:
-            E = np.stack(
-                [np.asarray(vals[i], dtype=np.float64) for i in live]
-            )
-            acc = np.zeros((E.shape[0], S.shape[0]), dtype=np.float64)
-            for j in range(S.shape[1]):
-                acc += E[:, j, None] * S[None, :, j]
-            # acc < 0 (not acc >= 0): Spark orders NaN ABOVE all
-            # numbers, so a NaN plane sum folds to '1' — NaN < 0 is
-            # False in numpy too, giving the same bit.
-            bits = np.where(acc < 0, "0", "1")
-            for k, i in enumerate(live):
-                out[i] = "".join(bits[k])
-        return pd.Series(out, dtype="object")
+    @F.arrow_udf("string")
+    def _sig(embs: pa.Array) -> pa.Array:
+        live, E, nulls = _stack_rows(embs, width)
+        acc = np.zeros((len(live), n_planes), dtype=np.float64)
+        for j in range(width):
+            acc += E[:, j, None] * S[None, :, j]
+        # acc < 0 (not acc >= 0): Spark orders NaN ABOVE all
+        # numbers, so a NaN plane sum folds to '1' — NaN < 0 is
+        # False in numpy too, giving the same bit.
+        chars = np.full((len(embs), n_planes), ord("0"), dtype=np.uint8)
+        chars[live] = np.where(acc < 0, ord("0"), ord("1"))
+        chars[live[nulls.any(axis=1)]] = ord("0")
+        offsets = np.arange(len(embs) + 1, dtype=np.int32) * n_planes
+        return pa.StringArray.from_buffers(
+            len(embs), pa.py_buffer(offsets), pa.py_buffer(chars)
+        )
 
     return _sig(emb_col)
-
-
-def seq_pair_dot_arrow(a_col, b_col) -> F.Column:
-    """Dot product of two embedding columns with the sequential-fold
-    accumulation order (the ``_dot`` semantics), vectorized across
-    rows in one Arrow stage: per row the accumulator adds
-    ``a[j] * b[j]`` in ascending j — the identical IEEE op sequence
-    to the interpreted fold, executed as 64 vectorized column steps.
-    Exactness pinned by test_srp_sig_arrow_matches_fold."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def _pdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        va, vb = list(a), list(b)
-        live = [
-            i for i in range(len(va))
-            if va[i] is not None and vb[i] is not None
-        ]
-        out = np.full(len(va), np.nan)
-        mask = np.ones(len(va), dtype=bool)  # True = NULL result
-        if live:
-            A = np.stack([np.asarray(va[i], dtype=np.float64) for i in live])
-            B = np.stack([np.asarray(vb[i], dtype=np.float64) for i in live])
-            acc = np.zeros(A.shape[0], dtype=np.float64)
-            for j in range(A.shape[1]):
-                acc += A[:, j] * B[:, j]
-            out[live] = acc
-            mask[live] = False
-        s = pd.Series(out)
-        s[mask] = None
-        return s
-
-    return _pdot(a_col, b_col)
-
-
-def seq_multi_dot_fold(emb_col, vectors) -> F.Column:
-    """Interpreted-fold form of seq_multi_dot_arrow: K per-centroid
-    sequential folds as one array expression — the pre-r15 shape,
-    kept callable for A/B measurement (SPARK_GRAFT_MULTIDOT=fold)
-    and for consumers whose plan evaluates the subtree several times
-    (each ArrowEvalPython evaluation pays the full Python transfer
-    again; the fold is codegen and fuses into the surrounding
-    stage)."""
-    col = emb_col if isinstance(emb_col, str) else None
-    vec_sql = col
-    if vec_sql is None:
-        # emb_col is a Column over a named column; the fold needs SQL
-        # text — all call sites pass F.col("emb").
-        vec_sql = "emb"
-    dots = []
-    for v in vectors:
-        arr = "array(" + ", ".join(
-            f"CAST({float(x)!r} AS DOUBLE)" for x in v
-        ) + ")"
-        dots.append(
-            f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> x * y), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-    return F.expr("array(" + ", ".join(dots) + ")")
 
 
 def seq_multi_dot_arrow(emb_col, vectors) -> F.Column:
@@ -290,30 +222,30 @@ def seq_multi_dot_arrow(emb_col, vectors) -> F.Column:
     exact-order guarantee as srp_sig_arrow: per (row, centroid) the
     accumulation is ``acc + emb[j] * c[j]`` in ascending j, never a
     reassociated reduction.  ``vectors`` is a list of float
-    sequences, all the same length as the embeddings."""
+    sequences, all the same length as the embeddings.  A NULL
+    embedding, or one holding a NULL element, gets K NULL dots, as
+    the K folds give."""
     import numpy as np
-
-    if os.environ.get("SPARK_GRAFT_MULTIDOT") == "fold":
-        return seq_multi_dot_fold(emb_col, vectors)
 
     C = np.asarray([[float(x) for x in v] for v in vectors],
                    dtype=np.float64)  # (K, D)
+    k, width = C.shape
 
-    @F.pandas_udf("array<double>")
-    def _mdot(embs: pd.Series) -> pd.Series:
-        vals = list(embs)
-        live = [i for i, e in enumerate(vals) if e is not None]
-        out = [None] * len(vals)  # NULL emb -> NULL, like the fold
-        if live:
-            E = np.stack(
-                [np.asarray(vals[i], dtype=np.float64) for i in live]
-            )
-            acc = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for j in range(C.shape[1]):
-                acc += E[:, j, None] * C[None, :, j]
-            for k, i in enumerate(live):
-                out[i] = acc[k]
-        return pd.Series(out, dtype="object")
+    @F.arrow_udf("array<double>")
+    def _mdot(embs: pa.Array) -> pa.Array:
+        live, E, nulls = _stack_rows(embs, width)
+        acc = np.zeros((len(live), k), dtype=np.float64)
+        for j in range(width):
+            acc += E[:, j, None] * C[None, :, j]
+        dots = np.zeros((len(embs), k), dtype=np.float64)
+        dead = np.ones(len(embs), dtype=bool)
+        dots[live] = acc
+        dead[live] = nulls.any(axis=1)
+        offsets = np.arange(len(embs) + 1, dtype=np.int32) * k
+        return pa.ListArray.from_arrays(
+            pa.array(offsets),
+            pa.array(dots.ravel(), mask=np.repeat(dead, k)),
+        )
 
     return _mdot(emb_col)
 
@@ -1252,30 +1184,35 @@ PQ_TRAIN_CAP = 512
 PQ_QUERY_MOD = 100
 
 
-def _l2sq(a: str, b: str, dim: int = None) -> F.Column:
+def _l2sq(a: str, b: str) -> F.Column:
     """Squared L2 distance in FIXED index order, so Spark and the
     oracle execute the identical IEEE op sequence (ties in centroid
-    assignment must break the same way in both engines).  r16: when
-    ``dim`` is known (the PQ subspaces are PQ_SUB=4 wide) the
-    interpreted left fold unrolls into an explicit codegen sum —
-    ``((0.0 + t0) + t1) + ...`` with t_j = (a[j]-b[j])*(a[j]-b[j]),
-    the same op sequence, no per-element lambda dispatch (pinned by
-    test_l2sq_unrolled_matches_fold).  Same r16 negative result as
-    _dot: the unrolled chain defeats codegen and LOSES — the fold
-    stays the production path; SPARK_GRAFT_DOT=unroll reproduces
-    the A/B."""
-    if dim is not None and os.environ.get("SPARK_GRAFT_DOT") == "unroll":
-        terms = " + ".join(
-            f"(element_at({a}, {j + 1}) - element_at({b}, {j + 1})) * "
-            f"(element_at({a}, {j + 1}) - element_at({b}, {j + 1}))"
-            for j in range(dim)
-        )
-        return F.expr(f"CAST(0.0 AS DOUBLE) + {terms}")
+    assignment must break the same way in both engines).  Unrolling
+    the fold loses as _dot's does (OPTIMIZATION_r16.md)."""
     return F.aggregate(
         F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, t: acc + t,
     )
+
+
+def _pq_d2(E, CB):
+    """Per-subspace (rows x cents) squared distances of a stacked
+    batch: the _l2sq fold's exact IEEE sequence ``acc = acc +
+    (x_j - c_j) * (x_j - c_j)`` in ascending j, vectorized across
+    (rows x cents) — never a reassociated reduction."""
+    import numpy as np
+
+    width = CB[0].shape[1]
+    per_sub = []
+    for m, Cm in enumerate(CB):
+        Sv = E[:, m * width:(m + 1) * width]
+        acc = np.zeros((E.shape[0], Cm.shape[0]), dtype=np.float64)
+        for j in range(width):
+            d = Sv[:, j, None] - Cm[None, :, j]
+            acc += d * d
+        per_sub.append(acc)
+    return per_sub
 
 
 def pq_codes_arrow(emb_col, codebook) -> F.Column:
@@ -1288,10 +1225,7 @@ def pq_codes_arrow(emb_col, codebook) -> F.Column:
 
     BIT-IDENTICAL to the replaced chain by construction:
 
-    - per (row, sub, cent) the distance is the _l2sq fold's exact IEEE
-      sequence ``acc = acc + (x_j - c_j) * (x_j - c_j)`` in ascending
-      j, vectorized across (rows × cents) — never a reassociated
-      reduction;
+    - per (row, sub, cent) the distance is the _l2sq fold (_pq_d2);
     - code selection replays ``row_number() OVER (ORDER BY d2 ASC,
       cent_id ASC) = 1``: np.argmin returns the FIRST index of the
       minimum, which IS the lowest cent_id on exact ties; NaN
@@ -1299,13 +1233,10 @@ def pq_codes_arrow(emb_col, codebook) -> F.Column:
       above every number (all-NaN ties fall to cent 0 in both);
     - a NULL embedding yields [0]*M exactly like the chain (NULL d2
       for every centroid → ascending NULLS FIRST tie → cent_id 0 per
-      subspace).
+      subspace), and a NULL element yields code 0 in its own
+      subspace only: its NaN cell makes every d2 there NaN.
 
-    Pinned by tests/test_pq_arrow.py; SPARK_GRAFT_PQENC=join restores
-    the replaced chain for A/B (read at query-construction time).
-    arrow_udf (not pandas_udf): the pandas edge coerces NaN inside
-    returned lists to NULL, which would diverge from the fold's NaN
-    doubles — pyarrow round-trips them bit-exactly.
+    Pinned by tests/test_pq_arrow.py against a pure-Python fold.
 
     ``codebook``: list over sub_id of per-centroid coordinate lists
     (dense cent_id order; subspaces may hold different counts after
@@ -1314,30 +1245,19 @@ def pq_codes_arrow(emb_col, codebook) -> F.Column:
 
     CB = [np.asarray(cm, dtype=np.float64) for cm in codebook]
     n_sub = len(CB)
-    width = CB[0].shape[1] if n_sub else 0
+    width = n_sub * CB[0].shape[1]
 
     @F.arrow_udf("array<int>")
     def _enc(embs: pa.Array) -> pa.Array:
-        vals = embs.to_pylist()
-        live = [i for i, e in enumerate(vals) if e is not None]
-        out = [[0] * n_sub if e is None else None for e in vals]
-        if live:
-            E = np.stack(
-                [np.asarray(vals[i], dtype=np.float64) for i in live]
-            )
-            codes = np.empty((E.shape[0], n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                Sv = E[:, m * width:(m + 1) * width]
-                Cm = CB[m]
-                acc = np.zeros((E.shape[0], Cm.shape[0]), dtype=np.float64)
-                for j in range(width):
-                    d = Sv[:, j, None] - Cm[None, :, j]
-                    acc += d * d
-                np.copyto(acc, np.inf, where=np.isnan(acc))
-                codes[:, m] = np.argmin(acc, axis=1)
-            for k, i in enumerate(live):
-                out[i] = codes[k].tolist()
-        return pa.array(out, type=pa.list_(pa.int32()))
+        live, E, _nulls = _stack_rows(embs, width)
+        codes = np.zeros((len(embs), n_sub), dtype=np.int32)
+        for m, acc in enumerate(_pq_d2(E, CB)):
+            np.copyto(acc, np.inf, where=np.isnan(acc))
+            codes[live, m] = np.argmin(acc, axis=1)
+        offsets = np.arange(len(embs) + 1, dtype=np.int32) * n_sub
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(codes.ravel())
+        )
 
     return _enc(emb_col)
 
@@ -1348,40 +1268,37 @@ def pq_dtable_arrow(emb_col, codebook) -> F.Column:
     one Arrow stage — same replaced chain, same exact-order guarantee
     as pq_codes_arrow (the d2 VALUES feed the graded adist sums, so
     the fold order is load-bearing — and NaN d2 must stay NaN, hence
-    arrow_udf).  NULL embedding → per-subspace arrays of NULLs,
-    exactly like the join chain's NULL d2 rows."""
+    arrow_udf: the pandas edge would turn it into NULL).  A NULL
+    embedding → per-subspace arrays of NULLs, exactly like the join
+    chain's NULL d2 rows; a NULL element → NULL cells in its own
+    subspace only."""
     import numpy as np
 
     CB = [np.asarray(cm, dtype=np.float64) for cm in codebook]
-    n_sub = len(CB)
-    width = CB[0].shape[1] if n_sub else 0
+    n_sub, sub_w = len(CB), CB[0].shape[1]
+    ks = [cm.shape[0] for cm in CB]
 
     @F.arrow_udf("array<array<double>>")
     def _dt(embs: pa.Array) -> pa.Array:
-        vals = embs.to_pylist()
-        live = [i for i, e in enumerate(vals) if e is not None]
-        out = [
-            None
-            if e is not None
-            else [[None] * CB[m].shape[0] for m in range(n_sub)]
-            for e in vals
-        ]
-        if live:
-            E = np.stack(
-                [np.asarray(vals[i], dtype=np.float64) for i in live]
-            )
-            per_sub = []
-            for m in range(n_sub):
-                Sv = E[:, m * width:(m + 1) * width]
-                Cm = CB[m]
-                acc = np.zeros((E.shape[0], Cm.shape[0]), dtype=np.float64)
-                for j in range(width):
-                    d = Sv[:, j, None] - Cm[None, :, j]
-                    acc += d * d
-                per_sub.append(acc)
-            for k, i in enumerate(live):
-                out[i] = [per_sub[m][k].tolist() for m in range(n_sub)]
-        return pa.array(out, type=pa.list_(pa.list_(pa.float64())))
+        n = len(embs)
+        live, E, nulls = _stack_rows(embs, n_sub * sub_w)
+        # (n, sum K) cells, row-major = row r's sub 0 cells, sub 1
+        # cells, ...; a cell is NULL when its row, or the row's slice
+        # of its subspace, holds a NULL
+        cells = np.zeros((n, sum(ks)), dtype=np.float64)
+        dead = np.ones((n, sum(ks)), dtype=bool)
+        cells[live] = np.concatenate(_pq_d2(E, CB), axis=1)
+        sub_null = nulls.reshape(len(live), n_sub, sub_w).any(axis=2)
+        dead[live] = np.repeat(sub_null, ks, axis=1)
+        inner = np.concatenate([[0], np.cumsum(np.tile(ks, n))])
+        outer = np.arange(n + 1) * n_sub
+        return pa.ListArray.from_arrays(
+            pa.array(outer, type=pa.int32()),
+            pa.ListArray.from_arrays(
+                pa.array(inner, type=pa.int32()),
+                pa.array(cells.ravel(), mask=dead.ravel()),
+            ),
+        )
 
     return _dt(emb_col)
 
@@ -1524,25 +1441,13 @@ def _pq_adc_search(codes, qdt):
     the identical IEEE left fold (term m added in ascending m);
     NULL-code rows and NULL-bearing lookup tables take an exact
     per-row Python fold replaying the join path's NULL semantics.
-    Bit-identity pinned by tests/test_pq_arrow.py;
-    SPARK_GRAFT_PQADC=join restores the replaced join for A/B."""
+    Pinned by tests/test_pq_arrow.py against a pure-Python top-K."""
     w_rank = W.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc()
     )
-    if os.environ.get("SPARK_GRAFT_PQADC") == "join":
-        cand = (
-            codes.crossJoin(F.broadcast(qdt))
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(_PQ_ADC_SUM_SPARK).alias("adist"),
-            )
-        )
-    else:
-        cand = _pq_adc_topk_arrow(codes, qdt)
     return (
-        cand.withColumn("rank", F.row_number().over(w_rank))
+        _pq_adc_topk_arrow(codes, qdt)
+        .withColumn("rank", F.row_number().over(w_rank))
         .where(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", F.round("adist", 4).alias("adist"))
     )
@@ -1870,8 +1775,7 @@ def _pq_artifacts(spark, sf_dir):
 
 def _pq_sub_rows(v):
     """(vec_id, sub_id, svec): the PQ subspace explosion of a
-    (vec_id, emb) frame — the row shape the Lloyd trainer (and the
-    SPARK_GRAFT_PQENC=join A/B encoder) consumes."""
+    (vec_id, emb) frame — the row shape the Lloyd trainer consumes."""
     return spread(
         v.select(
             "vec_id",
@@ -1898,10 +1802,7 @@ def _pq_artifacts_build(spark, sf_dir):
     and re-collecting — M×K joined rows per vector (~10M at sf1)
     replaced by M×K×SUB vectorized flops per row.  Lloyd training
     keeps the fold/join chain (bounded: PQ_TRAIN_CAP rows) but now
-    explodes only the sample instead of the whole corpus.
-    SPARK_GRAFT_PQENC=join restores the full replaced chain for A/B;
-    bit-identity pinned by tests/test_pq_arrow.py."""
-    use_join = os.environ.get("SPARK_GRAFT_PQENC") == "join"
+    explodes only the sample instead of the whole corpus."""
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -1916,13 +1817,9 @@ def _pq_artifacts_build(spark, sf_dir):
         .limit(PQ_TRAIN_CAP)
         .localCheckpoint(eager=True)
     )
-    if use_join:
-        sub = _pq_sub_rows(v)
-        trainsub = sub.join(F.broadcast(train_ids.select("vec_id")), "vec_id")
-    else:
-        trainsub = _pq_sub_rows(
-            v.join(F.broadcast(train_ids.select("vec_id")), "vec_id")
-        )
+    trainsub = _pq_sub_rows(
+        v.join(F.broadcast(train_ids.select("vec_id")), "vec_id")
+    )
     # Init = the first PQ_K sample vectors in sample order.  The
     # bounded PQ_K-row collect replaces a global single-partition sort
     # window — O(K) driver memory at any corpus size.
@@ -1980,47 +1877,6 @@ def _pq_artifacts_build(spark, sf_dir):
         cents.withColumn("cent_id", F.row_number().over(w_rekey) - 1)
         .localCheckpoint(eager=True)
     )
-    if use_join:
-        enc = (
-            sub.join(F.broadcast(cents), "sub_id")
-            .withColumn("d2", _l2sq("svec", "cemb"))
-            .withColumn("rn", F.row_number().over(w_asg))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "sub_id", F.col("cent_id").alias("code"))
-        )
-        codes = enc.groupBy("vec_id").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("sub_id", "code"))),
-                lambda x: x["code"],
-            ).alias("codes")
-        )
-        qd = (
-            sub.where(F.col("vec_id") % PQ_QUERY_MOD == 0)
-            .join(F.broadcast(cents), "sub_id")
-            .select(
-                F.col("vec_id").alias("query_id"),
-                "sub_id",
-                "cent_id",
-                _l2sq("svec", "cemb").alias("d2"),
-            )
-        )
-        qdt = (
-            qd.groupBy("query_id", "sub_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("cent_id", "d2"))),
-                    lambda x: x["d2"],
-                ).alias("arr")
-            )
-            .groupBy("query_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("sub_id", "arr"))),
-                    lambda x: x["arr"],
-                ).alias("dt")
-            )
-        )
-        return codes, qdt
     # Bounded O(M×K)-row collect of the learned codebook (the same
     # bounded-collect contract as the PQ_K seed collect above), handed
     # to the Arrow kernels as literals.
@@ -2675,8 +2531,6 @@ def dedup_semantic_clusters(spark, sf_dir):
         F.col("emb").alias("vb"),
         F.col("norm").alias("nb"),
     )
-    # r16: unrolled codegen dot (see _dot) — same IEEE op sequence
-    # as the interpreted fold, no per-element lambda dispatch.
     dot = _dot("va", "vb")
     dropped = (
         a.join(

@@ -2579,7 +2579,6 @@ def _emblive_run(spark, bands_path: str, vecs_path: str, delta_vecs):
         bv = batch_df.select(
             "vec_id",
             "emb",
-            # r16: unrolled codegen sum-of-squares (similarity._dot)
             F.sqrt(_sim_dot("emb", "emb")).alias("norm"),
         ).localCheckpoint(eager=True)
         bands = _tight_band_rows(bv).localCheckpoint(eager=True)
@@ -4763,6 +4762,18 @@ def _budget_gate_drain(
     # staged run from one that died after two of five files.
     staged_marker = os.path.join(run_dir, "_staged")
     resume = os.path.exists(staged_marker)
+    if resume:
+        # the marker records the token unit the run was staged with:
+        # its persisted n_tok column and the ledger epochs already
+        # written count in that unit, so a resume under another unit
+        # would mix the two in one cutoff
+        with open(staged_marker) as fh:
+            staged_unit = fh.read().split()[-1]
+        if staged_unit != tok_unit:
+            raise ValueError(
+                f"run dir {run_dir} was staged with tok_unit "
+                f"{staged_unit!r}; cannot resume it with {tok_unit!r}"
+            )
     # ONE seven-signal annotation pass over the window (r15, guide
     # §2.4/§8): every replayed epoch carries the IDENTICAL delta and
     # every signal is a pure per-doc function (row-local expression
@@ -4849,7 +4860,7 @@ def _budget_gate_drain(
             t = _time.time() + e - _BUDGET_REPLAYS
             os.utime(dst, (t, t))
         with open(staged_marker, "w") as fh:
-            fh.write(str(_BUDGET_REPLAYS))
+            fh.write(f"{_BUDGET_REPLAYS} {tok_unit}")
     ledger_path = os.path.join(run_dir, "ledger")
     dec_path = os.path.join(run_dir, "decisions")
     kill_marker = os.path.join(run_dir, "_killed")

@@ -2254,9 +2254,9 @@ from .pipeline_llm import _contam_flag_ctes as _v4_contam_ctes  # noqa: E402
     "datasheet).  Each stage drops data before the next shuffle.",
 )
 def pipeline_curate_v4(spark, sf_dir):
-    import os as _os
-
     from pyspark.sql import Window as W
+
+    from .streaming_queries import _contamination_flag_index
 
     docs = table(spark, sf_dir, "documents")
     # r16 (guide §1.2, the one-drain-many-readers doctrine): the
@@ -2270,26 +2270,7 @@ def pipeline_curate_v4(spark, sf_dir):
     # every run (~2/3 of this query's sf1 cost); batch curation now
     # reads the same decision record the streaming side does, which
     # is also what makes the two surfaces agree BY CONSTRUCTION.
-    # SPARK_GRAFT_V4FLAG=live restores the in-plan recompute for A/B.
-    if _os.environ.get("SPARK_GRAFT_V4FLAG") == "live":
-        from .pipeline_llm import _BENCH_MOD, _shingle5_arrays
-
-        bench_sh = (
-            _shingle5_arrays(docs.where(F.col("doc_id") % _BENCH_MOD == 0))
-            .select(F.explode("shs").alias("sh"))
-            .distinct()
-        )
-        cflag = (
-            _shingle5_arrays(docs)
-            .select("doc_id", F.explode("shs").alias("sh"))
-            .join(F.broadcast(bench_sh), "sh")
-            .select("doc_id")
-            .distinct()
-        )
-    else:
-        from .streaming_queries import _contamination_flag_index
-
-        cflag = _contamination_flag_index(spark, sf_dir)
+    cflag = _contamination_flag_index(spark, sf_dir)
     scored = text_quality_classifier_nb(spark, sf_dir).select(
         "doc_id", "nb_logit"
     )

@@ -672,11 +672,8 @@ def test_pq_adc_scores_against_broadcast_tables(spark):
     only the compressed codes column, and the 4M-pair
     BroadcastNestedLoopJoin + full local Sort are GONE (they
     materialized the 16x32-double table per pair; measured 8.1 -> 1.2 s
-    executor CPU at sf1).  The replaced join shape stays auditable
-    under SPARK_GRAFT_PQADC=join; row-identity is pinned by
+    executor CPU at sf1).  Row values are pinned by
     tests/test_pq_arrow.py."""
-    import os as _os
-
     df = all_queries()["similarity_pq_topk"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
     assert "MapInArrow" in plan, plan
@@ -690,14 +687,6 @@ def test_pq_adc_scores_against_broadcast_tables(spark):
 
     m = _re.search(r"\(\d+\) MapInArrow\s*\nInput \[2\]: \[vid#\d+L, cds#\d+\]", plan)
     assert m, plan
-    _os.environ["SPARK_GRAFT_PQADC"] = "join"
-    try:
-        old = formatted_plan(
-            all_queries()["similarity_pq_topk"].fn(spark, SF_DIR)
-        )
-    finally:
-        _os.environ.pop("SPARK_GRAFT_PQADC", None)
-    assert "BroadcastNestedLoopJoin" in old, old
 
 
 def test_weighted_sample_is_take_ordered(spark):

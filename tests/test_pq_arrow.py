@@ -1,18 +1,22 @@
-"""Exactness pins for the r16 Arrow-vectorized PQ kernels: codes and
-per-query ADC lookup tables must be BIT-IDENTICAL to the
+"""Exactness pins for the Arrow-vectorized PQ kernels: codes,
+per-query ADC lookup tables and the ADC top-K scorer must be
+BIT-IDENTICAL to the sequential folds and ordering rules of the
 explode → broadcast-join → window chain they replaced (the d2 values
-feed the graded adist sums; the codes pick the lookup slots), over the
-real fixture embeddings — the equality that lets the PQ/IVFPQ queries
-keep their oracle hashes."""
+feed the graded adist sums; the codes pick the lookup slots) — the
+equality that lets the PQ/IVFPQ queries keep their oracle hashes.  The
+expected values come from the pure-Python folds in
+tests/fold_reference.py."""
 
 import math
-import os
 
+from fold_reference import adc_topk, pq_codes, pq_dtable
 from pyspark.sql import functions as F
 
+from durablestreams_spark.analytics.core import table
 from durablestreams_spark.operators.similarity import (
+    PQ_K,
     PQ_M,
-    _pq_artifacts_build,
+    PQ_SUB,
     pq_codes_arrow,
     pq_dtable_arrow,
 )
@@ -20,33 +24,35 @@ from durablestreams_spark.operators.similarity import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_pq_artifacts_arrow_matches_join(spark):
-    """codes and qdt from the Arrow kernels equal the replaced
-    join/window chain row-for-row and bit-for-bit on the fixture."""
-    os.environ["SPARK_GRAFT_PQENC"] = "join"
-    try:
-        codes_j, qdt_j = _pq_artifacts_build(spark, SF_DIR)
-        want_codes = {
-            r.vec_id: list(r.codes) for r in codes_j.collect()
-        }
-        want_qdt = {r.query_id: r.dt for r in qdt_j.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQENC", None)
-    codes_a, qdt_a = _pq_artifacts_build(spark, SF_DIR)
-    got_codes = {r.vec_id: list(r.codes) for r in codes_a.collect()}
-    got_qdt = {r.query_id: r.dt for r in qdt_a.collect()}
+def _kernels(df, codebook):
+    return df.select(
+        "vec_id",
+        "emb",
+        pq_codes_arrow(F.col("emb"), codebook).alias("codes"),
+        pq_dtable_arrow(F.col("emb"), codebook).alias("dt"),
+    ).collect()
 
-    assert got_codes.keys() == want_codes.keys() and want_codes
-    for vid, want in want_codes.items():
-        assert got_codes[vid] == want, vid
-    assert got_qdt.keys() == want_qdt.keys() and want_qdt
-    for qid, want in want_qdt.items():
-        got = got_qdt[qid]
-        assert len(got) == len(want), qid
-        for m, (ga, wa) in enumerate(zip(got, want)):
-            # exact float equality — the kernel replays the fold's
-            # IEEE op order, so bits must match, not just values
-            assert list(ga) == list(wa), (qid, m)
+
+def test_pq_artifacts_arrow_matches_join(spark):
+    """codes and lookup tables equal the pure-Python folds bit for bit
+    on every fixture vector, under a codebook cut from fixture
+    sub-slices (its last centroid repeats the first, an exact tie)."""
+    emb = table(spark, SF_DIR, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    seeds = [list(r.emb) for r in emb.orderBy("vec_id").limit(PQ_K - 1).collect()]
+    seeds.append(seeds[0])
+    codebook = [
+        [v[m * PQ_SUB:(m + 1) * PQ_SUB] for v in seeds] for m in range(PQ_M)
+    ]
+    rows = _kernels(emb, codebook)
+    assert rows
+    for r in rows:
+        emb_r = list(r.emb)
+        assert list(r.codes) == pq_codes(emb_r, codebook), r.vec_id
+        # exact float equality — the kernel replays the fold's IEEE
+        # op order, so bits must match, not just values
+        assert [list(a) for a in r.dt] == pq_dtable(emb_r, codebook), r.vec_id
 
 
 def test_pq_codes_arrow_ties_nan_null(spark):
@@ -71,14 +77,7 @@ def test_pq_codes_arrow_ties_nan_null(spark):
         ],
         "vec_id long, emb array<double>",
     )
-    rows = {
-        r.vec_id: r
-        for r in df.select(
-            "vec_id",
-            pq_codes_arrow(F.col("emb"), codebook).alias("codes"),
-            pq_dtable_arrow(F.col("emb"), codebook).alias("dt"),
-        ).collect()
-    }
+    rows = {r.vec_id: r for r in _kernels(df, codebook)}
     assert list(rows[1].codes) == [0, 1]
     assert list(rows[2].codes) == [2, 0]
     assert list(rows[3].codes) == [0, 1]
@@ -91,52 +90,35 @@ def test_pq_codes_arrow_ties_nan_null(spark):
     assert len(rows[1].dt) == 2
 
 
-def test_pq_query_surface_arrow_matches_join(spark):
-    """End-to-end pin on the graded surface: similarity_pq_topk rows
-    are identical under both encoder paths (ANN cache off in tests,
-    so both run the live build)."""
-    from durablestreams_spark.analytics.core import all_queries
-
-    fn = all_queries()["similarity_pq_topk"].fn
-    os.environ["SPARK_GRAFT_PQENC"] = "join"
-    try:
-        want = sorted(
-            tuple(r) for r in fn(spark, SF_DIR).collect()
-        )
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQENC", None)
-    got = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    assert want and got == want
-
-
-def test_pq_adc_arrow_matches_join_fixture(spark):
-    """The mapInArrow ADC scorer returns the identical graded rows as
-    the replaced crossJoin × broadcast scoring on the real fixture
-    (both encoder paths already pinned above, so this isolates the
-    scorer)."""
-    from durablestreams_spark.analytics.core import all_queries
-
-    fn = all_queries()["similarity_pq_topk"].fn
-    os.environ["SPARK_GRAFT_PQADC"] = "join"
-    try:
-        want = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQADC", None)
-    got = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    assert want and got == want
+def test_pq_kernels_null_element_nulls_its_subspace_only(spark):
+    """A NULL element makes every d2 of its own subspace NULL, as the
+    fold does: NULL lookup cells and code 0 (the NULLS FIRST tie) in
+    that subspace, real values and codes in the others."""
+    codebook = [
+        [[5.0, 5.0], [1.0, 1.0]],
+        [[9.0, 9.0], [2.0, 2.0], [3.0, 3.0]],
+    ]
+    df = spark.createDataFrame(
+        [(1, [1.0, None, 2.0, 2.0]), (2, [1.0, 1.0, None, 9.0])],
+        "vec_id long, emb array<double>",
+    )
+    rows = {r.vec_id: r for r in _kernels(df, codebook)}
+    assert list(rows[1].codes) == [0, 1]
+    assert [list(a) for a in rows[1].dt] == [[None, None], [98.0, 0.0, 2.0]]
+    assert list(rows[2].codes) == [1, 0]
+    assert [list(a) for a in rows[2].dt] == [[32.0, 0.0], [None, None, None]]
+    for r in rows.values():
+        assert list(r.codes) == pq_codes(r.emb, codebook)
+        assert [list(a) for a in r.dt] == pq_dtable(r.emb, codebook)
 
 
 def test_pq_adc_arrow_nulls_ties_nan(spark):
-    """Adversarial scorer parity: exact adist ties at the top-K
-    boundary (neighbor_id tie-break), NULL codes rows / NULL code
-    elements / short arrays / out-of-range codes (all NULL adist →
-    NULLS FIRST), NULL-bearing and fully-NULL lookup tables (the
-    per-row Python fold path), NaN cells (rank last), and self-pair
-    exclusion — join vs Arrow must agree row-for-row."""
-    from durablestreams_spark.operators.similarity import (
-        PQ_M,
-        _pq_adc_search,
-    )
+    """Adversarial scorer pins against the pure-Python top-K: exact
+    adist ties at the top-K boundary (neighbor_id tie-break), NULL
+    codes rows / NULL code elements (NULL adist → NULLS FIRST),
+    NULL-bearing and fully-NULL lookup tables (the per-row Python fold
+    path), NaN cells (rank last), and self-pair exclusion."""
+    from durablestreams_spark.operators.similarity import TOP_K, _pq_adc_search
 
     clean = [[0.0, 1.0]] * PQ_M
     with_null = [[None, 1.0]] + [[0.0, 1.0]] * (PQ_M - 1)
@@ -151,8 +133,8 @@ def test_pq_adc_arrow_nulls_ties_nan(spark):
         ]
     )
     # (a short codes array or out-of-range code is an ANSI
-    # INVALID_ARRAY_INDEX error in BOTH paths — not representable in
-    # real artifacts, and the Arrow scorer raises the same way)
+    # INVALID_ARRAY_INDEX error in the replaced join — not
+    # representable in real artifacts, and the Arrow scorer raises)
     qdt_rows = [
         (100, clean),
         (101, with_null),
@@ -166,23 +148,15 @@ def test_pq_adc_arrow_nulls_ties_nan(spark):
         qdt_rows, "query_id long, dt array<array<double>>"
     )
 
-    def run():
-        return sorted(
-            (
-                r.query_id,
-                r.neighbor_id,
-                r.rank,
-                None if r.adist is None else repr(r.adist),
-            )
-            for r in _pq_adc_search(codes, qdt).collect()
-        )
+    def key(q, n, rank, a):
+        return (q, n, rank, None if a is None else repr(a))
 
-    os.environ["SPARK_GRAFT_PQADC"] = "join"
-    try:
-        want = run()
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQADC", None)
-    got = run()
+    got = sorted(
+        key(*r) for r in _pq_adc_search(codes, qdt).collect()
+    )
+    # every reference adist is a whole number or NaN, so the graded
+    # round(adist, 4) leaves it unchanged
+    want = sorted(key(*r) for r in adc_topk(codes_rows, qdt_rows, TOP_K))
     assert want and got == want
     # sanity on the semantics themselves: q100's top-5 is NULL-adist
     # candidates first (9, 10), then the lowest-id tied rows; self

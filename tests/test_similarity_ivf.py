@@ -4,6 +4,7 @@ search must recover a floor fraction of the exact brute-force answer.
 Reference capability: approximate-nearest-neighbor over the embedding
 column (SURVEY.md §2.2 similarity search, scale path)."""
 
+from fold_reference import seq_dot as _seq_dot
 from pyspark.sql import functions as F
 
 from durablestreams_spark.analytics.core import all_queries, table
@@ -43,13 +44,6 @@ def test_ivf_returns_full_topk_per_query(spark):
     df = all_queries()["similarity_ivf_topk"].fn(spark, SF_DIR)
     per_q = df.groupBy("query_id").count().collect()
     assert per_q and all(r["count"] == TOP_K for r in per_q)
-
-
-def _seq_dot(a, b):
-    s = 0.0
-    for x, y in zip(a, b):
-        s += x * y
-    return s
 
 
 def _py_reference_ivf(sf_dir):

@@ -1,11 +1,14 @@
-"""Exactness pins for the r15 Arrow-vectorized embedding kernels:
-the SRP signature and the sequential pair-dot must be BIT-IDENTICAL
-to the interpreted higher-order folds they replaced, over the real
-fixture embeddings — the equality that lets every embedding query
-keep its oracle hash."""
+"""Exactness pins for the Arrow-vectorized embedding kernels: the SRP
+signature and the multi-centroid dot must be BIT-IDENTICAL to the
+sequential folds they replaced, over the real fixture embeddings — the
+equality that lets every embedding query keep its oracle hash — and
+must map NULL elements and ragged rows the way those folds did."""
 
-import sys
+import math
 
+import pyarrow as pa
+import pytest
+from fold_reference import multi_dot, srp_sig
 from pyspark.sql import functions as F
 
 from durablestreams_spark.analytics.core import table
@@ -20,7 +23,8 @@ from durablestreams_spark.operators.similarity import (
     _PLANES,
     _bucket_spark,
     _dot,
-    seq_pair_dot_arrow,
+    _stack_rows,
+    seq_multi_dot_arrow,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -80,27 +84,6 @@ def test_srp_sig_arrow_matches_fold(spark):
     for r in rows:
         assert r.loose_got == r.loose_want, r.vec_id
         assert r.tight_got == r.tight_want, r.vec_id
-
-
-def test_seq_pair_dot_arrow_matches_fold(spark):
-    """The Arrow pair-dot equals the sequential fold bit-for-bit on
-    adjacent fixture vector pairs (including sign-mixed sums)."""
-    emb = _emb(spark)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("emb").alias("va"))
-    b = emb.select((F.col("vec_id") - 1).alias("ia"), F.col("emb").alias("vb"))
-    pairs = a.join(b, "ia")
-    fold = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    rows = pairs.select(
-        "ia",
-        fold.alias("want"),
-        seq_pair_dot_arrow(F.col("va"), F.col("vb")).alias("got"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.got == r.want, (r.ia, r.got, r.want)
 
 
 def test_srp_sig_arrow_null_emb_matches_fold(spark):
@@ -167,98 +150,104 @@ def test_simhash_and_nb_logit_null_propagation(spark):
     assert got[3] is not None
 
 
-def test_dot_unrolled_matches_fold(spark):
-    """The r16 unrolled dot variant (explicit 64-term sum — measured
-    SLOWER and kept OUT of production, see _dot's docstring) must
-    still be BIT-IDENTICAL to the interpreted sequential fold on
-    every fixture pair — the same op sequence ((0.0 + p0) + p1) + ...
-    — including NULL-array and NULL-element propagation.  This pins
-    the equivalence claim the negative-result record relies on."""
-    import os
-
-    os.environ["SPARK_GRAFT_DOT"] = "unroll"
-    try:
-        _run_dot_pin(spark)
-    finally:
-        os.environ.pop("SPARK_GRAFT_DOT", None)
+def _same(got, want):
+    """Bit-for-bit list equality, NULL for NULL and NaN for NaN."""
+    assert got is not None and len(got) == len(want), (got, want)
+    for g, w in zip(got, want):
+        if w is None:
+            assert g is None, (got, want)
+        elif math.isnan(w):
+            assert g is not None and math.isnan(g), (got, want)
+        else:
+            assert g == w, (got, want)
 
 
-def _run_dot_pin(spark):
+def test_seq_multi_dot_arrow_matches_fold(spark):
+    """The K-centroid dot equals K pure-Python sequential folds bit
+    for bit on every fixture vector, against K fixture centroids."""
     emb = _emb(spark)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("emb").alias("va"))
-    b = emb.select((F.col("vec_id") - 1).alias("ia"), F.col("emb").alias("vb"))
-    pairs = a.join(b, "ia")
-    fold = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    rows = pairs.select(
-        "ia",
-        fold.alias("want"),
-        _dot("va", "vb", dim=DIM_T).alias("got"),
-        F.sqrt(_dot("va", "va", dim=DIM_T)).alias("norm_got"),
-        F.sqrt(
-            F.expr(
-                "aggregate(zip_with(va, va, (x, y) -> x * y), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            )
-        ).alias("norm_want"),
+    cents = [
+        list(r.emb)
+        for r in emb.where(F.col("vec_id") % 37 == 0).orderBy("vec_id").collect()
+    ]
+    assert len(cents) >= 8
+    rows = emb.select(
+        "emb", seq_multi_dot_arrow(F.col("emb"), cents).alias("got")
     ).collect()
     assert rows
     for r in rows:
-        assert r.got == r.want, (r.ia, r.got, r.want)
-        assert r.norm_got == r.norm_want, r.ia
+        assert list(r.got) == multi_dot(list(r.emb), cents)
 
-    # NULL array and NULL element both propagate to NULL, like the fold
-    nulls = spark.createDataFrame(
+
+def _malformed(spark, width):
+    """A NULL element, a real NaN, a clean row and a NULL row."""
+    base = [float(j) - 31.5 for j in range(width)]
+    return spark.createDataFrame(
         [
-            (1, None, [1.0] * DIM_T),
-            (2, [1.0] * DIM_T, [0.5] * 32 + [None] + [0.5] * 31),
+            (1, base[:5] + [None] + base[6:]),
+            (2, base[:5] + [float("nan")] + base[6:]),
+            (3, base),
+            (4, None),
         ],
-        "i long, va array<double>, vb array<double>",
+        "vec_id long, emb array<double>",
     )
-    got = {
-        r.i: (r.got, r.want)
-        for r in nulls.select(
-            "i",
-            _dot("va", "vb", dim=DIM_T).alias("got"),
-            F.expr(
-                "aggregate(zip_with(va, vb, (x, y) -> x * y), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-            ).alias("want"),
-        ).collect()
-    }
-    assert got[1] == (None, None)
-    assert got[2] == (None, None)
 
 
-def test_l2sq_unrolled_matches_fold(spark):
-    """The r16 unrolled PQ subspace L2 variant (kept OUT of
-    production — same negative result as _dot) must equal the
-    interpreted fold bit-for-bit on fixture subvector pairs."""
-    import os
-
-    from durablestreams_spark.operators.similarity import PQ_SUB, _l2sq
-
-    os.environ["SPARK_GRAFT_DOT"] = "unroll"
-
-    emb = _emb(spark)
-    sub = emb.selectExpr(
-        "vec_id", f"slice(emb, 1, {PQ_SUB}) AS sa",
-        f"slice(emb, {PQ_SUB + 1}, {PQ_SUB}) AS sb"
-    )
-    fold = F.expr(
-        "aggregate(zip_with(sa, sb, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"
-    )
-    try:
-        rows = sub.select(
+def test_srp_sig_arrow_null_element_matches_fold(spark):
+    """A NULL element makes every plane sum NULL, so both geometries
+    give the all-'0' signature, as the replaced folds did; a real NaN
+    keeps its fold result (every plane '1')."""
+    tight_signs = [
+        [1.0 if c == "1" else -1.0 for c in p] for p in _tight_planes()
+    ]
+    rows = {
+        r.vec_id: r
+        for r in _malformed(spark, DIM_T)
+        .select(
             "vec_id",
-            fold.alias("want"),
-            _l2sq("sa", "sb", dim=PQ_SUB).alias("got"),
-        ).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_DOT", None)
-    assert rows
-    for r in rows:
-        assert r.got == r.want, (r.vec_id, r.got, r.want)
+            "emb",
+            _bucket_spark().alias("loose"),
+            _tight_sig_expr().alias("tight"),
+        )
+        .collect()
+    }
+    n_tight = COSINE_TIGHT_BANDS * COSINE_TIGHT_BAND_BITS
+    assert rows[1].loose == "0" * len(_PLANES)
+    assert rows[1].tight == "0" * n_tight
+    assert rows[2].loose == "1" * len(_PLANES)
+    assert rows[2].tight == "1" * n_tight
+    for r in rows.values():
+        assert r.loose == srp_sig(r.emb, _PLANES), r.vec_id
+        assert r.tight == srp_sig(r.emb, tight_signs), r.vec_id
+
+
+def test_seq_multi_dot_arrow_null_element_matches_fold(spark):
+    """A NULL element, or a NULL row, gives K NULL dots (each fold's
+    sum is NULL); a real NaN gives K NaN dots."""
+    cents = [[1.0] * 64, [-0.5] * 64, [0.0] * 64]
+    rows = {
+        r.vec_id: r
+        for r in _malformed(spark, 64)
+        .select("vec_id", "emb", seq_multi_dot_arrow(F.col("emb"), cents).alias("d"))
+        .collect()
+    }
+    assert list(rows[1].d) == [None] * 3
+    assert list(rows[4].d) == [None] * 3
+    assert all(math.isnan(x) for x in rows[2].d)
+    for r in rows.values():
+        _same(list(r.d), multi_dot(r.emb, cents))
+
+
+def test_stack_rows_rejects_ragged_row(spark):
+    """A non-NULL row of the wrong length raises ValueError naming its
+    length and the kernel's width, directly and through a kernel."""
+    ok = _stack_rows(pa.array([[1.0, 2.0], None, [3.0, None]]), 2)
+    assert ok[0].tolist() == [0, 2]
+    assert ok[2].tolist() == [[False, False], [False, True]]
+    with pytest.raises(ValueError, match="has 3 elements, expected 2"):
+        _stack_rows(pa.array([[1.0, 2.0], None, [1.0, 2.0, 3.0]]), 2)
+    df = spark.createDataFrame(
+        [(1, [1.0] * 64), (2, [1.0] * 63)], "vec_id long, emb array<double>"
+    )
+    with pytest.raises(Exception, match="has 63 elements, expected 64"):
+        df.select(_bucket_spark()).collect()

@@ -9,6 +9,7 @@ side, joining the PERSISTED batch-built index.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from durablestreams_spark.analytics.core import all_queries
@@ -725,6 +726,38 @@ def test_budget_gate_resume_matches_uninterrupted(spark):
     audit = dict(sq._GATE_BUDGET_RESUME_LAST_RUN)
     assert audit["killed"] is True
     assert 0 < audit["first_run_committed"] < sq._BUDGET_REPLAYS, audit
+    clean = sorted(
+        map(tuple, sq.streaming_ingest_gate_budget(spark, SF_DIR).collect())
+    )
+    assert resumed == clean and len(resumed) > 0
+
+
+def test_budget_gate_resume_rejects_other_tok_unit(spark, tmp_path):
+    """The _staged marker records the token unit: a run killed under
+    'words' must refuse a 'bpe' resume (its persisted n_tok and
+    ledger count words), and the refusal must leave the run intact —
+    a 'words' resume still equals the clean run."""
+    from durablestreams_spark.operators import streaming_queries as sq
+
+    run_dir = str(tmp_path / "words_run")
+    audit: dict = {}
+    with pytest.raises(Exception, match="injected mid-stream kill"):
+        sq._budget_gate_drain(
+            spark, SF_DIR, run_dir, audit, kill_epoch=2, persist_ann=True
+        )
+    with pytest.raises(ValueError, match="staged with tok_unit 'words'"):
+        sq._budget_gate_drain(
+            spark, SF_DIR, run_dir, audit, tok_unit="bpe", persist_ann=True
+        )
+    dec_path = sq._budget_gate_drain(
+        spark, SF_DIR, run_dir, audit, persist_ann=True
+    )
+    resumed = sorted(
+        map(
+            tuple,
+            sq._gate_budget_report(sq._epoch_read(spark, dec_path)).collect(),
+        )
+    )
     clean = sorted(
         map(tuple, sq.streaming_ingest_gate_budget(spark, SF_DIR).collect())
     )
