@@ -193,9 +193,10 @@ def log_fencing_semantics(spark, sf_dir):
 
     from ..manifest import FencingError
 
-    root = tempfile.mkdtemp(prefix="ds_fencing_")
     checks: dict[str, bool] = {}
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_fencing_", ignore_cleanup_errors=True
+    ) as root:
         stream = StreamCatalog(root).stream("fencing")
         stream.produce([{"v": 1}], version=1)
         checks["equal_version_accepted"] = bool(
@@ -223,8 +224,6 @@ def log_fencing_semantics(spark, sf_dir):
         checks["version_bump_only_persists"] = (
             stream.refresh().producer_version == 7
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
     return spark.createDataFrame(
         sorted(checks.items()), "check_name string, ok boolean"
@@ -261,9 +260,10 @@ def log_lifecycle_semantics(spark, sf_dir):
     from ..maintenance import clean_tombstones, compact, purge_orphans
     from ..stream import Stream
 
-    root = tempfile.mkdtemp(prefix="ds_lifecycle_")
     checks: dict[str, bool] = {}
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_lifecycle_", ignore_cleanup_errors=True
+    ) as root:
         cat = StreamCatalog(root)
 
         # tail: concurrent produce delivered.  The snapshot inside
@@ -335,8 +335,6 @@ def log_lifecycle_semantics(spark, sf_dir):
         checks["recovery_cross_process"] = [
             (r.offset, r.data["v"]) for r in g2.consume("-", 10)
         ] == [(r.offset, r.data["v"]) for r in g.consume("-", 10)]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         sorted(checks.items()), "check_name string, ok boolean"
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import os
 import stat as _stat
+import functools
 import tempfile
 import uuid
 
@@ -78,24 +79,40 @@ def _events_stream(spark, sf_dir: str):
     return raw
 
 
+def _await_drain(q, what: str):
+    """Wait for an availableNow query to drain.  A partial result would
+    grade as a spurious hash mismatch that looks like an engine bug,
+    so a drain still running after 600 s is stopped and fails loudly."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish in 600s")
+
+
 def _drain(df, output_mode: str):
     """Run a streaming DF to a memory sink until drained; return the
-    sink table as a batch DataFrame."""
+    sink table as a batch DataFrame.  The result is materialized off
+    the sink (localCheckpoint), so the sink's temp view is dropped and
+    its checkpoint dir removed before returning."""
+    spark = df.sparkSession
     sink = f"graded_{uuid.uuid4().hex[:12]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ds_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        # A partial sink would grade as a spurious hash mismatch that
-        # looks like an engine bug — fail loudly instead.
-        q.stop()
-        raise TimeoutError(f"streaming drain into {sink} did not finish in 600s")
-    return df.sparkSession.sql(f"SELECT * FROM {sink}")
+    with tempfile.TemporaryDirectory(
+        prefix="ds_ckpt_", ignore_cleanup_errors=True
+    ) as ckpt:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            _await_drain(q, f"streaming drain into {sink}")
+            return spark.sql(f"SELECT * FROM {sink}").localCheckpoint(
+                eager=True
+            )
+        finally:
+            spark.catalog.dropTempView(sink)
 
 
 @query(
@@ -216,13 +233,10 @@ def streaming_ingest_roundtrip(spark, sf_dir):
             order_by=["event_id"],
             available_now=True,
         )
-        drained = q.awaitTermination(600)
-        if not drained:
-            # Timed out mid-drain: caching a partial sink would poison
-            # every later run. Stop, leave no marker, fail loudly —
-            # the exactly-once checkpoint resumes cleanly on retry.
-            q.stop()
-            raise TimeoutError("streaming_ingest_roundtrip drain timed out")
+        # a timeout leaves no marker: caching a partial sink would
+        # poison every later run, and the exactly-once checkpoint
+        # resumes cleanly on retry
+        _await_drain(q, "streaming_ingest_roundtrip drain")
         write_marker(marker, sf_dir)
     df = stream.to_df(spark)
     return df.select(
@@ -2228,14 +2242,22 @@ def _delta_replay_stream(
     )
 
 
-def _await_and_audit(q, audit: dict, app_path: str):
-    """Drain an availableNow foreachBatch query and record the audit
-    facts the statelessness tests pin: batch count, streaming state
-    operators (must be []), and the run-local index appends (epoch
-    subdirs, counted recursively)."""
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("live-gate drain did not finish in 600s")
+def _await_and_audit(
+    stream, batch_fn, run_dir: str, audit: dict, app_path: str
+):
+    """The one foreachBatch drain of the live topologies: run
+    ``batch_fn`` over ``stream`` with availableNow, checkpointed at
+    ``run_dir``/ckpt (re-invoking on the same run_dir resumes), and
+    record the audit facts the statelessness tests pin: batch count,
+    streaming state operators (must be []), and the run-local index
+    appends under ``app_path`` (epoch subdirs, counted recursively)."""
+    q = (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drain(q, "live-gate drain")
     progress = [p for p in q.recentProgress if p is not None]
     appended = []
     if os.path.isdir(app_path):
@@ -2251,6 +2273,61 @@ def _await_and_audit(q, audit: dict, app_path: str):
             "appended_files": sorted(appended),
         }
     )
+
+
+_KILL_MSG = "injected mid-stream kill"
+
+
+def _kill_point(run_dir: str, kill_epoch, epoch_id):
+    """The kill/resume proofs' one-shot injected crash: the first
+    batch with epoch_id >= kill_epoch leaves a ``_killed`` marker in
+    run_dir and raises.  Batch functions call it AFTER their side-
+    effect writes and BEFORE the commit — the worst ordering: an
+    orphaned epoch dir a replay must both ignore (the before_epoch
+    guard) and overwrite."""
+    marker = os.path.join(run_dir, "_killed")
+    if (
+        kill_epoch is None
+        or int(epoch_id) < int(kill_epoch)
+        or os.path.exists(marker)
+    ):
+        return
+    with open(marker, "w") as fh:
+        fh.write(f"killed at epoch {int(epoch_id)}")
+    raise RuntimeError(_KILL_MSG)
+
+
+def _kill_and_resume(run_dir: str, audit: dict, drain):
+    """Kill-and-resume proof over ``drain(kill_epoch=None)``, a
+    resumable drain rooted at ``run_dir``: drain with a kill at epoch
+    2, require that the kill fired and left its marker, then resume
+    from the same checkpoint and drain fully.  Kill evidence comes
+    straight from the CHECKPOINT (the audit dict is not populated on a
+    failed drain — awaitTermination raises before it): the commit log
+    holds exactly the epochs that completed before the crash, so
+    ``first_run_committed`` < total proves the first attempt was
+    genuinely partial.  Returns the resumed drain's result."""
+    try:
+        drain(kill_epoch=2)
+        raise AssertionError(
+            "injected kill did not fire — the resume proof is vacuous"
+        )
+    except AssertionError:
+        raise
+    except Exception as ex:  # the injected StreamingQueryException
+        if _KILL_MSG not in str(ex):
+            raise
+    if not os.path.exists(os.path.join(run_dir, "_killed")):
+        raise RuntimeError("kill marker missing after injected kill")
+    commits_dir = os.path.join(run_dir, "ckpt", "commits")
+    first_committed = (
+        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
+        if os.path.isdir(commits_dir)
+        else 0
+    )
+    out = drain()
+    audit.update({"killed": True, "first_run_committed": first_committed})
+    return out
 
 
 def _epoch_write(df, root: str, epoch_id):
@@ -2354,20 +2431,15 @@ def _neardup_batch_matches(bands, idx):
     return p1.unionByName(p2)
 
 
-def _finish_run(spark, run_dir: str, out_root: str, schema: str):
+def _finish_run(spark, out_root: str, schema: str):
     """Materialize a live run's output OFF its run directory
-    (localCheckpoint cuts the lineage to the files) and delete the
-    run_dir — the delta replay re-write plus per-batch appends
-    otherwise leak multi-GB temp trees on every invocation."""
-    import shutil as _shutil
-
+    (localCheckpoint cuts the lineage to the files), so the caller's
+    run dir can be removed — the delta replay re-write plus per-batch
+    appends otherwise leak multi-GB temp trees on every invocation."""
     out = _epoch_read(spark, out_root)
     if out is None:
-        out = spark.createDataFrame([], schema)
-    else:
-        out = out.localCheckpoint(eager=True)
-    _shutil.rmtree(run_dir, ignore_errors=True)
-    return out
+        return spark.createDataFrame([], schema)
+    return out.localCheckpoint(eager=True)
 
 
 def _ndlive_run(spark, base_idx_path: str, delta_docs):
@@ -2379,34 +2451,34 @@ def _ndlive_run(spark, base_idx_path: str, delta_docs):
     (doc_id, dup_of, hamming) — batching-independent by construction
     (see streaming_dedup_neardup_live's doc).  Populates
     _NDLIVE_LAST_RUN for the audit test."""
-    run_dir = tempfile.mkdtemp(prefix="ds_ndlive_")
-    app_path = os.path.join(run_dir, "appended")
-    out_path = os.path.join(run_dir, "pairs")
+    with tempfile.TemporaryDirectory(
+        prefix="ds_ndlive_", ignore_cleanup_errors=True
+    ) as run_dir:
+        app_path = os.path.join(run_dir, "appended")
+        out_path = os.path.join(run_dir, "pairs")
 
-    def _detect(batch_df, epoch_id):
-        sess = batch_df.sparkSession
-        bands = _batch_bands(batch_df)
-        idx = sess.read.parquet(base_idx_path)
-        prior = _epoch_read(sess, app_path, before_epoch=epoch_id)
-        if prior is not None:
-            idx = idx.unionByName(prior)
-        _epoch_write(_neardup_batch_matches(bands, idx), out_path, epoch_id)
-        # Incremental index append (the similarity_ivf_upsert
-        # assignment-only pattern): this batch's signatures become
-        # servable for every LATER batch.  O(batch) rows, run-local.
-        _epoch_write(bands, app_path, epoch_id)
+        def _detect(batch_df, epoch_id):
+            sess = batch_df.sparkSession
+            bands = _batch_bands(batch_df)
+            idx = sess.read.parquet(base_idx_path)
+            prior = _epoch_read(sess, app_path, before_epoch=epoch_id)
+            if prior is not None:
+                idx = idx.unionByName(prior)
+            _epoch_write(
+                _neardup_batch_matches(bands, idx), out_path, epoch_id
+            )
+            # Incremental index append (the similarity_ivf_upsert
+            # assignment-only pattern): this batch's signatures become
+            # servable for every LATER batch.  O(batch) rows, run-local.
+            _epoch_write(bands, app_path, epoch_id)
 
-    stream = _delta_replay_stream(spark, run_dir, delta_docs)
-    q = (
-        stream.writeStream.foreachBatch(_detect)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_and_audit(q, _NDLIVE_LAST_RUN, app_path)
-    return _finish_run(
-        spark, run_dir, out_path, "doc_id long, dup_of long, hamming long"
-    )
+        stream = _delta_replay_stream(spark, run_dir, delta_docs)
+        _await_and_audit(
+            stream, _detect, run_dir, _NDLIVE_LAST_RUN, app_path
+        )
+        return _finish_run(
+            spark, out_path, "doc_id long, dup_of long, hamming long"
+        )
 
 
 @query(
@@ -2569,90 +2641,88 @@ def _emblive_run(spark, bands_path: str, vecs_path: str, delta_vecs):
     )
     from .similarity import _dot as _sim_dot
 
-    run_dir = tempfile.mkdtemp(prefix="ds_emblive_")
-    band_app = os.path.join(run_dir, "band_appended")
-    vec_app = os.path.join(run_dir, "vec_appended")
-    out_path = os.path.join(run_dir, "pairs")
+    with tempfile.TemporaryDirectory(
+        prefix="ds_emblive_", ignore_cleanup_errors=True
+    ) as run_dir:
+        band_app = os.path.join(run_dir, "band_appended")
+        vec_app = os.path.join(run_dir, "vec_appended")
+        out_path = os.path.join(run_dir, "pairs")
 
-    def _detect(batch_df, epoch_id):
-        sess = batch_df.sparkSession
-        bv = batch_df.select(
-            "vec_id",
-            "emb",
-            F.sqrt(_sim_dot("emb", "emb")).alias("norm"),
-        ).localCheckpoint(eager=True)
-        bands = _tight_band_rows(bv).localCheckpoint(eager=True)
-        idx_b = sess.read.parquet(bands_path)
-        prior_b = _epoch_read(sess, band_app, before_epoch=epoch_id)
-        if prior_b is not None:
-            idx_b = idx_b.unionByName(prior_b)
-        idx_v = sess.read.parquet(vecs_path)
-        prior_v = _epoch_read(sess, vec_app, before_epoch=epoch_id)
-        if prior_v is not None:
-            idx_v = idx_v.unionByName(prior_v)
-        # (2) batch vs index: new-vs-historical and new-vs-earlier-
-        # batch candidates.  Multi-band agreements collapse via the
-        # per-batch DISTINCT (bounded: candidates of ONE batch).
-        other = idx_b.select(
-            "band_id", "band_key", F.col("vec_id").alias("other")
-        )
-        c1 = (
-            bands.join(other, ["band_id", "band_key"])
-            .where(F.col("other") != F.col("vec_id"))
-            .select(
-                F.least("vec_id", "other").alias("vec_a"),
-                F.greatest("vec_id", "other").alias("vec_b"),
+        def _detect(batch_df, epoch_id):
+            sess = batch_df.sparkSession
+            bv = batch_df.select(
+                "vec_id",
+                "emb",
+                F.sqrt(_sim_dot("emb", "emb")).alias("norm"),
+            ).localCheckpoint(eager=True)
+            bands = _tight_band_rows(bv).localCheckpoint(eager=True)
+            idx_b = sess.read.parquet(bands_path)
+            prior_b = _epoch_read(sess, band_app, before_epoch=epoch_id)
+            if prior_b is not None:
+                idx_b = idx_b.unionByName(prior_b)
+            idx_v = sess.read.parquet(vecs_path)
+            prior_v = _epoch_read(sess, vec_app, before_epoch=epoch_id)
+            if prior_v is not None:
+                idx_v = idx_v.unionByName(prior_v)
+            # (2) batch vs index: new-vs-historical and new-vs-earlier-
+            # batch candidates.  Multi-band agreements collapse via the
+            # per-batch DISTINCT (bounded: candidates of ONE batch).
+            other = idx_b.select(
+                "band_id", "band_key", F.col("vec_id").alias("other")
             )
-            .distinct()
-        )
-        # (3) intra-batch self-join: pairs both arriving now.  The two
-        # arms are disjoint (the index never contains the current
-        # batch), so no cross-arm dedup is needed.
-        b2 = bands.select(
-            "band_id", "band_key", F.col("vec_id").alias("other")
-        )
-        c2 = (
-            bands.join(b2, ["band_id", "band_key"])
-            .where(F.col("other") < F.col("vec_id"))
-            .select(
-                F.col("other").alias("vec_a"),
-                F.col("vec_id").alias("vec_b"),
+            c1 = (
+                bands.join(other, ["band_id", "band_key"])
+                .where(F.col("other") != F.col("vec_id"))
+                .select(
+                    F.least("vec_id", "other").alias("vec_a"),
+                    F.greatest("vec_id", "other").alias("vec_b"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-        # (4) exact-cosine verify on candidates only — the ONE
-        # _tight_verify definition the batch query grades through.
-        allv = idx_v.unionByName(bv)
-        scored = _tight_verify(allv, c1.unionByName(c2))
-        pairs = scored.where(
-            _snap9("cos") >= COSINE_TIGHT_THRESHOLD
-        ).select(
-            F.col("vec_b").alias("vec_id"),
-            F.col("vec_a").alias("dup_of"),
-            F.round("cos", 4).alias("cos"),
-        )
-        _epoch_write(pairs, out_path, epoch_id)
-        # (5) incremental index append: bands AND vectors.
-        _epoch_write(bands, band_app, epoch_id)
-        _epoch_write(bv, vec_app, epoch_id)
+            # (3) intra-batch self-join: pairs both arriving now.  The two
+            # arms are disjoint (the index never contains the current
+            # batch), so no cross-arm dedup is needed.
+            b2 = bands.select(
+                "band_id", "band_key", F.col("vec_id").alias("other")
+            )
+            c2 = (
+                bands.join(b2, ["band_id", "band_key"])
+                .where(F.col("other") < F.col("vec_id"))
+                .select(
+                    F.col("other").alias("vec_a"),
+                    F.col("vec_id").alias("vec_b"),
+                )
+                .distinct()
+            )
+            # (4) exact-cosine verify on candidates only — the ONE
+            # _tight_verify definition the batch query grades through.
+            allv = idx_v.unionByName(bv)
+            scored = _tight_verify(allv, c1.unionByName(c2))
+            pairs = scored.where(
+                _snap9("cos") >= COSINE_TIGHT_THRESHOLD
+            ).select(
+                F.col("vec_b").alias("vec_id"),
+                F.col("vec_a").alias("dup_of"),
+                F.round("cos", 4).alias("cos"),
+            )
+            _epoch_write(pairs, out_path, epoch_id)
+            # (5) incremental index append: bands AND vectors.
+            _epoch_write(bands, band_app, epoch_id)
+            _epoch_write(bv, vec_app, epoch_id)
 
-    stream = _delta_replay_stream(
-        spark,
-        run_dir,
-        delta_vecs,
-        cols=("vec_id", "emb"),
-        schema="vec_id long, emb array<double>",
-    )
-    q = (
-        stream.writeStream.foreachBatch(_detect)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_and_audit(q, _EMBLIVE_LAST_RUN, band_app)
-    return _finish_run(
-        spark, run_dir, out_path, "vec_id long, dup_of long, cos double"
-    )
+        stream = _delta_replay_stream(
+            spark,
+            run_dir,
+            delta_vecs,
+            cols=("vec_id", "emb"),
+            schema="vec_id long, emb array<double>",
+        )
+        _await_and_audit(
+            stream, _detect, run_dir, _EMBLIVE_LAST_RUN, band_app
+        )
+        return _finish_run(
+            spark, out_path, "vec_id long, dup_of long, cos double"
+        )
 
 
 @query(
@@ -3389,7 +3459,6 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     au_base_path = _audio_base_index_path(spark, sf_dir)
     bench_path = _bench_shingle_index_path(spark, sf_dir)
     fused_path = os.path.join(run_dir, "fused")
-    kill_marker = os.path.join(run_dir, "_killed")
     n_writes = [0]
     # The three base serving indexes and the bench shingle set are
     # IMMUTABLE for the whole drain — materialize them once
@@ -3541,30 +3610,14 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
         # micro-batch sizes; the kind filter is a cheap row filter.
         _epoch_write(fused, fused_path, epoch_id)
         n_writes[0] += 1
-        # injected one-shot crash AFTER the fused side-effect write
-        # and BEFORE the commit — the kill-and-resume proof's worst
-        # case.
-        if (
-            kill_epoch is not None
-            and int(epoch_id) >= int(kill_epoch)
-            and not os.path.exists(kill_marker)
-        ):
-            with open(kill_marker, "w") as fh:
-                fh.write(f"killed at epoch {int(epoch_id)}")
-            raise RuntimeError("injected mid-stream kill")
+        _kill_point(run_dir, kill_epoch, epoch_id)
 
     resume = os.path.isdir(os.path.join(run_dir, "delta"))
     delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
     stream = _delta_replay_stream(
         spark, run_dir, delta, rewrite=not resume
     )
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_and_audit(q, audit, fused_path)
+    _await_and_audit(stream, _gate, run_dir, audit, fused_path)
     # one fused side-effect write per executed batch — the shape the
     # single-append plan audit pins (retried batches may add one).
     audit["n_epoch_writes"] = n_writes[0]
@@ -3573,12 +3626,9 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
 def _gate_live_assemble(spark, run_dir):
     """Fold a drained gate run's fused epoch dirs into the admission
     record (one row per screened delta doc, seven signals + keep), cut
-    off the run files (localCheckpoint), and delete run_dir."""
-    import shutil as _shutil
-
+    off the run files (localCheckpoint) so run_dir can be removed."""
     fused = _epoch_read(spark, os.path.join(run_dir, "fused"))
     if fused is None:
-        _shutil.rmtree(run_dir, ignore_errors=True)
         return spark.createDataFrame(
             [],
             "doc_id long, exact_dup boolean, near_dup boolean, "
@@ -3628,7 +3678,6 @@ def _gate_live_assemble(spark, run_dir):
             & (F.col("nb_logit") > 0)
         ).alias("keep"),
     ).localCheckpoint(eager=True)
-    _shutil.rmtree(run_dir, ignore_errors=True)
     return out
 
 
@@ -3678,9 +3727,11 @@ def _gate_live_assemble(spark, run_dir):
     "— north star (deployable gate).",
 )
 def streaming_ingest_gate_live(spark, sf_dir):
-    run_dir = tempfile.mkdtemp(prefix="ds_gatelive_")
-    _gate_live_drain(spark, sf_dir, run_dir, _GATE_LIVE_LAST_RUN)
-    return _gate_live_assemble(spark, run_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gatelive_", ignore_cleanup_errors=True
+    ) as run_dir:
+        _gate_live_drain(spark, sf_dir, run_dir, _GATE_LIVE_LAST_RUN)
+        return _gate_live_assemble(spark, run_dir)
 
 
 @query(
@@ -3710,42 +3761,17 @@ def streaming_ingest_gate_live(spark, sf_dir):
     "to the gate family, graded end-to-end.",
 )
 def streaming_ingest_gate_resume(spark, sf_dir):
-    run_dir = tempfile.mkdtemp(prefix="ds_gateresume_")
-    kill_marker = os.path.join(run_dir, "_killed")
-    try:
-        _gate_live_drain(
-            spark, sf_dir, run_dir, _GATE_RESUME_LAST_RUN, kill_epoch=2
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gateresume_", ignore_cleanup_errors=True
+    ) as run_dir:
+        _kill_and_resume(
+            run_dir,
+            _GATE_RESUME_LAST_RUN,
+            functools.partial(
+                _gate_live_drain, spark, sf_dir, run_dir, _GATE_RESUME_LAST_RUN
+            ),
         )
-        raise AssertionError(
-            "injected kill did not fire — the resume proof is vacuous"
-        )
-    except AssertionError:
-        raise
-    except Exception as ex:  # the injected StreamingQueryException
-        if "injected mid-stream kill" not in str(ex):
-            raise
-    if not os.path.exists(kill_marker):
-        raise RuntimeError("kill marker missing after injected kill")
-    # Kill evidence straight from the CHECKPOINT (the audit dict is
-    # not populated on a failed drain — awaitTermination raises
-    # before it): the commit log holds exactly the epochs that
-    # completed before the crash, so committed < total proves the
-    # first attempt was genuinely partial.
-    commits_dir = os.path.join(run_dir, "ckpt", "commits")
-    first_committed = (
-        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-        if os.path.isdir(commits_dir)
-        else 0
-    )
-    # restart from the same checkpoint + epoch dirs and drain fully
-    _gate_live_drain(spark, sf_dir, run_dir, _GATE_RESUME_LAST_RUN)
-    _GATE_RESUME_LAST_RUN.update(
-        {
-            "killed": True,
-            "first_run_committed": first_committed,
-        }
-    )
-    return _gate_live_assemble(spark, run_dir)
+        return _gate_live_assemble(spark, run_dir)
 
 
 from .pipeline_llm import (  # noqa: E402
@@ -3805,14 +3831,11 @@ _SHARDS_LIVE_LAST_RUN: dict = {}
     "O(#epoch docs) metadata rows.",
 )
 def streaming_write_shards(spark, sf_dir):
-    import shutil as _shutil
-
-    run_dir = tempfile.mkdtemp(prefix="ds_shardslive_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_shardslive_", ignore_cleanup_errors=True
+    ) as run_dir:
         _shards_live_drain(spark, sf_dir, run_dir, _SHARDS_LIVE_LAST_RUN)
         return _shards_live_close(spark, sf_dir, run_dir)
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def _shards_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
@@ -3828,29 +3851,15 @@ def _shards_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     from .pipeline_llm import _doc_token_counts
 
     acc_path = os.path.join(run_dir, "epoch_rows")
-    kill_marker = os.path.join(run_dir, "_killed")
 
     def _extract(batch_df, epoch_id):
         _epoch_write(_doc_token_counts(batch_df), acc_path, epoch_id)
-        if (
-            kill_epoch is not None
-            and int(epoch_id) >= int(kill_epoch)
-            and not os.path.exists(kill_marker)
-        ):
-            with open(kill_marker, "w") as fh:
-                fh.write(f"killed at epoch {int(epoch_id)}")
-            raise RuntimeError("injected mid-stream kill")
+        _kill_point(run_dir, kill_epoch, epoch_id)
 
     resume = os.path.isdir(os.path.join(run_dir, "delta"))
     delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
     stream = _delta_replay_stream(spark, run_dir, delta, rewrite=not resume)
-    q = (
-        stream.writeStream.foreachBatch(_extract)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_and_audit(q, audit, acc_path)
+    _await_and_audit(stream, _extract, run_dir, audit, acc_path)
 
 
 def _shards_live_close(spark, sf_dir, run_dir):
@@ -3922,45 +3931,21 @@ _SHARDS_RESUME_LAST_RUN: dict = {}
     "uninterrupted one.",
 )
 def streaming_write_shards_resume(spark, sf_dir):
-    import shutil as _shutil
-
-    run_dir = tempfile.mkdtemp(prefix="ds_shardsresume_")
-    kill_marker = os.path.join(run_dir, "_killed")
-    try:
-        return _shards_resume_run(spark, sf_dir, run_dir, kill_marker)
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
-
-
-def _shards_resume_run(spark, sf_dir, run_dir, kill_marker):
-    try:
-        _shards_live_drain(
-            spark, sf_dir, run_dir, _SHARDS_RESUME_LAST_RUN, kill_epoch=2
+    with tempfile.TemporaryDirectory(
+        prefix="ds_shardsresume_", ignore_cleanup_errors=True
+    ) as run_dir:
+        _kill_and_resume(
+            run_dir,
+            _SHARDS_RESUME_LAST_RUN,
+            functools.partial(
+                _shards_live_drain,
+                spark,
+                sf_dir,
+                run_dir,
+                _SHARDS_RESUME_LAST_RUN,
+            ),
         )
-        raise AssertionError(
-            "injected kill did not fire — the resume proof is vacuous"
-        )
-    except AssertionError:
-        raise
-    except Exception as ex:  # the injected StreamingQueryException
-        if "injected mid-stream kill" not in str(ex):
-            raise
-    if not os.path.exists(kill_marker):
-        raise RuntimeError("kill marker missing after injected kill")
-    commits_dir = os.path.join(run_dir, "ckpt", "commits")
-    first_committed = (
-        len([f for f in os.listdir(commits_dir) if not f.startswith(".")])
-        if os.path.isdir(commits_dir)
-        else 0
-    )
-    _shards_live_drain(spark, sf_dir, run_dir, _SHARDS_RESUME_LAST_RUN)
-    _SHARDS_RESUME_LAST_RUN.update(
-        {
-            "killed": True,
-            "first_run_committed": first_committed,
-        }
-    )
-    return _shards_live_close(spark, sf_dir, run_dir)
+        return _shards_live_close(spark, sf_dir, run_dir)
 
 
 def _neardup_flag_index(spark, sf_dir):
@@ -4673,8 +4658,9 @@ def _gate_budget_decisions(spark, sf_dir, audit, tok_unit="words"):
     import shutil as _shutil
 
     def _drain_live():
-        run_dir = tempfile.mkdtemp(prefix="ds_gatedec_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="ds_gatedec_", ignore_cleanup_errors=True
+        ) as run_dir:
             dec_path = _budget_gate_drain(
                 spark, sf_dir, run_dir, audit, tok_unit=tok_unit
             )
@@ -4682,8 +4668,6 @@ def _gate_budget_decisions(spark, sf_dir, audit, tok_unit="words"):
             if dec is None:
                 return spark.createDataFrame([], _GATE_DEC_SCHEMA)
             return dec.localCheckpoint(eager=True)
-        finally:
-            _shutil.rmtree(run_dir, ignore_errors=True)
 
     if os.environ.get("SPARK_GRAFT_GATE_CACHE", "1") == "0":
         return _drain_live()
@@ -4863,7 +4847,6 @@ def _budget_gate_drain(
             fh.write(f"{_BUDGET_REPLAYS} {tok_unit}")
     ledger_path = os.path.join(run_dir, "ledger")
     dec_path = os.path.join(run_dir, "decisions")
-    kill_marker = os.path.join(run_dir, "_killed")
 
     def _decide(batch_df, epoch_id):
         from pyspark.sql import Window as W
@@ -4950,29 +4933,14 @@ def _budget_gate_drain(
             ledger_path,
             epoch_id,
         )
-        # injected one-shot crash AFTER the decision and ledger
-        # writes, BEFORE the commit — the kill-and-resume proof's
-        # worst case for the spend ledger (an orphaned ledger epoch
-        # a replay must ignore AND overwrite, never double-count).
-        if (
-            kill_epoch is not None
-            and int(epoch_id) >= int(kill_epoch)
-            and not os.path.exists(kill_marker)
-        ):
-            with open(kill_marker, "w") as fh:
-                fh.write(f"killed at epoch {int(epoch_id)}")
-            raise RuntimeError("injected mid-stream kill")
+        _kill_point(run_dir, kill_epoch, epoch_id)
 
-    q = (
+    stream = (
         spark.readStream.schema("doc_id long, epoch long")
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
-        .writeStream.foreachBatch(_decide)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    _await_and_audit(q, audit, ledger_path)
+    _await_and_audit(stream, _decide, run_dir, audit, ledger_path)
     return dec_path
 
 
@@ -5207,55 +5175,22 @@ _GATE_BUDGET_RESUME_LAST_RUN: dict = {}
     "was genuinely partial).",
 )
 def streaming_ingest_gate_budget_resume(spark, sf_dir):
-    import shutil as _shutil
-
-    run_dir = tempfile.mkdtemp(prefix="ds_gatebudgetres_")
-    kill_marker = os.path.join(run_dir, "_killed")
-    try:
-        try:
-            _budget_gate_drain(
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gatebudgetres_", ignore_cleanup_errors=True
+    ) as run_dir:
+        dec_path = _kill_and_resume(
+            run_dir,
+            _GATE_BUDGET_RESUME_LAST_RUN,
+            functools.partial(
+                _budget_gate_drain,
                 spark,
                 sf_dir,
                 run_dir,
                 _GATE_BUDGET_RESUME_LAST_RUN,
-                kill_epoch=2,
                 persist_ann=True,
-            )
-            raise AssertionError(
-                "injected kill did not fire — the resume proof is vacuous"
-            )
-        except AssertionError:
-            raise
-        except Exception as ex:  # the injected StreamingQueryException
-            if "injected mid-stream kill" not in str(ex):
-                raise
-        if not os.path.exists(kill_marker):
-            raise RuntimeError("kill marker missing after injected kill")
-        commits_dir = os.path.join(run_dir, "ckpt", "commits")
-        first_committed = (
-            len(
-                [
-                    f
-                    for f in os.listdir(commits_dir)
-                    if not f.startswith(".")
-                ]
-            )
-            if os.path.isdir(commits_dir)
-            else 0
-        )
-        dec_path = _budget_gate_drain(
-            spark, sf_dir, run_dir, _GATE_BUDGET_RESUME_LAST_RUN,
-            persist_ann=True,
-        )
-        _GATE_BUDGET_RESUME_LAST_RUN.update(
-            {
-                "killed": True,
-                "first_run_committed": first_committed,
-            }
+            ),
         )
         return _gate_budget_report(_epoch_read(spark, dec_path))
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 #: The admitted-rows → pack → rank → manifest oracle tail over the
@@ -5423,10 +5358,9 @@ def _gate_shards_close(spark, sf_dir, run_dir, dec):
     "stream.  Reference capability: none — north star.",
 )
 def streaming_shards_from_gate(spark, sf_dir):
-    import shutil as _shutil
-
-    run_dir = tempfile.mkdtemp(prefix="ds_gateshards_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gateshards_", ignore_cleanup_errors=True
+    ) as run_dir:
         dec = _gate_budget_decisions(
             spark, sf_dir, _GATE_SHARDS_LAST_RUN
         )
@@ -5434,8 +5368,6 @@ def streaming_shards_from_gate(spark, sf_dir):
             spark, sf_dir, run_dir, dec
         )
         return man
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def _gate_delivery_sql(dec_ctes: str) -> str:
@@ -5469,10 +5401,9 @@ def _gate_delivery_audit(spark, sf_dir, audit, tok_unit="words"):
     record in the declared token unit, close the seam (pack + write
     + manifest read-back), and pin alloc/admitted/shard-token
     identities per source."""
-    import shutil as _shutil
-
-    run_dir = tempfile.mkdtemp(prefix="ds_gatedeliv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gatedeliv_", ignore_cleanup_errors=True
+    ) as run_dir:
         dec = _gate_budget_decisions(
             spark, sf_dir, audit, tok_unit=tok_unit
         )
@@ -5520,8 +5451,6 @@ def _gate_delivery_audit(spark, sf_dir, audit, tok_unit="words"):
             .orderBy("source")
             .localCheckpoint(eager=True)
         )
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 @query(
@@ -5663,12 +5592,11 @@ def _gate_mixture_audit(spark, sf_dir, audit, tok_unit="words"):
     read the realized per-(shard, source) composition back FROM THE
     WRITTEN FILES, and pin it against the record's admitted totals
     and allocs."""
-    import shutil as _shutil
-
     from pyspark.sql import Window as W
 
-    run_dir = tempfile.mkdtemp(prefix="ds_gatemix_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gatemix_", ignore_cleanup_errors=True
+    ) as run_dir:
         dec = _gate_budget_decisions(
             spark, sf_dir, audit, tok_unit=tok_unit
         )
@@ -5736,8 +5664,6 @@ def _gate_mixture_audit(spark, sf_dir, audit, tok_unit="words"):
             .localCheckpoint(eager=True)
         )
         return out
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 #: Audit facts of the last streaming_shards_from_gate_resume run.
@@ -5783,12 +5709,11 @@ _GATE_SHARDS_RESUME_LAST_RUN: dict = {}
     "present after) are pinned by test.",
 )
 def streaming_shards_from_gate_resume(spark, sf_dir):
-    import shutil as _shutil
-
     from .pipeline_llm import _pack_from_counts
 
-    run_dir = tempfile.mkdtemp(prefix="ds_gateshardsres_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_gateshardsres_", ignore_cleanup_errors=True
+    ) as run_dir:
         dec = _gate_budget_decisions(
             spark, sf_dir, _GATE_SHARDS_RESUME_LAST_RUN
         )
@@ -5834,8 +5759,6 @@ def streaming_shards_from_gate_resume(spark, sf_dir):
             }
         )
         return man
-    finally:
-        _shutil.rmtree(run_dir, ignore_errors=True)
 
 
 from .bpe_shared import (  # noqa: E402
@@ -6191,51 +6114,53 @@ def streaming_decontaminate_gate(spark, sf_dir):
     from .pipeline_llm import _BENCH_MOD, _shingle5_arrays
 
     bench_path = _bench_shingle_index_path(spark, sf_dir)
-    run_dir = tempfile.mkdtemp(prefix="ds_deconlive_")
-    out_path = os.path.join(run_dir, "screened")
+    with tempfile.TemporaryDirectory(
+        prefix="ds_deconlive_", ignore_cleanup_errors=True
+    ) as run_dir:
+        out_path = os.path.join(run_dir, "screened")
 
-    def _screen(batch_df, epoch_id):
-        sess = batch_df.sparkSession
-        arrays = _shingle5_arrays(
-            batch_df.where(F.col("doc_id") % _BENCH_MOD != 0)
-        ).localCheckpoint(eager=True)
-        bench = sess.read.parquet(bench_path)
-        hits = (
-            arrays.select("doc_id", F.explode("shs").alias("sh"))
-            .join(F.broadcast(bench), "sh")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-        )
-        out = (
-            arrays.select(
-                "doc_id", F.size("shs").cast("long").alias("n_shingles")
+        def _screen(batch_df, epoch_id):
+            sess = batch_df.sparkSession
+            arrays = _shingle5_arrays(
+                batch_df.where(F.col("doc_id") % _BENCH_MOD != 0)
+            ).localCheckpoint(eager=True)
+            bench = sess.read.parquet(bench_path)
+            hits = (
+                arrays.select("doc_id", F.explode("shs").alias("sh"))
+                .join(F.broadcast(bench), "sh")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).alias("n_hit"))
             )
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                "n_shingles",
-                F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-                (F.coalesce("n_hit", F.lit(0)) > 0).alias("contaminated"),
+            out = (
+                arrays.select(
+                    "doc_id",
+                    F.size("shs").cast("long").alias("n_shingles"),
+                )
+                .join(hits, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "n_shingles",
+                    F.coalesce("n_hit", F.lit(0))
+                    .cast("long")
+                    .alias("n_hit"),
+                    (F.coalesce("n_hit", F.lit(0)) > 0).alias(
+                        "contaminated"
+                    ),
+                )
             )
-        )
-        _epoch_write(out, out_path, epoch_id)
+            _epoch_write(out, out_path, epoch_id)
 
-    stream = _delta_replay_stream(
-        spark, run_dir, table(spark, sf_dir, "documents")
-    )
-    q = (
-        stream.writeStream.foreachBatch(_screen)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_and_audit(q, _DECON_LIVE_LAST_RUN, out_path)
-    return _finish_run(
-        spark,
-        run_dir,
-        out_path,
-        "doc_id long, n_shingles long, n_hit long, contaminated boolean",
-    )
+        stream = _delta_replay_stream(
+            spark, run_dir, table(spark, sf_dir, "documents")
+        )
+        _await_and_audit(
+            stream, _screen, run_dir, _DECON_LIVE_LAST_RUN, out_path
+        )
+        return _finish_run(
+            spark,
+            out_path,
+            "doc_id long, n_shingles long, n_hit long, contaminated boolean",
+        )
 
 
 #: The embeddings fixture file name (the _DOCS_FILE rule).

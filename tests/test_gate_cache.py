@@ -70,12 +70,10 @@ def test_budget_report_identical_through_cache(spark, gate_cache_on):
     assert cached == live
 
 
-def test_close_of_all_rejected_window_is_empty_manifest(spark):
+def test_close_of_all_rejected_window_is_empty_manifest(spark, tmp_path):
     """A decision record with rows but ZERO admitted docs must close
     to an empty manifest, not crash in the writer's read-back
     (review finding r15)."""
-    import tempfile
-
     rows = [
         (1, "web", 0, 10, True, False, False, False, False, True,
          1.0, False, False, 0),
@@ -83,15 +81,11 @@ def test_close_of_all_rejected_window_is_empty_manifest(spark):
          1.0, False, False, 0),
     ]
     dec = spark.createDataFrame(rows, sq._GATE_DEC_SCHEMA)
-    run_dir = tempfile.mkdtemp(prefix="ds_closetest_")
-    try:
-        _dec, shards, man = sq._gate_shards_close(
-            spark, SF_DIR, run_dir, dec
-        )
-        assert man.count() == 0
-        assert shards.count() == 0
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    _dec, shards, man = sq._gate_shards_close(
+        spark, SF_DIR, str(tmp_path / "run"), dec
+    )
+    assert man.count() == 0
+    assert shards.count() == 0
 
 
 def test_cache_key_folds_gate_params(spark, gate_cache_on, monkeypatch):

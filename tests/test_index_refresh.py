@@ -588,9 +588,8 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
     batch 0 serves the genesis version, and every batch after the
     swap serves the refreshed one (delta doc present, tombstoned doc
     absent)."""
-    import tempfile
-
     from durablestreams_spark.operators.streaming_queries import (
+        _await_and_audit,
         _delta_replay_stream,
         _neardup_base_index_path,
         refresh_neardup_index,
@@ -629,20 +628,18 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
             )
             assert out is not None
 
-    run_dir = tempfile.mkdtemp(prefix="ds_swapserve_")
+    run_dir = str(tmp_path / "swapserve")
     stream_docs = spark.createDataFrame(
         [(i, f"stream traffic {i}") for i in delta_ids[1:9]],
         "doc_id long, text string",
     )
-    q = (
-        _delta_replay_stream(spark, run_dir, stream_docs)
-        .writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _await_and_audit(
+        _delta_replay_stream(spark, run_dir, stream_docs),
+        _serve,
+        run_dir,
+        {},
+        os.path.join(run_dir, "appended"),
     )
-    assert q.awaitTermination(300)
-    shutil.rmtree(run_dir, ignore_errors=True)
 
     assert len(reads) >= 2, reads
     # every read complete: exactly 4 band rows per distinct doc

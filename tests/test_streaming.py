@@ -876,6 +876,7 @@ def test_stateful_fallbacks_multi_batch_state_reuse(spark, tmp_path):
     the single-file variants of these tests never exercised the
     state-exists branch, which is how `state.get()` (a tuple call)
     slipped through."""
+    from durablestreams_spark.operators.streaming_queries import _drain
     from durablestreams_spark.streaming.stateful import (
         running_user_ewma,
         running_user_stats,
@@ -914,22 +915,9 @@ def test_stateful_fallbacks_multi_batch_state_reuse(spark, tmp_path):
             .json(src_dir)
         )
 
-    def _drain(df, name, ckpt):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        return spark.sql(f"SELECT * FROM {name}").toPandas()
-
     stats = _drain(
-        running_user_stats(_src().select("user_id", "ts", "value")),
-        "mb_stats_t", "ckpt_stats",
-    )
+        running_user_stats(_src().select("user_id", "ts", "value")), "update"
+    ).toPandas()
     # two emissions (one per batch); the last carries the full fold
     assert len(stats) == 2
     last = stats.sort_values("n_events").iloc[-1]
@@ -937,16 +925,16 @@ def test_stateful_fallbacks_multi_batch_state_reuse(spark, tmp_path):
 
     hist = _drain(
         user_type_histogram_fallback(_src().select("user_id", "event_type")),
-        "mb_hist_t", "ckpt_hist",
-    )
+        "update",
+    ).toPandas()
     assert len(hist) == 2
     last = hist.sort_values("n_events").iloc[-1]
     assert (last["n_events"], last["n_types"]) == (3, 2)
 
     ewma = _drain(
         running_user_ewma(_src().select("user_id", "ts", "event_id", "value")),
-        "mb_ewma_t", "ckpt_ewma",
-    )
+        "update",
+    ).toPandas()
     assert len(ewma) == 2
     a = EWMA_ALPHA
     want = a * 5.0 + (1 - a) * (a * 3.0 + (1 - a) * 1.0)

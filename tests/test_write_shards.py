@@ -169,7 +169,7 @@ def test_payload_fp_flips_on_single_token_and_on_order(spark, tmp_path):
     assert graded == base
 
 
-def test_streaming_epoch_writer_matches_batch_on_same_delta(spark):
+def test_streaming_epoch_writer_matches_batch_on_same_delta(spark, tmp_path):
     """VERDICT r10 task 5 'done' criterion: the LIVE epoch writer's
     drained manifest equals the batch writer machinery applied to the
     same delta corpus, its replay spans multiple stateless batches,
@@ -196,8 +196,6 @@ def test_streaming_epoch_writer_matches_batch_on_same_delta(spark):
     )
     assert live1 == live2, "epoch delivery not reproducible"
 
-    import tempfile
-
     delta = table(spark, SF_DIR, "documents").where(
         ~sq._ndlive_base_pred()
     )
@@ -208,7 +206,7 @@ def test_streaming_epoch_writer_matches_batch_on_same_delta(spark):
                 _write_shards(
                     spark,
                     SF_DIR,
-                    root=tempfile.mkdtemp(prefix="ds_batchdelta_"),
+                    root=str(tmp_path / "batchdelta"),
                     seqs_fn=lambda: _pack_from_counts(
                         _doc_token_counts(delta)
                     ),

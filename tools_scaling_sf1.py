@@ -69,7 +69,8 @@ def main() -> None:
     line = {
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "sf1_times": res,
-        "total": round(sum(v for v in res.values() if v), 2),
+        "total": round(sum(v for v in res.values() if v is not None), 2),
+        "failed": sorted(n for n, v in res.items() if v is None),
     }
     print(json.dumps(line))
     if out_path:
