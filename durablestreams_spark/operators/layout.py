@@ -82,27 +82,20 @@ def _zorder_dir(spark, sf_dir: str) -> str:
     """events re-clustered by Z(ts, user_id), written ONCE per fixture
     (marker-cached like the multimodal blob corpus)."""
     import os
-    import shutil
 
     from ..analytics.core import table
-    from .cache_marker import marker_current, write_marker
+    from .cache_marker import build_once, cache_root
 
-    root = os.path.join(
-        "/tmp/durablestreams_zorder_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
+    def build(root):
+        ev = table(spark, sf_dir, "events").select(
+            "event_id", "user_id", F.unix_micros("ts").alias("tsu"), "value"
+        )
+        zorder_write(ev, ["tsu", "user_id"], os.path.join(root, "events_z"), 32)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_zorder_v1", sf_dir), sf_dir, build
     )
-    data_dir = os.path.join(root, "events_z")
-    marker = os.path.join(root, "_built")
-    if marker_current(marker, sf_dir, name="events"):
-        return data_dir
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("tsu"), "value"
-    )
-    zorder_write(ev, ["tsu", "user_id"], data_dir, 32)
-    write_marker(marker, sf_dir, name="events")
-    return data_dir
+    return os.path.join(root, "events_z")
 
 
 from ..analytics.core import query, table  # noqa: E402
@@ -178,25 +171,18 @@ def _bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
     ``CLUSTERED BY`` DDL is what lets a fresh session trust the layout
     — bucketing metadata lives in the catalog, not the files."""
     import os
-    import shutil
 
     from ..analytics.core import table
-    from .cache_marker import marker_current, write_marker
+    from .cache_marker import build_once, cache_root
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    root = os.path.join(
-        "/tmp/durablestreams_bucketed_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
+    root = cache_root("/tmp/durablestreams_bucketed_v1", sf_dir)
+    sf_tag = os.path.basename(root).replace(".", "_")
     specs = {
         "orders": ("o_orderkey", os.path.join(root, "orders_b")),
         "lineitem": ("l_orderkey", os.path.join(root, "lineitem_b")),
     }
-    names = {}
-    if not marker_current(marker, sf_dir, name="orders"):
-        shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root)
+
+    def build(root):
         for src, (key, path) in specs.items():
             tmp = f"ds_build_{src}_{sf_tag}"
             spark.sql(f"DROP TABLE IF EXISTS {tmp}")
@@ -211,7 +197,9 @@ def _bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
             # external table: DROP removes only the catalog entry, the
             # bucket-id-named files stay for other sessions.
             spark.sql(f"DROP TABLE {tmp}")
-        write_marker(marker, sf_dir, name="orders")
+
+    build_once(root, sf_dir, build, name="orders")
+    names = {}
     for src, (key, path) in specs.items():
         name = f"ds_bucketed_{src}_{sf_tag}"
         schema = _ddl_schema(table(spark, sf_dir, src))
@@ -263,27 +251,22 @@ def _day_partitioned_events(spark, sf_dir: str) -> str:
     dim-side filter prune fact partitions at RUNTIME via dynamic
     partition pruning."""
     import os
-    import shutil
 
     from ..analytics.core import table
-    from .cache_marker import marker_current, write_marker
+    from .cache_marker import build_once, cache_root
 
-    root = os.path.join(
-        "/tmp/durablestreams_daypart_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
+    def build(root):
+        ev = table(spark, sf_dir, "events").withColumn(
+            "day", F.date_format("ts", "yyyy-MM-dd")
+        )
+        ev.drop("ts").write.partitionBy("day").parquet(
+            os.path.join(root, "events_by_day")
+        )
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_daypart_v1", sf_dir), sf_dir, build
     )
-    data_dir = os.path.join(root, "events_by_day")
-    marker = os.path.join(root, "_built")
-    if marker_current(marker, sf_dir, name="events"):
-        return data_dir
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
-    ev = table(spark, sf_dir, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    ev.drop("ts").write.partitionBy("day").parquet(data_dir)
-    write_marker(marker, sf_dir, name="events")
-    return data_dir
+    return os.path.join(root, "events_by_day")
 
 
 @query(

@@ -13,13 +13,12 @@ the same duckdb-oracle check as the relational surface.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 from pyspark.sql import functions as F
 
 from ..analytics.core import query, table
-from .cache_marker import marker_current, write_marker
+from .cache_marker import build_once, cache_root
 from ..ingest import produce_bulk
 from ..maintenance import compact
 from ..stream import StreamCatalog
@@ -45,34 +44,32 @@ def _ingest_events(spark, sf_dir: str):
     recomputes.  This is one distributed job (``ingest.produce_bulk``),
     not len(events)/BATCH driver round-trips.
     """
-    root = os.path.join(
-        "/tmp/durablestreams_logops_v2", os.path.basename(os.path.normpath(sf_dir))
+
+    def build(root):
+        stream = StreamCatalog(root).stream("events_log")
+        produce_bulk(
+            stream,
+            table(spark, sf_dir, "events").select("event_id", "ts"),
+            order_by=["ts", "event_id"],
+            batch_records=BATCH,
+            payload_cols=["event_id"],
+            # physical segments are 2.5 logical batches each: offsets
+            # are identical (they derive from batch_records alone) but
+            # the write produces 2.5x fewer files, and two segments
+            # still trip the 5000-record compaction window below.
+            segment_rows=2500,
+        )
+        # Compact the oldest window (2 segments trip MaxRecords=5000)
+        # so the read path spans compacted + raw segments.
+        compact(stream)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_logops_v2", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
     )
-    marker = os.path.join(root, "_ingested")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_log")
-    if marker_current(marker, sf_dir, params=_geom_params()):
-        return stream
-    shutil.rmtree(root, ignore_errors=True)
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_log")
-    produce_bulk(
-        stream,
-        table(spark, sf_dir, "events").select("event_id", "ts"),
-        order_by=["ts", "event_id"],
-        batch_records=BATCH,
-        payload_cols=["event_id"],
-        # physical segments are 2.5 logical batches each: offsets are
-        # identical (they derive from batch_records alone) but the
-        # write produces 2.5x fewer files, and two segments still trip
-        # the 5000-record compaction window below.
-        segment_rows=2500,
-    )
-    # Compact the oldest window (2 segments trip MaxRecords=5000) so
-    # the read path spans compacted + raw segments.
-    compact(stream)
-    write_marker(marker, sf_dir, params=_geom_params())
-    return stream
+    return StreamCatalog(root).stream("events_log")
 
 
 @query(
@@ -140,13 +137,7 @@ def ndjson_segment_parity(spark, sf_dir):
 
     from ..sources.ndjson import read_ndjson_segments
 
-    root = os.path.join(
-        "/tmp/durablestreams_ndjson_v2", os.path.basename(os.path.normpath(sf_dir))
-    )
-    data_dir = os.path.join(root, "segments")
-    marker = os.path.join(root, "_written")
-    if not marker_current(marker, sf_dir, params=_geom_params()):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         ev = table(spark, sf_dir, "events").select("event_id", "ts")
         rn = F.row_number().over(Window.orderBy("ts", "event_id")) - 1
         lines = ev.withColumn("rn", rn).select(
@@ -156,10 +147,15 @@ def ndjson_segment_parity(spark, sf_dir):
                 F.to_json(F.struct("event_id")),
             ).alias("value")
         )
-        lines.write.mode("overwrite").text(data_dir)
-        os.makedirs(root, exist_ok=True)
-        write_marker(marker, sf_dir, params=_geom_params())
-    df = read_ndjson_segments(spark, data_dir)
+        lines.write.mode("overwrite").text(os.path.join(root, "segments"))
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_ndjson_v2", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
+    )
+    df = read_ndjson_segments(spark, os.path.join(root, "segments"))
     return df.select(
         F.get_json_object("data", "$.event_id").cast("long").alias("event_id"),
         "offset",
@@ -378,32 +374,28 @@ def _ingest_events_keyed(spark, sf_dir: str):
     oracle that replays its full history): events keyed by user_id,
     ingested with the same deterministic clock, then compacted by key.
     Marker-cached like the other fixtures."""
-    root = os.path.join(
-        "/tmp/durablestreams_keycompact_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_ingested")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_keyed")
-    if marker_current(marker, sf_dir, params=_geom_params()):
-        return stream
-    shutil.rmtree(root, ignore_errors=True)
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_keyed")
-    produce_bulk(
-        stream,
-        table(spark, sf_dir, "events").select("event_id", "ts", "user_id"),
-        order_by=["ts", "event_id"],
-        batch_records=BATCH,
-        payload_cols=["event_id", "user_id"],
-        segment_rows=2500,
-    )
     from ..maintenance import compact_by_key
 
-    metas = compact_by_key(stream, spark, "$.user_id")
-    assert metas
-    write_marker(marker, sf_dir, params=_geom_params())
-    return stream
+    def build(root):
+        stream = StreamCatalog(root).stream("events_keyed")
+        produce_bulk(
+            stream,
+            table(spark, sf_dir, "events").select("event_id", "ts", "user_id"),
+            order_by=["ts", "event_id"],
+            batch_records=BATCH,
+            payload_cols=["event_id", "user_id"],
+            segment_rows=2500,
+        )
+        metas = compact_by_key(stream, spark, "$.user_id")
+        assert metas
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_keycompact_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
+    )
+    return StreamCatalog(root).stream("events_keyed")
 
 
 @query(
@@ -480,31 +472,28 @@ def _ingest_events_payload(spark, sf_dir: str):
     (event_type, value), not just the id — the fixture for querying
     the log as a table.  Separate cache root: extending the shared
     ``_ingest_events`` payload would invalidate every offset oracle."""
-    root = os.path.join(
-        "/tmp/durablestreams_logpay_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
+
+    def build(root):
+        stream = StreamCatalog(root).stream("events_payload")
+        produce_bulk(
+            stream,
+            table(spark, sf_dir, "events").select(
+                "event_id", "ts", "event_type", "value"
+            ),
+            order_by=["ts", "event_id"],
+            batch_records=BATCH,
+            payload_cols=["event_id", "event_type", "value"],
+            segment_rows=2500,
+        )
+        compact(stream)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_logpay_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
     )
-    marker = os.path.join(root, "_ingested")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_payload")
-    if marker_current(marker, sf_dir, params=_geom_params()):
-        return stream
-    shutil.rmtree(root, ignore_errors=True)
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_payload")
-    produce_bulk(
-        stream,
-        table(spark, sf_dir, "events").select(
-            "event_id", "ts", "event_type", "value"
-        ),
-        order_by=["ts", "event_id"],
-        batch_records=BATCH,
-        payload_cols=["event_id", "event_type", "value"],
-        segment_rows=2500,
-    )
-    compact(stream)
-    write_marker(marker, sf_dir, params=_geom_params())
-    return stream
+    return StreamCatalog(root).stream("events_payload")
 
 
 @query(
@@ -553,35 +542,30 @@ def _ingest_events_replica(spark, sf_dir: str):
     """A second, deliberately-diverged copy of the payload stream."""
     from pyspark.sql import Window as W
 
-    root = os.path.join(
-        "/tmp/durablestreams_logreplica_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
+    def build(root):
+        ev = table(spark, sf_dir, "events").select("event_id", "ts")
+        rn = F.row_number().over(W.orderBy("ts", "event_id"))
+        kept = (
+            ev.withColumn("rn", rn)
+            .where(F.col("rn") % DIVERGE_MOD != 0)
+            .drop("rn")
+        )
+        produce_bulk(
+            StreamCatalog(root).stream("events_replica"),
+            kept,
+            order_by=["ts", "event_id"],
+            batch_records=BATCH,
+            payload_cols=["event_id"],
+            segment_rows=2500,
+        )
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_logreplica_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
     )
-    marker = os.path.join(root, "_ingested")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_replica")
-    if marker_current(marker, sf_dir, params=_geom_params()):
-        return stream
-    shutil.rmtree(root, ignore_errors=True)
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_replica")
-    ev = table(spark, sf_dir, "events").select("event_id", "ts")
-    rn = F.row_number().over(W.orderBy("ts", "event_id"))
-    kept = (
-        ev.withColumn("rn", rn)
-        .where(F.col("rn") % DIVERGE_MOD != 0)
-        .drop("rn")
-    )
-    produce_bulk(
-        stream,
-        kept,
-        order_by=["ts", "event_id"],
-        batch_records=BATCH,
-        payload_cols=["event_id"],
-        segment_rows=2500,
-    )
-    write_marker(marker, sf_dir, params=_geom_params())
-    return stream
+    return StreamCatalog(root).stream("events_replica")
 
 
 @query(
@@ -673,21 +657,8 @@ def log_retention_trim(spark, sf_dir):
     from ..maintenance import apply_retention
     from ..offsets import serialize_offset
 
-    root = os.path.join(
-        "/tmp/durablestreams_retention_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    # geometry-affecting builder knobs are part of the cache identity:
-    # changing any of them (e.g. the round-5 exact_segments switch)
-    # must invalidate caches built with the old geometry.
-    ret_params = f"exact:{RET_SEG_ROWS}:{BATCH}"
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_ret")
-    if not marker_current(marker, sf_dir, params=_geom_params(ret_params)):
-        shutil.rmtree(root, ignore_errors=True)
-        cat = StreamCatalog(root)
-        stream = cat.stream("events_ret")
+    def build(root):
+        stream = StreamCatalog(root).stream("events_ret")
         ev = table(spark, sf_dir, "events").select("event_id", "ts")
         n = ev.count()
         produce_bulk(
@@ -708,8 +679,17 @@ def log_retention_trim(spark, sf_dir):
         mid = max(1, n // 2)
         cutoff = serialize_offset((mid - 1) // BATCH + 1, (mid - 1) % BATCH)
         apply_retention(stream, cutoff)
-        write_marker(marker, sf_dir, params=_geom_params(ret_params))
-    df = stream.to_df(spark)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_retention_v1", sf_dir),
+        sf_dir,
+        build,
+        # geometry-affecting builder knobs are part of the cache
+        # identity: changing any of them (e.g. the exact_segments
+        # switch) must invalidate caches built with the old geometry.
+        params=_geom_params(f"exact:{RET_SEG_ROWS}:{BATCH}"),
+    )
+    df = StreamCatalog(root).stream("events_ret").to_df(spark)
     return df.select(
         F.get_json_object("data", "$.event_id").cast("long").alias("event_id")
     )
@@ -742,17 +722,8 @@ def log_schema_evolution(spark, sf_dir):
 
     from ..functions.payload import typed_view
 
-    root = os.path.join(
-        "/tmp/durablestreams_schemaevo_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_evo")
-    if not marker_current(marker, sf_dir, params=_geom_params()):
-        shutil.rmtree(root, ignore_errors=True)
-        cat = StreamCatalog(root)
-        stream = cat.stream("events_evo")
+    def build(root):
+        stream = StreamCatalog(root).stream("events_evo")
         ev = table(spark, sf_dir, "events").select("event_id", "ts", "value")
         n = ev.count()
         rn = F.row_number().over(W.orderBy("ts", "event_id"))
@@ -775,9 +746,17 @@ def log_schema_evolution(spark, sf_dir):
             payload_cols=["event_id", "value"],
             segment_rows=RET_SEG_ROWS,
         )
-        write_marker(marker, sf_dir, params=_geom_params())
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_schemaevo_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
+    )
     typed = typed_view(
-        stream.to_df(spark), "event_id long, value double", keep=()
+        StreamCatalog(root).stream("events_evo").to_df(spark),
+        "event_id long, value double",
+        keep=(),
     )
     return typed.select("event_id", F.round("value", 4).alias("value"))
 
@@ -814,19 +793,10 @@ def _geom_params(extra: str = "") -> str:
 def log_fork_branch(spark, sf_dir):
     from ..maintenance import fork_stream
 
-    root = os.path.join(
-        "/tmp/durablestreams_fork_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    cat = StreamCatalog(root)
-    fork = cat.stream("events_branch")
-    if not marker_current(marker, sf_dir, params=_geom_params()):
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root):
         cat = StreamCatalog(root)
-        base = cat.stream("events_base")
         produce_bulk(
-            base,
+            cat.stream("events_base"),
             table(spark, sf_dir, "events").select("event_id", "ts"),
             order_by=["ts", "event_id"],
             batch_records=BATCH,
@@ -835,7 +805,14 @@ def log_fork_branch(spark, sf_dir):
         )
         fork = fork_stream(cat, "events_base", "events_branch")
         fork.produce([{"event_id": -(i + 1)} for i in range(FORK_EXTRA)])
-        write_marker(marker, sf_dir, params=_geom_params())
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_fork_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
+    )
+    fork = StreamCatalog(root).stream("events_branch")
     return fork.to_df(spark).select(
         F.get_json_object("data", "$.event_id").cast("long").alias("event_id")
     )
@@ -857,18 +834,8 @@ def log_fork_branch(spark, sf_dir):
     "the plain events table.",
 )
 def log_version_time_travel(spark, sf_dir):
-    root = os.path.join(
-        "/tmp/durablestreams_asof_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    vfile = os.path.join(root, "_pinned_version")
-    cat = StreamCatalog(root)
-    stream = cat.stream("events_asof")
-    if not marker_current(marker, sf_dir, params=_geom_params()):
-        shutil.rmtree(root, ignore_errors=True)
-        cat = StreamCatalog(root)
-        stream = cat.stream("events_asof")
+    def build(root):
+        stream = StreamCatalog(root).stream("events_asof")
         produce_bulk(
             stream,
             table(spark, sf_dir, "events").select("event_id", "ts"),
@@ -880,11 +847,18 @@ def log_version_time_travel(spark, sf_dir):
         pinned = stream.refresh().version
         # later history the snapshot must NOT see
         stream.produce([{"event_id": -(i + 1)} for i in range(50)])
-        with open(vfile, "w") as f:
+        with open(os.path.join(root, "_pinned_version"), "w") as f:
             f.write(str(pinned))
-        write_marker(marker, sf_dir, params=_geom_params())
-    with open(vfile) as f:
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_asof_v1", sf_dir),
+        sf_dir,
+        build,
+        params=_geom_params(),
+    )
+    with open(os.path.join(root, "_pinned_version")) as f:
         pinned = int(f.read().strip())
+    stream = StreamCatalog(root).stream("events_asof")
     df = stream.to_df(spark, as_of_version=pinned)
     return df.select(
         F.get_json_object("data", "$.event_id").cast("long").alias("event_id")

@@ -24,7 +24,6 @@ payloads are large.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analytics.core import query, table
-from .cache_marker import marker_current, write_marker
+from .cache_marker import build_once, cache_root
 
 
 @query(
@@ -191,35 +190,35 @@ def _media_dir(spark, sf_dir: str) -> str:
     half-written file a later read would choke on).  Local-FS paths
     work because executors share the node; at scale the same worker
     writes to an object store / DBFS-style shared mount."""
-    root = os.path.join(
-        "/tmp/durablestreams_media_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
+
+    def build(root):
+        blob_dir = os.path.join(root, "blobs")
+        os.makedirs(blob_dir)
+
+        def write_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from .media_codec import build_media
+
+            for pdf in batches:
+                for i, p in zip(pdf["doc_id"], pdf["payload"]):
+                    blob = build_media(int(i), p)
+                    tmp = os.path.join(blob_dir, f".tmp_{int(i):08d}")
+                    with open(tmp, "wb") as f:
+                        f.write(blob)
+                    os.replace(tmp, os.path.join(blob_dir, f"{int(i):08d}.bin"))
+                yield pd.DataFrame({"n": [len(pdf)]})
+
+        docs = table(spark, sf_dir, "documents").select(
+            "doc_id", F.encode("text", "UTF-8").alias("payload")
+        )
+        docs.mapInPandas(write_batch, schema="n long").agg(F.sum("n")).collect()
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_media_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
     )
-    blob_dir = os.path.join(root, "blobs")
-    marker = os.path.join(root, "_built")
-    if marker_current(marker, sf_dir, name="documents"):
-        return blob_dir
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(blob_dir)
-
-    def write_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codec import build_media
-
-        for pdf in batches:
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                blob = build_media(int(i), p)
-                tmp = os.path.join(blob_dir, f".tmp_{int(i):08d}")
-                with open(tmp, "wb") as f:
-                    f.write(blob)
-                os.replace(tmp, os.path.join(blob_dir, f"{int(i):08d}.bin"))
-            yield pd.DataFrame({"n": [len(pdf)]})
-
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    docs.mapInPandas(write_batch, schema="n long").agg(F.sum("n")).collect()
-    write_marker(marker, sf_dir, name="documents")
-    return blob_dir
+    return os.path.join(root, "blobs")
 
 
 @query(

@@ -28,7 +28,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..analytics.core import query, spread, table
-from .cache_marker import marker_current, write_marker
+from .cache_marker import build_once, cache_root
 from .dedup import dedup_simhash
 
 #: Top-V corpus vocabulary shared by the OOV-coverage scorer and the
@@ -776,22 +776,9 @@ def _write_shards(
     broadcast bucket-prefix offsets from an O(256) rollup, so the only
     corpus-sized exchange is the bucket hash partition — the shape
     that still works when the sequence count is billions."""
-    import shutil as _shutil
-
     from pyspark.sql import Window as W
 
-    root = root or os.path.join(
-        root_base, os.path.basename(os.path.normpath(sf_dir))
-    )
-    marker = os.path.join(root, "_built")
-    data_p = os.path.join(root, "shards.parquet")
-    params = params or (
-        f"pack{PACK_SEQ_LEN}x{PACK_SHARDS}:ws{WRITE_SHARDS}"
-        f":seed{SHARD_SEED}:v1"
-    )
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         seqs = (
             seqs_fn()
             if seqs_fn is not None
@@ -844,10 +831,21 @@ def _write_shards(
             .sortWithinPartitions("rank")
             .write.mode("overwrite")
             .partitionBy("shard_out")
-            .parquet(data_p)
+            .parquet(os.path.join(root, "shards.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(data_p)
+
+    root = build_once(
+        root or cache_root(root_base, sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=params
+        or (
+            f"pack{PACK_SEQ_LEN}x{PACK_SHARDS}:ws{WRITE_SHARDS}"
+            f":seed{SHARD_SEED}:v1"
+        ),
+    )
+    return spark.read.parquet(os.path.join(root, "shards.parquet"))
 
 
 @query(

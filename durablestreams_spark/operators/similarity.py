@@ -33,6 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..analytics.core import query, spread, table
+from .cache_marker import build_once, cache_root, fixture_fingerprint, publish_once
 
 N_PLANES = 16
 DIM = 64
@@ -816,22 +817,9 @@ def _ivf_removed_index(spark, sf_dir):
     the full IVF index rows, tombstone the graded removal set through
     refresh_ivf_remove's guarded swap, serve the swapped artifact
     (cache-marker protocol, embeddings-fingerprint keyed)."""
-    import shutil as _shutil
 
-    from .cache_marker import marker_current, write_marker
-
-    root = os.path.join(
-        _IVF_REMOVE_ROOT, os.path.basename(os.path.normpath(sf_dir))
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = (
-        f"{_ann_params()}:rm{_RM_THRESHOLD}"
-        f":mod{_RM_MOD}:b{_RM_BANDS}x{_RM_BAND_BITS}:v1"
-    )
-    if not marker_current(marker, sf_dir, name="embeddings", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
+        idx_p = os.path.join(root, "index.parquet")
         _ivf_index(spark, sf_dir).write.mode("overwrite").parquet(idx_p)
         removed = _ivf_removed_ids(spark, sf_dir).localCheckpoint(
             eager=True
@@ -844,10 +832,18 @@ def _ivf_removed_index(spark, sf_dir):
             raise RuntimeError(
                 "ivf-remove refresh lost the lock on a fresh artifact"
             )
-        write_marker(marker, sf_dir, name="embeddings", params=params)
-    from ..analytics.core import spread as _spread_fn
 
-    return _spread_fn(spark.read.parquet(idx_p))
+    root = build_once(
+        cache_root(_IVF_REMOVE_ROOT, sf_dir),
+        sf_dir,
+        build,
+        name="embeddings",
+        params=(
+            f"{_ann_params()}:rm{_RM_THRESHOLD}"
+            f":mod{_RM_MOD}:b{_RM_BANDS}x{_RM_BAND_BITS}:v1"
+        ),
+    )
+    return spread(spark.read.parquet(os.path.join(root, "index.parquet")))
 
 
 @query(
@@ -926,39 +922,22 @@ def _ann_params() -> str:
 
 def _ann_cached(spark, sf_dir, name, build):
     """Serve the named learned artifact from the persisted index,
-    building (and atomically publishing: write tmp dir + rename) on
+    building and publishing it (``cache_marker.publish_once``) on
     first use.  A lost rename race reads the winner's copy — both
     builders produce identical bits (deterministic training)."""
-    import os as _os
-    import shutil as _shutil
-
-    if _os.environ.get("SPARK_GRAFT_ANN_CACHE", "1") == "0":
+    if os.environ.get("SPARK_GRAFT_ANN_CACHE", "1") == "0":
         return build()
-    from .cache_marker import fixture_fingerprint
-
     fp = fixture_fingerprint(sf_dir, "embeddings", params=_ann_params())
     key = hashlib.md5(f"{name}:{fp}".encode()).hexdigest()[:16]
-    path = _os.path.join(_ANN_CACHE_ROOT, f"{name}-{key}")
-    if not _os.path.isdir(path):
-        import threading as _threading
-
-        _os.makedirs(_ANN_CACHE_ROOT, exist_ok=True)
-        # pid alone is not unique within one driver: two THREADS of the
-        # same process racing on a missing key would overwrite each
-        # other's in-progress tmp dir; thread id disambiguates.
-        tmp = f"{path}.tmp-{_os.getpid()}-{_threading.get_ident()}"
-        build().write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, path)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    path = publish_once(
+        os.path.join(_ANN_CACHE_ROOT, f"{name}-{key}"),
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
+    )
     # spread(): the packed parquet artifact reads as few FilePartitions
     # on local fixtures; the scoring joins downstream must not run at
     # that count (no-op at scale, files >= cores — same contract as
     # the live _ivf_ranked path).
-    from ..analytics.core import spread as _spread_fn
-
-    return _spread_fn(spark.read.parquet(path))
+    return spread(spark.read.parquet(path))
 
 
 def _ivf_index_pred():
@@ -1533,82 +1512,92 @@ def _pq_adc_topk_arrow(codes, qdt):
 
     KS = [dtm.shape[1] for dtm in DTM]
 
+    def _codes(vid, cds):
+        """(ok, C) of one batch, read from the list offsets and the row
+        and value validity bitmaps (the _stack_rows technique): ``ok``
+        marks the rows whose first PQ_M codes are all live, and row i
+        of the (n, PQ_M) matrix ``C`` holds those codes.  A NULL
+        codes row or NULL code element makes the join path's
+        GetArrayItem chain NULL — those rows are NULLS-FIRST
+        candidates for every clean query.  A short codes array or an
+        out-of-range code is an ANSI INVALID_ARRAY_INDEX error in the
+        replaced join — raised the same way, for the first such row
+        (cannot happen from real artifacts; defensive parity only)."""
+        row_ok = cds.is_valid().to_numpy(zero_copy_only=False)
+        offs = cds.offsets.to_numpy()
+        lens = offs[1:] - offs[:-1]
+        live = np.flatnonzero(row_ok & (lens >= PQ_M))
+        idx = offs[:-1][live, None] + np.arange(PQ_M)
+        vals = cds.values
+        C = np.zeros((len(lens), PQ_M), dtype=np.int64)
+        C[live] = np.asarray(
+            vals.fill_null(0).to_numpy(zero_copy_only=False), dtype=np.int64
+        )[idx]
+        # a NULL or short row counts as all-NULL codes
+        nulls = np.ones(C.shape, dtype=bool)
+        nulls[live] = (
+            vals.is_null().to_numpy(zero_copy_only=False)[idx]
+            if vals.null_count
+            else False
+        )
+        short = row_ok & (lens < PQ_M)
+        oob = np.zeros(C.shape, dtype=bool)
+        if KS:
+            oob = ~nulls & ((C < 0) | (C >= np.asarray(KS)))
+        bad = np.flatnonzero(short | oob.any(axis=1))
+        if len(bad):
+            i = int(bad[0])
+            if short[i]:
+                raise ValueError(
+                    f"codes row {vid[i].as_py()} has {int(lens[i])} < "
+                    f"{PQ_M} codes"
+                )
+            m = int(np.flatnonzero(oob[i])[0])
+            raise ValueError(
+                f"codes row {vid[i].as_py()} sub {m}: code {int(C[i, m])} "
+                f"out of range [0, {KS[m]})"
+            )
+        return ~nulls.any(axis=1), C
+
     def _score(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            vids = b.column("vid").to_pylist()
-            cds = b.column("cds").to_pylist()
-            # Rows whose 16 referenced lookups are all live take the
-            # vectorized path.  A NULL codes row or NULL code element
-            # makes the join path's GetArrayItem chain NULL — those
-            # rows are NULLS-FIRST candidates for every clean query.
-            # A short codes array or an out-of-range code is an ANSI
-            # INVALID_ARRAY_INDEX error in the replaced join — raise
-            # the same way instead of silently nulling (cannot happen
-            # from real artifacts; defensive parity only).  NULL
-            # vec_id rows are dropped like the join condition drops
-            # them (NOT(NULL = q) is NULL).
-            for i in range(n):
-                c = cds[i]
-                if c is None:
-                    continue
-                if len(c) < PQ_M:
-                    raise ValueError(
-                        f"codes row {vids[i]} has {len(c)} < {PQ_M} codes"
-                    )
-                for m in range(PQ_M) if KS else ():
-                    if c[m] is not None and not 0 <= c[m] < KS[m]:
-                        raise ValueError(
-                            f"codes row {vids[i]} sub {m}: code {c[m]} "
-                            f"out of range [0, {KS[m]})"
-                        )
-            clean_i = [
-                i
-                for i in range(n)
-                if vids[i] is not None
-                and cds[i] is not None
-                and all(cds[i][m] is not None for m in range(PQ_M))
-            ]
-            cset = set(clean_i)
-            null_nids = sorted(
-                vids[i]
-                for i in range(n)
-                if i not in cset and vids[i] is not None
+            vid = b.column("vid")
+            cds = b.column("cds")
+            ok, C = _codes(vid, cds)
+            # NULL vec_id rows are dropped like the join condition
+            # drops them (NOT(NULL = q) is NULL)
+            vid_ok = vid.is_valid().to_numpy(zero_copy_only=False)
+            V = np.asarray(
+                vid.fill_null(0).to_numpy(zero_copy_only=False),
+                dtype=np.int64,
             )
-            nids = np.array([vids[i] for i in clean_i], dtype=np.int64)
+            clean = ok & vid_ok
+            nids = V[clean]
+            null_nids = np.sort(V[vid_ok & ~clean]).tolist()
             out_rows: list = []
             if len(QID):
-                if len(clean_i):
-                    C = np.asarray(
-                        [cds[i][:PQ_M] for i in clean_i], dtype=np.int64
+                C = C[clean]
+                # (Km, Q) indexed by the batch's m-th codes → (n, Q);
+                # term 0 seeds the accumulator (the join expr starts
+                # at dt[0][codes[0]], not 0.0) and += in ascending m
+                # replays the exact IEEE left-fold order
+                acc = DTM[0].T[C[:, 0], :].copy()
+                for m in range(1, PQ_M):
+                    acc += DTM[m].T[C[:, m], :]
+                for qi in range(len(QID)):
+                    _emit_topk(
+                        int(QID[qi]), null_nids, nids, acc[:, qi], out_rows
                     )
-                    # (Km, Q) indexed by the batch's m-th codes →
-                    # (n, Q); term 0 seeds the accumulator (the
-                    # join expr starts at dt[0][codes[0]], not 0.0)
-                    # and += in ascending m replays the exact IEEE
-                    # left-fold order
-                    acc = DTM[0].T[C[:, 0], :].copy()
-                    for m in range(1, PQ_M):
-                        acc += DTM[m].T[C[:, m], :]
-                    for qi in range(len(QID)):
-                        _emit_topk(
-                            int(QID[qi]), null_nids, nids,
-                            acc[:, qi], out_rows,
-                        )
-                else:
-                    for qi in range(len(QID)):
-                        _emit_topk(
-                            int(QID[qi]), null_nids, nids,
-                            np.empty(0, dtype=np.float64), out_rows,
-                        )
             # NULL-bearing lookup tables: exact per-row Python fold
+            if dirty_q:
+                vids, cds_py = vid.to_pylist(), cds.to_pylist()
             for qid, dt in dirty_q:
                 scored = [
-                    (vids[i], _pq_adc_fold_py(dt, cds[i]))
-                    for i in range(n)
-                    if vids[i] is not None
+                    (v, _pq_adc_fold_py(dt, c))
+                    for v, c in zip(vids, cds_py)
+                    if v is not None
                 ]
                 nn = sorted(v for v, a in scored if a is None)
                 fin = [(v, a) for v, a in scored if a is not None]
@@ -1653,40 +1642,36 @@ def _pq_removed_codes(spark, sf_dir):
     doctrine as the refreshed artifact it rides with (dedup decides
     ONCE; every serving artifact retires those ids).  Returns
     (codes_df, removed_ids_df)."""
-    import shutil as _shutil
 
-    from .cache_marker import marker_current, write_marker
-
-    root = os.path.join(
-        _PQ_REMOVE_ROOT, os.path.basename(os.path.normpath(sf_dir))
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "codes.parquet")
-    rm_p = os.path.join(root, "removed.parquet")
-    params = (
-        f"{_ann_params()}:rm{_RM_THRESHOLD}"
-        f":mod{_RM_MOD}:b{_RM_BANDS}x{_RM_BAND_BITS}:pq:v2"
-    )
-    if not marker_current(marker, sf_dir, name="embeddings", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
+        idx_p = os.path.join(root, "codes.parquet")
         codes, _qdt = _pq_artifacts(spark, sf_dir)
         codes.write.mode("overwrite").parquet(idx_p)
         removed = _ivf_removed_ids(spark, sf_dir).localCheckpoint(
             eager=True
         )
-        removed.write.mode("overwrite").parquet(rm_p)
+        removed.write.mode("overwrite").parquet(
+            os.path.join(root, "removed.parquet")
+        )
         out = refresh_ivf_remove(spark, idx_p, removed)
         if out is None:
             raise RuntimeError(
                 "pq-remove refresh lost the lock on a fresh artifact"
             )
-        write_marker(marker, sf_dir, name="embeddings", params=params)
-    from ..analytics.core import spread as _spread_fn
 
+    root = build_once(
+        cache_root(_PQ_REMOVE_ROOT, sf_dir),
+        sf_dir,
+        build,
+        name="embeddings",
+        params=(
+            f"{_ann_params()}:rm{_RM_THRESHOLD}"
+            f":mod{_RM_MOD}:b{_RM_BANDS}x{_RM_BAND_BITS}:pq:v2"
+        ),
+    )
     return (
-        _spread_fn(spark.read.parquet(idx_p)),
-        spark.read.parquet(rm_p),
+        spread(spark.read.parquet(os.path.join(root, "codes.parquet"))),
+        spark.read.parquet(os.path.join(root, "removed.parquet")),
     )
 
 

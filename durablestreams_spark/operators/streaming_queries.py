@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..analytics.core import query, table
-from .cache_marker import marker_current, write_marker
+from .cache_marker import build_once, cache_root, fixture_fingerprint, publish_once
 from ..analytics.windows import (
     SESSION_30M_ORACLE,
     SLIDING_12H_ORACLE,
@@ -207,37 +207,26 @@ def streaming_session_30m(spark, sf_dir):
     "value-hash against the plain events oracle.",
 )
 def streaming_ingest_roundtrip(spark, sf_dir):
-    import os
-    import shutil
-
     from ..stream import StreamCatalog
     from ..streaming.ingest import start_ingest
 
-    root = os.path.join(
-        "/tmp/durablestreams_ingestq_v2",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_ingested")
-    cat = StreamCatalog(os.path.join(root, "streams"))
-    stream = cat.stream("events_sink")
-    if not marker_current(marker, sf_dir):
-        shutil.rmtree(root, ignore_errors=True)
-        cat = StreamCatalog(os.path.join(root, "streams"))
-        stream = cat.stream("events_sink")
-        src = _events_stream(spark, sf_dir).select("event_id")
+    def build(root):
         q = start_ingest(
-            stream,
-            src,
+            StreamCatalog(os.path.join(root, "streams")).stream("events_sink"),
+            _events_stream(spark, sf_dir).select("event_id"),
             checkpoint_dir=os.path.join(root, "ckpt"),
             app_id="graded_ingest",
             order_by=["event_id"],
             available_now=True,
         )
         # a timeout leaves no marker: caching a partial sink would
-        # poison every later run, and the exactly-once checkpoint
-        # resumes cleanly on retry
+        # poison every later run
         _await_drain(q, "streaming_ingest_roundtrip drain")
-        write_marker(marker, sf_dir)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_ingestq_v2", sf_dir), sf_dir, build
+    )
+    stream = StreamCatalog(os.path.join(root, "streams")).stream("events_sink")
     df = stream.to_df(spark)
     return df.select(
         F.get_json_object("data", "$.event_id").cast("long").alias("event_id")
@@ -342,27 +331,15 @@ def streaming_dedup_watermarked(spark, sf_dir):
     "plain events table.",
 )
 def log_seeded_tail(spark, sf_dir):
-    import json
-    import os
-    import shutil
-
     from ..maintenance import clean_tombstones, compact
     from ..stream import StreamCatalog
     from ..streaming.tail import seeded_tail
     from ..ingest import produce_bulk
 
     LATE = 500
-    root = os.path.join(
-        "/tmp/durablestreams_seededtail_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    cat = StreamCatalog(os.path.join(root, "streams"))
-    stream = cat.stream("events_gap")
-    if not marker_current(marker, sf_dir):
-        shutil.rmtree(root, ignore_errors=True)
-        cat = StreamCatalog(os.path.join(root, "streams"))
-        stream = cat.stream("events_gap")
+
+    def build(root):
+        stream = StreamCatalog(os.path.join(root, "streams")).stream("events_gap")
         ev = table(spark, sf_dir, "events").select("event_id", "ts")
         n = ev.count()
         ordered = ev.orderBy("ts", "event_id")
@@ -390,7 +367,11 @@ def log_seeded_tail(spark, sf_dir):
             .collect()
         )
         stream.produce([{"event_id": int(r["event_id"])} for r in late_rows])
-        write_marker(marker, sf_dir)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_seededtail_v1", sf_dir), sf_dir, build
+    )
+    stream = StreamCatalog(os.path.join(root, "streams")).stream("events_gap")
     history, tail, cursor = seeded_tail(spark, stream)
     # History at the seam: everything at or before the cursor...
     hist_ids = history.where(F.col("offset") <= F.lit(cursor)).select(
@@ -469,66 +450,59 @@ def _events_with_sentinel_dir(spark, sf_dir: str) -> str:
     own micro-batch) pushes the final watermark past all real data so
     the drain flushes the complete outer result — the same trick a
     production backfill uses to close its last window."""
-    import os
     import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    root = os.path.join(
-        "/tmp/durablestreams_ssjoin_v3",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    if marker_current(marker, sf_dir):
-        return root
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
-    src = f"{sf_dir}/events.parquet"
-    shutil.copy(src, os.path.join(root, "00_events.parquet"))
-    t = pq.read_table(src)
-    ts_field = t.schema.field("ts")
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    if pa.types.is_integer(ts_field.type):
-        day = 86_400_000_000_000 if max_ts > 10**17 else 86_400_000_000
-        far = [max_ts + (30 + i) * day for i in range(3)]
-    else:
-        import datetime
+    def build(root):
+        src = f"{sf_dir}/events.parquet"
+        shutil.copy(src, os.path.join(root, "00_events.parquet"))
+        t = pq.read_table(src)
+        ts_field = t.schema.field("ts")
+        max_ts = pa.compute.max(t.column("ts")).as_py()
+        if pa.types.is_integer(ts_field.type):
+            day = 86_400_000_000_000 if max_ts > 10**17 else 86_400_000_000
+            far = [max_ts + (30 + i) * day for i in range(3)]
+        else:
+            import datetime
 
-        far = [max_ts + datetime.timedelta(days=30 + i) for i in range(3)]
-    # Sentinels are 1 day apart and alternate type, so they can't match
-    # each other in the interval join; user -1 is filtered from every
-    # graded output.  THREE sentinel FILES (= three micro-batches under
-    # maxFilesPerTrigger=1): cascaded stateful operators flush one
-    # layer per batch, and — measured, not just theorized — the
-    # DOWNSTREAM layer's watermark advances from the upstream
-    # operator's EMITTED rows, so each chained layer needs one more
-    # sentinel batch to flow through the one above it.  One file was
-    # enough for single-layer joins; two still stranded the last day
-    # of a two-layer chained aggregation.
-    for i, (eid, ts_v, etype) in enumerate(
-        [(-1, far[0], "purchase"), (-2, far[1], "click"), (-3, far[2], "purchase")]
-    ):
-        sentinel = pa.table(
-            {
-                "event_id": pa.array([eid], pa.int64()),
-                "ts": pa.array([ts_v], ts_field.type),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array([etype], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            },
-            schema=t.schema,
-        )
-        pq.write_table(sentinel, os.path.join(root, f"0{i + 1}_sentinel.parquet"))
-    # FileStreamSource orders by modification time: events strictly
-    # first, then the sentinels in order.
-    now = os.stat(os.path.join(root, "03_sentinel.parquet")).st_mtime
-    os.utime(os.path.join(root, "02_sentinel.parquet"), (now - 3, now - 3))
-    os.utime(os.path.join(root, "01_sentinel.parquet"), (now - 6, now - 6))
-    os.utime(os.path.join(root, "00_events.parquet"), (now - 10, now - 10))
-    write_marker(marker, sf_dir)
-    return root
+            far = [max_ts + datetime.timedelta(days=30 + i) for i in range(3)]
+        # Sentinels are 1 day apart and alternate type, so they can't match
+        # each other in the interval join; user -1 is filtered from every
+        # graded output.  THREE sentinel FILES (= three micro-batches under
+        # maxFilesPerTrigger=1): cascaded stateful operators flush one
+        # layer per batch, and — measured, not just theorized — the
+        # DOWNSTREAM layer's watermark advances from the upstream
+        # operator's EMITTED rows, so each chained layer needs one more
+        # sentinel batch to flow through the one above it.  One file was
+        # enough for single-layer joins; two still stranded the last day
+        # of a two-layer chained aggregation.
+        for i, (eid, ts_v, etype) in enumerate(
+            [(-1, far[0], "purchase"), (-2, far[1], "click"), (-3, far[2], "purchase")]
+        ):
+            sentinel = pa.table(
+                {
+                    "event_id": pa.array([eid], pa.int64()),
+                    "ts": pa.array([ts_v], ts_field.type),
+                    "user_id": pa.array([-1], pa.int64()),
+                    "event_type": pa.array([etype], pa.string()),
+                    "value": pa.array([0.0], pa.float64()),
+                    "props": pa.array(["{}"], pa.string()),
+                },
+                schema=t.schema,
+            )
+            pq.write_table(sentinel, os.path.join(root, f"0{i + 1}_sentinel.parquet"))
+        # FileStreamSource orders by modification time: events strictly
+        # first, then the sentinels in order.
+        now = os.stat(os.path.join(root, "03_sentinel.parquet")).st_mtime
+        os.utime(os.path.join(root, "02_sentinel.parquet"), (now - 3, now - 3))
+        os.utime(os.path.join(root, "01_sentinel.parquet"), (now - 6, now - 6))
+        os.utime(os.path.join(root, "00_events.parquet"), (now - 10, now - 10))
+
+    return build_once(
+        cache_root("/tmp/durablestreams_ssjoin_v3", sf_dir), sf_dir, build
+    )
 
 
 @query(
@@ -1030,7 +1004,6 @@ def _nb_serving_model(spark, sf_dir):
     (cache_marker doctrine); bump the trailing version on a
     training-logic change."""
     import json as _json
-    import shutil as _shutil
 
     from .text import (
         CURATE_MIN_STOPWORDS,
@@ -1045,12 +1018,6 @@ def _nb_serving_model(spark, sf_dir):
         _nb_training,
     )
 
-    root = os.path.join(
-        "/tmp/durablestreams_nbmodel_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    model_p = os.path.join(root, "model.json")
     # EVERY label-shaping knob is folded in: the five Gopher gate
     # thresholds and a digest of the stopword lexicon shape the seed
     # labels and thus the trained model — leaving any of them out
@@ -1067,25 +1034,31 @@ def _nb_serving_model(spark, sf_dir):
     params = (
         f"nb{NB_BUCKETS}:uni+bi:curate-stop{CURATE_MIN_STOPWORDS}:{gate}:v1"
     )
-    if marker_current(marker, sf_dir, name="documents", params=params):
-        with open(model_p) as fh:
-            model = _json.load(fh)
-        return (
-            {int(k): float(v) for k, v in model["lam"].items()},
-            float(model["pri"]),
-        )
-    _shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    _, llr, prior = _nb_training(spark, sf_dir)
-    # Bounded collects: llr is NB_BUCKETS rows by construction, the
-    # prior one scalar — vocabulary state (SCALE.md §9).
-    lam = {int(r["bkt"]): float(r["lam"]) for r in llr.collect()}
-    pri = float(prior.collect()[0]["pri"])
-    with open(model_p + ".tmp", "w") as fh:
-        _json.dump({"lam": lam, "pri": pri}, fh)
-    os.replace(model_p + ".tmp", model_p)
-    write_marker(marker, sf_dir, name="documents", params=params)
-    return lam, pri
+
+    def build(root):
+        _, llr, prior = _nb_training(spark, sf_dir)
+        # Bounded collects: llr is NB_BUCKETS rows by construction, the
+        # prior one scalar — vocabulary state (SCALE.md §9).
+        lam = {int(r["bkt"]): float(r["lam"]) for r in llr.collect()}
+        pri = float(prior.collect()[0]["pri"])
+        with open(os.path.join(root, "model.json"), "w") as fh:
+            _json.dump({"lam": lam, "pri": pri}, fh)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_nbmodel_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=params,
+    )
+    # the build path serves the JSON round-trip too: shortest-repr
+    # floats parse back to the identical doubles
+    with open(os.path.join(root, "model.json")) as fh:
+        model = _json.load(fh)
+    return (
+        {int(k): float(v) for k, v in model["lam"].items()},
+        float(model["pri"]),
+    )
 
 
 def _nb_logit_fixed_model(lam, pri):
@@ -1399,25 +1372,21 @@ def _neardup_index(spark, sf_dir):
         dedup_simhash,
     )
 
-    root = os.path.join(
-        "/tmp/durablestreams_neardup_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = f"simhash32:bands{NEARDUP_BANDS}x{NEARDUP_BAND_BITS}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        import shutil as _shutil
-
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         sig = dedup_simhash(spark, sf_dir)
         banded = sig.select(
             "doc_id", "simhash", F.explode(band_structs_expr()).alias("bk")
         ).select("bk.band_id", "bk.band_key", "doc_id", "simhash")
-        banded.write.mode("overwrite").parquet(idx_p)
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+        banded.write.mode("overwrite").parquet(os.path.join(root, "index.parquet"))
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_neardup_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"simhash32:bands{NEARDUP_BANDS}x{NEARDUP_BAND_BITS}:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "index.parquet"))
 
 
 # Shared verbatim with the batch dedup_simhash oracle (one signature
@@ -1555,27 +1524,24 @@ def _exact_hash_index(spark, sf_dir):
     distinct content at rest; fingerprint-keyed like the SimHash band
     index and the NB model (the train-once/serve-many protocol).  At
     100 TB: bucketBy(h) so serving joins need no index-side shuffle."""
-    import shutil as _shutil
 
-    root = os.path.join(
-        "/tmp/durablestreams_hashidx_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = "md5:minid:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         (
             table(spark, sf_dir, "documents")
             .groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("first_id"))
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "index.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_hashidx_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params="md5:minid:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "index.parquet"))
 
 
 @query(
@@ -1694,20 +1660,9 @@ def _neardup_base_index_path(spark, sf_dir) -> str:
     parquet PATH, not a DataFrame: the live gate's foreachBatch
     re-reads the index per micro-batch alongside its run-local
     appends."""
-    import shutil as _shutil
-
     from .dedup import band_structs_expr, simhash_expr
 
-    root = os.path.join(
-        "/tmp/durablestreams_ndlive_base_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = f"simhash32:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         base = table(spark, sf_dir, "documents").where(_ndlive_base_pred())
         sig = base.where(
             F.expr("size(filter(split(text, '\\\\s+'), t -> t != '')) > 0")
@@ -1720,10 +1675,17 @@ def _neardup_base_index_path(spark, sf_dir) -> str:
             )
             .select("bk.band_id", "bk.band_key", "doc_id", "simhash")
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "index.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return idx_p
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_ndlive_base_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"simhash32:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
+    )
+    return os.path.join(root, "index.parquet")
 
 
 def refresh_neardup_index(
@@ -1874,15 +1836,11 @@ def _seeded_refresh_build(
     file so the guarded swap is exercised non-vacuously, run ONE
     incremental refresh (``refresh_fn(idx_path, guard_path)``),
     RAISE on a lost race — an assert would vanish under python -O and
-    write_marker would cache a pre-refresh artifact forever — and
+    the marker would cache a pre-refresh artifact forever — and
     only then mark the artifact built.  Returns the live idx path."""
-    import shutil as _shutil
-
-    marker = os.path.join(root, "_built")
     idx_p = os.path.join(root, idx_name)
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+
+    def build(root):
         v0 = idx_p + ".v-genesis"
         seed_fn(v0)
         os.symlink(v0, idx_p)
@@ -1893,7 +1851,8 @@ def _seeded_refresh_build(
             raise RuntimeError(
                 "guarded-swap refresh lost its race in a graded build"
             )
-        write_marker(marker, sf_dir, name="documents", params=params)
+
+    build_once(root, sf_dir, build, name="documents", params=params)
     return idx_p
 
 
@@ -2008,10 +1967,7 @@ def text_nb_model_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_nbrefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_nbrefresh_v1", sf_dir),
         idx_name="counts.parquet",
         params=f"nbcounts{NB_BUCKETS}:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
         seed_fn=lambda v0: _nb_counts(
@@ -2077,10 +2033,7 @@ def dedup_neardup_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_ndrefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_ndrefresh_v1", sf_dir),
         idx_name="index.parquet",
         params=(
             f"simhash32:base<{_NDLIVE_CUT}{_NDLIVE_TAG}"
@@ -2179,10 +2132,7 @@ def dedup_exact_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_exrefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_exrefresh_v1", sf_dir),
         idx_name="postings.parquet",
         params=(
             f"md5:postings:copy{EXACT_REFRESH_COPY_MOD}"
@@ -2583,8 +2533,6 @@ def _emb_tight_base_paths(spark, sf_dir) -> tuple[str, str]:
     posting fan-out is what makes the index affordable at 100 TB.
     Returns (bands_path, vecs_path); foreachBatch re-reads both per
     micro-batch alongside its run-local appends."""
-    import shutil as _shutil
-
     from .dedup import (
         COSINE_TIGHT_BAND_BITS,
         COSINE_TIGHT_BANDS,
@@ -2593,20 +2541,9 @@ def _emb_tight_base_paths(spark, sf_dir) -> tuple[str, str]:
         _tight_corpus,
     )
 
-    root = os.path.join(
-        "/tmp/durablestreams_emblive_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    bands_p = os.path.join(root, "bands.parquet")
-    vecs_p = os.path.join(root, "vecs.parquet")
-    params = (
-        f"srp{COSINE_TIGHT_BANDS}x{COSINE_TIGHT_BAND_BITS}"
-        f":mod{COSINE_TIGHT_MOD}:base<{_NDLIVE_CUT}{_EMBLIVE_TAG}:v1"
-    )
-    if not marker_current(marker, sf_dir, name="embeddings", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+
+    def build(root):
+        vecs_p = os.path.join(root, "vecs.parquet")
         base = _tight_corpus(spark, sf_dir, COSINE_TIGHT_MOD).where(
             _emblive_base_pred()
         )
@@ -2615,9 +2552,19 @@ def _emb_tight_base_paths(spark, sf_dir) -> tuple[str, str]:
         # pass lands both artifacts consistent by construction).
         _tight_band_rows(spark.read.parquet(vecs_p)).write.mode(
             "overwrite"
-        ).parquet(bands_p)
-        write_marker(marker, sf_dir, name="embeddings", params=params)
-    return bands_p, vecs_p
+        ).parquet(os.path.join(root, "bands.parquet"))
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_emblive_v1", sf_dir),
+        sf_dir,
+        build,
+        name="embeddings",
+        params=(
+            f"srp{COSINE_TIGHT_BANDS}x{COSINE_TIGHT_BAND_BITS}"
+            f":mod{COSINE_TIGHT_MOD}:base<{_NDLIVE_CUT}{_EMBLIVE_TAG}:v1"
+        ),
+    )
+    return os.path.join(root, "bands.parquet"), os.path.join(root, "vecs.parquet")
 
 
 def _emblive_run(spark, bands_path: str, vecs_path: str, delta_vecs):
@@ -2797,28 +2744,25 @@ def _exact_hash_index_base_path(spark, sf_dir) -> str:
     ':ndlive' BASE split — the _exact_hash_index artifact restricted
     to the historical corpus, for the live gate.  Returns the parquet
     PATH (foreachBatch re-reads per micro-batch)."""
-    import shutil as _shutil
 
-    root = os.path.join(
-        "/tmp/durablestreams_hashidx_base_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = f"md5:minid:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         (
             table(spark, sf_dir, "documents")
             .where(_ndlive_base_pred())
             .groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("first_id"))
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "index.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return idx_p
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_hashidx_base_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"md5:minid:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
+    )
+    return os.path.join(root, "index.parquet")
 
 
 #: Audit facts of the last streaming_ingest_gate_live run.
@@ -2915,30 +2859,24 @@ def _pixel_base_index_path(spark, sf_dir) -> str:
     to (band_id, band_key, doc_id, k0..k3).  Returns the parquet
     PATH (the foreachBatch re-reads it per micro-batch alongside its
     run-local appends — the _neardup_base_index_path protocol)."""
-    import shutil as _shutil
-
-    from .multimodal import PHASH_BANDS
-
-    root = os.path.join(
-        "/tmp/durablestreams_pxlive_base_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
     from .multimodal import _pixel_params
 
-    params = f"dhash64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_pixel_params()}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         base = table(spark, sf_dir, "documents").where(_ndlive_base_pred())
         (
             _pixel_band_rows(_gate_phash_keys(base))
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "index.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return idx_p
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_pxlive_base_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"dhash64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_pixel_params()}:v1",
+    )
+    return os.path.join(root, "index.parquet")
 
 
 def _pixel_band_rows(keys):
@@ -3120,10 +3058,7 @@ def multimodal_pixel_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_pxrefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_pxrefresh_v1", sf_dir),
         idx_name="index.parquet",
         params=(
             f"dhash64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_pixel_params()}"
@@ -3217,30 +3152,26 @@ def _audio_base_index_path(spark, sf_dir) -> str:
     sampled docs — the audio family's 'historical corpus' artifact
     (the _pixel_base_index_path protocol): every planted variant's
     frame-sign band keys, real WAV encode/decode/fingerprint."""
-    import shutil as _shutil
-
     from .multimodal import _audio_params, audio_fp_keys_for
 
-    root = os.path.join(
-        "/tmp/durablestreams_aulive_base_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "index.parquet")
-    params = f"audiofp64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_audio_params()}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         base = table(spark, sf_dir, "documents").where(
             _ndlive_base_pred() & (F.col("doc_id") % _AU_MOD == 0)
         )
         (
             _audio_band_rows(audio_fp_keys_for(base))
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "index.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return idx_p
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_aulive_base_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"audiofp64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_audio_params()}:v1",
+    )
+    return os.path.join(root, "index.parquet")
 
 
 def refresh_audio_index(
@@ -3338,10 +3269,7 @@ def multimodal_audio_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_aurefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_aurefresh_v1", sf_dir),
         idx_name="index.parquet",
         params=(
             f"audiofp64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_audio_params()}"
@@ -3957,20 +3885,9 @@ def _neardup_flag_index(spark, sf_dir):
     stream-static LEFT join key, so the ingest report's near-dup
     signal costs one lookup per arriving doc, no pair fan-out in the
     stream."""
-    import shutil as _shutil
-
     from .dedup import NEARDUP_MAX_HAMMING
 
-    root = os.path.join(
-        "/tmp/durablestreams_ndflag_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "flags.parquet")
-    params = f"simhash32:flag:ham{NEARDUP_MAX_HAMMING}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         idx = _neardup_index(spark, sf_dir)
         a = idx.select(
             "band_id", "band_key", "doc_id", F.col("simhash").alias("sa")
@@ -3988,10 +3905,17 @@ def _neardup_flag_index(spark, sf_dir):
             .select("doc_id")
             .distinct()
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "flags.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_ndflag_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"simhash32:flag:ham{NEARDUP_MAX_HAMMING}:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "flags.parquet"))
 
 
 def _pixel_flag_index(spark, sf_dir):
@@ -4000,22 +3924,9 @@ def _pixel_flag_index(spark, sf_dir):
     image anywhere in the corpus — the binary modality's analog of
     _neardup_flag_index (band self-join over the banded key rows,
     larger member kept, 1:1 stream-static serving shape)."""
-    import shutil as _shutil
+    from .multimodal import PHASH_HAM, _pixel_params
 
-    from .multimodal import PHASH_BANDS, PHASH_HAM
-
-    root = os.path.join(
-        "/tmp/durablestreams_pxflag_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "flags.parquet")
-    from .multimodal import _pixel_params
-
-    params = f"dhash64:flag:{_pixel_params()}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         keys = _gate_phash_keys(
             table(spark, sf_dir, "documents")
         ).localCheckpoint(eager=True)
@@ -4028,10 +3939,17 @@ def _pixel_flag_index(spark, sf_dir):
             .select("doc_id")
             .distinct()
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "flags.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_pxflag_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"dhash64:flag:{_pixel_params()}:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "flags.parquet"))
 
 
 def _audio_flag_index(spark, sf_dir):
@@ -4042,8 +3960,6 @@ def _audio_flag_index(spark, sf_dir):
     variant rows, larger DOC member kept, 1:1 stream-static serving
     shape).  The cross-doc pairs come from the GATE_AU_EVERY
     re-recording plant in the variant rule."""
-    import shutil as _shutil
-
     from .multimodal import (
         AUDIO_BANDS,
         AUDIO_HAM,
@@ -4051,16 +3967,7 @@ def _audio_flag_index(spark, sf_dir):
         audio_fp_keys_for,
     )
 
-    root = os.path.join(
-        "/tmp/durablestreams_auflag_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "flags.parquet")
-    params = f"audiofp64:flag:{_audio_params()}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         bands = _audio_band_rows(
             audio_fp_keys_for(
                 table(spark, sf_dir, "documents").where(
@@ -4076,10 +3983,17 @@ def _audio_flag_index(spark, sf_dir):
             .select("doc_id")
             .distinct()
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "flags.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_auflag_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"audiofp64:flag:{_audio_params()}:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "flags.parquet"))
 
 
 def _contamination_flag_index(spark, sf_dir):
@@ -4090,20 +4004,9 @@ def _contamination_flag_index(spark, sf_dir):
     shingle index so the eval suite is tokenized once; serving shape
     is a 1:1 stream-static LEFT join key (the _neardup_flag_index
     protocol — the report's stream side never sees shingle fan-out)."""
-    import shutil as _shutil
-
     from .pipeline_llm import _BENCH_MOD, _shingle5_arrays
 
-    root = os.path.join(
-        "/tmp/durablestreams_contamflag_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "flags.parquet")
-    params = f"shingle5:flag:bench%{_BENCH_MOD}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         bench = spark.read.parquet(
             _bench_shingle_index_path(spark, sf_dir)
         )
@@ -4114,10 +4017,17 @@ def _contamination_flag_index(spark, sf_dir):
             .select("doc_id")
             .distinct()
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "flags.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return spark.read.parquet(idx_p)
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_contamflag_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"shingle5:flag:bench%{_BENCH_MOD}:v1",
+    )
+    return spark.read.parquet(os.path.join(root, "flags.parquet"))
 
 
 @query(
@@ -4648,14 +4558,13 @@ def _gate_dec_params() -> str:
 def _gate_budget_decisions(spark, sf_dir, audit, tok_unit="words"):
     """The budget gate's drained DECISION RECORD, served from the
     fingerprint-keyed artifact cache: the first graded consumer
-    drains the topology live and publishes the record (write tmp dir
-    + atomic rename; a lost race reads the winner's copy — the
-    decisions are a pure function of the data, so both drains
-    produce identical rows); later consumers read the parquet.  With
-    SPARK_GRAFT_GATE_CACHE=0 every call drains live (the pytest
+    drains the topology live and publishes the record
+    (``cache_marker.publish_once``; a lost race reads the winner's
+    copy — the decisions are a pure function of the data, so both
+    drains produce identical rows); later consumers read the parquet.
+    With SPARK_GRAFT_GATE_CACHE=0 every call drains live (the pytest
     suite's mode).  Returns the decision rows localCheckpointed, cut
     off from any run directory."""
-    import shutil as _shutil
 
     def _drain_live():
         with tempfile.TemporaryDirectory(
@@ -4671,8 +4580,6 @@ def _gate_budget_decisions(spark, sf_dir, audit, tok_unit="words"):
 
     if os.environ.get("SPARK_GRAFT_GATE_CACHE", "1") == "0":
         return _drain_live()
-    from .cache_marker import fixture_fingerprint
-
     from .bpe_shared import _BPE_N_MERGES as _BPE_M
 
     # the BPE unit's decisions are shaped by the tokenizer too —
@@ -4685,17 +4592,10 @@ def _gate_budget_decisions(spark, sf_dir, audit, tok_unit="words"):
         sf_dir, "documents", params=f"{_gate_dec_params()}:{unit_tag}"
     )
     key = hashlib.md5(fp.encode()).hexdigest()[:16]
-    path = os.path.join(_GATE_DEC_CACHE_ROOT, f"dec-{tok_unit}-{key}")
-    if not os.path.isdir(path):
-        import threading as _threading
-
-        os.makedirs(_GATE_DEC_CACHE_ROOT, exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}-{_threading.get_ident()}"
-        _drain_live().write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    path = publish_once(
+        os.path.join(_GATE_DEC_CACHE_ROOT, f"dec-{tok_unit}-{key}"),
+        lambda tmp: _drain_live().write.mode("overwrite").parquet(tmp),
+    )
     return spark.read.parquet(path).localCheckpoint(eager=True)
 
 
@@ -5883,20 +5783,9 @@ def _bench_shingle_index_path(spark, sf_dir) -> str:
     size at any corpus scale (benchmark suites do not grow with the
     training corpus), which is exactly what makes the serving-side
     broadcast legal at 100 TB."""
-    import shutil as _shutil
-
     from .pipeline_llm import _BENCH_MOD, _shingle5_arrays
 
-    root = os.path.join(
-        "/tmp/durablestreams_benchidx_v1",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(root, "_built")
-    idx_p = os.path.join(root, "shingles.parquet")
-    params = f"shingle5:bench%{_BENCH_MOD}:v1"
-    if not marker_current(marker, sf_dir, name="documents", params=params):
-        _shutil.rmtree(root, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+    def build(root):
         (
             _shingle5_arrays(
                 table(spark, sf_dir, "documents").where(
@@ -5906,10 +5795,17 @@ def _bench_shingle_index_path(spark, sf_dir) -> str:
             .select(F.explode("shs").alias("sh"))
             .distinct()
             .write.mode("overwrite")
-            .parquet(idx_p)
+            .parquet(os.path.join(root, "shingles.parquet"))
         )
-        write_marker(marker, sf_dir, name="documents", params=params)
-    return idx_p
+
+    root = build_once(
+        cache_root("/tmp/durablestreams_benchidx_v1", sf_dir),
+        sf_dir,
+        build,
+        name="documents",
+        params=f"shingle5:bench%{_BENCH_MOD}:v1",
+    )
+    return os.path.join(root, "shingles.parquet")
 
 
 def refresh_bench_shingle_index(
@@ -6024,10 +5920,7 @@ def decontaminate_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=os.path.join(
-            "/tmp/durablestreams_benchrefresh_v1",
-            os.path.basename(os.path.normpath(sf_dir)),
-        ),
+        root=cache_root("/tmp/durablestreams_benchrefresh_v1", sf_dir),
         idx_name="postings.parquet",
         params=(
             f"shingle5:postings:bench%{_BENCH_MOD}"

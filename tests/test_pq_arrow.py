@@ -165,6 +165,36 @@ def test_pq_adc_arrow_nulls_ties_nan(spark):
     assert [t[1] for t in q100] == [9, 10, 1, 2, 3]
 
 
+def test_pq_adc_arrow_code_row_length(spark):
+    """A codes row longer than PQ_M scores by its first PQ_M codes; a
+    short row or an out-of-range code raises ValueError naming the row
+    (the replaced join's ANSI INVALID_ARRAY_INDEX error)."""
+    import pytest
+
+    from durablestreams_spark.operators.similarity import _pq_adc_search
+
+    clean = [[0.0, 1.0]] * PQ_M
+    qdt = spark.createDataFrame(
+        [(100, clean)], "query_id long, dt array<array<double>>"
+    )
+
+    def search(rows):
+        codes = spark.createDataFrame(rows, "vec_id long, codes array<int>")
+        return [
+            (r.neighbor_id, r.adist)
+            for r in _pq_adc_search(codes, qdt).orderBy("rank").collect()
+        ]
+
+    assert search([(1, [1] * PQ_M + [7, None]), (2, [0] * PQ_M)]) == [
+        (2, 0.0),
+        (1, float(PQ_M)),
+    ]
+    with pytest.raises(Exception, match=f"codes row 3 has {PQ_M - 1} < {PQ_M}"):
+        search([(1, [0] * PQ_M), (3, [0] * (PQ_M - 1))])
+    with pytest.raises(Exception, match="codes row 4 sub 2: code 2 out of range"):
+        search([(4, [0, 0, 2] + [0] * (PQ_M - 3))])
+
+
 def test_pq_codebook_shape():
     """The kernels must keep accepting ragged codebooks (the dense
     re-key can leave different centroid counts per subspace)."""
