@@ -15,8 +15,8 @@ single-partition sort:
 2. per-partition ``row_number`` over ``Window.partitionBy(pid)`` —
    parallel, no skew beyond the range partitioner's;
 3. partition row-counts (a tiny agg) → driver-side prefix sums →
-   a literal partition→prefix map that turns local row numbers into
-   global ones.
+   literal partition→(start epoch, start counter) maps that turn local
+   row numbers into offsets.
 
 That is the textbook distributed zip-with-index; the only global
 barrier is the O(partitions) count collect.  Records land in segment
@@ -47,7 +47,18 @@ def assign_offsets(
     ``order_by`` get offsets ``(base_epoch + rn // batch_records,
     rn % batch_records)`` — batch *i* behaves like the *i*-th flush of
     a producer with a logical clock, exactly reproducible by SQL
-    arithmetic (which is what the duckdb oracle does)."""
+    arithmetic (which is what the duckdb oracle does).
+
+    ``rn`` is the row's global position: the driver turns the
+    per-partition row counts into prefix sums and hands each partition
+    its first epoch ``E = base_epoch + prefix // batch_records`` and
+    first counter ``C = prefix % batch_records`` as literal maps, so a
+    row with local row number ``local`` gets epoch
+    ``E[pid] + (C[pid] + local) div batch_records`` and counter
+    ``(C[pid] + local) mod batch_records``.  ``base_epoch`` lives only
+    in the map, never in the generated code: a flush into a live
+    stream (a new ``base_epoch`` every time) reuses the compiled
+    stage."""
     ranged = df.repartitionByRange(*order_by)
     pid = F.spark_partition_id()
     local = (
@@ -68,24 +79,31 @@ def assign_offsets(
         .collect()
     )
     sizes = {r["__pid"]: r["__n"] for r in counts}
-    prefix: dict[int, int] = {}
+    # Prefix sums → each partition's first (epoch, counter) as two
+    # O(partitions) literal maps: a lookup, not a join (a broadcast of
+    # a driver-side DataFrame costs its own job).  A map literal
+    # reaches the generated code as a reference, where a long literal
+    # is inlined: the code does not change with base_epoch.
+    start_epoch: dict[int, int] = {}
+    start_counter: dict[int, int] = {}
     acc = 0
     for p in sorted(sizes):
-        prefix[p] = acc
+        start_epoch[p] = base_epoch + acc // batch_records
+        start_counter[p] = acc % batch_records
         acc += sizes[p]
-    # The prefix table is O(partitions): a literal map lookup, not a
-    # join (a broadcast of a driver-side DataFrame costs its own job).
-    prefix_of = F.create_map(
-        *[F.lit(x) for p, n in prefix.items() for x in (p, n)]
-    ).cast("map<int,bigint>")
-    rn = (prefix_of[F.col("__pid")] + F.col("__local")).alias("__rn")
-    epoch = (F.lit(base_epoch) + (F.col("__rn") / batch_records).cast("long")).alias(
+
+    def by_pid(table: dict[int, int]):
+        return F.create_map(
+            *[F.lit(x) for kv in table.items() for x in kv]
+        ).cast("map<int,bigint>")[F.col("__pid")]
+
+    rn = by_pid(start_counter) + F.col("__local")
+    epoch = (by_pid(start_epoch) + (rn / batch_records).cast("long")).alias(
         "__epoch"
     )
-    counter = (F.col("__rn") % batch_records).alias("__counter")
+    counter = (rn % batch_records).alias("__counter")
     out = (
-        with_local.select("*", rn)
-        .select("*", epoch, counter)
+        with_local.select("*", epoch, counter)
         .withColumn(
             "offset",
             F.concat(
@@ -95,7 +113,7 @@ def assign_offsets(
         )
         .withColumn("ts", F.timestamp_millis(F.col("__epoch")))
         .withColumn("batch", F.col("__epoch"))
-        .drop("__pid", "__local", "__rn", "__epoch", "__counter")
+        .drop("__pid", "__local", "__epoch", "__counter")
     )
     # Hand the persisted intermediate + total row count to the caller
     # (unpersist-after-write; file-count planning without a second scan).

@@ -1491,7 +1491,11 @@ def _pq_adc_topk_arrow(codes, qdt):
         NaN-last, neighbor_id ASC): NULL-adist candidates first in
         neighbor order, then the clean rows in lexsort order
         (np.lexsort puts NaN last and keeps the neighbor_id key for
-        ties — Spark's exact comparator)."""
+        ties — Spark's exact comparator).  Only the rows scoring at
+        most the cut — the ``need``-th smallest score, ``need``
+        counting the query's own rows that are skipped — can be
+        emitted, so only those are sorted; every row tied with the
+        cut stays in, and a NaN cut keeps every row."""
         k = 0
         for nid in null_nids:
             if nid == qid:
@@ -1501,7 +1505,13 @@ def _pq_adc_topk_arrow(codes, qdt):
             if k == TOP_K:
                 return
         if len(nids):
-            for idx in np.lexsort((nids, col)):
+            cand = np.arange(len(nids))
+            need = TOP_K - k + int(np.count_nonzero(nids == qid))
+            if need < len(nids):
+                cut = np.partition(col, need - 1)[need - 1]
+                if not np.isnan(cut):
+                    cand = np.flatnonzero(col <= cut)
+            for idx in cand[np.lexsort((nids[cand], col[cand]))]:
                 nid = int(nids[idx])
                 if nid == qid:
                     continue

@@ -87,10 +87,12 @@ _SEGMENT_SCHEMA = pa.schema(
 def read_segment(path: str, columns: list[str] | None = None) -> pa.Table:
     """One segment file as an Arrow table.  ``ParquetFile`` opens just
     this file, where ``pq.read_table`` builds a dataset around it on
-    every call.  Point segments are written with ``_SEGMENT_SCHEMA``;
+    every call.  The decode runs on the calling thread: a segment is
+    small enough that handing it to Arrow's pool costs more CPU than
+    the decode.  Point segments are written with ``_SEGMENT_SCHEMA``;
     ``produce_bulk`` parts come from Spark (nullable columns, ``ts``
     in UTC), so callers that need one schema cast to it."""
-    return pq.ParquetFile(path).read(columns=columns)
+    return pq.ParquetFile(path).read(columns=columns, use_threads=False)
 
 
 @dataclass(frozen=True)

@@ -9,14 +9,22 @@ a Structured Streaming micro-batch IS that group commit (SURVEY.md
 batch is the durability/ack point.
 
 A flush pays for what the batch holds, not for fixed scheduling: its
-first Spark action is ONE bounded probe — a single task that reads at
-most ``SMALL_BATCH_ROWS + 1`` rows, sorts them and ships them as JSON.
-That probe is both the point/bulk decision and, for the common small
-batch, the whole data read, so the point path runs exactly one Spark
-job and needs no ``persist`` (nothing reads the batch twice).  Only a
-batch too big for the point path is read again, by ``produce_bulk``;
-re-reading a micro-batch is safe because exactly-once already requires
-a replayable source (a restart replays the same batch from it).
+first Spark action is ONE bounded probe — a top-K over the batch that
+keeps at most ``SMALL_BATCH_ROWS + 1`` rows in ``order_by`` order and
+ships them as JSON strings.  That probe is both the point/bulk decision
+and, for the common small batch, the whole data read, so the point
+path runs exactly one Spark job and needs no ``persist`` (nothing reads
+the batch twice).  Only a batch too big for the point path is read
+again, by ``produce_bulk``; re-reading a micro-batch is safe because
+exactly-once already requires a replayable source (a restart replays
+the same batch from it).
+
+Every stage a flush runs is compile-stable: its generated Java is the
+same string on every trigger, so Spark's codegen cache compiles each
+stage once per session, not once per flush.  The probe therefore holds
+no whole-stage-codegen'd ``Limit`` (Spark names a fused limit's
+counter from a JVM-global id, so each plan's code string is new), and
+``assign_offsets`` keeps the per-flush epoch out of the generated code.
 
 Exactly-once across failures: Structured Streaming replays an
 unacknowledged micro-batch after restart, so the flush must be
@@ -33,6 +41,7 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..ingest import produce_bulk
 from ..manifest import CommitConflict
@@ -46,6 +55,14 @@ from ..stream import Stream
 SMALL_BATCH_ROWS = 10_000
 
 
+def _probe(batch_df: DataFrame, order_by: list[str] | None, n: int) -> list[str]:
+    """The first ``n`` rows of ``batch_df`` in ``order_by`` order, each
+    as the JSON string ``toJSON`` would give it."""
+    probe = batch_df.orderBy(*order_by) if order_by else batch_df
+    probe = probe.select(F.to_json(F.struct(F.col("*"))))
+    return [r[0] for r in probe.limit(n).collect()]
+
+
 def flush_batch(
     stream: Stream,
     batch_df: DataFrame,
@@ -56,11 +73,19 @@ def flush_batch(
     """Commit one micro-batch; returns False if it was a replay (skip).
 
     One bounded probe decides the path and fetches a small batch in the
-    same single-task job: ``coalesce(1).limit(SMALL_BATCH_ROWS + 1)``,
-    sorted within that one partition by ``order_by`` (ascending, NULLS
-    FIRST — the order a global ``orderBy`` gives), then ``toJSON``
-    (payload serialization stays on the Spark side: timestamps,
-    nesting).  No row count, cache or range shuffle runs first.
+    same job: ``orderBy(*order_by)`` (ascending, NULLS FIRST), then
+    ``to_json(struct(*))`` and ``limit(SMALL_BATCH_ROWS + 1)``.
+    Spark plans that as ``TakeOrderedAndProject`` — every task keeps a
+    bounded top-K of its partition, the driver merges them and
+    serializes only the survivors — and, without ``order_by``, as
+    ``CollectLimit`` (one job while the first partition holds the
+    batch, more only if it must read further partitions).  Neither is
+    whole-stage codegen'd, so no fused ``Limit`` puts a fresh counter
+    name into the generated code and the probe compiles nothing after
+    the first trigger.  ``to_json`` writes
+    the same strings as ``toJSON`` (payload serialization stays on the
+    Spark side: timestamps, nesting) without leaving the JVM.  No row
+    count, cache or range shuffle runs first.
 
     - 0 rows: a txn-only commit advances the watermark;
     - up to ``SMALL_BATCH_ROWS`` rows: the probe's rows ARE the batch,
@@ -70,14 +95,13 @@ def flush_batch(
     - more: the distributed ``produce_bulk``, which reads the batch a
       second time (safe: the source is replayable, as exactly-once
       requires) under a ``persist`` so its own jobs share one read.
+      A top-K cannot stop early, so with ``order_by`` the probe has
+      already scanned such a batch in full.
     """
     state = stream.refresh()
     if state.txns.get(app_id, -1) >= batch_id:
         return False  # replayed batch — already durable, ack and move on
-    probe = batch_df.coalesce(1).limit(SMALL_BATCH_ROWS + 1)
-    if order_by:
-        probe = probe.sortWithinPartitions(*order_by)
-    rows = probe.toJSON().collect()
+    rows = _probe(batch_df, order_by, SMALL_BATCH_ROWS + 1)
     if not rows:
         # Guarded like the data paths: a concurrent replayer that
         # already advanced the watermark past batch_id must not

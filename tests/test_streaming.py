@@ -192,6 +192,72 @@ def test_flush_batch_point_path_is_one_job(spark, catalog, tmp_path):
     assert len(stream.consume("-", limit=1000)) == total
 
 
+def test_flush_batch_compiles_once(spark, catalog, tmp_path, monkeypatch):
+    """After one warm point flush and one warm bulk flush, later
+    flushes generate no new Java class, although each has a new batch
+    id and continues from a new epoch: the probe holds no codegen'd
+    Limit and the offset stage keeps base_epoch out of its code."""
+    from durablestreams_spark.streaming import ingest as s_ingest
+
+    monkeypatch.setattr(s_ingest, "SMALL_BATCH_ROWS", 50)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    first = 0
+
+    def batch(n):
+        # a fresh dir per batch, as a file source's micro-batch reads
+        nonlocal first
+        src = tmp_path / f"src{first}"
+        src.mkdir()
+        for part in range(3):
+            with open(src / f"part{part}.json", "w") as f:
+                for eid in range(first + part, first + n, 3):
+                    f.write(json.dumps({"event_id": eid, "user_id": eid % 3}) + "\n")
+        first += n
+        return spark.read.schema("event_id long, user_id long").json(str(src))
+
+    stream = catalog.stream("compiles")
+    sizes = [30, 80, 30, 80, 30]  # point, bulk, then the same again
+    epochs = []
+    for bid, n in enumerate(sizes):
+        if bid == 2:
+            compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+        assert s_ingest.flush_batch(stream, batch(n), bid, "app", ["event_id"])
+        epochs.append(stream.refresh().last_epoch_ms)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - compiled == 0
+    assert len(set(epochs)) == len(sizes)
+    recs = stream.consume("-", limit=1000)
+    assert [r.data["event_id"] for r in recs] == list(range(sum(sizes)))
+
+
+def test_probe_payload_matches_tojson(spark):
+    """The probe's to_json(struct(*)) strings are toJSON's, byte for
+    byte: NULLs, NaN, -0.0, timestamps, nested array/map/struct,
+    quotes, non-ASCII text and a dotted column name."""
+    import datetime
+
+    from durablestreams_spark.streaming.ingest import _probe
+
+    schema = (
+        "id long, `a.b` double, ts timestamp, s string, "
+        "arr array<double>, m map<string,int>, "
+        "st struct<x: string, y: array<struct<z: double>>>"
+    )
+    rows = [
+        (0, None, None, None, None, None, None),
+        (1, float("nan"), datetime.datetime(2024, 2, 29, 23, 59, 59, 123456),
+         'quote " and \\ back', [1.0, None, float("-inf")], {"k": 1, "é": None},
+         ("ünï €", [(float("nan"),), None])),
+        (2, -0.0, datetime.datetime(1969, 12, 31, 0, 0), "日本語\n\ttab",
+         [], {}, (None, [])),
+        (3, 1e300, datetime.datetime(2000, 1, 1), "", [-0.0], {"": 0}, ("", None)),
+    ]
+    batch = spark.createDataFrame(rows, schema).repartition(3)
+    ref = batch.orderBy("id").toJSON().collect()
+    assert _probe(batch, ["id"], 10) == ref
+    assert sorted(_probe(batch, None, 10)) == sorted(ref)
+    assert _probe(batch, ["id"], 2) == ref[:2]
+
+
 def test_ingest_restart_on_filesystem_checkpoint(spark, catalog, tmp_path):
     """Checkpoints are written through the FileSystem-based manager; a
     restart on the same checkpoint dir picks up only the new file, and
