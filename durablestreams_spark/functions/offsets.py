@@ -13,8 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-EPOCH_DIGITS = 16
-COUNTER_DIGITS = 16
+from ..offsets import COUNTER_DIGITS, EPOCH_DIGITS
 
 
 def _col(c: Column | str) -> Column:

@@ -19,22 +19,26 @@ single-partition sort:
    row numbers into offsets.
 
 That is the textbook distributed zip-with-index; the only global
-barrier is the O(partitions) count collect.  Records land in segment
-files of ``batch_records`` rows each; every file is then registered in
-ONE manifest commit (group commit taken to its logical extreme).
+barrier is the O(partitions) count collect.  The parts land in one
+``bulk-<uuid>/`` run and are registered in ONE manifest commit (group
+commit taken to its logical extreme) through the run protocol every
+Spark-written segment shares, ``maintenance.spark_write_run``.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
+# perfbench/tracing.py patches ingest.os and ingest.pq by name.
+import os  # noqa: F401
 
-import pyarrow.parquet as pq
+import pyarrow.parquet as pq  # noqa: F401
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .manifest import SegmentMeta, offset_bounds_from_footer
-from .stream import Stream, _now_ms
+from .functions.offsets import make_offset, offset_counter, offset_epoch
+from .maintenance import spark_write_run
+from .manifest import CommitConflict, SegmentMeta
+from .offsets import parse_offset
+from .stream import Stream
 
 
 def assign_offsets(
@@ -104,13 +108,7 @@ def assign_offsets(
     counter = (rn % batch_records).alias("__counter")
     out = (
         with_local.select("*", epoch, counter)
-        .withColumn(
-            "offset",
-            F.concat(
-                F.lpad(F.col("__epoch").cast("string"), 16, "0"),
-                F.lpad(F.col("__counter").cast("string"), 16, "0"),
-            ),
-        )
+        .withColumn("offset", make_offset("__epoch", "__counter"))
         .withColumn("ts", F.timestamp_millis(F.col("__epoch")))
         .withColumn("batch", F.col("__epoch"))
         .drop("__pid", "__local", "__epoch", "__counter")
@@ -142,7 +140,10 @@ def produce_bulk(
     stream's current clock, so bulk loads interleave correctly with
     point produces.  Durability order matches the reference: all data
     files first, then one metadata commit = the ack point
-    (``src/stream_manager.ts:498,516``).
+    (``src/stream_manager.ts:498,516``; ``maintenance.spark_write_run``).
+    A commit that loses a race removes its run dir and raises
+    CommitConflict, unless a concurrent replayer already committed
+    the same ``txn`` batch (then 0).
 
     ``batch_records`` sets the offset arithmetic (records per logical
     epoch); ``segment_rows`` sets the physical file size.  The two are
@@ -220,10 +221,8 @@ def produce_bulk(
             # (hash collisions put 2+ ids in one task) exactly at
             # their boundaries because every non-tail group is exactly
             # segment_rows rows and the tail group sorts last.
-            rn = (
-                (F.col("offset").substr(1, 16).cast("long") - base_epoch)
-                * batch_records
-                + F.col("offset").substr(17, 16).cast("long")
+            rn = (offset_epoch("offset") - base_epoch) * batch_records + (
+                offset_counter("offset")
             )
             file_id = F.expr(f"rn_tmp div {int(segment_rows)}")
             writer_df = (
@@ -234,157 +233,61 @@ def produce_bulk(
                 .drop("rn_tmp", "__file")
             )
 
-    run_dir = f"bulk-{uuid.uuid4().hex}"
-    out = os.path.join(stream.segments_dir, run_dir)
-    # In-flight marker: purge_orphans spares this run's files — however
-    # old they get — until the marker disappears.  The grace period
-    # alone can't cover a bulk job whose write outlives it (slow
-    # cluster, long fsync loop): without the marker, purge could reap
-    # files the imminent manifest commit then references.  Removed in
-    # the finally below on EVERY exit: success makes the files
-    # referenced; failure makes them ordinary aged orphans.
-    os.makedirs(stream.segments_dir, exist_ok=True)
-    marker = f"{out}._inflight"
-    with open(marker, "w") as f:
-        f.write(str(_now_ms()))
-    try:
-        return _finish_bulk(
-            stream, writer_df, with_offsets, out, marker, state, base_epoch,
-            txn, max_records_per_file,
-        )
-    finally:
-        # EVERY exit — including a failed write or a metadata-scan
-        # error — drops the marker: success makes the files referenced,
-        # failure makes them ordinary aged orphans (reaped after the
-        # normal grace, not pinned for the 24 h abandon timeout).
-        try:
-            os.unlink(marker)
-        except OSError:
-            pass
+    return _finish_bulk(
+        stream, writer_df, with_offsets, state, base_epoch, txn,
+        max_records_per_file,
+    )
 
 
 def _finish_bulk(
-    stream, writer_df, with_offsets, out, marker, state, base_epoch, txn,
+    stream, writer_df, with_offsets, state, base_epoch, txn,
     max_records_per_file=0,
 ):
-    try:
-        w = writer_df.write.mode("error")
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", max_records_per_file)
-        w.parquet(out)
-    finally:
-        with_offsets._ds_persisted.unpersist()  # type: ignore[attr-defined]
-    # Refresh the marker after the write lands: the fsync+metadata scan
-    # below can itself be long on a huge run, and the abandon timeout
-    # (maintenance.BULK_INFLIGHT_ABANDON_MS) counts from the marker's
-    # mtime.  Write jobs expected to exceed that timeout should
-    # additionally touch the marker from a heartbeat.
-    try:
-        os.utime(marker)
-    except FileNotFoundError:
-        # A concurrent orphan purge reaped the marker: the write took
-        # longer than BULK_INFLIGHT_ABANDON_MS with no heartbeat, so
-        # the just-written files may already be purge candidates.
-        # Committing anyway could reference deleted files — fail with
-        # the real cause instead of a confusing downstream error.
-        raise RuntimeError(
-            "bulk ingest exceeded the in-flight abandon timeout "
-            "(BULK_INFLIGHT_ABANDON_MS) and its marker was reaped; "
-            "re-run, or touch the marker from a heartbeat for long jobs"
-        ) from None
+    """Write ``writer_df`` as one ``bulk-<uuid>/`` run and commit its
+    parts (``maintenance.spark_write_run``); returns the number of
+    segment files committed."""
 
-    metas = []
-    now = _now_ms()
-    paths = [
-        os.path.join(root, fn)
-        for root, _dirs, files in os.walk(out)
-        for fn in files
-        if fn.endswith(".parquet")
-    ]
-
-    # Spark's committer renames, it does not fsync: flush bytes + dir
-    # entry before the manifest references any file (same
-    # durability-before-ack invariant as _write_segment).  The per-file
-    # fsync + footer read both release the GIL, so a thread pool turns
-    # N serial disk round-trips into ~N/16 (a serial loop over hundreds
-    # of part files at tens-of-ms tail fsync latency was the slowest
-    # phase of large runs); each DIRECTORY entry is flushed once after
-    # all its files, not once per file.
-    def _sync_and_scan(path: str):
-        fd = os.open(path, os.O_RDONLY)
+    def write(run_dir: str) -> None:
         try:
-            os.fsync(fd)
+            w = writer_df.write.mode("error")
+            if max_records_per_file:
+                w = w.option("maxRecordsPerFile", max_records_per_file)
+            w.parquet(run_dir)
         finally:
-            os.close(fd)
-        return path, pq.read_metadata(path)
+            with_offsets._ds_persisted.unpersist()  # type: ignore[attr-defined]
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    if paths:
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-            scanned = list(ex.map(_sync_and_scan, paths))
-        for d in sorted({os.path.dirname(p) for p in paths}):
-            dfd = os.open(d, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-    else:
-        scanned = []
-
-    for path, md in scanned:
-        if md.num_rows == 0:
-            # Empty input ⇒ Spark still writes a 0-row part file; it
-            # has no offsets and must not enter the manifest.
-            os.unlink(path)
-            continue
-        rel = os.path.relpath(path, stream.segments_dir)
-        # Shared footer fold (manifest.offset_bounds_from_footer): the
-        # same O(row groups) stats read key compaction uses, and it
-        # raises a clear error on stats-less row groups instead of the
-        # AttributeError a bare ``st.min`` would hit.
-        first, last, n = offset_bounds_from_footer(md, rel)
-        metas.append(
-            SegmentMeta(
-                name=rel,
-                first_offset=first,
-                last_offset=last,
-                created_ms=now,
-                records=n,
-                bytes=os.path.getsize(path),
-            )
+    def commit(metas: list[SegmentMeta]) -> int:
+        last_epoch = (
+            parse_offset(metas[-1].last_offset)[0] if metas else state.last_epoch_ms
         )
-    metas.sort(key=lambda m: m.first_offset)
-    last_epoch = int(metas[-1].last_offset[:16]) if metas else state.last_epoch_ms
-    actions = {
-        "add": [m.to_json() for m in metas],
-        "set": {"last_epoch_ms": last_epoch},
-    }
-    if txn is not None:
-        actions["txn"] = {"app": txn[0], "batch": txn[1]}
-    # Offsets derive from base_epoch: if a point producer claimed an
-    # epoch >= ours mid-job, committing would interleave ranges — abort
-    # loudly instead (bulk loads re-run; they don't silently corrupt).
-    # The txn watermark is validated INSIDE the guard (same contract as
-    # _produce_locked.fresh_enough): a zombie replayer whose batch a
-    # failover already committed must abort here, not double-append.
-    from .manifest import CommitConflict
-
-    try:
+        actions = {
+            "add": [m.to_json() for m in metas],
+            "set": {"last_epoch_ms": last_epoch},
+        }
+        if txn is not None:
+            actions["txn"] = {"app": txn[0], "batch": txn[1]}
+        # Offsets derive from base_epoch: if a point producer claimed an
+        # epoch >= ours mid-job, committing would interleave ranges —
+        # abort loudly instead (bulk loads re-run; they don't silently
+        # corrupt).  The txn watermark is validated INSIDE the guard
+        # (same contract as _produce_locked.fresh_enough): a zombie
+        # replayer whose batch a failover already committed must abort
+        # here, not double-append.
         stream._commit(
             actions,
             guard=lambda st: st.last_epoch_ms < base_epoch
             and (txn is None or st.txns.get(str(txn[0]), -1) < txn[1]),
         )
+        return len(metas)
+
+    try:
+        return spark_write_run(stream, "bulk", "bulk ingest", write, commit)
     except CommitConflict:
         if (
             txn is not None
             and stream.refresh().txns.get(str(txn[0]), -1) >= txn[1]
         ):
             # Lost to a concurrent replayer that committed OUR batch:
-            # the records are durable, so this is a no-op success; our
-            # written files become ordinary aged orphans (the inflight
-            # marker drops in produce_bulk's finally).
+            # the records are durable, so this is a no-op success.
             return 0
         raise
-    return len(metas)

@@ -6,6 +6,14 @@ The reference drives these probabilistically off the flush alarm
 Durable Object.  Here they are deterministic callable jobs — at scale
 they run as scheduled Spark maintenance jobs decoupled from ingest
 (SURVEY.md §2.1 #20).
+
+Segments that Spark writes (``ingest.produce_bulk`` and
+``compact_by_key``) go through one run protocol, ``spark_write_run``:
+a ``<prefix>-<uuid>/`` run dir pinned by an ``._inflight`` marker, the
+write, a pool fsync and footer fold, then one guarded manifest commit.
+The marker's writer and its only reader, ``purge_orphans``, live here
+together.  Every segment swap (``compact``, ``compact_by_key``,
+``apply_retention``) is one ``Stream._replace`` commit.
 """
 
 from __future__ import annotations
@@ -14,6 +22,7 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -21,10 +30,19 @@ import pyarrow.parquet as pq
 from .manifest import (
     CommitConflict,
     SegmentMeta,
+    fsync_dir,
+    fsync_file,
     fsync_file_and_dir as _fsync_file_and_dir,
     offset_bounds_from_footer,
 )
-from .stream import _SEGMENT_SCHEMA, Stream, read_segment
+from .offsets import is_offset, parse_offset
+from .stream import (
+    _SEGMENT_SCHEMA,
+    Stream,
+    _now_ms,
+    read_segment,
+    read_segments_df,
+)
 
 # Reference thresholds, src/segment.ts:61-65.
 MAX_SEGMENTS = 10
@@ -113,7 +131,7 @@ def compact(
         window = plan_compaction(state.active_sorted(), **thresholds)
     if not window:
         return None
-    epoch = int(window[-1].last_offset[:16])
+    epoch = parse_offset(window[-1].last_offset)[0]
     # Deliberately NOT *.parquet: the live tail source (Stream.read_stream)
     # globs *.parquet, so compaction rewrites — which contain only
     # already-delivered offsets — are invisible to it and never re-delivered
@@ -142,14 +160,7 @@ def compact(
         bytes=os.path.getsize(dst),
     )
     try:
-        stream._commit(
-            {
-                "add": [meta.to_json()],
-                "remove": [s.name for s in window],
-                "removed_ms": int(time.time() * 1000),
-            },
-            guard=lambda st: all(s.name in st.active for s in window),
-        )
+        stream._replace([meta], window)
     except CommitConflict:
         # Another compactor swapped (part of) this window first; our
         # merged file must not enter the manifest. Best-effort unlink —
@@ -193,8 +204,8 @@ def clean_tombstones(
 #: in-flight produce (written, not yet committed) and is left alone.
 ORPHAN_GRACE_MS = 60_000
 
-#: A bulk run's ``._inflight`` marker older than this is an abandoned
-#: run (producer crashed before its commit could remove the marker) —
+#: A Spark run's ``._inflight`` marker older than this is an abandoned
+#: run (writer crashed before its commit could remove the marker) —
 #: the dir becomes purgeable.  Matches tombstone retention: both answer
 #: "how long can an in-flight thing legitimately stay in flight".
 BULK_INFLIGHT_ABANDON_MS = TOMBSTONE_RETENTION_MS
@@ -230,7 +241,13 @@ def purge_orphans(
     the listing itself becomes a DataFrame and this is literally
     ``files_df.join(manifest_df, "name", "left_anti")`` (SURVEY.md
     §2.1 #16 — the reference's per-object double KV lookup was a 128 MB
-    memory workaround Spark doesn't need)."""
+    memory workaround Spark doesn't need).
+
+    Spark-written runs (``spark_write_run``) add a third defense: the
+    run's ``<dir>._inflight`` marker, held from before the first part
+    file until the manifest commit resolves, spares the whole run dir
+    regardless of age; a marker older than ``BULK_INFLIGHT_ABANDON_MS``
+    belongs to a crashed writer and is dropped."""
     with stream._lock:
         state = stream.refresh()
     if not os.path.isdir(stream.segments_dir):
@@ -255,13 +272,8 @@ def purge_orphans(
     # advances with every file the job adds.  (Aged-ness is
     # snapshotted up front — unlinking inside a dir refreshes its
     # mtime.)
-    # A live `<dir>._inflight` marker (written by produce_bulk
-    # before its first part file, removed at its manifest commit)
-    # spares the whole run REGARDLESS of file/dir age — the
-    # mtime-grace heuristic alone can't cover a write job that
-    # legitimately outlives the grace window.  A marker older than
-    # the abandon timeout means the producer crashed: drop the
-    # marker and let the run age-purge normally.
+    # A live marker (docstring) spares the run however old it is;
+    # the mtime grace alone can't cover a write that outlives it.
     def _inflight(d: str) -> bool:
         m = os.path.join(stream.segments_dir, f"{d}._inflight")
         try:
@@ -313,6 +325,115 @@ def purge_orphans(
     return sorted(purged)
 
 
+def spark_write_run(
+    stream: Stream, prefix: str, what: str, write, commit, part_name=None
+):
+    """The one write→ack protocol for segments that Spark writes
+    (``ingest.produce_bulk`` and ``compact_by_key``): data files first,
+    then one manifest commit as the ack (reference
+    ``src/stream_manager.ts:498,516``).
+
+    1. Create the run dir ``<prefix>-<uuid>/`` (manifest names carry
+       the relative path) and its ``._inflight`` marker, which
+       ``purge_orphans`` reads: it spares the whole run, however old
+       its files get, until the marker drops.
+    2. ``write(run_dir)``: the caller's Spark write.
+    3. Re-touch the marker: the abandon timeout counts from its mtime.
+       A reaped marker means the run outlived
+       ``BULK_INFLIGHT_ABANDON_MS`` and its files may already be purge
+       candidates, so raise instead of committing a manifest that could
+       reference deleted files.
+    4. Spark's committer renames, it does not fsync: fsync every part
+       in a pool (the fsync and the footer read release the GIL, so N
+       serial disk round trips become ~N/16), then each directory
+       once.  Footers fold into sorted ``SegmentMeta``s
+       (``offset_bounds_from_footer``); 0-row parts (empty input or
+       range) are unlinked; ``part_name()``, when given, renames each
+       part inside the run dir.
+    5. ``commit(metas)``: the caller's guarded manifest commit; its
+       result is returned.
+
+    On CommitConflict the link never landed, so the run dir is removed
+    and the conflict re-raised.  Any other error keeps the run dir: it
+    may have fired after the manifest linked (a landed manifest must
+    not point at deleted segments); unreferenced, it is an ordinary
+    aged orphan.  The marker drops on every exit."""
+    run_dir = os.path.join(stream.segments_dir, f"{prefix}-{uuid.uuid4().hex}")
+    os.makedirs(stream.segments_dir, exist_ok=True)
+    marker = f"{run_dir}._inflight"
+    with open(marker, "w") as f:
+        f.write(str(_now_ms()))
+    try:
+        write(run_dir)
+        try:
+            os.utime(marker)
+        except FileNotFoundError:
+            raise RuntimeError(
+                f"{what} exceeded the in-flight abandon timeout "
+                "(BULK_INFLIGHT_ABANDON_MS) and its marker was reaped; "
+                "re-run, or touch the marker from a heartbeat for long jobs"
+            ) from None
+        metas = _seal_run(stream, run_dir, part_name)
+        try:
+            return commit(metas)
+        except CommitConflict:
+            shutil.rmtree(run_dir, ignore_errors=True)
+            raise
+    finally:
+        try:
+            os.unlink(marker)
+        except OSError:
+            pass
+
+
+def _seal_run(stream: Stream, run_dir: str, part_name) -> list[SegmentMeta]:
+    """Step 4 of ``spark_write_run``: make the run's parts durable and
+    fold their footers into sorted ``SegmentMeta``s."""
+    paths = [
+        os.path.join(root, fn)
+        for root, _dirs, files in os.walk(run_dir)
+        for fn in files
+        if fn.endswith(".parquet")
+    ]
+
+    def sync_and_scan(path: str):
+        fsync_file(path)
+        return path, pq.read_metadata(path)
+
+    scanned = []
+    if paths:
+        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+            scanned = list(ex.map(sync_and_scan, paths))
+    now = _now_ms()
+    metas = []
+    for path, md in scanned:
+        if md.num_rows == 0:
+            os.unlink(path)
+            continue
+        if part_name is not None:
+            renamed = os.path.join(os.path.dirname(path), part_name())
+            os.rename(path, renamed)
+            path = renamed
+        rel = os.path.relpath(path, stream.segments_dir)
+        first, last, n = offset_bounds_from_footer(md, rel)
+        metas.append(
+            SegmentMeta(
+                name=rel,
+                first_offset=first,
+                last_offset=last,
+                created_ms=now,
+                records=n,
+                bytes=os.path.getsize(path),
+            )
+        )
+    # After the unlinks and renames, so the entries the manifest will
+    # name are the durable ones.
+    for d in sorted({os.path.dirname(p) for p in paths}):
+        fsync_dir(d)
+    metas.sort(key=lambda m: m.first_offset)
+    return metas
+
+
 def compact_by_key(
     stream: Stream, spark, key_path: str, n_ranges: int = 1
 ) -> list[SegmentMeta] | None:
@@ -333,24 +454,30 @@ def compact_by_key(
     positions, just with gaps — exclusive-start consume is unaffected.
 
     Execution is a Spark job end-to-end: window rank per key over the
-    manifest-pruned scan, then an executor-side sorted write — no
-    driver collect of data.  ``n_ranges`` controls the output segment
-    count (``repartitionByRange(n_ranges, "offset")``): 1 locally, one
+    window's own segment files, then an executor-side sorted write —
+    no driver collect of data.  The input is exactly the planned
+    window, never the live stream: a produce landing after the plan
+    stays outside both the scan and the swap, where reading the live
+    stream would copy it into the compacted output while its own
+    segment stayed active (two segments holding the same offset).
+    ``n_ranges`` controls the output segment count
+    (``repartitionByRange(n_ranges, "offset")``): 1 locally, one
     segment per range at 100 TB so segment sizes stay bounded — EVERY
     part file is swapped into the manifest, with disjoint offset
     bounds read from its own parquet footer.  Returns the committed
-    SegmentMetas.  The commit is guarded on the whole window still
-    being active — a racing producer/compactor aborts this swap
-    cleanly (same protocol as ``compact``).
+    SegmentMetas, or None when a racing producer or compactor changed
+    the window first (the swap is ``Stream._replace``).  The write and
+    commit run as one ``spark_write_run``.
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    state = stream.refresh()
-    window = state.active_sorted()
+    window = stream.refresh().active_sorted()
     if not window:
         return None
-    df = stream.to_df(spark)
+    df = read_segments_df(
+        spark, [os.path.join(stream.segments_dir, s.name) for s in window]
+    )
     key = F.coalesce(F.get_json_object("data", key_path), F.col("offset"))
     latest = (
         df.withColumn("_k", key)
@@ -361,24 +488,9 @@ def compact_by_key(
         .where(F.col("_rn") == 1)
         .select("offset", "ts", "data")
     )
-    # Same run-directory protocol as produce_bulk: every part stays
-    # inside keycompact-<uuid>/ (manifest names carry the relative
-    # path) and the ._inflight marker is dropped only AFTER the
-    # manifest commit resolves.  The earlier design renamed parts to
-    # the segments_dir top level before committing — but the marker
-    # only spares run DIRECTORIES in purge_orphans, and os.rename
-    # preserves the Spark-write mtime, so on a multi-range run whose
-    # write loop outlived ORPHAN_GRACE_MS a concurrent purge could
-    # reap a part that the imminently-following commit then
-    # referenced: a committed manifest pointing at a missing segment.
-    run_rel = f"keycompact-{uuid.uuid4().hex}"
-    run_dir = os.path.join(stream.segments_dir, run_rel)
-    os.makedirs(stream.segments_dir, exist_ok=True)
-    marker = f"{run_dir}._inflight"
-    with open(marker, "w") as f:
-        f.write(str(int(time.time() * 1000)))
-    metas: list[SegmentMeta] = []
-    try:
+    epoch = parse_offset(window[-1].last_offset)[0]
+
+    def write(run_dir: str) -> None:
         (
             latest.repartitionByRange(n_ranges, "offset")
             .sortWithinPartitions("offset")
@@ -386,88 +498,26 @@ def compact_by_key(
             .option("compression", "zstd")
             .parquet(run_dir)
         )
-        parts = sorted(f for f in os.listdir(run_dir) if f.endswith(".parquet"))
-        epoch = int(window[-1].last_offset[:16])
-        now_ms = int(time.time() * 1000)
-        # EVERY part becomes a segment (ranges are disjoint in offset,
-        # so segment bounds stay disjoint): moving only the first part
-        # and deleting the rest would silently drop every row in parts
-        # 1..N-1 once the window's segments are tombstoned.
-        for part in parts:
-            src_path = os.path.join(run_dir, part)
-            md = pq.read_metadata(src_path)
-            if md.num_rows == 0:
-                os.unlink(src_path)  # Spark writes 0-row parts for empty ranges
-                continue
-            # Deliberately NOT *.parquet: the live tail source
-            # (Stream.read_stream) globs through run subdirectories, so
-            # compaction rewrites — which contain only already-delivered
-            # offsets — are invisible to it and never re-delivered as
-            # duplicates.  Batch readers use explicit manifest paths and
-            # don't care about the extension.  The rename stays WITHIN
-            # the marker-guarded run dir.
-            name = f"{run_rel}/{epoch:016d}-{uuid.uuid4().hex}.compacted"
-            dst = os.path.join(stream.segments_dir, name)
-            os.rename(src_path, dst)
-            _fsync_file_and_dir(dst)
-            first, last, nrows = offset_bounds_from_footer(md, name)
-            metas.append(
-                SegmentMeta(
-                    name=name,
-                    first_offset=first,
-                    last_offset=last,
-                    created_ms=now_ms,
-                    records=nrows,
-                    bytes=os.path.getsize(dst),
-                )
-            )
+
+    def commit(metas: list[SegmentMeta]) -> list[SegmentMeta] | None:
         if not metas:
             return None
-        # Refresh the marker before committing (same protocol as
-        # produce_bulk's post-write utime): the per-part rename+fsync
-        # loop above can outlive BULK_INFLIGHT_ABANDON_MS on a huge
-        # multi-range run, and the abandon clock counts from the
-        # marker's mtime.  A reaped marker means the parts may already
-        # be purge candidates — committing anyway could reference
-        # deleted files, so fail with the real cause instead.
-        try:
-            os.utime(marker)
-        except FileNotFoundError:
-            raise RuntimeError(
-                "key compaction exceeded the in-flight abandon timeout "
-                "(BULK_INFLIGHT_ABANDON_MS) and its marker was reaped; "
-                "re-run, or touch the marker from a heartbeat for long "
-                "jobs"
-            ) from None
-        try:
-            stream._commit(
-                {
-                    "add": [m.to_json() for m in metas],
-                    "remove": [s.name for s in window],
-                    "removed_ms": int(time.time() * 1000),
-                },
-                guard=lambda st: all(s.name in st.active for s in window),
-            )
-        except CommitConflict:
-            # The loser KNOWS its link never landed — eager cleanup is
-            # safe.  Any other commit exception (fsync error, I/O) may
-            # have fired AFTER the manifest durably linked: the run dir
-            # must NOT be deleted then (a landed manifest would point
-            # at missing segments) — it is left as an ordinary aged
-            # orphan, spared by purge if referenced, reaped after the
-            # grace if not.
-            shutil.rmtree(run_dir, ignore_errors=True)
-            return None
+        stream._replace(metas, window)
         return metas
-    finally:
-        # Marker drops on EVERY exit, after the commit has resolved:
-        # success makes the run's files manifest-referenced (purge now
-        # spares them by name); conflict/failure leaves an ordinary
-        # aged run dir under the normal grace rules.
-        try:
-            os.unlink(marker)
-        except OSError:
-            pass
+
+    try:
+        return spark_write_run(
+            stream,
+            "keycompact",
+            "key compaction",
+            write,
+            commit,
+            # Deliberately NOT *.parquet (see compact): the live tail
+            # source skips compaction rewrites.
+            part_name=lambda: f"{epoch:016d}-{uuid.uuid4().hex}.compacted",
+        )
+    except CommitConflict:
+        return None
 
 
 def apply_retention(stream: Stream, cutoff_offset: str) -> list[SegmentMeta]:
@@ -483,8 +533,6 @@ def apply_retention(stream: Stream, cutoff_offset: str) -> list[SegmentMeta]:
     ``clean_tombstones`` under the usual grace window, so in-flight
     reads planned against the old manifest stay valid — the exact
     lifecycle compaction rewrites already use."""
-    from .offsets import is_offset
-
     # A malformed cutoff (short, unpadded, non-numeric) would still
     # compare lexicographically against 32-digit offsets and could
     # silently tombstone EVERY segment — validate like consume() does.
@@ -496,14 +544,7 @@ def apply_retention(stream: Stream, cutoff_offset: str) -> list[SegmentMeta]:
     ]
     if not victims:
         return []
-    stream._commit(
-        {
-            "add": [],
-            "remove": [s.name for s in victims],
-            "removed_ms": int(time.time() * 1000),
-        },
-        guard=lambda st: all(s.name in st.active for s in victims),
-    )
+    stream._replace([], victims)
     return victims
 
 

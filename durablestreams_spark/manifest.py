@@ -51,22 +51,34 @@ MANIFEST_DIR = "_manifest"
 VERSION_DIGITS = 20
 
 
-def fsync_file_and_dir(path: str) -> None:
-    """Flush a freshly written file's bytes AND its directory entry so a
-    manifest commit can safely reference it (durability-before-ack,
-    reference ``src/stream_manager.ts:278-281,498``).  The single shared
-    implementation of that invariant — segment writes, bulk part files
-    and compaction outputs all go through here."""
+def fsync_file(path: str) -> None:
+    """Flush a file's bytes to disk."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:
         os.close(fd)
-    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
+
+
+def fsync_dir(path: str) -> None:
+    """Flush a directory's entries (a file linked, renamed or removed
+    in it) to disk."""
+    dfd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(dfd)
     finally:
         os.close(dfd)
+
+
+def fsync_file_and_dir(path: str) -> None:
+    """Flush a freshly written file's bytes AND its directory entry so a
+    manifest commit can safely reference it (durability-before-ack,
+    reference ``src/stream_manager.ts:278-281,498``).  Point segments
+    and compaction outputs go through here; Spark-written runs fsync
+    their parts in a pool and each directory once
+    (``maintenance.spark_write_run``)."""
+    fsync_file(path)
+    fsync_dir(os.path.dirname(path))
 
 
 def offset_bounds_from_footer(md, label: str = "segment"):
@@ -401,7 +413,7 @@ class Manifest:
                 raise CommitConflict(f"manifest version {version} already committed")
             # Make the directory entry durable: without this a power
             # loss can lose the link while the producer already acked.
-            self._fsync_dir()
+            fsync_dir(self.dir)
         finally:
             os.unlink(tmp)
         new = base.copy()
@@ -423,13 +435,6 @@ class Manifest:
     def _commit_path(self, version: int) -> str:
         return os.path.join(self.dir, f"{version:0{VERSION_DIGITS}d}.json")
 
-    def _fsync_dir(self) -> None:
-        dfd = os.open(self.dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-
     def _write_checkpoint(self, st: StreamState) -> None:
         path = os.path.join(self.dir, f"{st.version:0{VERSION_DIGITS}d}.checkpoint.json")
         fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".tmp")
@@ -440,7 +445,7 @@ class Manifest:
                 os.fsync(f.fileno())
             try:
                 os.link(tmp, path)
-                self._fsync_dir()
+                fsync_dir(self.dir)
             except FileExistsError:
                 pass  # another writer checkpointed the same version — identical content
         finally:

@@ -95,6 +95,29 @@ def read_segment(path: str, columns: list[str] | None = None) -> pa.Table:
     return pq.ParquetFile(path).read(columns=columns, use_threads=False)
 
 
+def spark_segment_schema():
+    """``_SEGMENT_SCHEMA`` as a Spark ``StructType``: the schema every
+    Spark read of segment files (batch or streaming) is given."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("offset", T.StringType(), False),
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("data", T.StringType(), False),
+        ]
+    )
+
+
+def read_segments_df(spark, paths: list[str]):
+    """The segment files ``paths`` as one batch DataFrame (offset, ts,
+    data); an empty list reads as an empty frame of the same schema."""
+    schema = spark_segment_schema()
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 @dataclass(frozen=True)
 class Record:
     offset: str
@@ -164,6 +187,23 @@ class Stream:
                 time.sleep(delay * (0.5 + random.random()))
                 delay = min(delay * 2, 0.05)
         raise CommitConflict(f"manifest contention on stream {self.name}")
+
+    def _replace(self, add: list[SegmentMeta], remove: list[SegmentMeta]) -> StreamState:
+        """Swap segments in one commit: ``remove`` become tombstones and
+        ``add`` become active (the reference's compaction KV
+        transaction, ``src/stream_manager.ts:592-598``).  Guarded on
+        every removed segment still being active: a racing compactor or
+        retention run that swapped any of them first makes this raise
+        CommitConflict instead of leaving two segments with overlapping
+        offset ranges."""
+        return self._commit(
+            {
+                "add": [m.to_json() for m in add],
+                "remove": [m.name for m in remove],
+                "removed_ms": _now_ms(),
+            },
+            guard=lambda st: all(m.name in st.active for m in remove),
+        )
 
     # -- produce ----------------------------------------------------------
 
@@ -489,19 +529,7 @@ class Stream:
         query projects it (columnar — the upgrade over the reference's
         pre-parse offset check, ``src/stream_manager.ts:356-362``).
         """
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("offset", T.StringType(), False),
-                T.StructField("ts", T.TimestampType(), False),
-                T.StructField("data", T.StringType(), False),
-            ]
-        )
-        paths = self.segment_paths(after_offset, as_of_version)
-        if not paths:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*paths)
+        return read_segments_df(spark, self.segment_paths(after_offset, as_of_version))
 
     def read_stream(self, spark):
         """The stream as a Structured Streaming source (file source over
@@ -525,18 +553,9 @@ class Stream:
         deliver records from a bulk run that subsequently aborts
         (read-uncommitted).  Consumers needing committed-only reads use
         ``to_df``/``consume``, which go through the manifest."""
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("offset", T.StringType(), False),
-                T.StructField("ts", T.TimestampType(), False),
-                T.StructField("data", T.StringType(), False),
-            ]
-        )
         os.makedirs(self.segments_dir, exist_ok=True)
         return (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(spark_segment_schema())
             .option("recursiveFileLookup", "true")
             .option("pathGlobFilter", "*.parquet")
             .option("ignoreMissingFiles", "true")

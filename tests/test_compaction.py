@@ -312,3 +312,43 @@ def test_compact_by_key_meta_matches_rowgroup_stats(spark, tmp_path):
     assert meta.first_offset == min(offsets)
     assert meta.last_offset == max(offsets)
     assert meta.records == len(offsets)
+
+
+def test_compact_by_key_ignores_produce_after_its_plan(spark, tmp_path):
+    """A produce that lands after compact_by_key planned its window
+    stays out of the compaction: the output holds only the window's
+    records, so no two active segments overlap and every offset is
+    read once.  The hook produces right after compact_by_key's own
+    refresh, i.e. another thread producing between the plan and the
+    window's read."""
+    from durablestreams_spark.maintenance import compact_by_key
+    from durablestreams_spark.stream import StreamCatalog
+
+    s = StreamCatalog(str(tmp_path)).stream("kcrace")
+    s.produce([{"k": "a", "v": 1}, {"k": "b", "v": 1}])
+    s.produce([{"k": "a", "v": 2}])
+    real_refresh = s.refresh
+    late = []
+
+    def refresh_then_produce():
+        state = real_refresh()
+        if not late:
+            late.extend(s.produce([{"k": "c", "v": 3}]).offsets)
+        return state
+
+    s.refresh = refresh_then_produce
+    try:
+        metas = compact_by_key(s, spark, "$.k")
+    finally:
+        s.refresh = real_refresh
+    assert metas and late
+    active = s.refresh().active_sorted()
+    for lo, hi in zip(active, active[1:]):
+        assert lo.last_offset < hi.first_offset, (lo, hi)
+    got = s.consume("-", limit=100)
+    offsets = [r.offset for r in got]
+    assert len(offsets) == len(set(offsets)) == 3, got
+    assert [r.data for r in got] == [
+        {"k": "b", "v": 1}, {"k": "a", "v": 2}, {"k": "c", "v": 3}
+    ]
+    assert offsets[-1] == late[0]

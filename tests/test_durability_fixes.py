@@ -260,28 +260,47 @@ def test_purge_orphans_spares_aged_compacted_run_then_reaps_committed_dir_never(
     assert len(s.consume("-", 100)) == 5
 
 
-def test_compact_by_key_conflict_cleans_run_dir(spark, tmp_path):
-    """A lost commit race must remove the whole run dir (parts + marker),
-    leaving no debris and the original window intact."""
+def _run_writer(writer, spark, s):
+    """Run one of the two Spark run writers over ``s``: key compaction
+    of its records, or a bulk ingest of two more rows."""
+    from durablestreams_spark.ingest import produce_bulk
     from durablestreams_spark.maintenance import compact_by_key
 
+    if writer == "compact_by_key":
+        return compact_by_key(s, spark, "$.k")
+    df = spark.createDataFrame([(10, "x"), (11, "y")], "n long, k string")
+    return produce_bulk(s, df, order_by=["n"])
+
+
+_RUN_PREFIX = {"compact_by_key": "keycompact-", "produce_bulk": "bulk-"}
+
+
+@pytest.mark.parametrize("writer", ["compact_by_key", "produce_bulk"])
+def test_compact_by_key_conflict_cleans_run_dir(spark, tmp_path, writer):
+    """A lost commit race must remove the whole run dir (parts + marker),
+    leaving no debris and the original window intact.  Key compaction
+    reports the lost race as None, bulk ingest re-raises it."""
     s = StreamCatalog(str(tmp_path)).stream("kcc")
     s.produce([{"k": "a", "v": 1}, {"k": "a", "v": 2}])
     orig_commit = s._commit
 
     def racing_commit(actions, guard=None):
-        # another compactor swapped the window first: force the guard fail
+        # another writer committed first: force the guard fail
         raise CommitConflict("lost the race")
 
     s._commit = racing_commit
     try:
-        assert compact_by_key(s, spark, "$.k") is None
+        if writer == "compact_by_key":
+            assert _run_writer(writer, spark, s) is None
+        else:
+            with pytest.raises(CommitConflict):
+                _run_writer(writer, spark, s)
     finally:
         s._commit = orig_commit
     debris = [
         f
         for f in os.listdir(s.segments_dir)
-        if f.startswith("keycompact-") or f.endswith("._inflight")
+        if f.startswith(_RUN_PREFIX[writer]) or f.endswith("._inflight")
     ]
     assert debris == []
     assert len(s.consume("-", 10)) == 2
@@ -322,16 +341,14 @@ def test_compact_by_key_unknown_commit_error_preserves_run_dir(spark, tmp_path):
     assert markers == []
 
 
-def test_compact_by_key_reaped_marker_aborts_commit(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("writer", ["compact_by_key", "produce_bulk"])
+def test_compact_by_key_reaped_marker_aborts_commit(
+    spark, tmp_path, monkeypatch, writer
+):
     """If the in-flight marker vanished before the commit (the
-    abandon-timeout reap on a run that outlived it), compact_by_key
-    must raise instead of committing a manifest that may reference
-    already-purged parts — the same pre-commit abort produce_bulk
-    performs."""
-    import pytest as _pytest
-
-    from durablestreams_spark.maintenance import compact_by_key
-
+    abandon-timeout reap on a run that outlived it), the run must
+    raise instead of committing a manifest that may reference
+    already-purged parts."""
     s = StreamCatalog(str(tmp_path)).stream("kcr")
     s.produce([{"k": "a", "v": 1}, {"k": "b", "v": 2}])
     committed = []
@@ -346,6 +363,6 @@ def test_compact_by_key_reaped_marker_aborts_commit(spark, tmp_path, monkeypatch
         return real_utime(path, *a, **kw)
 
     monkeypatch.setattr(os, "utime", reaped_utime)
-    with _pytest.raises(RuntimeError, match="abandon timeout"):
-        compact_by_key(s, spark, "$.k")
+    with pytest.raises(RuntimeError, match="abandon timeout"):
+        _run_writer(writer, spark, s)
     assert committed == []
