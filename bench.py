@@ -608,9 +608,8 @@ def main() -> None:
                 t0 = time.perf_counter()
                 _sq._nb_serving_model(spark, sf1_dir)
                 _sq._exact_hash_index(spark, sf1_dir)
-                _sq._neardup_flag_index(spark, sf1_dir)
-                _sq._pixel_flag_index(spark, sf1_dir)
-                _sq._audio_flag_index(spark, sf1_dir)
+                for fam in _sq.BANDED_FAMILIES:
+                    _sq._flag_index(fam, spark, sf1_dir)
                 _sq._contamination_flag_index(spark, sf1_dir)
                 aux["op_gate_index_build_sf1"] = round(
                     time.perf_counter() - t0, 3

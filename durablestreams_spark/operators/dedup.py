@@ -427,16 +427,19 @@ def simhash_expr(text_col: str = "text"):
     return _sim(hs)
 
 
-def band_structs_expr(sig_col: str = "simhash"):
-    """Array of (band_id, band_key) structs for a 32-bit signature —
-    the banding geometry shared by the persisted index build and the
-    streaming scorer (explode to get one row per band)."""
-    return F.expr(
-        f"transform(sequence(0, {NEARDUP_BANDS - 1}), b -> "
-        f"struct(cast(b as int) AS band_id, "
-        f"({sig_col} div shiftleft(1L, b * {NEARDUP_BAND_BITS}))"
-        f" % {1 << NEARDUP_BAND_BITS} AS band_key))"
-    )
+def band_key_exprs(sig_col: str):
+    """The NEARDUP_BANDS band keys of a 32-bit signature column, band
+    b = bits [b * NEARDUP_BAND_BITS, (b + 1) * NEARDUP_BAND_BITS) —
+    the banding geometry of the SimHash near-dup family (index
+    builds, streaming scorer, and the least-agreeing-band predicate
+    all slice through it)."""
+    return [
+        F.expr(
+            f"({sig_col} div shiftleft(1L, {b * NEARDUP_BAND_BITS}))"
+            f" % {1 << NEARDUP_BAND_BITS}"
+        )
+        for b in range(NEARDUP_BANDS)
+    ]
 
 
 @query(

@@ -135,6 +135,7 @@ def log_consume_page(spark, sf_dir):
 def ndjson_segment_parity(spark, sf_dir):
     from pyspark.sql import Window
 
+    from ..functions.offsets import make_offset
     from ..sources.ndjson import read_ndjson_segments
 
     def build(root):
@@ -142,8 +143,10 @@ def ndjson_segment_parity(spark, sf_dir):
         rn = F.row_number().over(Window.orderBy("ts", "event_id")) - 1
         lines = ev.withColumn("rn", rn).select(
             F.concat(
-                F.lpad(((F.col("rn") / BATCH).cast("long") + 1).cast("string"), 16, "0"),
-                F.lpad((F.col("rn") % BATCH).cast("string"), 16, "0"),
+                make_offset(
+                    (F.col("rn") / BATCH).cast("long") + 1,
+                    F.col("rn") % BATCH,
+                ),
                 F.to_json(F.struct("event_id")),
             ).alias("value")
         )

@@ -1005,56 +1005,10 @@ def _phash_keys(spark, sf_dir):
     "tests/test_media_codec.py.",
 )
 def multimodal_phash_dedup(spark, sf_dir):
+    from .streaming_queries import PIXEL_FAMILY, _band_pairs
+
     keys = _phash_keys(spark, sf_dir).localCheckpoint(eager=True)
-    return _banded_hamming_matches(keys, PHASH_BANDS, PHASH_HAM)
-
-
-def _banded_hamming_matches(keys, n_bands: int, max_ham: int):
-    """ONE definition of the banded hamming matcher over signature
-    key rows (media_id, k0..k{n-1}) — candidates by (band_id,
-    band_key) equi-self-join (pigeonhole: any pair within max_ham
-    agrees exactly on >=1 band), verify by row-local bit_count(xor)
-    over the carried keys.  Shared by the pixel (dHash) and audio
-    (frame-sign) near-dup queries so the matcher cannot drift
-    between modalities."""
-    bands = keys.select(
-        "media_id",
-        F.posexplode(
-            F.array(*[F.col(f"k{b}") for b in range(n_bands)])
-        ).alias("band_id", "band_key"),
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "band_key"])
-        .where(F.col("a.media_id") < F.col("b.media_id"))
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-        )
-        .distinct()
-    )
-    x = keys.select(
-        F.col("media_id").alias("media_a"),
-        *[F.col(f"k{b}").alias(f"xa{b}") for b in range(n_bands)],
-    )
-    y = keys.select(
-        F.col("media_id").alias("media_b"),
-        *[F.col(f"k{b}").alias(f"yb{b}") for b in range(n_bands)],
-    )
-    ham = None
-    for b in range(n_bands):
-        term = F.bit_count(
-            F.col(f"xa{b}").bitwiseXOR(F.col(f"yb{b}"))
-        )
-        ham = term if ham is None else ham + term
-    return (
-        cand.join(x, "media_a")
-        .join(y, "media_b")
-        .withColumn("hamming", ham.cast("long"))
-        .where(F.col("hamming") <= max_ham)
-        .select("media_a", "media_b", "hamming")
-        .orderBy("media_a", "media_b")
-    )
+    return _band_pairs(PIXEL_FAMILY, keys)
 
 
 # ---------------------------------------------------------------------------
@@ -1583,5 +1537,7 @@ def gate_auflag_sql(prefix: str, src: str = "documents") -> str:
     "only).",
 )
 def multimodal_audio_dedup(spark, sf_dir):
+    from .streaming_queries import AUDIO_FAMILY, _band_pairs
+
     keys = _audio_fp_keys(spark, sf_dir).localCheckpoint(eager=True)
-    return _banded_hamming_matches(keys, AUDIO_BANDS, AUDIO_HAM)
+    return _band_pairs(AUDIO_FAMILY, keys)

@@ -20,6 +20,8 @@ import stat as _stat
 import functools
 import tempfile
 import uuid
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 import pandas as pd
 
@@ -1365,19 +1367,13 @@ def _neardup_index(spark, sf_dir):
     at 100 TB the table is bucketBy(band_key)-written so the serving
     join needs no index-side shuffle.  Fingerprint-keyed to the
     documents fixture with the banding geometry in the params tag."""
-    from .dedup import (
-        NEARDUP_BAND_BITS,
-        NEARDUP_BANDS,
-        band_structs_expr,
-        dedup_simhash,
-    )
+    from .dedup import NEARDUP_BAND_BITS, NEARDUP_BANDS, dedup_simhash
 
     def build(root):
-        sig = dedup_simhash(spark, sf_dir)
-        banded = sig.select(
-            "doc_id", "simhash", F.explode(band_structs_expr()).alias("bk")
-        ).select("bk.band_id", "bk.band_key", "doc_id", "simhash")
-        banded.write.mode("overwrite").parquet(os.path.join(root, "index.parquet"))
+        fam = SIMHASH_FAMILY
+        _band_rows(fam, dedup_simhash(spark, sf_dir)).select(
+            *fam.index_cols
+        ).write.mode("overwrite").parquet(os.path.join(root, "index.parquet"))
 
     root = build_once(
         cache_root("/tmp/durablestreams_neardup_v1", sf_dir),
@@ -1398,6 +1394,7 @@ from .dedup import (  # noqa: E402
     NEARDUP_BAND_BITS as _ND_BITS,
     NEARDUP_BANDS as _ND_BANDS,
     NEARDUP_MAX_HAMMING as _ND_HAM,
+    band_key_exprs as _band_key_exprs,
 )
 
 
@@ -1447,73 +1444,27 @@ def streaming_dedup_neardup(spark, sf_dir):
     return _drain(_neardup_stream_df(spark, sf_dir), "append")
 
 
-def _least_agreeing_band():
-    """Smallest band on which the row's two signatures (`simhash`,
-    `c_sig`) agree, recomputed row-locally: keep a matched pair only
-    in THAT band's join row, so the multi-band fan-out dedups with
-    zero stream-side state (DISTINCT-free).  Deliberately UNROLLED to
-    a CASE (first match = smallest band), not an aggregate() fold: a
-    higher-order-function lambda in a post-join predicate of a
-    stream-static join can collide its lambda-variable exprIds with
-    the static side's attributes when the micro-batch planner
-    re-analyzes the plan (observed as
-    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on warm-cache sessions where
-    the static read allocates low ids); CASE has no lambda scope."""
-    from .dedup import NEARDUP_BAND_BITS, NEARDUP_BANDS
-
-    mod = 1 << NEARDUP_BAND_BITS
-    arms = " ".join(
-        f"WHEN (simhash div shiftleft(1L, {b * NEARDUP_BAND_BITS})) % {mod}"
-        f" = (c_sig div shiftleft(1L, {b * NEARDUP_BAND_BITS})) % {mod}"
-        f" THEN {b}"
-        for b in range(NEARDUP_BANDS)
-    )
-    return F.expr(f"CASE {arms} ELSE -1 END")
-
-
 def _neardup_stream_df(spark, sf_dir):
     """The un-drained streaming topology of streaming_dedup_neardup —
     split out so the plan audit can assert statelessness (no
     Aggregate, no watermark, no state store) and the persisted-index
     provenance on the live streaming DF itself."""
-    from .dedup import (
-        NEARDUP_BAND_BITS,
-        NEARDUP_BANDS,
-        NEARDUP_MAX_HAMMING,
-        band_structs_expr,
-        simhash_expr,
-    )
-
-    idx = _neardup_index(spark, sf_dir)
-    cand = idx.select(
-        "band_id",
-        "band_key",
-        F.col("doc_id").alias("dup_of"),
-        F.col("simhash").alias("c_sig"),
-    )
+    fam = SIMHASH_FAMILY
     src = _docs_stream_spread(spark, sf_dir).select("doc_id", "text")
-    sig = src.where(
-        F.expr("size(filter(split(text, '\\\\s+'), t -> t != '')) > 0")
-    ).select("doc_id", simhash_expr().alias("simhash"))
-    bands = sig.select(
-        "doc_id", "simhash", F.explode(band_structs_expr()).alias("bk")
-    ).select("doc_id", "simhash", "bk.band_id", "bk.band_key")
     # Stream-static inner equi-join: stateless on the stream side
     # (re-resolves the static index per micro-batch).  No broadcast
     # hint — the index is corpus-proportional (the
     # streaming_enrich_static_join rule).
-    j = bands.join(cand, ["band_id", "band_key"])
-    ham = F.expr("bit_count(simhash ^ c_sig)")
-    least_band = _least_agreeing_band()
-    out = (
-        j.where(
-            (F.col("dup_of") < F.col("doc_id"))
-            & (ham <= NEARDUP_MAX_HAMMING)
-            & (F.col("band_id") == least_band)
-        )
-        .select("doc_id", "dup_of", ham.cast("long").alias("hamming"))
+    return _band_join(
+        fam,
+        _doc_bands(fam, src),
+        _neardup_index(spark, sf_dir),
+        F.col("o_doc_id") < F.col("doc_id"),
+    ).select(
+        "doc_id",
+        F.col("o_doc_id").alias("dup_of"),
+        _hamming(fam).cast("long").alias("hamming"),
     )
-    return out
 
 
 def _exact_hash_index(spark, sf_dir):
@@ -1650,112 +1601,11 @@ def _ndlive_base_pred():
     )
 
 
-def _neardup_base_index_path(spark, sf_dir) -> str:
-    """Persisted banded SimHash index over the BASE split only — the
-    'historical corpus' artifact streaming_dedup_neardup_live serves
-    against (the _neardup_index over full docs, restricted to the
-    ':ndlive' base 80%).  Signatures come from the row-local
-    simhash_expr, which is bit-identical to the batch aggregate
-    (parity-pinned by tests/test_streaming_neardup.py).  Returns the
-    parquet PATH, not a DataFrame: the live gate's foreachBatch
-    re-reads the index per micro-batch alongside its run-local
-    appends."""
-    from .dedup import band_structs_expr, simhash_expr
-
-    def build(root):
-        base = table(spark, sf_dir, "documents").where(_ndlive_base_pred())
-        sig = base.where(
-            F.expr("size(filter(split(text, '\\\\s+'), t -> t != '')) > 0")
-        ).select("doc_id", simhash_expr().alias("simhash"))
-        (
-            sig.select(
-                "doc_id",
-                "simhash",
-                F.explode(band_structs_expr()).alias("bk"),
-            )
-            .select("bk.band_id", "bk.band_key", "doc_id", "simhash")
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "index.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_ndlive_base_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"simhash32:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
-    )
-    return os.path.join(root, "index.parquet")
-
-
-def refresh_neardup_index(
-    spark,
-    idx_path: str,
-    delta_docs,
-    removed_ids,
-    guard_marker: str | None = None,
-):
-    """Incremental banded-index REFRESH — the maintenance lifecycle
-    the persisted serving artifacts lacked (VERDICT r10 task 4): the
-    fingerprint protocol rebuilt `_neardup_index` from scratch on any
-    corpus change; this appends the DELTA's signatures and tombstones
-    removed docs instead, at cost O(|delta| + |index rows|) — the
-    historical corpus TEXT is never re-read, never re-signed (the
-    FAISS add()/remove_ids() economics; the O(delta) property is
-    pinned by a scanned-files test).
-
-    - append: row-local simhash + 1->4 band explode over
-      ``delta_docs`` (doc_id, text) — bit-identical to the batch
-      build (simhash_expr parity).
-    - tombstone: left-anti join of the index rows against
-      ``removed_ids`` (doc_id) — the purge_orphans idiom; removed ids
-      are also anti-joined out of the delta so a doc that arrives and
-      is deleted in the same window never lands.
-    - guarded ATOMIC swap (the maintenance.compact contract,
-      maintenance.py:81, hardened per the r11 review): the live path
-      is a SYMLINK to a versioned directory; the refreshed rows are
-      written to a new version beside it and the symlink is repointed
-      with one atomic rename — readers (e.g. a live gate re-reading
-      the index per micro-batch) always resolve either the old or
-      the new version, never a missing path or partial write.
-      Mutual exclusion comes from an O_EXCL lockfile (a second
-      refresher returns None immediately — no clobber window), and
-      ``guard_marker``'s content is re-checked INSIDE the lock so an
-      out-of-band epoch advance also aborts loudly.  The previous
-      version directory is retained (readers mid-scan keep their
-      files); versions older than that are garbage-collected.
-    Returns the refreshed index DataFrame, or None on a lost race."""
-    from .dedup import band_structs_expr, simhash_expr
-
-    def _refresh(cur):
-        kept = cur.join(removed_ids, "doc_id", "left_anti")
-        delta_b = (
-            delta_docs.select("doc_id", "text")
-            .join(removed_ids, "doc_id", "left_anti")
-            .where(
-                F.expr(
-                    "size(filter(split(text, '\\\\s+'), t -> t != '')) > 0"
-                )
-            )
-            .select("doc_id", simhash_expr().alias("simhash"))
-            .select(
-                "doc_id",
-                "simhash",
-                F.explode(band_structs_expr()).alias("bk"),
-            )
-            .select("bk.band_id", "bk.band_key", "doc_id", "simhash")
-        )
-        return kept.select(
-            "band_id", "band_key", "doc_id", "simhash"
-        ).unionByName(delta_b)
-
-    return _guarded_index_swap(spark, idx_path, _refresh, guard_marker)
-
-
 def _guarded_index_swap(spark, idx_path: str, refresh_fn, guard_marker):
     """The ONE guarded-swap skeleton every refreshable serving artifact
-    goes through (factored out of refresh_neardup_index for VERDICT
-    r11 task 4): O_EXCL lockfile (a second refresher returns None — no
+    goes through (the banded near-dup families' refresh_band_index,
+    the exact-hash postings, the NB counts, the bench shingles):
+    O_EXCL lockfile (a second refresher returns None — no
     clobber window), one-time plain-dir -> symlink-versioned layout
     migration, ``refresh_fn(current_index_df) -> refreshed_df``
     computed and written to a NEW version directory, guard-marker
@@ -1820,12 +1670,33 @@ def _guarded_index_swap(spark, idx_path: str, refresh_fn, guard_marker):
             pass
 
 
+class _Cache(NamedTuple):
+    """Identity of one marker-cached artifact: it lives in
+    ``cache_root(base, sf_dir)`` and its ``_built`` marker records the
+    ``name`` fixture's fingerprint plus ``params``.  A change to any of
+    the three strings rebuilds (or orphans) every existing copy."""
+
+    base: str
+    name: str
+    params: str
+
+
+def _cached(cache: _Cache, sf_dir: str, build) -> str:
+    """``build_once`` for a ``_Cache`` identity; returns the root."""
+    return build_once(
+        cache_root(cache.base, sf_dir),
+        sf_dir,
+        build,
+        name=cache.name,
+        params=cache.params,
+    )
+
+
 def _seeded_refresh_build(
     spark,
     sf_dir: str,
-    root: str,
+    cache: _Cache,
     idx_name: str,
-    params: str,
     seed_fn,
     refresh_fn,
 ):
@@ -1838,7 +1709,7 @@ def _seeded_refresh_build(
     RAISE on a lost race — an assert would vanish under python -O and
     the marker would cache a pre-refresh artifact forever — and
     only then mark the artifact built.  Returns the live idx path."""
-    idx_p = os.path.join(root, idx_name)
+    idx_p = os.path.join(cache_root(cache.base, sf_dir), idx_name)
 
     def build(root):
         v0 = idx_p + ".v-genesis"
@@ -1846,13 +1717,13 @@ def _seeded_refresh_build(
         os.symlink(v0, idx_p)
         guard = os.path.join(root, "_guard")
         with open(guard, "w") as fh:
-            fh.write(f"epoch-0:{params}")
+            fh.write(f"epoch-0:{cache.params}")
         if refresh_fn(idx_p, guard) is None:
             raise RuntimeError(
                 "guarded-swap refresh lost its race in a graded build"
             )
 
-    build_once(root, sf_dir, build, name="documents", params=params)
+    _cached(cache, sf_dir, build)
     return idx_p
 
 
@@ -1864,7 +1735,7 @@ def refresh_exact_index(
     guard_marker: str | None = None,
 ):
     """Incremental refresh of the exact-dedup index (the
-    refresh_neardup_index contract applied to content hashes, VERDICT
+    refresh_band_index contract applied to content hashes, VERDICT
     r11 task 4) — with the FIRST-ID RE-ELECTION subtlety: the serving
     shape is (h -> first_id = min doc_id), but a (h, first_id) table
     cannot express 'the min was deleted, promote the next-smallest
@@ -1967,9 +1838,12 @@ def text_nb_model_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=cache_root("/tmp/durablestreams_nbrefresh_v1", sf_dir),
+        cache=_Cache(
+            "/tmp/durablestreams_nbrefresh_v1",
+            "documents",
+            f"nbcounts{NB_BUCKETS}:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
+        ),
         idx_name="counts.parquet",
-        params=f"nbcounts{NB_BUCKETS}:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
         seed_fn=lambda v0: _nb_counts(
             docs.where(_ndlive_base_pred())
         ).write.parquet(v0),
@@ -2013,7 +1887,7 @@ NEARDUP_REFRESH_REMOVE_MOD = 97
     "refresh — append the delta 20%'s signatures, tombstone a "
     f"deterministic 'deleted' subset (doc_id % "
     f"{NEARDUP_REFRESH_REMOVE_MOD} = 0) — through the guarded-swap "
-    "refresh operator (refresh_neardup_index: O(|delta| + |index|), "
+    "refresh operator (refresh_band_index: O(|delta| + |index|), "
     "the historical corpus text never re-read; swap aborts if a "
     "racing refresher already advanced the guard marker, the "
     "maintenance.compact contract).  The graded rows are the "
@@ -2027,38 +1901,8 @@ NEARDUP_REFRESH_REMOVE_MOD = 97
     "— the difference between a nightly job and an impossible one.",
 )
 def dedup_neardup_index_refresh(spark, sf_dir):
-    import shutil as _shutil
-
-    docs = table(spark, sf_dir, "documents")
-    idx_p = _seeded_refresh_build(
-        spark,
-        sf_dir,
-        root=cache_root("/tmp/durablestreams_ndrefresh_v1", sf_dir),
-        idx_name="index.parquet",
-        params=(
-            f"simhash32:base<{_NDLIVE_CUT}{_NDLIVE_TAG}"
-            f":rm{NEARDUP_REFRESH_REMOVE_MOD}:v1"
-        ),
-        # seed = a COPY of the shared base artifact (which stays
-        # pristine for its other consumers)
-        seed_fn=lambda v0: _shutil.copytree(
-            _neardup_base_index_path(spark, sf_dir), v0
-        ),
-        refresh_fn=lambda p, guard: refresh_neardup_index(
-            spark,
-            p,
-            docs.where(~_ndlive_base_pred()).select("doc_id", "text"),
-            docs.where(
-                F.col("doc_id") % NEARDUP_REFRESH_REMOVE_MOD == 0
-            ).select("doc_id"),
-            guard_marker=guard,
-        ),
-    )
-    return spark.read.parquet(idx_p).select(
-        F.col("band_id").cast("long").alias("band_id"),
-        F.col("band_key").cast("long").alias("band_key"),
-        "doc_id",
-        "simhash",
+    return _graded_refresh(
+        SIMHASH_FAMILY, spark, sf_dir, NEARDUP_REFRESH_REMOVE_MOD
     )
 
 
@@ -2132,13 +1976,14 @@ def dedup_exact_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=cache_root("/tmp/durablestreams_exrefresh_v1", sf_dir),
-        idx_name="postings.parquet",
-        params=(
+        cache=_Cache(
+            "/tmp/durablestreams_exrefresh_v1",
+            "documents",
             f"md5:postings:copy{EXACT_REFRESH_COPY_MOD}"
             f"@{EXACT_REFRESH_COPY_OFFSET}:rm{EXACT_REFRESH_REMOVE_MOD}"
-            f":base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1"
+            f":base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
         ),
+        idx_name="postings.parquet",
         seed_fn=lambda v0: derived.where(_ndlive_base_pred())
         .select(F.md5("text").alias("h"), "doc_id")
         .write.parquet(v0),
@@ -2309,78 +2154,6 @@ def _epoch_read(spark, root: str, before_epoch=None):
     return spark.read.parquet(*paths)
 
 
-def _batch_bands(batch_df):
-    """Banded row-local signatures of one micro-batch — materialized
-    ONCE (localCheckpoint): the index join, the self-join, and the
-    index append all consume it, and without the checkpoint each
-    would re-run the md5 simhash fold over the batch."""
-    from .dedup import band_structs_expr, simhash_expr
-
-    return (
-        batch_df.where(
-            F.expr("size(filter(split(text, '\\\\s+'), t -> t != '')) > 0")
-        )
-        .select("doc_id", simhash_expr().alias("simhash"))
-        .select(
-            "doc_id", "simhash", F.explode(band_structs_expr()).alias("bk")
-        )
-        .select("doc_id", "simhash", "bk.band_id", "bk.band_key")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _neardup_batch_matches(bands, idx):
-    """ONE definition of the per-batch near-dup detection, shared by
-    the pair detector (_ndlive_run) and the fused admission gate:
-    (1) batch vs index equi-join on band keys — catches pairs whose
-    other member is historical or arrived in an earlier batch,
-    normalized to (greatest, least) because a smaller-id doc can
-    arrive after a larger-id one; (2) the intra-batch band self-join
-    — pairs BOTH arriving in this batch (the r10 blind spot), bounded
-    batch x batch, no watermark, no state store.  The two arms are
-    disjoint by construction (the index never contains the current
-    batch), and multi-band agreements collapse via the row-local
-    smallest-agreeing-band predicate, so every pair appears EXACTLY
-    once.  Returns (doc_id, dup_of, hamming) with doc_id > dup_of."""
-    from .dedup import NEARDUP_MAX_HAMMING
-
-    ham = F.expr("bit_count(simhash ^ c_sig)")
-    least_band = _least_agreeing_band()
-    cand = idx.select(
-        "band_id",
-        "band_key",
-        F.col("doc_id").alias("dup_of"),
-        F.col("simhash").alias("c_sig"),
-    )
-    p1 = (
-        bands.join(cand, ["band_id", "band_key"])
-        .where(F.col("dup_of") != F.col("doc_id"))
-        .where(
-            (ham <= NEARDUP_MAX_HAMMING) & (F.col("band_id") == least_band)
-        )
-        .select(
-            F.greatest("doc_id", "dup_of").alias("doc_id"),
-            F.least("doc_id", "dup_of").alias("dup_of"),
-            ham.cast("long").alias("hamming"),
-        )
-    )
-    cand2 = bands.select(
-        "band_id",
-        "band_key",
-        F.col("doc_id").alias("dup_of"),
-        F.col("simhash").alias("c_sig"),
-    )
-    p2 = (
-        bands.join(cand2, ["band_id", "band_key"])
-        .where(F.col("dup_of") < F.col("doc_id"))
-        .where(
-            (ham <= NEARDUP_MAX_HAMMING) & (F.col("band_id") == least_band)
-        )
-        .select("doc_id", "dup_of", ham.cast("long").alias("hamming"))
-    )
-    return p1.unionByName(p2)
-
-
 def _finish_run(spark, out_root: str, schema: str):
     """Materialize a live run's output OFF its run directory
     (localCheckpoint cuts the lineage to the files), so the caller's
@@ -2401,6 +2174,7 @@ def _ndlive_run(spark, base_idx_path: str, delta_docs):
     (doc_id, dup_of, hamming) — batching-independent by construction
     (see streaming_dedup_neardup_live's doc).  Populates
     _NDLIVE_LAST_RUN for the audit test."""
+    fam = SIMHASH_FAMILY
     with tempfile.TemporaryDirectory(
         prefix="ds_ndlive_", ignore_cleanup_errors=True
     ) as run_dir:
@@ -2409,13 +2183,19 @@ def _ndlive_run(spark, base_idx_path: str, delta_docs):
 
         def _detect(batch_df, epoch_id):
             sess = batch_df.sparkSession
-            bands = _batch_bands(batch_df)
+            # materialized ONCE: the index join, the self-join and the
+            # index append all consume it
+            bands = _doc_bands(fam, batch_df).localCheckpoint(eager=True)
             idx = sess.read.parquet(base_idx_path)
             prior = _epoch_read(sess, app_path, before_epoch=epoch_id)
             if prior is not None:
                 idx = idx.unionByName(prior)
             _epoch_write(
-                _neardup_batch_matches(bands, idx), out_path, epoch_id
+                _batch_matches(fam, bands, idx).select(
+                    "doc_id", F.col("o_doc_id").alias("dup_of"), "hamming"
+                ),
+                out_path,
+                epoch_id,
             )
             # Incremental index append (the similarity_ivf_upsert
             # assignment-only pattern): this batch's signatures become
@@ -2489,7 +2269,7 @@ def _ndlive_run(spark, base_idx_path: str, delta_docs):
     "capability: none — north star (deployable ingest gate).",
 )
 def streaming_dedup_neardup_live(spark, sf_dir):
-    base_idx = _neardup_base_index_path(spark, sf_dir)
+    base_idx = _base_index_path(SIMHASH_FAMILY, spark, sf_dir)
     delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
     return _ndlive_run(spark, base_idx, delta)
 
@@ -2781,9 +2561,15 @@ from .pipeline_llm import _contam_flag_ctes  # noqa: E402,F401
 
 
 from .multimodal import (  # noqa: E402
+    AUDIO_BANDS as _AU_BANDS,
+    AUDIO_HAM as _AU_HAM,
     AUDIO_MOD as _AU_MOD,
     AUDIO_OFF as _AU_OFF,
+    PHASH_BANDS as _PX_BANDS,
     PHASH_HAM as _PX_HAM,
+    _audio_params,
+    _pixel_params,
+    audio_fp_keys_for as _audio_fp_keys_for,
     audio_keys_sql as _audio_keys_sql,
     gate_auflag_sql as _gate_auflag_sql,
     gate_phash_keys as _gate_phash_keys,
@@ -2851,166 +2637,408 @@ _GATE_LIVE_SQL = f"""
     """
 
 
-def _pixel_base_index_path(spark, sf_dir) -> str:
-    """Persisted banded PIXEL-signature index over the BASE split —
-    the binary modality's 'historical corpus' artifact the fused gate
-    serves against: each base doc's gate-image dHash band keys
-    (multimodal.gate_phash_keys — REAL encode/decode/hash) exploded
-    to (band_id, band_key, doc_id, k0..k3).  Returns the parquet
-    PATH (the foreachBatch re-reads it per micro-batch alongside its
-    run-local appends — the _neardup_base_index_path protocol)."""
-    from .multimodal import _pixel_params
+#: Deterministic "deleted docs" subset for the graded pixel-refresh
+#: run — exercises the tombstone path on a fixture that never deletes
+#: (a different modulus than the near-dup refresh, so the two graded
+#: artifacts never share a removal set by accident).
+PIXEL_REFRESH_REMOVE_MOD = 89
+
+#: Deterministic "deleted docs" subset for the graded audio-refresh
+#: run (a third distinct modulus, so no graded artifact shares a
+#: removal set with another by accident).
+AUDIO_REFRESH_REMOVE_MOD = 83
+
+
+# ---------------------------------------------------------------------------
+# The banded near-dup index family.  SimHash text signatures, gate-image
+# dHash keys and audio fingerprints run ONE protocol: band rows ->
+# equi-join on (band_id, band_key) -> ordered-pair filter -> verify
+# sum(bit_count(k ^ o_k)) <= h over the carried keys -> flag the larger
+# member (candidates by partition key, then exact verify).  Each step
+# below is defined once; a family is only the data that differs.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class BandedFamily:
+    """What one near-dup family is, as data (never set by a user).
+
+    - ``kind``: the family's tag — the fused gate kinds
+      ``{kind}_flag`` / ``{kind}_app`` and the annotation column.
+    - ``keys``: docs frame -> signature key rows.
+    - ``ids``: SQL projection of the key rows' ids; every band row
+      carries ``doc_id`` (audio derives it from ``media_id`` and
+      carries ``media_id`` too).
+    - ``key_cols`` / ``bands``: the key columns, and
+      ``bands(*key_cols)`` -> one band-key column per band (slices of
+      one key, or one key per band).
+    - ``max_ham``: the verify bound (< the band count, so the band
+      join is exact by pigeonhole).
+    - ``index_cols``: the persisted band index's column order.
+    - ``base`` / ``refresh`` / ``flag``: the cache identities of the
+      ':ndlive' base index, the graded refresh and the flag index."""
+
+    kind: str
+    keys: Callable
+    ids: tuple
+    key_cols: tuple
+    bands: Callable
+    max_ham: int
+    index_cols: tuple
+    base: _Cache
+    refresh: _Cache
+    flag: _Cache
+
+
+def _simhash_keys(docs):
+    """(doc_id, simhash) of the docs with at least one token — the
+    batch dedup_simhash aggregate emits no row for a token-less doc."""
+    from .dedup import simhash_expr
+
+    return docs.where(
+        F.expr("size(filter(split(text, '\\\\s+'), t -> t != '')) > 0")
+    ).select("doc_id", simhash_expr().alias("simhash"))
+
+
+def _audio_keys(docs):
+    """(media_id, k0..k3) of every planted recording of the sampled
+    docs (doc_id % AUDIO_MOD == 0)."""
+    return _audio_fp_keys_for(docs.where(F.col("doc_id") % _AU_MOD == 0))
+
+
+def _one_key_per_band(*key_cols):
+    return [F.col(k) for k in key_cols]
+
+
+_BASE_TAG = f"base<{_NDLIVE_CUT}{_NDLIVE_TAG}"
+
+SIMHASH_FAMILY = BandedFamily(
+    kind="nd",
+    keys=_simhash_keys,
+    ids=("doc_id",),
+    key_cols=("simhash",),
+    bands=_band_key_exprs,
+    max_ham=_ND_HAM,
+    index_cols=("band_id", "band_key", "doc_id", "simhash"),
+    base=_Cache(
+        "/tmp/durablestreams_ndlive_base_v1",
+        "documents",
+        f"simhash32:{_BASE_TAG}:v1",
+    ),
+    refresh=_Cache(
+        "/tmp/durablestreams_ndrefresh_v1",
+        "documents",
+        f"simhash32:{_BASE_TAG}:rm{NEARDUP_REFRESH_REMOVE_MOD}:v1",
+    ),
+    flag=_Cache(
+        "/tmp/durablestreams_ndflag_v1",
+        "documents",
+        f"simhash32:flag:ham{_ND_HAM}:v1",
+    ),
+)
+
+_PX_KEYS = tuple(f"k{b}" for b in range(_PX_BANDS))
+PIXEL_FAMILY = BandedFamily(
+    kind="px",
+    keys=_gate_phash_keys,
+    ids=("doc_id",),
+    key_cols=_PX_KEYS,
+    bands=_one_key_per_band,
+    max_ham=_PX_HAM,
+    index_cols=("doc_id", *_PX_KEYS, "band_id", "band_key"),
+    base=_Cache(
+        "/tmp/durablestreams_pxlive_base_v1",
+        "documents",
+        f"dhash64:{_BASE_TAG}:{_pixel_params()}:v1",
+    ),
+    refresh=_Cache(
+        "/tmp/durablestreams_pxrefresh_v1",
+        "documents",
+        f"dhash64:{_BASE_TAG}:{_pixel_params()}"
+        f":rm{PIXEL_REFRESH_REMOVE_MOD}:v1",
+    ),
+    flag=_Cache(
+        "/tmp/durablestreams_pxflag_v1",
+        "documents",
+        f"dhash64:flag:{_pixel_params()}:v1",
+    ),
+)
+
+_AU_KEYS = tuple(f"k{b}" for b in range(_AU_BANDS))
+AUDIO_FAMILY = BandedFamily(
+    kind="au",
+    keys=_audio_keys,
+    ids=(f"media_id % {_AU_OFF} AS doc_id", "media_id"),
+    key_cols=_AU_KEYS,
+    bands=_one_key_per_band,
+    max_ham=_AU_HAM,
+    index_cols=("doc_id", "media_id", *_AU_KEYS, "band_id", "band_key"),
+    base=_Cache(
+        "/tmp/durablestreams_aulive_base_v1",
+        "documents",
+        f"audiofp64:{_BASE_TAG}:{_audio_params()}:v1",
+    ),
+    refresh=_Cache(
+        "/tmp/durablestreams_aurefresh_v1",
+        "documents",
+        f"audiofp64:{_BASE_TAG}:{_audio_params()}"
+        f":rm{AUDIO_REFRESH_REMOVE_MOD}:v1",
+    ),
+    flag=_Cache(
+        "/tmp/durablestreams_auflag_v1",
+        "documents",
+        f"audiofp64:flag:{_audio_params()}:v1",
+    ),
+)
+
+#: Every banded family, in admission-ladder order.
+BANDED_FAMILIES = (SIMHASH_FAMILY, PIXEL_FAMILY, AUDIO_FAMILY)
+
+
+def _band_rows(fam: BandedFamily, keys):
+    """One row per (key row, band): every column of ``keys`` plus
+    ``band_id`` (int) and ``band_key``.  The ids and keys ride along,
+    so candidate verification is a row-local bit_count, never a second
+    lookup."""
+    return keys.select(
+        "*",
+        F.posexplode(F.array(*fam.bands(*fam.key_cols))).alias(
+            "band_id", "band_key"
+        ),
+    )
+
+
+def _doc_bands(fam: BandedFamily, docs):
+    """Band rows of a docs frame: the family's keys, projected to its
+    ids and key columns."""
+    keys = fam.keys(docs).select(*[F.expr(e) for e in fam.ids], *fam.key_cols)
+    return _band_rows(fam, keys)
+
+
+def _other_rows(bands):
+    """The candidate-side rename of a band-rows frame: every carried
+    column c -> o_c (doc_id -> o_doc_id, k0 -> o_k0, ...), so both
+    sides of a band join keep distinct names."""
+    return bands.select(
+        "band_id",
+        "band_key",
+        *[
+            F.col(c).alias(f"o_{c}")
+            for c in bands.columns
+            if c not in ("band_id", "band_key")
+        ],
+    )
+
+
+def _hamming(fam: BandedFamily):
+    """Row-local hamming between a band-join row's two members: the sum
+    of bit_count(k ^ o_k) over the key columns."""
+    return functools.reduce(
+        lambda a, b: a + b,
+        [
+            F.bit_count(F.col(k).bitwiseXOR(F.col(f"o_{k}")))
+            for k in fam.key_cols
+        ],
+    )
+
+
+def _least_agreeing_band(fam: BandedFamily):
+    """Smallest band on which a band-join row's two members agree,
+    recomputed row-locally from the carried keys: keep a matched pair
+    only in THAT band's join row, so the multi-band fan-out dedups with
+    zero stream-side state (DISTINCT-free).  Deliberately UNROLLED to a
+    CASE (first match = smallest band), not an aggregate() fold: a
+    higher-order-function lambda in a post-join predicate of a
+    stream-static join can collide its lambda-variable exprIds with
+    the static side's attributes when the micro-batch planner
+    re-analyzes the plan (observed as
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on warm-cache sessions where
+    the static read allocates low ids); CASE has no lambda scope."""
+    own = fam.bands(*fam.key_cols)
+    other = fam.bands(*[f"o_{k}" for k in fam.key_cols])
+    case = F.when(own[0] == other[0], 0)
+    for b in range(1, len(own)):
+        case = case.when(own[b] == other[b], b)
+    return case.otherwise(-1)
+
+
+def _band_join(fam: BandedFamily, bands, cand, keep):
+    """Candidates by (band_id, band_key) equi-join of ``bands`` against
+    ``cand``'s renamed rows, limited to the ordered pairs ``keep``
+    admits, verified by hamming <= max_ham in the pair's least
+    agreeing band only — so every verified pair appears EXACTLY once.
+    Pigeonhole makes the band join exact: hamming <= max_ham < the
+    band count forces agreement on a whole band."""
+    return bands.join(_other_rows(cand), ["band_id", "band_key"]).where(
+        keep
+        & (_hamming(fam) <= fam.max_ham)
+        & (F.col("band_id") == _least_agreeing_band(fam))
+    )
+
+
+def _batch_matches(fam: BandedFamily, bands, idx):
+    """ONE definition of the per-batch near-dup detection, shared by
+    the pair detector (_ndlive_run) and the fused admission gate:
+    (1) batch vs index — pairs whose other member is historical or
+    arrived in an earlier batch, oriented so doc_id > o_doc_id (a
+    smaller-id doc can arrive after a larger-id one); (2) the
+    intra-batch band self-join — pairs BOTH arriving in this batch,
+    bounded batch x batch, no watermark, no state store.  The arms are
+    disjoint (the index never contains the current batch), so every
+    pair appears exactly once; members of the same doc never pair
+    (audio: variants of one recording).  Returns both members' carried
+    ids (doc_id[, media_id], o_doc_id[, o_media_id]) and hamming."""
+    ids = [
+        c
+        for c in bands.columns
+        if c not in (*fam.key_cols, "band_id", "band_key")
+    ]
+    ham = _hamming(fam).cast("long").alias("hamming")
+    swap = F.col("o_doc_id") > F.col("doc_id")
+    cross = _band_join(
+        fam, bands, idx, F.col("o_doc_id") != F.col("doc_id")
+    ).select(
+        *[
+            F.when(swap, F.col(f"o_{c}")).otherwise(F.col(c)).alias(c)
+            for c in ids
+        ],
+        *[
+            F.when(swap, F.col(c)).otherwise(F.col(f"o_{c}")).alias(f"o_{c}")
+            for c in ids
+        ],
+        ham,
+    )
+    within = _band_join(
+        fam, bands, bands, F.col("o_doc_id") < F.col("doc_id")
+    ).select(*ids, *[f"o_{c}" for c in ids], ham)
+    return cross.unionByName(within)
+
+
+def _band_pairs(fam: BandedFamily, keys):
+    """The batch pair query over (media_id, key...) rows: every pair
+    of media within max_ham — variants of one doc included, they are
+    the planted near-dups — once, as (media_a < media_b, hamming)."""
+    bands = _band_rows(fam, keys)
+    return (
+        _band_join(
+            fam, bands, bands, F.col("media_id") < F.col("o_media_id")
+        )
+        .select(
+            F.col("media_id").alias("media_a"),
+            F.col("o_media_id").alias("media_b"),
+            _hamming(fam).cast("long").alias("hamming"),
+        )
+        .orderBy("media_a", "media_b")
+    )
+
+
+def _base_index_path(fam: BandedFamily, spark, sf_dir) -> str:
+    """Persisted band index over the ':ndlive' BASE split — the
+    'historical corpus' artifact the live detectors serve against.
+    Returns the parquet PATH, not a DataFrame: a foreachBatch re-reads
+    it per micro-batch alongside its run-local appends."""
 
     def build(root):
         base = table(spark, sf_dir, "documents").where(_ndlive_base_pred())
         (
-            _pixel_band_rows(_gate_phash_keys(base))
+            _doc_bands(fam, base)
+            .select(*fam.index_cols)
             .write.mode("overwrite")
             .parquet(os.path.join(root, "index.parquet"))
         )
 
-    root = build_once(
-        cache_root("/tmp/durablestreams_pxlive_base_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"dhash64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_pixel_params()}:v1",
-    )
-    return os.path.join(root, "index.parquet")
+    return os.path.join(_cached(fam.base, sf_dir, build), "index.parquet")
 
 
-def _pixel_band_rows(keys):
-    """(doc_id, band_id, band_key, k0..k3) band rows from gate-image
-    key rows — the keys ride along so candidate verification is a
-    row-local bit_count, never a second lookup."""
-    from .multimodal import PHASH_BANDS
-
-    return keys.select(
-        "doc_id",
-        *[f"k{b}" for b in range(PHASH_BANDS)],
-        F.posexplode(
-            F.array(*[F.col(f"k{b}") for b in range(PHASH_BANDS)])
-        ).alias("band_id", "band_key"),
-    )
-
-
-def _pixel_other_rows(bands):
-    """The candidate-side rename of a band-rows frame (doc_id->other,
-    k{b}->o{b}) — ONE definition for the live gate's two join arms and
-    the persisted flag-index build, so the candidate projection cannot
-    desynchronize between them."""
-    from .multimodal import PHASH_BANDS
-
-    return bands.select(
-        "band_id",
-        "band_key",
-        F.col("doc_id").alias("other"),
-        *[F.col(f"k{b}").alias(f"o{b}") for b in range(PHASH_BANDS)],
-    )
-
-
-def _band_hamming(prefix_a: str, prefix_b: str, n_bands: int):
-    """Row-local hamming between two n_bands-wide key-column sets —
-    shared by the pixel and audio families (both 4x16-bit)."""
-    ham = None
-    for b in range(n_bands):
-        term = F.bit_count(
-            F.col(f"{prefix_a}{b}").bitwiseXOR(F.col(f"{prefix_b}{b}"))
-        )
-        ham = term if ham is None else ham + term
-    return ham
-
-
-def _pixel_hamming(prefix_a: str, prefix_b: str):
-    """Row-local hamming between two pixel key-column sets."""
-    from .multimodal import PHASH_BANDS
-
-    return _band_hamming(prefix_a, prefix_b, PHASH_BANDS)
-
-
-def _pixel_batch_matches(bands, idx):
-    """Per-batch pixel near-dup flags, mirroring _neardup_batch_matches:
-    (1) batch vs (base index + prior appends) band equi-join, larger
-    member flagged; (2) intra-batch band self-join.  Verify =
-    row-local hamming over the carried keys, <= PHASH_HAM."""
-    from .multimodal import PHASH_BANDS, PHASH_HAM
-
-    cand = _pixel_other_rows(idx)
-    ham = _pixel_hamming("k", "o")
-    f1 = (
-        bands.join(cand, ["band_id", "band_key"])
-        .where(F.col("other") != F.col("doc_id"))
-        .where(ham <= PHASH_HAM)
-        .select(F.greatest("doc_id", "other").alias("doc_id"))
-    )
-    cand2 = _pixel_other_rows(bands)
-    f2 = (
-        bands.join(cand2, ["band_id", "band_key"])
-        .where(F.col("other") < F.col("doc_id"))
-        .where(ham <= PHASH_HAM)
-        .select("doc_id")
-    )
-    return f1.unionByName(f2).distinct()
-
-
-def refresh_pixel_index(
+def refresh_band_index(
+    fam: BandedFamily,
     spark,
     idx_path: str,
     delta_docs,
     removed_ids,
     guard_marker: str | None = None,
 ):
-    """Incremental refresh of the persisted PIXEL band index — the
-    maintenance lifecycle for the fifth persisted serving-artifact
-    family (VERDICT r13 task 3), the refresh_neardup_index contract
-    applied to the binary modality:
+    """Incremental REFRESH of a persisted band index, at cost
+    O(|delta| + |index rows|): the historical corpus (text, images,
+    recordings) is never re-read or re-signed — the FAISS
+    add()/remove_ids() economics, pinned by the delete-the-corpus
+    tests.
 
-    - append: the DELTA docs' gate-image dHash band rows (REAL
-      encode/decode/hash over the delta's images only — the
-      historical corpus images are never re-decoded, the O(|delta| +
-      |index rows|) economics pinned by the delete-the-corpus test).
-    - tombstone: left-anti join of the index band rows against
-      ``removed_ids`` (doc_id); removed ids are also anti-joined out
-      of the delta so an image that arrives and is deleted in the
-      same window never lands.
+    - append: the band rows of ``delta_docs`` (doc_id plus whatever the
+      family's keys read), minus docs ALREADY indexed — a re-run or an
+      overlapping delta is idempotent, never a second set of postings.
+    - tombstone: left-anti join of the index rows against
+      ``removed_ids`` (doc_id; retires every variant of an audio doc at
+      once); removed ids are also anti-joined out of the delta, so a
+      doc that arrives and is deleted in the same window never lands.
     - the shared _guarded_index_swap: O_EXCL lock, guard re-check
       after the write, atomic symlink repoint, retention-1 GC.
     Returns the refreshed index DataFrame, or None on a lost race."""
-    from .multimodal import PHASH_BANDS
-
-    cols = (
-        ["doc_id"]
-        + [f"k{b}" for b in range(PHASH_BANDS)]
-        + ["band_id", "band_key"]
-    )
 
     def _refresh(cur):
         kept = cur.join(removed_ids, "doc_id", "left_anti")
-        # anti-join the delta against docs ALREADY indexed: a re-run
-        # or overlapping delta must be idempotent, never silently
-        # duplicate band postings (review finding r14) — still
-        # O(|delta| + |index rows|), one doc_id anti-join
-        delta_b = _pixel_band_rows(
-            _gate_phash_keys(
-                delta_docs.select("doc_id")
-                .join(removed_ids, "doc_id", "left_anti")
-                .join(
-                    cur.select("doc_id").distinct(),
-                    "doc_id",
-                    "left_anti",
-                )
-            )
+        fresh = delta_docs.join(removed_ids, "doc_id", "left_anti").join(
+            cur.select("doc_id").distinct(), "doc_id", "left_anti"
         )
-        return kept.select(*cols).unionByName(delta_b.select(*cols))
+        return kept.select(*fam.index_cols).unionByName(
+            _doc_bands(fam, fresh).select(*fam.index_cols)
+        )
 
     return _guarded_index_swap(spark, idx_path, _refresh, guard_marker)
 
 
-#: Deterministic "deleted docs" subset for the graded pixel-refresh
-#: run — exercises the tombstone path on a fixture that never deletes
-#: (a different modulus than the near-dup refresh, so the two graded
-#: artifacts never share a removal set by accident).
-PIXEL_REFRESH_REMOVE_MOD = 89
+def _flag_index(fam: BandedFamily, spark, sf_dir):
+    """Persisted per-doc FLAG index: the doc_ids with a smaller-id
+    neighbor within max_ham anywhere in the corpus (band self-join,
+    larger member kept).  Serving shape: a 1:1 stream-static LEFT join
+    key, so a report's near-dup signal costs one lookup per arriving
+    doc, never a band-pair fan-out in the stream."""
+
+    def build(root):
+        bands = _doc_bands(fam, table(spark, sf_dir, "documents"))
+        # materialized once: both sides of the self-join read it
+        bands = bands.localCheckpoint(eager=True)
+        (
+            _band_join(fam, bands, bands, F.col("o_doc_id") < F.col("doc_id"))
+            .select("doc_id")
+            .distinct()
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "flags.parquet"))
+        )
+
+    root = _cached(fam.flag, sf_dir, build)
+    return spark.read.parquet(os.path.join(root, "flags.parquet"))
+
+
+def _graded_refresh(fam: BandedFamily, spark, sf_dir, remove_mod: int):
+    """The graded index-refresh lifecycle of one family: seed the
+    versioned index with a COPY of the base-split artifact (which stays
+    pristine for its other consumers), run ONE refresh appending the
+    ':ndlive' delta split and tombstoning doc_id % ``remove_mod`` == 0,
+    and read the refreshed rows back FROM THE SWAPPED FILES."""
+    import shutil as _shutil
+
+    docs = table(spark, sf_dir, "documents")
+    idx_p = _seeded_refresh_build(
+        spark,
+        sf_dir,
+        fam.refresh,
+        "index.parquet",
+        seed_fn=lambda v0: _shutil.copytree(
+            _base_index_path(fam, spark, sf_dir), v0
+        ),
+        refresh_fn=lambda p, guard: refresh_band_index(
+            fam,
+            spark,
+            p,
+            docs.where(~_ndlive_base_pred()),
+            docs.where(F.col("doc_id") % remove_mod == 0).select("doc_id"),
+            guard_marker=guard,
+        ),
+    )
+    return spark.read.parquet(idx_p).select(
+        *[F.col(c).cast("long").alias(c) for c in fam.index_cols]
+    )
 
 
 @query(
@@ -3036,7 +3064,7 @@ PIXEL_REFRESH_REMOVE_MOD = 89
     "refresh — append the delta 20%'s band rows (REAL BMP/PPM "
     "encode → decode → dHash over the delta's images ONLY), "
     f"tombstone a deterministic 'deleted' subset (doc_id % "
-    f"{PIXEL_REFRESH_REMOVE_MOD} = 0) — through refresh_pixel_index "
+    f"{PIXEL_REFRESH_REMOVE_MOD} = 0) — through refresh_band_index "
     "(O(|delta| + |index rows|), historical images never re-decoded "
     "— pinned by the delete-the-corpus test — behind the shared "
     "guarded atomic swap).  The graded rows are the refreshed "
@@ -3050,179 +3078,9 @@ PIXEL_REFRESH_REMOVE_MOD = 89
     "difference between a nightly job and an impossible one.",
 )
 def multimodal_pixel_index_refresh(spark, sf_dir):
-    import shutil as _shutil
-
-    from .multimodal import _pixel_params
-
-    docs = table(spark, sf_dir, "documents")
-    idx_p = _seeded_refresh_build(
-        spark,
-        sf_dir,
-        root=cache_root("/tmp/durablestreams_pxrefresh_v1", sf_dir),
-        idx_name="index.parquet",
-        params=(
-            f"dhash64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_pixel_params()}"
-            f":rm{PIXEL_REFRESH_REMOVE_MOD}:v1"
-        ),
-        # seed = a COPY of the shared base artifact (which stays
-        # pristine for its other consumers)
-        seed_fn=lambda v0: _shutil.copytree(
-            _pixel_base_index_path(spark, sf_dir), v0
-        ),
-        refresh_fn=lambda p, guard: refresh_pixel_index(
-            spark,
-            p,
-            docs.where(~_ndlive_base_pred()).select("doc_id"),
-            docs.where(
-                F.col("doc_id") % PIXEL_REFRESH_REMOVE_MOD == 0
-            ).select("doc_id"),
-            guard_marker=guard,
-        ),
+    return _graded_refresh(
+        PIXEL_FAMILY, spark, sf_dir, PIXEL_REFRESH_REMOVE_MOD
     )
-    from .multimodal import PHASH_BANDS
-
-    return spark.read.parquet(idx_p).select(
-        "doc_id",
-        *[F.col(f"k{b}").cast("long").alias(f"k{b}") for b in range(PHASH_BANDS)],
-        F.col("band_id").cast("long").alias("band_id"),
-        F.col("band_key").cast("long").alias("band_key"),
-    )
-
-
-def _audio_band_rows(keys):
-    """(doc_id, media_id, k0..k3, band_id, band_key) band rows from
-    audio fingerprint key rows — doc_id derives from the variant
-    offset scheme (media_id % AUDIO_OFF), and the keys ride along so
-    candidate verification stays a row-local bit_count (the
-    _pixel_band_rows protocol applied to the audio family)."""
-    from .multimodal import AUDIO_BANDS
-
-    return keys.select(
-        (F.col("media_id") % _AU_OFF).alias("doc_id"),
-        "media_id",
-        *[f"k{b}" for b in range(AUDIO_BANDS)],
-        F.posexplode(
-            F.array(*[F.col(f"k{b}") for b in range(AUDIO_BANDS)])
-        ).alias("band_id", "band_key"),
-    )
-
-
-def _audio_other_rows(bands):
-    """Candidate-side rename of an audio band-rows frame (doc_id →
-    odoc, k{b} → o{b}) — ONE definition for the gate's two join arms
-    and the flag-index build (the _pixel_other_rows protocol)."""
-    from .multimodal import AUDIO_BANDS
-
-    return bands.select(
-        "band_id",
-        "band_key",
-        F.col("doc_id").alias("odoc"),
-        *[F.col(f"k{b}").alias(f"o{b}") for b in range(AUDIO_BANDS)],
-    )
-
-
-def _audio_batch_matches(bands, idx):
-    """Per-batch AUDIO near-dup flags, mirroring _pixel_batch_matches:
-    (1) batch vs (base index + prior appends) band equi-join — a
-    matching pair flags its larger DOC member, so variants of the
-    same doc never flag each other; (2) intra-batch band self-join.
-    Verify = row-local hamming over the carried keys, <= AUDIO_HAM."""
-    from .multimodal import AUDIO_BANDS, AUDIO_HAM
-
-    cand = _audio_other_rows(idx)
-    ham = _band_hamming("k", "o", AUDIO_BANDS)
-    f1 = (
-        bands.join(cand, ["band_id", "band_key"])
-        .where(F.col("odoc") != F.col("doc_id"))
-        .where(ham <= AUDIO_HAM)
-        .select(F.greatest("doc_id", "odoc").alias("doc_id"))
-    )
-    cand2 = _audio_other_rows(bands)
-    f2 = (
-        bands.join(cand2, ["band_id", "band_key"])
-        .where(F.col("odoc") < F.col("doc_id"))
-        .where(ham <= AUDIO_HAM)
-        .select("doc_id")
-    )
-    return f1.unionByName(f2).distinct()
-
-
-def _audio_base_index_path(spark, sf_dir) -> str:
-    """Persisted banded AUDIO-fingerprint index over the BASE split's
-    sampled docs — the audio family's 'historical corpus' artifact
-    (the _pixel_base_index_path protocol): every planted variant's
-    frame-sign band keys, real WAV encode/decode/fingerprint."""
-    from .multimodal import _audio_params, audio_fp_keys_for
-
-    def build(root):
-        base = table(spark, sf_dir, "documents").where(
-            _ndlive_base_pred() & (F.col("doc_id") % _AU_MOD == 0)
-        )
-        (
-            _audio_band_rows(audio_fp_keys_for(base))
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "index.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_aulive_base_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"audiofp64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_audio_params()}:v1",
-    )
-    return os.path.join(root, "index.parquet")
-
-
-def refresh_audio_index(
-    spark,
-    idx_path: str,
-    delta_docs,
-    removed_ids,
-    guard_marker: str | None = None,
-):
-    """Incremental refresh of the persisted AUDIO band index — the
-    refresh_pixel_index contract applied to the audio family: append
-    the DELTA's sampled docs' variant band rows (real WAV
-    encode/decode/fingerprint over the delta only — historical
-    recordings never re-decoded, O(|delta| + |index rows|)),
-    tombstone removed docs (left-anti on doc_id, which retires ALL of
-    a doc's variants at once — the id-derivation the band rows carry
-    doc_id for), behind the shared _guarded_index_swap.  Returns the
-    refreshed index DataFrame, or None on a lost race."""
-    from .multimodal import AUDIO_BANDS, audio_fp_keys_for
-
-    cols = (
-        ["doc_id", "media_id"]
-        + [f"k{b}" for b in range(AUDIO_BANDS)]
-        + ["band_id", "band_key"]
-    )
-
-    def _refresh(cur):
-        kept = cur.join(removed_ids, "doc_id", "left_anti")
-        # idempotent on re-run / overlapping delta: docs already in
-        # the index never re-append (review finding r14)
-        delta_b = _audio_band_rows(
-            audio_fp_keys_for(
-                delta_docs.select("doc_id")
-                .where(F.col("doc_id") % _AU_MOD == 0)
-                .join(removed_ids, "doc_id", "left_anti")
-                .join(
-                    cur.select("doc_id").distinct(),
-                    "doc_id",
-                    "left_anti",
-                )
-            )
-        )
-        return kept.select(*cols).unionByName(delta_b.select(*cols))
-
-    return _guarded_index_swap(spark, idx_path, _refresh, guard_marker)
-
-
-#: Deterministic "deleted docs" subset for the graded audio-refresh
-#: run (a third distinct modulus, so no graded artifact shares a
-#: removal set with another by accident).
-AUDIO_REFRESH_REMOVE_MOD = 83
 
 
 @query(
@@ -3249,7 +3107,7 @@ AUDIO_REFRESH_REMOVE_MOD = 83
     "encode → chunk-walk decode → frame-sign fingerprint over the "
     "delta ONLY), tombstone a deterministic 'deleted' subset "
     f"(doc_id % {AUDIO_REFRESH_REMOVE_MOD} = 0, retiring ALL of a "
-    "doc's variants at once) — through refresh_audio_index "
+    "doc's variants at once) — through refresh_band_index "
     "(O(|delta| + |index rows|), historical recordings never "
     "re-decoded — pinned by the delete-the-corpus test — behind the "
     "shared guarded atomic swap).  The graded rows are the "
@@ -3261,44 +3119,8 @@ AUDIO_REFRESH_REMOVE_MOD = 83
     "anti-join — vs a full rebuild's corpus re-DECODE.",
 )
 def multimodal_audio_index_refresh(spark, sf_dir):
-    import shutil as _shutil
-
-    from .multimodal import AUDIO_BANDS, _audio_params
-
-    docs = table(spark, sf_dir, "documents")
-    idx_p = _seeded_refresh_build(
-        spark,
-        sf_dir,
-        root=cache_root("/tmp/durablestreams_aurefresh_v1", sf_dir),
-        idx_name="index.parquet",
-        params=(
-            f"audiofp64:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:{_audio_params()}"
-            f":rm{AUDIO_REFRESH_REMOVE_MOD}:v1"
-        ),
-        # seed = a COPY of the shared base artifact (which stays
-        # pristine for its other consumers)
-        seed_fn=lambda v0: _shutil.copytree(
-            _audio_base_index_path(spark, sf_dir), v0
-        ),
-        refresh_fn=lambda p, guard: refresh_audio_index(
-            spark,
-            p,
-            docs.where(~_ndlive_base_pred()).select("doc_id"),
-            docs.where(
-                F.col("doc_id") % AUDIO_REFRESH_REMOVE_MOD == 0
-            ).select("doc_id"),
-            guard_marker=guard,
-        ),
-    )
-    return spark.read.parquet(idx_p).select(
-        "doc_id",
-        "media_id",
-        *[
-            F.col(f"k{b}").cast("long").alias(f"k{b}")
-            for b in range(AUDIO_BANDS)
-        ],
-        F.col("band_id").cast("long").alias("band_id"),
-        F.col("band_key").cast("long").alias("band_key"),
+    return _graded_refresh(
+        AUDIO_FAMILY, spark, sf_dir, AUDIO_REFRESH_REMOVE_MOD
     )
 
 
@@ -3352,13 +3174,14 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     """Drain (or RESUME) the fused admission-gate topology rooted at
     ``run_dir``: one foreachBatch pass per micro-batch computing all
     SEVEN admission signals — exact-dup (content-hash index + appends +
-    intra-batch self-join), near-dup (the shared
-    _neardup_batch_matches band detection), the pixel arm,
+    intra-batch self-join), the three banded near-dup arms (text
+    SimHash, gate-image dHash, audio fingerprint — one loop over
+    BANDED_FAMILIES through the shared _batch_matches),
     contamination (distinct 5-gram shingles vs the broadcast
     benchmark index — the streaming_decontaminate_gate screen FUSED
     into the same pass, one replay instead of two), the row-local
     Gopher gate, and the served NB logit — then appending the
-    batch's hashes and band/pixel signatures for later batches.  ALL
+    batch's hashes and band signatures for later batches.  ALL
     side effects land in ONE kind-discriminated epoch write per
     batch (r13 task 5: eight per-arm writes cost eight fixed job
     overheads per trigger; the fused single append flattens the
@@ -3378,17 +3201,12 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
         _nb_feats_array,
     )
 
-    from .multimodal import audio_fp_keys_for
-
     lam, pri = _nb_serving_model(spark, sf_dir)
     base_idx_path = _exact_hash_index_base_path(spark, sf_dir)
-    nd_base_path = _neardup_base_index_path(spark, sf_dir)
-    px_base_path = _pixel_base_index_path(spark, sf_dir)
-    au_base_path = _audio_base_index_path(spark, sf_dir)
     bench_path = _bench_shingle_index_path(spark, sf_dir)
     fused_path = os.path.join(run_dir, "fused")
     n_writes = [0]
-    # The three base serving indexes and the bench shingle set are
+    # The base serving indexes and the bench shingle set are
     # IMMUTABLE for the whole drain — materialize them once
     # (localCheckpoint) instead of re-scanning their parquet in every
     # micro-batch's job (at 100 TB these sit in executor block
@@ -3397,9 +3215,12 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     base_idx = spark.read.parquet(base_idx_path).localCheckpoint(
         eager=True
     )
-    nd_base = spark.read.parquet(nd_base_path).localCheckpoint(eager=True)
-    px_base = spark.read.parquet(px_base_path).localCheckpoint(eager=True)
-    au_base = spark.read.parquet(au_base_path).localCheckpoint(eager=True)
+    band_bases = {
+        fam.kind: spark.read.parquet(
+            _base_index_path(fam, spark, sf_dir)
+        ).localCheckpoint(eager=True)
+        for fam in BANDED_FAMILIES
+    }
     bench_idx = spark.read.parquet(bench_path).localCheckpoint(eager=True)
 
     def _gate(batch_df, epoch_id):
@@ -3441,47 +3262,29 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
             .where(F.col("p") < F.col("doc_id"))
             .select("doc_id")
         )
-        # (2b/3b) near-dup arm, FUSED into the same pass over the same
-        # arrivals (one replay, one drain — the production topology):
-        # the shared _neardup_batch_matches detection, reduced to
-        # per-doc flags (each detected pair's larger member).
-        bands = _batch_bands(hashed)
-        nd_idx = nd_base
-        nd_prior = _prior("nd_app", nd_idx.columns)
-        if nd_prior is not None:
-            nd_idx = nd_idx.unionByName(_cast_like(nd_prior, nd_idx))
-        nd_flags = _neardup_batch_matches(bands, nd_idx).select("doc_id")
-        # (2d/3d) the PIXEL arm, FUSED (VERDICT r12 task 6): the
-        # batch's gate-image dHash band keys (real encode/decode/hash
-        # in one Arrow stage) vs (base pixel index + prior appends) +
-        # the intra-batch self-join — the binary modality's near-dup
-        # signal, so two re-encoded copies of the same image no
-        # longer both pass the gate.
-        px_bands = _pixel_band_rows(
-            _gate_phash_keys(hashed)
-        ).localCheckpoint(eager=True)
-        px_idx = px_base
-        px_prior = _prior("px_app", px_idx.columns)
-        if px_prior is not None:
-            px_idx = px_idx.unionByName(_cast_like(px_prior, px_idx))
-        px_flags = _pixel_batch_matches(px_bands, px_idx)
-        # (2e/3e) the AUDIO arm, FUSED (VERDICT r14 task 1 — the
-        # seventh rung): the batch's SAMPLED docs' recording
-        # fingerprint band keys (real WAV encode → chunk-walk decode
-        # → frame-sign hash in two Arrow stages) vs (base audio index
-        # + prior appends) + the intra-batch self-join — a duplicate
-        # re-encoded RECORDING arriving under a new doc_id no longer
-        # passes the gate.
-        au_bands = _audio_band_rows(
-            audio_fp_keys_for(
-                hashed.where(F.col("doc_id") % _AU_MOD == 0)
-            )
-        ).localCheckpoint(eager=True)
-        au_idx = au_base
-        au_prior = _prior("au_app", au_idx.columns)
-        if au_prior is not None:
-            au_idx = au_idx.unionByName(_cast_like(au_prior, au_idx))
-        au_flags = _audio_batch_matches(au_bands, au_idx)
+        # (2b/3b) the banded near-dup arms, FUSED into the same pass
+        # over the same arrivals (one replay, one drain — the
+        # production topology): text SimHash; gate-image dHash (real
+        # encode/decode/hash in one Arrow stage — two re-encoded
+        # copies of one image no longer both pass); audio fingerprint
+        # of the SAMPLED docs (real WAV encode → chunk-walk decode →
+        # frame-sign hash — a re-encoded RECORDING under a new doc_id
+        # no longer passes).  Each: the batch's band rows vs (base
+        # index + prior appends) plus the intra-batch self-join
+        # (_batch_matches), reduced to per-doc flags (each pair's
+        # larger member); the band rows are this batch's append.
+        band_parts = []
+        for fam in BANDED_FAMILIES:
+            bands = _doc_bands(fam, hashed).localCheckpoint(eager=True)
+            idx = band_bases[fam.kind]
+            prior = _prior(f"{fam.kind}_app", idx.columns)
+            if prior is not None:
+                idx = idx.unionByName(_cast_like(prior, idx))
+            flags = _batch_matches(fam, bands, idx).select("doc_id")
+            band_parts += [
+                _fused_tag(flags.distinct(), f"{fam.kind}_flag"),
+                _fused_tag(bands, f"{fam.kind}_app"),
+            ]
         # (2c) contamination screen, FUSED (VERDICT r11 task 6): the
         # batch's distinct 5-gram shingles vs the BROADCAST benchmark
         # index — eval-suite-sized, constant as the corpus grows, so
@@ -3509,27 +3312,23 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
             _nb_logit_col(F.col("feats"), lam, pri).alias("nb_logit"),
         )
         # ONE fused side-effect write per batch (r13 task 5): all
-        # four flag sets, the admission metrics, and the three index
-        # appends (this batch's content hashes and band/pixel
-        # signatures, servable for every later batch) union into a
-        # single kind-discriminated epoch dir — one job, one commit
-        # unit, same per-epoch OVERWRITE exactly-once discipline.
-        fused = (
-            _fused_tag(f1.unionByName(f2), "exact_flag")
-            .unionByName(_fused_tag(nd_flags, "nd_flag"))
-            .unionByName(_fused_tag(px_flags, "px_flag"))
-            .unionByName(_fused_tag(au_flags, "au_flag"))
-            .unionByName(_fused_tag(c_hits, "c_flag"))
-            .unionByName(_fused_tag(adm, "adm"))
-            .unionByName(
+        # five flag sets, the admission metrics, and the four index
+        # appends (this batch's content hashes and band signatures,
+        # servable for every later batch) union into a single
+        # kind-discriminated epoch dir — one job, one commit unit,
+        # same per-epoch OVERWRITE exactly-once discipline.
+        fused = functools.reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                _fused_tag(f1.unionByName(f2), "exact_flag"),
+                _fused_tag(c_hits, "c_flag"),
+                _fused_tag(adm, "adm"),
                 _fused_tag(
                     hashed.select("h", F.col("doc_id").alias("first_id")),
                     "hash_app",
-                )
-            )
-            .unionByName(_fused_tag(bands, "nd_app"))
-            .unionByName(_fused_tag(px_bands, "px_app"))
-            .unionByName(_fused_tag(au_bands, "au_app"))
+                ),
+                *band_parts,
+            ],
         )
         # NOT partition_by="kind": hive-partitioning the fused epoch
         # dir was measured SLOWER at sf1 (26.7 s vs 21.3 s warm) —
@@ -3876,133 +3675,13 @@ def streaming_write_shards_resume(spark, sf_dir):
         return _shards_live_close(spark, sf_dir, run_dir)
 
 
-def _neardup_flag_index(spark, sf_dir):
-    """Persisted per-doc near-dup FLAG index: the doc_ids that have a
-    smaller-id neighbor at hamming <= NEARDUP_MAX_HAMMING anywhere in
-    the corpus — derived by self-joining the persisted band index
-    (_neardup_index, so the signature pass is never recomputed) and
-    keeping each matched pair's larger member.  Serving shape: a 1:1
-    stream-static LEFT join key, so the ingest report's near-dup
-    signal costs one lookup per arriving doc, no pair fan-out in the
-    stream."""
-    from .dedup import NEARDUP_MAX_HAMMING
-
-    def build(root):
-        idx = _neardup_index(spark, sf_dir)
-        a = idx.select(
-            "band_id", "band_key", "doc_id", F.col("simhash").alias("sa")
-        )
-        b = idx.select(
-            "band_id",
-            "band_key",
-            F.col("doc_id").alias("other"),
-            F.col("simhash").alias("sb"),
-        )
-        (
-            a.join(b, ["band_id", "band_key"])
-            .where(F.col("other") < F.col("doc_id"))
-            .where(F.expr("bit_count(sa ^ sb)") <= NEARDUP_MAX_HAMMING)
-            .select("doc_id")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "flags.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_ndflag_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"simhash32:flag:ham{NEARDUP_MAX_HAMMING}:v1",
-    )
-    return spark.read.parquet(os.path.join(root, "flags.parquet"))
-
-
-def _pixel_flag_index(spark, sf_dir):
-    """Persisted per-doc PIXEL near-dup FLAG index: doc_ids whose
-    gate image is within hamming <= PHASH_HAM of a smaller-id doc's
-    image anywhere in the corpus — the binary modality's analog of
-    _neardup_flag_index (band self-join over the banded key rows,
-    larger member kept, 1:1 stream-static serving shape)."""
-    from .multimodal import PHASH_HAM, _pixel_params
-
-    def build(root):
-        keys = _gate_phash_keys(
-            table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-        bands = _pixel_band_rows(keys)
-        other = _pixel_other_rows(bands)
-        (
-            bands.join(other, ["band_id", "band_key"])
-            .where(F.col("other") < F.col("doc_id"))
-            .where(_pixel_hamming("k", "o") <= PHASH_HAM)
-            .select("doc_id")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "flags.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_pxflag_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"dhash64:flag:{_pixel_params()}:v1",
-    )
-    return spark.read.parquet(os.path.join(root, "flags.parquet"))
-
-
-def _audio_flag_index(spark, sf_dir):
-    """Persisted per-doc AUDIO near-dup FLAG index: doc_ids with at
-    least one planted recording within hamming <= AUDIO_HAM of a
-    smaller-id doc's recording anywhere in the corpus — the audio
-    analog of _pixel_flag_index (band self-join over the banded
-    variant rows, larger DOC member kept, 1:1 stream-static serving
-    shape).  The cross-doc pairs come from the GATE_AU_EVERY
-    re-recording plant in the variant rule."""
-    from .multimodal import (
-        AUDIO_BANDS,
-        AUDIO_HAM,
-        _audio_params,
-        audio_fp_keys_for,
-    )
-
-    def build(root):
-        bands = _audio_band_rows(
-            audio_fp_keys_for(
-                table(spark, sf_dir, "documents").where(
-                    F.col("doc_id") % _AU_MOD == 0
-                )
-            )
-        ).localCheckpoint(eager=True)
-        other = _audio_other_rows(bands)
-        (
-            bands.join(other, ["band_id", "band_key"])
-            .where(F.col("odoc") < F.col("doc_id"))
-            .where(_band_hamming("k", "o", AUDIO_BANDS) <= AUDIO_HAM)
-            .select("doc_id")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "flags.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_auflag_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"audiofp64:flag:{_audio_params()}:v1",
-    )
-    return spark.read.parquet(os.path.join(root, "flags.parquet"))
-
-
 def _contamination_flag_index(spark, sf_dir):
     """Persisted per-doc CONTAMINATION flag index: doc_ids with at
     least one distinct 5-gram shingle in the benchmark suite
     (including bench-member docs themselves, which self-hit — the
     right admission verdict).  Derived from the persisted bench
     shingle index so the eval suite is tokenized once; serving shape
-    is a 1:1 stream-static LEFT join key (the _neardup_flag_index
+    is a 1:1 stream-static LEFT join key (the _flag_index
     protocol — the report's stream side never sees shingle fan-out)."""
     from .pipeline_llm import _BENCH_MOD, _shingle5_arrays
 
@@ -4185,15 +3864,6 @@ def _five_signal_annotate(spark, sf_dir, src):
 
     lam, pri = _nb_serving_model(spark, sf_dir)
     hx = _exact_hash_index(spark, sf_dir)
-    ndf = _neardup_flag_index(spark, sf_dir).withColumn(
-        "nd", F.lit(True)
-    )
-    pxf = _pixel_flag_index(spark, sf_dir).withColumn(
-        "px", F.lit(True)
-    )
-    auf = _audio_flag_index(spark, sf_dir).withColumn(
-        "au", F.lit(True)
-    )
     cfl = _contamination_flag_index(spark, sf_dir).withColumn(
         "cont", F.lit(True)
     )
@@ -4216,12 +3886,14 @@ def _five_signal_annotate(spark, sf_dir, src):
         "gopher_keep",
         _nb_logit_col(F.col("feats"), lam, pri).alias("nb_logit"),
     )
+    out = scored.join(hx, "h")
+    for fam in BANDED_FAMILIES:
+        flags = _flag_index(fam, spark, sf_dir)
+        out = out.join(
+            flags.withColumn(fam.kind, F.lit(True)), "doc_id", "left"
+        )
     return (
-        scored.join(hx, "h")
-        .join(ndf, "doc_id", "left")
-        .join(pxf, "doc_id", "left")
-        .join(auf, "doc_id", "left")
-        .join(cfl, "doc_id", "left")
+        out.join(cfl, "doc_id", "left")
         .select(
             "doc_id",
             "source",
@@ -4545,8 +4217,6 @@ def _gate_dec_params() -> str:
     that have no standalone constant (Gopher thresholds, the NB
     feature space) are covered by the version tag — bump it when
     gate semantics change."""
-    from .multimodal import _audio_params, _pixel_params
-
     return (
         f"gatedec:v3:replays{_BUDGET_REPLAYS}:b{_TB_BUDGET_MULT}"
         f":r{_TB_MAX_REPEATS}:cut{_NDLIVE_CUT}{_NDLIVE_TAG}"
@@ -5920,14 +5590,15 @@ def decontaminate_index_refresh(spark, sf_dir):
     idx_p = _seeded_refresh_build(
         spark,
         sf_dir,
-        root=cache_root("/tmp/durablestreams_benchrefresh_v1", sf_dir),
-        idx_name="postings.parquet",
-        params=(
+        cache=_Cache(
+            "/tmp/durablestreams_benchrefresh_v1",
+            "documents",
             f"shingle5:postings:bench%{_BENCH_MOD}"
             f":copy@{BENCH_REFRESH_COPY_OFFSET}"
             f":rm{BENCH_REFRESH_REMOVE_MOD}"
-            f":base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1"
+            f":base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
         ),
+        idx_name="postings.parquet",
         seed_fn=lambda v0: _shingle5_arrays(
             derived.where(_ndlive_base_pred())
         )

@@ -1,4 +1,4 @@
-"""Near-dup index maintenance lifecycle (refresh_neardup_index).
+"""Near-dup index maintenance lifecycle (refresh_band_index).
 
 The refresh contract: cost O(|delta| + |index rows|) — the historical
 corpus text is NEVER re-read (proven by deleting it before the
@@ -12,6 +12,7 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -46,8 +47,9 @@ def test_refresh_never_rereads_the_corpus_text(spark, tmp_path):
     file — success is only possible if the refresh touches nothing
     but the index rows and the delta."""
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -56,7 +58,7 @@ def test_refresh_never_rereads_the_corpus_text(spark, tmp_path):
         corpus,
         [(i, f"base document {i} about topic {i % 5}") for i in base_ids[:20]],
     )
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     # the refresh must survive the corpus text disappearing
     os.remove(corpus)
 
@@ -71,7 +73,7 @@ def test_refresh_never_rereads_the_corpus_text(spark, tmp_path):
     removed_id = base_ids[0]
     removed = spark.createDataFrame([(removed_id,)], "doc_id long")
 
-    out = refresh_neardup_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(SIMHASH_FAMILY, spark, idx_p, delta, removed)
     assert out is not None
     ids = {r["doc_id"] for r in out.select("doc_id").distinct().collect()}
     assert set(delta_ids[:5]) <= ids, "delta signatures not appended"
@@ -92,8 +94,9 @@ def test_refresh_aborts_on_lost_guard_race(spark, tmp_path):
     from pyspark.sql.functions import udf
 
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -102,7 +105,7 @@ def test_refresh_aborts_on_lost_guard_race(spark, tmp_path):
         corpus,
         [(i, f"base document {i} some words here") for i in base_ids[:10]],
     )
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
     before = sorted(
@@ -125,8 +128,8 @@ def test_refresh_aborts_on_lost_guard_race(spark, tmp_path):
     ).select("doc_id", poison("text").alias("text"))
     removed = spark.createDataFrame([], "doc_id long")
 
-    out = refresh_neardup_index(
-        spark, idx_p, delta, removed, guard_marker=marker
+    out = refresh_band_index(
+        SIMHASH_FAMILY, spark, idx_p, delta, removed, guard_marker=marker
     )
     assert out is None
     assert sorted(map(tuple, spark.read.parquet(idx_p).collect())) == before
@@ -141,8 +144,9 @@ def test_refresh_loses_to_a_held_lock(spark, tmp_path):
     lock, a second refresh returns None immediately and changes
     nothing — the no-clobber contract under true concurrency."""
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -151,7 +155,7 @@ def test_refresh_loses_to_a_held_lock(spark, tmp_path):
         corpus,
         [(i, f"base document {i} words words") for i in base_ids[:6]],
     )
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
     before = sorted(map(tuple, spark.read.parquet(idx_p).collect()))
@@ -162,7 +166,7 @@ def test_refresh_loses_to_a_held_lock(spark, tmp_path):
         [(delta_ids[0], "late arrival words")], "doc_id long, text string"
     )
     removed = spark.createDataFrame([], "doc_id long")
-    out = refresh_neardup_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(SIMHASH_FAMILY, spark, idx_p, delta, removed)
     assert out is None
     assert sorted(map(tuple, spark.read.parquet(idx_p).collect())) == before
     os.remove(idx_p + ".lock")
@@ -174,8 +178,9 @@ def test_refresh_swap_is_atomic_for_readers(spark, tmp_path):
     previous version directory is retained for in-flight readers,
     and the path itself never stops existing."""
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -184,7 +189,7 @@ def test_refresh_swap_is_atomic_for_readers(spark, tmp_path):
         corpus,
         [(i, f"base document {i} alpha beta") for i in base_ids[:6]],
     )
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p + ".v-genesis")
     os.symlink(idx_p + ".v-genesis", idx_p)
@@ -194,7 +199,7 @@ def test_refresh_swap_is_atomic_for_readers(spark, tmp_path):
         "doc_id long, text string",
     )
     removed = spark.createDataFrame([], "doc_id long")
-    out = refresh_neardup_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(SIMHASH_FAMILY, spark, idx_p, delta, removed)
     assert out is not None
     assert os.path.islink(idx_p)
     assert os.path.realpath(idx_p) != os.path.realpath(
@@ -211,12 +216,13 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
     """base UNION delta (minus removed) refresh == full rebuild of the
     index over the surviving corpus — row-for-row."""
     from durablestreams_spark.operators.dedup import (
-        band_structs_expr,
+        band_key_exprs,
         simhash_expr,
     )
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -226,7 +232,7 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
     ]
     corpus = tmp_path / "documents.parquet"
     _write_docs(corpus, rows)
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
 
@@ -238,7 +244,7 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
     removed = spark.createDataFrame(
         [(i,) for i in removed_ids], "doc_id long"
     )
-    out = refresh_neardup_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(SIMHASH_FAMILY, spark, idx_p, delta, removed)
 
     rebuild = (
         docs.where(~F.col("doc_id").isin(removed_ids))
@@ -247,9 +253,13 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
         )
         .select("doc_id", simhash_expr().alias("simhash"))
         .select(
-            "doc_id", "simhash", F.explode(band_structs_expr()).alias("bk")
+            "doc_id",
+            "simhash",
+            F.posexplode(F.array(*band_key_exprs("simhash"))).alias(
+                "band_id", "band_key"
+            ),
         )
-        .select("bk.band_id", "bk.band_key", "doc_id", "simhash")
+        .select("band_id", "band_key", "doc_id", "simhash")
     )
     got = sorted(
         (r["band_id"], r["band_key"], r["doc_id"], r["simhash"])
@@ -591,8 +601,9 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
     from durablestreams_spark.operators.streaming_queries import (
         _await_and_audit,
         _delta_replay_stream,
-        _neardup_base_index_path,
-        refresh_neardup_index,
+        SIMHASH_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -602,7 +613,7 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
         [(i, f"base document {i} about subject {i % 4} words")
          for i in base_ids[:10]],
     )
-    base_p = _neardup_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
     live_idx = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, live_idx + ".v-genesis")
     os.symlink(live_idx + ".v-genesis", live_idx)
@@ -623,8 +634,8 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
             (int(epoch_id), os.path.realpath(live_idx), idx.count(), docs)
         )
         if int(epoch_id) == 0:
-            out = refresh_neardup_index(
-                sess, live_idx, refresh_delta, removed
+            out = refresh_band_index(
+                SIMHASH_FAMILY, sess, live_idx, refresh_delta, removed
             )
             assert out is not None
 
@@ -660,8 +671,9 @@ def test_pixel_refresh_never_redecodes_the_corpus(spark, tmp_path):
     possible if the refresh touches nothing but the index rows and
     the delta (historical images never re-decoded)."""
     from durablestreams_spark.operators.streaming_queries import (
-        _pixel_base_index_path,
-        refresh_pixel_index,
+        PIXEL_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -670,7 +682,7 @@ def test_pixel_refresh_never_redecodes_the_corpus(spark, tmp_path):
         corpus,
         [(i, f"pixel base doc {i}") for i in base_ids[:20]],
     )
-    base_p = _pixel_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(PIXEL_FAMILY, spark, str(tmp_path))
     os.remove(corpus)
 
     idx_p = str(tmp_path / "live_px_index.parquet")
@@ -681,7 +693,7 @@ def test_pixel_refresh_never_redecodes_the_corpus(spark, tmp_path):
     removed_id = base_ids[0]
     removed = spark.createDataFrame([(removed_id,)], "doc_id long")
 
-    out = refresh_pixel_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(PIXEL_FAMILY, spark, idx_p, delta, removed)
     assert out is not None
     ids = {r["doc_id"] for r in out.select("doc_id").distinct().collect()}
     assert set(delta_ids[:5]) <= ids, "delta band rows not appended"
@@ -699,8 +711,9 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
     the delta (historical recordings never re-decoded)."""
     from durablestreams_spark.operators.multimodal import AUDIO_MOD
     from durablestreams_spark.operators.streaming_queries import (
-        _audio_base_index_path,
-        refresh_audio_index,
+        AUDIO_FAMILY,
+        _base_index_path,
+        refresh_band_index,
     )
 
     base_ids, delta_ids = _base_delta_ids()
@@ -709,7 +722,7 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
         corpus,
         [(i, f"audio base doc {i}") for i in base_ids[:40]],
     )
-    base_p = _audio_base_index_path(spark, str(tmp_path))
+    base_p = _base_index_path(AUDIO_FAMILY, spark, str(tmp_path))
     os.remove(corpus)
 
     idx_p = str(tmp_path / "live_au_index.parquet")
@@ -724,7 +737,7 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
     removed_id = base_sampled[0]
     removed = spark.createDataFrame([(removed_id,)], "doc_id long")
 
-    out = refresh_audio_index(spark, idx_p, delta, removed)
+    out = refresh_band_index(AUDIO_FAMILY, spark, idx_p, delta, removed)
     assert out is not None
     ids = {r["doc_id"] for r in out.select("doc_id").distinct().collect()}
     assert set(delta_sampled) <= ids, "delta band rows not appended"
@@ -735,3 +748,45 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
     assert (
         out.where(out.media_id % (1 << 42) == removed_id).count() == 0
     )
+
+
+@pytest.mark.parametrize(
+    "family", ["SIMHASH_FAMILY", "PIXEL_FAMILY", "AUDIO_FAMILY"]
+)
+def test_refresh_with_overlapping_delta_matches_full_rebuild(
+    spark, tmp_path, family
+):
+    """A re-run or an overlapping delta is idempotent for every family:
+    a delta that re-lists every already-indexed doc next to the new
+    ones appends postings for the new docs only, so the refreshed
+    index equals a full rebuild over base UNION new — no doc's band
+    rows twice."""
+    from durablestreams_spark.operators import streaming_queries as sq
+
+    fam = getattr(sq, family)
+    base_ids, delta_ids = _base_delta_ids()
+    new_ids = delta_ids[:12]
+    assert any(i % 5 == 0 for i in new_ids)  # audio samples doc_id % 5
+    corpus = tmp_path / "documents.parquet"
+    _write_docs(
+        corpus,
+        [
+            (i, f"document {i} about subject {i % 3} with some words")
+            for i in base_ids[:30] + new_ids
+        ],
+    )
+    base_p = sq._base_index_path(fam, spark, str(tmp_path))
+    idx_p = str(tmp_path / "live_index.parquet")
+    shutil.copytree(base_p, idx_p)
+    # the base artifact lives under /tmp, keyed by this test's dir name
+    shutil.rmtree(sq.cache_root(fam.base.base, str(tmp_path)))
+
+    docs = spark.read.parquet(str(corpus))
+    removed = spark.createDataFrame([], "doc_id long")
+    out = sq.refresh_band_index(fam, spark, idx_p, docs, removed)
+
+    got = sorted(map(tuple, out.select(*fam.index_cols).collect()))
+    want = sorted(
+        map(tuple, sq._doc_bands(fam, docs).select(*fam.index_cols).collect())
+    )
+    assert got == want and len(got) > 0

@@ -1203,12 +1203,13 @@ def test_phash_dedup_has_no_all_pairs_stage(spark):
 def test_pixel_flag_serving_join_is_one_to_one(spark):
     """The economics report's pixel signal must be a 1:1 LEFT lookup
     against the persisted per-doc flag index — never a band-pair
-    fan-out on the stream side (the _neardup_flag_index protocol)."""
+    fan-out on the stream side (the shared _flag_index protocol)."""
     from durablestreams_spark.operators.streaming_queries import (
-        _pixel_flag_index,
+        PIXEL_FAMILY,
+        _flag_index,
     )
 
-    flags = _pixel_flag_index(spark, SF_DIR)
+    flags = _flag_index(PIXEL_FAMILY, spark, SF_DIR)
     # per-doc flags: one row per flagged doc, no band columns
     assert flags.columns == ["doc_id"], flags.columns
     n = flags.count()
@@ -1223,7 +1224,7 @@ def test_audio_dedup_has_no_all_pairs_stage(spark):
     exactly once (the Arrow WAV encode/decode/fingerprint stages,
     localCheckpointed before the pair phase); the candidate join and
     hamming verify stay JVM-side — literally the same matcher code as
-    the pixel family (_banded_hamming_matches)."""
+    the pixel family (streaming_queries._band_pairs)."""
     df = all_queries()["multimodal_audio_dedup"].fn(spark, SF_DIR)
     plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan, plan
