@@ -398,6 +398,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
+    spark_cpus = spark.sparkContext.defaultParallelism
     specs = all_queries()
     failures: dict[str, str] = {}
 
@@ -758,6 +759,9 @@ def main() -> None:
         result["env"] = probe_env()
     except Exception as e:  # noqa: BLE001
         result["env"] = {"error": f"{type(e).__name__}: {e}"}
+    # the cores the session ran with (get_spark's local[N]), which the
+    # per-query seconds depend on as much as on the box
+    result["env"]["spark_graft_cpus"] = spark_cpus
     result["perf_note"] = (
         "Per-query values are min-of-3 on a shared VM; round-5 "
         "calibration ran the identical round-4 code 4x and measured "
@@ -804,9 +808,9 @@ def main() -> None:
             # cross-round regression (e.g. r7's unigram 1.47->2.55)
             # is visible from the artifact alone, without diffing two
             # bench_detail snapshots.
-            "sf1_queries": {k: round(v, 2) for k, v in sf1_timings.items()}
+            "sf1_queries": {k: round(v, 3) for k, v in sf1_timings.items()}
             or None,
-            "sf1_extra": {k: round(v, 2) for k, v in sf1_extra.items()}
+            "sf1_extra": {k: round(v, 3) for k, v in sf1_extra.items()}
             or None,
         },
         float(sf),
@@ -851,8 +855,9 @@ def main() -> None:
         "sf": result["sf"],
         # headline queries AND the op_* latency probes (produce-ack /
         # consume / tail-delivery / compaction — the BASELINE.md
-        # derived-target surface), rounded for width.
-        "queries": {k: round(v, 2) for k, v in timings.items()},
+        # derived-target surface), to the ms: at 2 decimals a 4 ms
+        # probe read as 0.0, as if dropped.
+        "queries": {k: round(v, 3) for k, v in timings.items()},
         "detail": "bench_detail.json",
     }
     if "value_cpu_normalized" in result:
@@ -867,7 +872,10 @@ def main() -> None:
     if env and "error" not in env:
         summary["env"] = {
             k: env[k]
-            for k in ("cpu_single_sec", "fsync_ms", "disk_write_mb_s", "ncpu")
+            for k in (
+                "cpu_single_sec", "fsync_ms", "disk_write_mb_s", "ncpu",
+                "spark_graft_cpus",
+            )
             if k in env
         }
         ratios = result.get("env_vs_prev", {}).get("slowdown_ratio")
@@ -876,7 +884,7 @@ def main() -> None:
     if sf1_timings:
         summary["sf1_total"] = result["sf1_total"]
         summary["sf1_queries"] = {
-            k: round(v, 2) for k, v in sf1_timings.items()
+            k: round(v, 3) for k, v in sf1_timings.items()
         }
     if sf1_extra:
         summary["sf1_extra_total"] = round(sum(sf1_extra.values()), 2)

@@ -19,10 +19,21 @@ single-partition sort:
    row numbers into offsets.
 
 That is the textbook distributed zip-with-index; the only global
-barrier is the O(partitions) count collect.  The parts land in one
-``bulk-<uuid>/`` run and are registered in ONE manifest commit (group
-commit taken to its logical extreme) through the run protocol every
-Spark-written segment shares, ``maintenance.spark_write_run``.
+barrier is the O(partitions) count collect.
+
+An input that already has exactly one partition, as fixed by Spark's
+planning (a file scan whose files fit one split, an existing one-slice
+RDD), IS its own single range: step 1 becomes ``coalesce(1)`` (no
+sample, no shuffle; the window plans with no exchange), and step 3 is
+skipped, because the only partition's prefix sum is 0.  Offsets and
+write then run in ONE Spark job.  The trade-off: such an input sorts
+in one task however large it is; an input that needs parallel sorting
+should arrive with more than one partition.
+
+The parts land in one ``bulk-<uuid>/`` run and are registered in ONE
+manifest commit (group commit taken to its logical extreme) through
+the run protocol every Spark-written segment shares,
+``maintenance.spark_write_run``.
 """
 
 from __future__ import annotations
@@ -39,6 +50,18 @@ from .maintenance import spark_write_run
 from .manifest import CommitConflict, SegmentMeta
 from .offsets import parse_offset
 from .stream import Stream
+
+
+def one_range(df: DataFrame) -> bool:
+    """True when ``df`` has exactly one partition, as already fixed by
+    Spark's planning: the input ``assign_offsets`` takes as its single
+    range.  An adaptive plan decides its partition count only when it
+    runs (reading it would run its shuffle stages), so it is never one
+    range."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return False
+    return df.rdd.getNumPartitions() == 1
 
 
 def assign_offsets(
@@ -62,8 +85,19 @@ def assign_offsets(
     ``(C[pid] + local) mod batch_records``.  ``base_epoch`` lives only
     in the map, never in the generated code: a flush into a live
     stream (a new ``base_epoch`` every time) reuses the compiled
-    stage."""
-    ranged = df.repartitionByRange(*order_by)
+    stage.
+
+    A ``one_range`` input is its own range: ``coalesce(1)`` instead of
+    the range shuffle, and the maps are ``{0: base_epoch}`` and
+    ``{0: 0}`` without a count job or a ``persist``, so nothing runs
+    until the caller's action (one job for ``produce_bulk``).  All rows
+    then sort in that one task.  The offsets are the same either way.
+    The result carries ``_ds_total`` (the row count, ``None`` on the
+    one-range path, which never counts) and ``_ds_persisted`` (the
+    intermediate to unpersist after the write; not persisted on the
+    one-range path)."""
+    single = one_range(df)
+    ranged = df.coalesce(1) if single else df.repartitionByRange(*order_by)
     pid = F.spark_partition_id()
     local = (
         F.row_number().over(
@@ -71,18 +105,23 @@ def assign_offsets(
         )
         - 1
     )
-    # Persist so the count job and the write job see the SAME range
-    # partitioning (the partitioner samples; recomputation could shift
-    # boundary rows between partitions and corrupt the prefix sums).
-    with_local = (
-        ranged.withColumn("__pid", pid).withColumn("__local", local).persist()
-    )
-    counts = (
-        with_local.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()
-    )
-    sizes = {r["__pid"]: r["__n"] for r in counts}
+    with_local = ranged.withColumn("__pid", pid).withColumn("__local", local)
+    if single:
+        # The only partition starts at row 0: its size enters no
+        # prefix sum, so nothing counts it.
+        sizes = {0: 0}
+    else:
+        # Persist so the count job and the write job see the SAME range
+        # partitioning (the partitioner samples; recomputation could
+        # shift boundary rows between partitions and corrupt the prefix
+        # sums).
+        with_local = with_local.persist()
+        counts = (
+            with_local.groupBy("__pid")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .collect()
+        )
+        sizes = {r["__pid"]: r["__n"] for r in counts}
     # Prefix sums → each partition's first (epoch, counter) as two
     # O(partitions) literal maps: a lookup, not a join (a broadcast of
     # a driver-side DataFrame costs its own job).  A map literal
@@ -113,10 +152,10 @@ def assign_offsets(
         .withColumn("batch", F.col("__epoch"))
         .drop("__pid", "__local", "__epoch", "__counter")
     )
-    # Hand the persisted intermediate + total row count to the caller
+    # Hand the intermediate + total row count to the caller
     # (unpersist-after-write; file-count planning without a second scan).
     out._ds_persisted = with_local  # type: ignore[attr-defined]
-    out._ds_total = acc  # type: ignore[attr-defined]
+    out._ds_total = None if single else acc  # type: ignore[attr-defined]
     out._ds_nparts = max(1, len(sizes))  # type: ignore[attr-defined]
     return out
 
@@ -172,6 +211,12 @@ def produce_bulk(
     boundaries.  Either way the write is a plain sequential parquet
     write, never a dynamic ``partitionBy`` (measured 3-10× slower and
     high-variance for many small partitions).
+
+    A one-partition input (``one_range``) takes none of these
+    branches: offsets and write are ONE Spark job over one task, with
+    no sample, count or persist, and ``segment_rows`` files are exact
+    (every file ``segment_rows`` rows but the last) with or without
+    ``exact_segments``.  The whole input then sorts in that task.
     """
     state = stream.refresh()
     if txn is not None and state.txns.get(str(txn[0]), -1) >= txn[1]:
@@ -188,16 +233,18 @@ def produce_bulk(
     with_offsets = assign_offsets(df, order_by, batch_records, base_epoch)
     assigned = with_offsets.select("offset", "ts", payload)
     total = with_offsets._ds_total  # type: ignore[attr-defined]
-    max_records_per_file = 0
-    if segment_rows is None:
+    max_records_per_file = segment_rows or 0
+    if segment_rows is None or total is None:
         # Partition-contiguous fast path: projections preserved
         # assign_offsets' range partitioning, so offsets are
         # contiguous per partition — local sort, no second shuffle.
+        # A one-range input (no row count) is one sorted run from row
+        # 0, so ``maxRecordsPerFile`` cuts it at exact multiples of
+        # segment_rows: exact segments without the merge below.
         writer_df = assigned.sortWithinPartitions("offset")
     else:
         n_files = max(1, -(-total // segment_rows))
         n_parts = with_offsets._ds_nparts  # type: ignore[attr-defined]
-        max_records_per_file = segment_rows
         if n_files >= n_parts and not exact_segments:
             # Partitions are at least segment-sized: keep the existing
             # range partitioning and let the writer split each task's

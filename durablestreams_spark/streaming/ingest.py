@@ -17,7 +17,10 @@ path runs exactly one Spark job and needs no ``persist`` (nothing reads
 the batch twice).  Only a batch too big for the point path is read
 again, by ``produce_bulk``; re-reading a micro-batch is safe because
 exactly-once already requires a replayable source (a restart replays
-the same batch from it).
+the same batch from it).  A one-partition big batch (one source file
+per trigger, say) is one range for ``produce_bulk``: one more job and
+no ``persist``.  Only a multi-partition one, whose range path reads it
+twice (count, then write), is persisted first.
 
 Every stage a flush runs is compile-stable: its generated Java is the
 same string on every trigger, so Spark's codegen cache compiles each
@@ -43,7 +46,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ingest import produce_bulk
+from ..ingest import one_range, produce_bulk
 from ..manifest import CommitConflict
 from ..stream import Stream
 
@@ -94,7 +97,10 @@ def flush_batch(
       batch again;
     - more: the distributed ``produce_bulk``, which reads the batch a
       second time (safe: the source is replayable, as exactly-once
-      requires) under a ``persist`` so its own jobs share one read.
+      requires).  A one-partition batch (``ingest.one_range``) is
+      written by one job that reads it once, so it is not persisted;
+      a multi-partition batch takes the range path, whose count and
+      write jobs share one read under a ``persist``.
       A top-K cannot stop early, so with ``order_by`` the probe has
       already scanned such a batch in full.
     """
@@ -122,7 +128,9 @@ def flush_batch(
     else:
         # assign_offsets re-sorts by order_by itself, so the bulk path
         # takes the batch unsorted.
-        batch_df.persist()
+        persist = not one_range(batch_df)
+        if persist:
+            batch_df.persist()
         try:
             produce_bulk(
                 stream,
@@ -131,7 +139,8 @@ def flush_batch(
                 txn=(app_id, batch_id),
             )
         finally:
-            batch_df.unpersist()
+            if persist:
+                batch_df.unpersist()
     return True
 
 

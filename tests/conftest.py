@@ -1,5 +1,8 @@
+import glob
 import os
+import shutil
 import sys
+import time
 
 import pytest
 
@@ -23,6 +26,24 @@ def spark():
 
     s = get_spark("durablestreams_tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _drop_tmp_path_caches(tmp_path_factory):
+    """Remove the marker-cached artifacts built over this session's
+    ``tmp_path`` dirs.  ``cache_marker.cache_root`` keys an artifact
+    on its fixture dir's basename, so a build over a ``tmp_path``
+    lands in ``/tmp/durablestreams_<tag>_vN/<tmp_path name>``, which
+    pytest's own temp cleanup never reaches.  Only roots named after
+    a dir of this session's base temp and written since the session
+    started go; a same-named root left by an earlier run stays."""
+    started = time.time()
+    yield
+    base = tmp_path_factory.getbasetemp()
+    for name in os.listdir(base):
+        for root in glob.glob(f"/tmp/durablestreams_*_v*/{glob.escape(name)}"):
+            if os.path.isdir(root) and os.stat(root).st_mtime >= started:
+                shutil.rmtree(root, ignore_errors=True)
 
 
 @pytest.fixture()

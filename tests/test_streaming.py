@@ -192,41 +192,83 @@ def test_flush_batch_point_path_is_one_job(spark, catalog, tmp_path):
     assert len(stream.consume("-", limit=1000)) == total
 
 
+def test_flush_batch_one_partition_bulk_is_two_jobs(spark, catalog, tmp_path, monkeypatch):
+    """A bulk flush of a one-partition batch (one source file) is the
+    probe plus ONE write job, and persists nothing: not the batch, not
+    the offset stage, neither during the write nor after it."""
+    from durablestreams_spark import ingest
+    from durablestreams_spark.streaming import ingest as s_ingest
+
+    monkeypatch.setattr(s_ingest, "SMALL_BATCH_ROWS", 50)
+    sc = spark.sparkContext
+
+    def persisted():  # earlier tests may have left persisted RDDs
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    persisted_at_write = []
+    finish = ingest._finish_bulk
+
+    def spy(*args, **kwargs):
+        persisted_at_write.append(persisted())
+        return finish(*args, **kwargs)
+
+    monkeypatch.setattr(ingest, "_finish_bulk", spy)
+    src = str(tmp_path / "src")
+    total = _write_json_files(src, n_files=1, rows_per_file=200)
+    batch = spark.read.schema(EVENTS_SCHEMA).json(src)
+    assert batch.rdd.getNumPartitions() == 1
+    stream = catalog.stream("one_range_flush")
+    sc.setJobGroup("flush-one-range", "one-range bulk flush")
+    try:
+        assert s_ingest.flush_batch(stream, batch, 0, "app", ["event_id"]) is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("flush-one-range")) == 2
+    assert persisted_at_write == [before]
+    assert persisted() == before
+    recs = stream.consume("-", limit=1000)
+    assert [r.data["event_id"] for r in recs] == list(range(total))
+
+
 def test_flush_batch_compiles_once(spark, catalog, tmp_path, monkeypatch):
-    """After one warm point flush and one warm bulk flush, later
-    flushes generate no new Java class, although each has a new batch
-    id and continues from a new epoch: the probe holds no codegen'd
-    Limit and the offset stage keeps base_epoch out of its code."""
+    """After one warm point flush, one warm bulk flush and one warm
+    one-range bulk flush (a one-file batch), later flushes generate no
+    new Java class, although each has a new batch id and continues
+    from a new epoch: the probe holds no codegen'd Limit and the offset
+    stage keeps base_epoch out of its code."""
     from durablestreams_spark.streaming import ingest as s_ingest
 
     monkeypatch.setattr(s_ingest, "SMALL_BATCH_ROWS", 50)
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     first = 0
 
-    def batch(n):
-        # a fresh dir per batch, as a file source's micro-batch reads
+    def batch(n, files):
+        # a fresh dir per batch, as a file source's micro-batch reads;
+        # one file is one partition (the one-range bulk path)
         nonlocal first
         src = tmp_path / f"src{first}"
         src.mkdir()
-        for part in range(3):
+        for part in range(files):
             with open(src / f"part{part}.json", "w") as f:
-                for eid in range(first + part, first + n, 3):
+                for eid in range(first + part, first + n, files):
                     f.write(json.dumps({"event_id": eid, "user_id": eid % 3}) + "\n")
         first += n
         return spark.read.schema("event_id long, user_id long").json(str(src))
 
     stream = catalog.stream("compiles")
-    sizes = [30, 80, 30, 80, 30]  # point, bulk, then the same again
+    # point, bulk, one-range bulk, then the same again
+    sizes = [(30, 3), (80, 3), (80, 1), (30, 3), (80, 3), (80, 1), (30, 3)]
     epochs = []
-    for bid, n in enumerate(sizes):
-        if bid == 2:
+    for bid, (n, files) in enumerate(sizes):
+        if bid == 3:
             compiled = metrics.METRIC_COMPILATION_TIME().getCount()
-        assert s_ingest.flush_batch(stream, batch(n), bid, "app", ["event_id"])
+        assert s_ingest.flush_batch(stream, batch(n, files), bid, "app", ["event_id"])
         epochs.append(stream.refresh().last_epoch_ms)
     assert metrics.METRIC_COMPILATION_TIME().getCount() - compiled == 0
     assert len(set(epochs)) == len(sizes)
     recs = stream.consume("-", limit=1000)
-    assert [r.data["event_id"] for r in recs] == list(range(sum(sizes)))
+    assert [r.data["event_id"] for r in recs] == list(range(sum(n for n, _ in sizes)))
 
 
 def test_probe_payload_matches_tojson(spark):
