@@ -608,7 +608,7 @@ def main() -> None:
                 # this probe reads six markers and reports ~0.
                 t0 = time.perf_counter()
                 _sq._nb_serving_model(spark, sf1_dir)
-                _sq._exact_hash_index(spark, sf1_dir)
+                _sq._exact_hash_index(spark, sf1_dir, base=False)
                 for fam in _sq.BANDED_FAMILIES:
                     _sq._flag_index(fam, spark, sf1_dir)
                 _sq._contamination_flag_index(spark, sf1_dir)

@@ -38,15 +38,6 @@ from ..analytics.windows import (
 _FMT_S = "yyyy-MM-dd HH:mm:ss"
 
 
-def _event_ts_unit(sf_dir: str) -> str:
-    """Unit ('ns'/'us') of events.parquet's ``ts`` column, sniffed from
-    the footer (shared with the batch ingress — see
-    ``analytics.core.ts_unit_info``)."""
-    from ..analytics.core import ts_unit_info
-
-    return ts_unit_info(f"{sf_dir}/events.parquet")[0]
-
-
 def _events_stream(spark, sf_dir: str):
     """The events table replayed as a stream (same event-time ingress
     normalization as ``analytics.core.table``, driven by the parquet
@@ -1357,34 +1348,6 @@ def streaming_quality_monitor(spark, sf_dir):
     )
 
 
-def _neardup_index(spark, sf_dir):
-    """The persisted banded SimHash signature index — the batch-built
-    artifact the online near-dup scorer joins against (the ANN-index /
-    NB-model train-once/serve-many protocol: the corpus-wide signature
-    pass must not be charged to every serve).  One parquet row per
-    (band_id, band_key, doc_id, simhash) — the classic posting-list
-    layout (Manku et al., WWW'07: one sorted table per permutation);
-    at 100 TB the table is bucketBy(band_key)-written so the serving
-    join needs no index-side shuffle.  Fingerprint-keyed to the
-    documents fixture with the banding geometry in the params tag."""
-    from .dedup import NEARDUP_BAND_BITS, NEARDUP_BANDS, dedup_simhash
-
-    def build(root):
-        fam = SIMHASH_FAMILY
-        _band_rows(fam, dedup_simhash(spark, sf_dir)).select(
-            *fam.index_cols
-        ).write.mode("overwrite").parquet(os.path.join(root, "index.parquet"))
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_neardup_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"simhash32:bands{NEARDUP_BANDS}x{NEARDUP_BAND_BITS}:v1",
-    )
-    return spark.read.parquet(os.path.join(root, "index.parquet"))
-
-
 # Shared verbatim with the batch dedup_simhash oracle (one signature
 # definition, two graded consumers — the _NB_SCORED_CTES pattern);
 # the banding geometry interpolates the SAME constants the stream
@@ -1423,7 +1386,7 @@ from .dedup import (  # noqa: E402
     "aggregation state), exploded into 4x8-bit band keys (a "
     "stateless 1->4 flatMap), and equi-joined per micro-batch "
     "against the PERSISTED batch-built signature index "
-    "(_neardup_index — the ANN/NB train-once/serve-many artifact).  "
+    "(_band_index_path — the ANN/NB train-once/serve-many artifact).  "
     "Pigeonhole makes the band join EXACT at the graded threshold: "
     "hamming <= 3 < 4 bands forces agreement on a whole band, so "
     "the oracle is the clean all-near-dup-pairs semantic.  A pair "
@@ -1455,10 +1418,11 @@ def _neardup_stream_df(spark, sf_dir):
     # (re-resolves the static index per micro-batch).  No broadcast
     # hint — the index is corpus-proportional (the
     # streaming_enrich_static_join rule).
+    idx = _band_index_path(fam, spark, sf_dir, base=False)
     return _band_join(
         fam,
         _doc_bands(fam, src),
-        _neardup_index(spark, sf_dir),
+        spark.read.parquet(idx),
         F.col("o_doc_id") < F.col("doc_id"),
     ).select(
         "doc_id",
@@ -1467,9 +1431,10 @@ def _neardup_stream_df(spark, sf_dir):
     )
 
 
-def _exact_hash_index(spark, sf_dir):
+def _exact_hash_index(spark, sf_dir, base):
     """Persisted exact-dedup index: (content md5 -> first doc_id) over
-    the historical corpus — the artifact an ingest gate joins to
+    the corpus, or (``base``) over its ':ndlive' BASE split, the live
+    gate's historical corpus — the artifact an ingest gate joins to
     answer 'have we already got these bytes?' without any stream-side
     state.  One partial-aggregated corpus pass at build, O(1) rows per
     distinct content at rest; fingerprint-keyed like the SimHash band
@@ -1477,22 +1442,30 @@ def _exact_hash_index(spark, sf_dir):
     100 TB: bucketBy(h) so serving joins need no index-side shuffle."""
 
     def build(root):
+        docs = table(spark, sf_dir, "documents")
+        if base:
+            docs = docs.where(_base_split("doc_id", _NDLIVE_TAG))
         (
-            table(spark, sf_dir, "documents")
-            .groupBy(F.md5("text").alias("h"))
+            docs.groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("first_id"))
             .write.mode("overwrite")
             .parquet(os.path.join(root, "index.parquet"))
         )
 
-    root = build_once(
-        cache_root("/tmp/durablestreams_hashidx_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params="md5:minid:v1",
+    cache = (
+        _Cache(
+            "/tmp/durablestreams_hashidx_base_v1",
+            "documents",
+            f"md5:minid:{_BASE_TAG}:v1",
+        )
+        if base
+        else _Cache(
+            "/tmp/durablestreams_hashidx_v1", "documents", "md5:minid:v1"
+        )
     )
-    return spark.read.parquet(os.path.join(root, "index.parquet"))
+    return spark.read.parquet(
+        os.path.join(_cached(cache, sf_dir, build), "index.parquet")
+    )
 
 
 @query(
@@ -1522,8 +1495,8 @@ def _exact_hash_index(spark, sf_dir):
     "(2) the row-local five-rule Gopher gate (the shared "
     "_gopher_metrics / _gopher_keep_curate_col definitions), and "
     "(3) the served NB quality logit (the persisted model via "
-    "_nb_serving_model, dense-array O(1) lookups).  keep = not "
-    "exact_dup AND gopher_keep AND logit > 0 — the decision "
+    "_nb_serving_model, dense-array O(1) lookups).  keep = not an "
+    "exact dup AND gopher_keep AND logit > 0 — the decision "
     "pipeline_curate_v2/v3 make offline, now made per document AT "
     "INGEST, hash-gated against the batch composition of the same "
     "shared definitions.  Gate throughput is scan throughput; every "
@@ -1538,7 +1511,7 @@ def streaming_ingest_gate(spark, sf_dir):
     )
 
     lam, pri = _nb_serving_model(spark, sf_dir)
-    hx = _exact_hash_index(spark, sf_dir)
+    hx = _exact_hash_index(spark, sf_dir, base=False)
     src = _docs_stream_spread(spark, sf_dir)
     m = _gopher_metrics(src, keep_words=True, extra_cols=("text",))
     ann = m.select(
@@ -1557,14 +1530,11 @@ def streaming_ingest_gate(spark, sf_dir):
     # hint (the index is corpus-proportional).
     gated = scored.join(hx, "h").select(
         "doc_id",
-        (F.col("first_id") < F.col("doc_id")).alias("exact_dup"),
+        (F.col("first_id") < F.col("doc_id")).alias(_LADDER["exact"]),
         "gopher_keep",
         "nb_logit",
     )
-    out = gated.withColumn(
-        "keep",
-        ~F.col("exact_dup") & F.col("gopher_keep") & (F.col("nb_logit") > 0),
-    )
+    out = gated.withColumn("keep", _ladder_keep(["exact"]))
     return _drain(out, "append")
 
 
@@ -1587,15 +1557,12 @@ _NDLIVE_FILES = 4
 _NDLIVE_LAST_RUN: dict = {}
 
 
-def _ndlive_base_pred():
-    """True for docs in the ':ndlive' base split (row-local)."""
+def _base_split(id_col: str, tag: str):
+    """True for rows in the ``tag`` base split (row-local): the md5 of
+    the id and the tag sorts below _NDLIVE_CUT."""
     return (
         F.substring(
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit(_NDLIVE_TAG))
-            ),
-            1,
-            2,
+            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(tag))), 1, 2
         )
         < _NDLIVE_CUT
     )
@@ -1845,12 +1812,12 @@ def text_nb_model_refresh(spark, sf_dir):
         ),
         idx_name="counts.parquet",
         seed_fn=lambda v0: _nb_counts(
-            docs.where(_ndlive_base_pred())
+            docs.where(_base_split("doc_id", _NDLIVE_TAG))
         ).write.parquet(v0),
         refresh_fn=lambda p, guard: refresh_nb_model(
             spark,
             p,
-            docs.where(~_ndlive_base_pred()),
+            docs.where(~_base_split("doc_id", _NDLIVE_TAG)),
             guard_marker=guard,
         ),
     )
@@ -1984,13 +1951,15 @@ def dedup_exact_index_refresh(spark, sf_dir):
             f":base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
         ),
         idx_name="postings.parquet",
-        seed_fn=lambda v0: derived.where(_ndlive_base_pred())
+        seed_fn=lambda v0: derived.where(_base_split("doc_id", _NDLIVE_TAG))
         .select(F.md5("text").alias("h"), "doc_id")
         .write.parquet(v0),
         refresh_fn=lambda p, guard: refresh_exact_index(
             spark,
             p,
-            derived.where(~_ndlive_base_pred()).select("doc_id", "text"),
+            derived.where(~_base_split("doc_id", _NDLIVE_TAG)).select(
+                "doc_id", "text"
+            ),
             derived.where(
                 F.col("doc_id") % EXACT_REFRESH_REMOVE_MOD == 0
             ).select("doc_id"),
@@ -2269,8 +2238,10 @@ def _ndlive_run(spark, base_idx_path: str, delta_docs):
     "capability: none — north star (deployable ingest gate).",
 )
 def streaming_dedup_neardup_live(spark, sf_dir):
-    base_idx = _base_index_path(SIMHASH_FAMILY, spark, sf_dir)
-    delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
+    base_idx = _band_index_path(SIMHASH_FAMILY, spark, sf_dir, base=True)
+    delta = table(spark, sf_dir, "documents").where(
+        ~_base_split("doc_id", _NDLIVE_TAG)
+    )
     return _ndlive_run(spark, base_idx, delta)
 
 
@@ -2287,20 +2258,6 @@ from .dedup import (  # noqa: E402
     COSINE_TIGHT_THRESHOLD as _CT_THETA,
     _tight_bands_sql as _ct_bands_sql,
 )
-
-
-def _emblive_base_pred():
-    """True for vectors in the ':emblive' base split (row-local)."""
-    return (
-        F.substring(
-            F.md5(
-                F.concat(F.col("vec_id").cast("string"), F.lit(_EMBLIVE_TAG))
-            ),
-            1,
-            2,
-        )
-        < _NDLIVE_CUT
-    )
 
 
 def _emb_tight_base_paths(spark, sf_dir) -> tuple[str, str]:
@@ -2325,7 +2282,7 @@ def _emb_tight_base_paths(spark, sf_dir) -> tuple[str, str]:
     def build(root):
         vecs_p = os.path.join(root, "vecs.parquet")
         base = _tight_corpus(spark, sf_dir, COSINE_TIGHT_MOD).where(
-            _emblive_base_pred()
+            _base_split("vec_id", _EMBLIVE_TAG)
         )
         base.write.mode("overwrite").parquet(vecs_p)
         # Signatures derive from the PERSISTED vectors (one corpus
@@ -2513,36 +2470,10 @@ def streaming_embedding_dedup_live(spark, sf_dir):
     bands_p, vecs_p = _emb_tight_base_paths(spark, sf_dir)
     delta = (
         _tight_corpus(spark, sf_dir, COSINE_TIGHT_MOD)
-        .where(~_emblive_base_pred())
+        .where(~_base_split("vec_id", _EMBLIVE_TAG))
         .select("vec_id", "emb")
     )
     return _emblive_run(spark, bands_p, vecs_p, delta)
-
-
-def _exact_hash_index_base_path(spark, sf_dir) -> str:
-    """Persisted (content md5 -> first doc_id) index over the
-    ':ndlive' BASE split — the _exact_hash_index artifact restricted
-    to the historical corpus, for the live gate.  Returns the parquet
-    PATH (foreachBatch re-reads per micro-batch)."""
-
-    def build(root):
-        (
-            table(spark, sf_dir, "documents")
-            .where(_ndlive_base_pred())
-            .groupBy(F.md5("text").alias("h"))
-            .agg(F.min("doc_id").alias("first_id"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, "index.parquet"))
-        )
-
-    root = build_once(
-        cache_root("/tmp/durablestreams_hashidx_base_v1", sf_dir),
-        sf_dir,
-        build,
-        name="documents",
-        params=f"md5:minid:base<{_NDLIVE_CUT}{_NDLIVE_TAG}:v1",
-    )
-    return os.path.join(root, "index.parquet")
 
 
 #: Audit facts of the last streaming_ingest_gate_live run.
@@ -2676,7 +2607,9 @@ class BandedFamily:
       join is exact by pigeonhole).
     - ``index_cols``: the persisted band index's column order.
     - ``base`` / ``refresh`` / ``flag``: the cache identities of the
-      ':ndlive' base index, the graded refresh and the flag index."""
+      ':ndlive' base index, the graded refresh and the flag index.
+    - ``full``: the cache identity of the whole-corpus index, where the
+      family serves one (SimHash: streaming_dedup_neardup)."""
 
     kind: str
     keys: Callable
@@ -2688,6 +2621,7 @@ class BandedFamily:
     base: _Cache
     refresh: _Cache
     flag: _Cache
+    full: _Cache | None
 
 
 def _simhash_keys(docs):
@@ -2735,6 +2669,11 @@ SIMHASH_FAMILY = BandedFamily(
         "documents",
         f"simhash32:flag:ham{_ND_HAM}:v1",
     ),
+    full=_Cache(
+        "/tmp/durablestreams_neardup_v1",
+        "documents",
+        f"simhash32:bands{_ND_BANDS}x{_ND_BITS}:v1",
+    ),
 )
 
 _PX_KEYS = tuple(f"k{b}" for b in range(_PX_BANDS))
@@ -2762,6 +2701,7 @@ PIXEL_FAMILY = BandedFamily(
         "documents",
         f"dhash64:flag:{_pixel_params()}:v1",
     ),
+    full=None,
 )
 
 _AU_KEYS = tuple(f"k{b}" for b in range(_AU_BANDS))
@@ -2789,10 +2729,66 @@ AUDIO_FAMILY = BandedFamily(
         "documents",
         f"audiofp64:flag:{_audio_params()}:v1",
     ),
+    full=None,
 )
 
 #: Every banded family, in admission-ladder order.
 BANDED_FAMILIES = (SIMHASH_FAMILY, PIXEL_FAMILY, AUDIO_FAMILY)
+
+#: The admission ladder, in rejection order: each flag's kind (the
+#: live gate's fused ``{kind}_flag`` rows; a banded family's ``kind``)
+#: -> its decision column.  A document is rejected at its first set
+#: flag, then by the Gopher gate, then by the NB logit; keep rule,
+#: reason counts and decision schemas all derive from this table.
+_LADDER = {
+    "exact": "exact_dup",
+    "nd": "near_dup",
+    "px": "pixel_dup",
+    "au": "audio_dup",
+    "c": "contaminated",
+}
+#: A decision's signal columns: the ladder flags, then the row-local
+#: Gopher verdict and NB logit.
+_SIGNALS = (*_LADDER.values(), "gopher_keep", "nb_logit")
+_SIGNALS_DDL = ", ".join(
+    [f"{c} boolean" for c in _LADDER.values()]
+    + ["gopher_keep boolean", "nb_logit double"]
+)
+
+
+def _and(conds):
+    return functools.reduce(lambda a, b: a & b, conds)
+
+
+def _ladder_steps(kinds):
+    """(reason count column, reject, pass) per rung of the ladder over
+    the flag ``kinds``: each flag, then Gopher, then the NB logit."""
+    g, logit = F.col("gopher_keep"), F.col("nb_logit")
+    cols = [_LADDER[k] for k in kinds]
+    return [(f"n_{c}", F.col(c), ~F.col(c)) for c in cols] + [
+        ("n_gopher_fail", ~g, g),
+        ("n_nb_fail", logit <= 0, logit > 0),
+    ]
+
+
+def _ladder_keep(kinds):
+    """The keep rule: no flag of ``kinds`` set, Gopher keeps, NB > 0."""
+    return _and([ok for _, _, ok in _ladder_steps(kinds)])
+
+
+def _count_if(cond):
+    return F.sum(cond.cast("long")).cast("long")
+
+
+def _ladder_reasons():
+    """First-failing-reason counts over the whole ladder: a row counts
+    under the first rung it fails, so these and the count of kept rows
+    partition the rows."""
+    cols, passed = [], []
+    for name, reject, ok in _ladder_steps(_LADDER):
+        cols.append(_count_if(_and([*passed, reject])).alias(name))
+        passed.append(ok)
+    return cols
 
 
 def _band_rows(fam: BandedFamily, keys):
@@ -2932,22 +2928,32 @@ def _band_pairs(fam: BandedFamily, keys):
     )
 
 
-def _base_index_path(fam: BandedFamily, spark, sf_dir) -> str:
-    """Persisted band index over the ':ndlive' BASE split — the
-    'historical corpus' artifact the live detectors serve against.
-    Returns the parquet PATH, not a DataFrame: a foreachBatch re-reads
-    it per micro-batch alongside its run-local appends."""
+def _band_index_path(fam: BandedFamily, spark, sf_dir, base) -> str:
+    """Persisted band index — one parquet row per (band_id, band_key,
+    ids, keys), the classic posting-list layout (Manku et al., WWW'07:
+    one sorted table per permutation) — over the ':ndlive' BASE split
+    (``base``: the 'historical corpus' the live detectors serve
+    against) or over the whole corpus (``fam.full``).  The batch-built
+    artifact the online scorers join against (the ANN-index / NB-model
+    train-once/serve-many protocol: the corpus-wide signature pass must
+    not be charged to every serve); at 100 TB it is
+    bucketBy(band_key)-written so the serving join needs no index-side
+    shuffle.  Returns the parquet PATH, not a DataFrame: a foreachBatch
+    re-reads it per micro-batch alongside its run-local appends."""
 
     def build(root):
-        base = table(spark, sf_dir, "documents").where(_ndlive_base_pred())
+        docs = table(spark, sf_dir, "documents")
+        if base:
+            docs = docs.where(_base_split("doc_id", _NDLIVE_TAG))
         (
-            _doc_bands(fam, base)
+            _doc_bands(fam, docs)
             .select(*fam.index_cols)
             .write.mode("overwrite")
             .parquet(os.path.join(root, "index.parquet"))
         )
 
-    return os.path.join(_cached(fam.base, sf_dir, build), "index.parquet")
+    cache = fam.base if base else fam.full
+    return os.path.join(_cached(cache, sf_dir, build), "index.parquet")
 
 
 def refresh_band_index(
@@ -3025,13 +3031,13 @@ def _graded_refresh(fam: BandedFamily, spark, sf_dir, remove_mod: int):
         fam.refresh,
         "index.parquet",
         seed_fn=lambda v0: _shutil.copytree(
-            _base_index_path(fam, spark, sf_dir), v0
+            _band_index_path(fam, spark, sf_dir, base=True), v0
         ),
         refresh_fn=lambda p, guard: refresh_band_index(
             fam,
             spark,
             p,
-            docs.where(~_ndlive_base_pred()),
+            docs.where(~_base_split("doc_id", _NDLIVE_TAG)),
             docs.where(F.col("doc_id") % remove_mod == 0).select("doc_id"),
             guard_marker=guard,
         ),
@@ -3202,7 +3208,6 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     )
 
     lam, pri = _nb_serving_model(spark, sf_dir)
-    base_idx_path = _exact_hash_index_base_path(spark, sf_dir)
     bench_path = _bench_shingle_index_path(spark, sf_dir)
     fused_path = os.path.join(run_dir, "fused")
     n_writes = [0]
@@ -3212,12 +3217,12 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
     # micro-batch's job (at 100 TB these sit in executor block
     # storage / off-heap cache; the per-trigger cost is a lookup, not
     # a re-read).
-    base_idx = spark.read.parquet(base_idx_path).localCheckpoint(
+    base_idx = _exact_hash_index(spark, sf_dir, base=True).localCheckpoint(
         eager=True
     )
     band_bases = {
         fam.kind: spark.read.parquet(
-            _base_index_path(fam, spark, sf_dir)
+            _band_index_path(fam, spark, sf_dir, base=True)
         ).localCheckpoint(eager=True)
         for fam in BANDED_FAMILIES
     }
@@ -3340,7 +3345,9 @@ def _gate_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
         _kill_point(run_dir, kill_epoch, epoch_id)
 
     resume = os.path.isdir(os.path.join(run_dir, "delta"))
-    delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
+    delta = table(spark, sf_dir, "documents").where(
+        ~_base_split("doc_id", _NDLIVE_TAG)
+    )
     stream = _delta_replay_stream(
         spark, run_dir, delta, rewrite=not resume
     )
@@ -3357,55 +3364,22 @@ def _gate_live_assemble(spark, run_dir):
     fused = _epoch_read(spark, os.path.join(run_dir, "fused"))
     if fused is None:
         return spark.createDataFrame(
-            [],
-            "doc_id long, exact_dup boolean, near_dup boolean, "
-            "pixel_dup boolean, audio_dup boolean, "
-            "contaminated boolean, "
-            "gopher_keep boolean, nb_logit double, keep boolean",
+            [], f"doc_id long, {_SIGNALS_DDL}, keep boolean"
         )
     fused = fused.localCheckpoint(eager=True)
-    adm = fused.where(F.col("kind") == "adm").select(
+    out = fused.where(F.col("kind") == "adm").select(
         "doc_id", "gopher_keep", "nb_logit"
     )
-
-    def _flag(df, kind, col):
-        flags = fused.where(F.col("kind") == kind).select("doc_id")
-        return df.join(
-            flags.distinct().withColumn(col, F.lit(True)),
-            "doc_id",
-            "left",
-        )
-
-    adm = _flag(adm, "exact_flag", "flagged")
-    adm = _flag(adm, "nd_flag", "nd_flagged")
-    adm = _flag(adm, "px_flag", "px_flagged")
-    adm = _flag(adm, "au_flag", "au_flagged")
-    adm = _flag(adm, "c_flag", "c_flagged")
-    exact_dup = F.coalesce("flagged", F.lit(False))
-    near_dup = F.coalesce("nd_flagged", F.lit(False))
-    pixel_dup = F.coalesce("px_flagged", F.lit(False))
-    audio_dup = F.coalesce("au_flagged", F.lit(False))
-    contaminated = F.coalesce("c_flagged", F.lit(False))
-    out = adm.select(
-        "doc_id",
-        exact_dup.alias("exact_dup"),
-        near_dup.alias("near_dup"),
-        pixel_dup.alias("pixel_dup"),
-        audio_dup.alias("audio_dup"),
-        contaminated.alias("contaminated"),
-        "gopher_keep",
-        "nb_logit",
-        (
-            ~exact_dup
-            & ~near_dup
-            & ~pixel_dup
-            & ~audio_dup
-            & ~contaminated
-            & F.col("gopher_keep")
-            & (F.col("nb_logit") > 0)
-        ).alias("keep"),
-    ).localCheckpoint(eager=True)
-    return out
+    for kind, col in _LADDER.items():
+        flags = fused.where(F.col("kind") == f"{kind}_flag").select("doc_id")
+        out = out.join(
+            flags.distinct().withColumn(col, F.lit(True)), "doc_id", "left"
+        ).withColumn(col, F.coalesce(col, F.lit(False)))
+    return (
+        out.select("doc_id", *_SIGNALS)
+        .withColumn("keep", _ladder_keep(_LADDER))
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -3440,13 +3414,13 @@ def _gate_live_assemble(spark, run_dir):
     "decontamination "
     "screen FUSED: distinct 5-gram shingles vs the BROADCAST "
     "benchmark shingle index (eval-suite-sized, constant as the "
-    "corpus grows — the broadcast is always legal), a 'contaminated' "
+    "corpus grows — the broadcast is always legal), a contamination "
     "rung in the admission ladder; (4) append the batch's (h, doc_id) "
     "and band/pixel/audio-signature entries so they serve later "
     "batches.  "
-    "keep = NOT exact_dup AND NOT near_dup AND NOT pixel_dup AND "
-    "NOT audio_dup AND NOT contaminated AND "
-    "gopher_keep AND nb_logit > 0, hash-gated against the batch "
+    "keep = no ladder flag set (exact, near, pixel, audio, "
+    "contamination) AND gopher_keep AND nb_logit > 0, hash-gated "
+    "against the batch "
     "composition over the full corpus restricted to delta rows.  At "
     "100 TB: flags and appends are O(arrivals), self-joins bounded "
     "batch x batch, the shingle check is scan throughput, no "
@@ -3584,7 +3558,9 @@ def _shards_live_drain(spark, sf_dir, run_dir, audit, kill_epoch=None):
         _kill_point(run_dir, kill_epoch, epoch_id)
 
     resume = os.path.isdir(os.path.join(run_dir, "delta"))
-    delta = table(spark, sf_dir, "documents").where(~_ndlive_base_pred())
+    delta = table(spark, sf_dir, "documents").where(
+        ~_base_split("doc_id", _NDLIVE_TAG)
+    )
     stream = _delta_replay_stream(spark, run_dir, delta, rewrite=not resume)
     _await_and_audit(stream, _extract, run_dir, audit, acc_path)
 
@@ -3794,10 +3770,12 @@ def _contamination_flag_index(spark, sf_dir):
     "contamination (1:1 LEFT join vs the persisted per-doc "
     "bench-shingle-hit flag index, same pre-collapse protocol), "
     "pixel near-dup (1:1 LEFT join vs the persisted per-doc "
-    "gate-image dHash flag index — the binary modality), the "
+    "gate-image dHash flag index — the binary modality), audio "
+    "near-dup (1:1 LEFT join vs the persisted per-doc recording "
+    "fingerprint flag index), the "
     "row-local Gopher gate, and the served NB logit — then "
     "attributed to its FIRST failing reason in gate order (exact > "
-    "near > pixel > audio > contaminated > gopher > NB > admitted), "
+    "near > pixel > audio > contamination > gopher > NB > admitted), "
     "so each "
     "source's "
     "reason counts partition its n_docs exactly.  The "
@@ -3810,24 +3788,10 @@ def _contamination_flag_index(spark, sf_dir):
 )
 def streaming_ingest_report(spark, sf_dir):
     flagged = _five_signal_stream(spark, sf_dir)
-    e, nd = F.col("exact_dup"), F.col("near_dup")
-    px, au = F.col("pixel_dup"), F.col("audio_dup")
-    c = F.col("contaminated")
-    g, l = F.col("gopher_keep"), F.col("nb_logit")
-
-    def cnt(cond):
-        return F.sum(cond.cast("long"))
-
     agg = flagged.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        cnt(e).alias("n_exact_dup"),
-        cnt(~e & nd).alias("n_near_dup"),
-        cnt(~e & ~nd & px).alias("n_pixel_dup"),
-        cnt(~e & ~nd & ~px & au).alias("n_audio_dup"),
-        cnt(~e & ~nd & ~px & ~au & c).alias("n_contaminated"),
-        cnt(~e & ~nd & ~px & ~au & ~c & ~g).alias("n_gopher_fail"),
-        cnt(~e & ~nd & ~px & ~au & ~c & g & (l <= 0)).alias("n_nb_fail"),
-        cnt(~e & ~nd & ~px & ~au & ~c & g & (l > 0)).alias("n_admitted"),
+        *_ladder_reasons(),
+        _count_if(_ladder_keep(_LADDER)).alias("n_admitted"),
     )
     return _drain(agg, "complete")
 
@@ -3835,9 +3799,8 @@ def streaming_ingest_report(spark, sf_dir):
 def _five_signal_stream(spark, sf_dir):
     """ONE definition of the full admission annotation (seven
     signals) over the
-    live documents stream — (doc_id, source, n_words, exact_dup,
-    near_dup, pixel_dup, audio_dup, contaminated, gopher_keep,
-    nb_logit), every signal a
+    live documents stream — (doc_id, source, n_words, *_SIGNALS),
+    every signal a
     row-local expression or 1:1 stream-static lookup against a
     persisted flag index.  Shared by the economics report and the
     token-budget monitor so two graded dashboards cannot drift on what
@@ -3863,10 +3826,11 @@ def _five_signal_annotate(spark, sf_dir, src):
     )
 
     lam, pri = _nb_serving_model(spark, sf_dir)
-    hx = _exact_hash_index(spark, sf_dir)
-    cfl = _contamination_flag_index(spark, sf_dir).withColumn(
-        "cont", F.lit(True)
-    )
+    hx = _exact_hash_index(spark, sf_dir, base=False)
+    flag_sets = {
+        fam.kind: _flag_index(fam, spark, sf_dir) for fam in BANDED_FAMILIES
+    }
+    flag_sets["c"] = _contamination_flag_index(spark, sf_dir)
     m = _gopher_metrics(
         src, keep_words=True, extra_cols=("text", "source")
     )
@@ -3886,27 +3850,15 @@ def _five_signal_annotate(spark, sf_dir, src):
         "gopher_keep",
         _nb_logit_col(F.col("feats"), lam, pri).alias("nb_logit"),
     )
-    out = scored.join(hx, "h")
-    for fam in BANDED_FAMILIES:
-        flags = _flag_index(fam, spark, sf_dir)
-        out = out.join(
-            flags.withColumn(fam.kind, F.lit(True)), "doc_id", "left"
-        )
-    return (
-        out.join(cfl, "doc_id", "left")
-        .select(
-            "doc_id",
-            "source",
-            "n_words",
-            (F.col("first_id") < F.col("doc_id")).alias("exact_dup"),
-            F.coalesce("nd", F.lit(False)).alias("near_dup"),
-            F.coalesce("px", F.lit(False)).alias("pixel_dup"),
-            F.coalesce("au", F.lit(False)).alias("audio_dup"),
-            F.coalesce("cont", F.lit(False)).alias("contaminated"),
-            "gopher_keep",
-            "nb_logit",
-        )
+    out = scored.join(hx, "h").withColumn(
+        _LADDER["exact"], F.col("first_id") < F.col("doc_id")
     )
+    for kind, flags in flag_sets.items():
+        col = _LADDER[kind]
+        out = out.join(
+            flags.withColumn(col, F.lit(True)), "doc_id", "left"
+        ).withColumn(col, F.coalesce(col, F.lit(False)))
+    return out.select("doc_id", "source", "n_words", *_SIGNALS)
 
 
 from .pipeline_llm import (  # noqa: E402
@@ -4043,15 +3995,7 @@ def streaming_token_budget_monitor(spark, sf_dir):
             "source",
             "n_words",
             "alloc_tokens",
-            (
-                ~F.col("exact_dup")
-                & ~F.col("near_dup")
-                & ~F.col("pixel_dup")
-                & ~F.col("audio_dup")
-                & ~F.col("contaminated")
-                & F.col("gopher_keep")
-                & (F.col("nb_logit") > 0)
-            ).alias("admitted"),
+            _ladder_keep(_LADDER).alias("admitted"),
         )
     )
     spent = F.sum(
@@ -4123,17 +4067,8 @@ def _budget_alloc_from_ann(ann):
     between this planner pass and every replayed epoch's decisions
     (r15: the annotation is a pure per-doc function, so the planner
     re-annotating the window was a redundant full corpus pass)."""
-    keep = (
-        ~F.col("exact_dup")
-        & ~F.col("near_dup")
-        & ~F.col("pixel_dup")
-        & ~F.col("audio_dup")
-        & ~F.col("contaminated")
-        & F.col("gopher_keep")
-        & (F.col("nb_logit") > 0)
-    )
     q = (
-        ann.where(keep)
+        ann.where(_ladder_keep(_LADDER))
         .groupBy("source")
         .agg(F.sum("n_tok").cast("long").alias("q_tok"))
         .withColumn(
@@ -4170,10 +4105,7 @@ def _budget_alloc_from_ann(ann):
 #: select) — the empty-drain close branch builds a typed empty frame
 #: from it rather than crashing on a None epoch read.
 _GATE_DEC_SCHEMA = (
-    "doc_id long, source string, epoch long, n_tok long, "
-    "exact_dup boolean, near_dup boolean, pixel_dup boolean, "
-    "audio_dup boolean, "
-    "contaminated boolean, gopher_keep boolean, nb_logit double, "
+    f"doc_id long, source string, epoch long, n_tok long, {_SIGNALS_DDL}, "
     "quality boolean, admitted boolean, alloc_tokens long"
 )
 
@@ -4277,9 +4209,10 @@ def _budget_gate_drain(
     gate window (the ':ndlive' delta) is replayed _BUDGET_REPLAYS
     whole epochs (one parquet file per epoch, maxFilesPerTrigger=1 —
     the multi-epoch firehose), and foreachBatch decides EVERY
-    arrival: the six fused admission signals (1:1 lookups against
-    the persisted hash / near-dup / contamination flag indexes + the
-    row-local Gopher gate + the served NB logit), then the LAST
+    arrival: the seven admission signals of _five_signal_annotate
+    (1:1 lookups against the persisted hash, near-dup, pixel, audio
+    and contamination flag indexes + the row-local Gopher gate + the
+    served NB logit), then the LAST
     rung — budget_exhausted — from a deterministic cutoff: a
     quality-surviving arrival is admitted iff the cumulative
     quality-surviving tokens of its source in GLOBAL (epoch, doc_id)
@@ -4306,7 +4239,7 @@ def _budget_gate_drain(
         raise ValueError(f"unknown gate token unit {tok_unit!r}")
     delta = (
         table(spark, sf_dir, "documents")
-        .where(~_ndlive_base_pred())
+        .where(~_base_split("doc_id", _NDLIVE_TAG))
         .select("doc_id", "text", "source")
     )
     # Resume only behind the _staged marker (written AFTER the whole
@@ -4439,15 +4372,7 @@ def _budget_gate_drain(
         # count — so the cutoff still decides in the unit the
         # payload ships)
         ann = batch_df.select("doc_id").join(ann0, "doc_id")
-        keep = (
-            ~F.col("exact_dup")
-            & ~F.col("near_dup")
-            & ~F.col("pixel_dup")
-            & ~F.col("audio_dup")
-            & ~F.col("contaminated")
-            & F.col("gopher_keep")
-            & (F.col("nb_logit") > 0)
-        )
+        keep = _ladder_keep(_LADDER)
         al = sess.createDataFrame(
             alloc_rows, "source string, alloc_tokens long"
         )
@@ -4481,13 +4406,7 @@ def _budget_gate_drain(
                 "source",
                 F.lit(int(epoch_id)).cast("long").alias("epoch"),
                 "n_tok",
-                "exact_dup",
-                "near_dup",
-                "pixel_dup",
-                "audio_dup",
-                "contaminated",
-                "gopher_keep",
-                "nb_logit",
+                *_SIGNALS,
                 "quality",
                 F.coalesce("admitted", F.lit(False)).alias("admitted"),
                 F.coalesce("alloc_tokens", F.lit(0)).alias(
@@ -4638,7 +4557,7 @@ _GATE_BUDGET_REPORT_SQL = _gate_budget_report_sql(_GATE_BUDGET_DEC_CTES)
     f"multi-epoch firehose ({_BUDGET_REPLAYS} whole epochs, one more "
     "than the repeat cap, so every source with a nonzero allocation "
     "EXHAUSTS its budget mid-run by construction at any scale "
-    "factor), and each arrival gets the six fused signals plus "
+    "factor), and each arrival gets the seven ladder signals plus "
     "budget_exhausted: a quality-surviving arrival is admitted iff "
     "its source's cumulative quality tokens in GLOBAL (epoch, "
     "doc_id) order stay within alloc_tokens — the plan arithmetic "
@@ -4654,7 +4573,7 @@ _GATE_BUDGET_REPORT_SQL = _gate_budget_report_sql(_GATE_BUDGET_DEC_CTES)
     "fails loudly rather than desynchronizing the ledger.  The "
     "graded table is the economics report grown by the new rung: "
     "per (source, epoch), first-failing-reason counts (exact > near "
-    "> pixel > audio > contaminated > gopher > NB > budget_exhausted "
+    "> pixel > audio > contamination > gopher > NB > budget_exhausted "
     "> admitted) "
     "that PARTITION n_arrivals, plus the admitted-token burn-down "
     "against alloc.  Scale: signals are 1:1 persisted-index lookups "
@@ -4674,31 +4593,15 @@ def _gate_budget_report(dec):
     """The budget gate's graded economics report over drained decision
     rows — factored so the kill-and-resume twin grades the SAME
     aggregation (a resumed run must produce the same truth)."""
-    e, nd = F.col("exact_dup"), F.col("near_dup")
-    px, au = F.col("pixel_dup"), F.col("audio_dup")
-    c = F.col("contaminated")
-    g, l = F.col("gopher_keep"), F.col("nb_logit")
-
-    def cnt(cond):
-        return F.sum(cond.cast("long")).cast("long")
-
     return (
         dec.groupBy("source", "epoch")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_arrivals"),
-            cnt(e).alias("n_exact_dup"),
-            cnt(~e & nd).alias("n_near_dup"),
-            cnt(~e & ~nd & px).alias("n_pixel_dup"),
-            cnt(~e & ~nd & ~px & au).alias("n_audio_dup"),
-            cnt(~e & ~nd & ~px & ~au & c).alias("n_contaminated"),
-            cnt(~e & ~nd & ~px & ~au & ~c & ~g).alias("n_gopher_fail"),
-            cnt(~e & ~nd & ~px & ~au & ~c & g & (l <= 0)).alias(
-                "n_nb_fail"
-            ),
-            cnt(F.col("quality") & ~F.col("admitted")).alias(
+            *_ladder_reasons(),
+            _count_if(F.col("quality") & ~F.col("admitted")).alias(
                 "n_budget_exhausted"
             ),
-            cnt(F.col("admitted")).alias("n_admitted"),
+            _count_if(F.col("admitted")).alias("n_admitted"),
             F.sum(
                 F.when(F.col("admitted"), F.col("n_tok")).otherwise(
                     F.lit(0)
@@ -5600,14 +5503,14 @@ def decontaminate_index_refresh(spark, sf_dir):
         ),
         idx_name="postings.parquet",
         seed_fn=lambda v0: _shingle5_arrays(
-            derived.where(_ndlive_base_pred())
+            derived.where(_base_split("doc_id", _NDLIVE_TAG))
         )
         .select("doc_id", F.explode("shs").alias("sh"))
         .write.parquet(v0),
         refresh_fn=lambda p, guard: refresh_bench_shingle_index(
             spark,
             p,
-            derived.where(~_ndlive_base_pred()),
+            derived.where(~_base_split("doc_id", _NDLIVE_TAG)),
             derived.where(
                 F.col("doc_id") % BENCH_REFRESH_REMOVE_MOD == 0
             ).select("doc_id"),

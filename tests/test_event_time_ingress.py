@@ -12,8 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from durablestreams_spark.analytics.core import table
-from durablestreams_spark.operators.streaming_queries import _event_ts_unit
+from durablestreams_spark.analytics.core import table, ts_unit_info
 
 UTC = dt.timezone.utc
 INSTANTS = [
@@ -62,7 +61,7 @@ def test_table_normalizes_physical_variants(spark, tmp_path, variant):
 )
 def test_event_ts_unit_sniffs_footer(tmp_path, variant, expected):
     sf_dir = _write_events(tmp_path, VARIANTS[variant])
-    assert _event_ts_unit(sf_dir) == expected
+    assert ts_unit_info(f"{sf_dir}/events.parquet")[0] == expected
 
 
 def test_stream_reader_matches_batch_values(spark, tmp_path):

@@ -48,7 +48,7 @@ def test_refresh_never_rereads_the_corpus_text(spark, tmp_path):
     but the index rows and the delta."""
     from durablestreams_spark.operators.streaming_queries import (
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -58,7 +58,7 @@ def test_refresh_never_rereads_the_corpus_text(spark, tmp_path):
         corpus,
         [(i, f"base document {i} about topic {i % 5}") for i in base_ids[:20]],
     )
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     # the refresh must survive the corpus text disappearing
     os.remove(corpus)
 
@@ -95,7 +95,7 @@ def test_refresh_aborts_on_lost_guard_race(spark, tmp_path):
 
     from durablestreams_spark.operators.streaming_queries import (
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -105,7 +105,7 @@ def test_refresh_aborts_on_lost_guard_race(spark, tmp_path):
         corpus,
         [(i, f"base document {i} some words here") for i in base_ids[:10]],
     )
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
     before = sorted(
@@ -145,7 +145,7 @@ def test_refresh_loses_to_a_held_lock(spark, tmp_path):
     nothing — the no-clobber contract under true concurrency."""
     from durablestreams_spark.operators.streaming_queries import (
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -155,7 +155,7 @@ def test_refresh_loses_to_a_held_lock(spark, tmp_path):
         corpus,
         [(i, f"base document {i} words words") for i in base_ids[:6]],
     )
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
     before = sorted(map(tuple, spark.read.parquet(idx_p).collect()))
@@ -179,7 +179,7 @@ def test_refresh_swap_is_atomic_for_readers(spark, tmp_path):
     and the path itself never stops existing."""
     from durablestreams_spark.operators.streaming_queries import (
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -189,7 +189,7 @@ def test_refresh_swap_is_atomic_for_readers(spark, tmp_path):
         corpus,
         [(i, f"base document {i} alpha beta") for i in base_ids[:6]],
     )
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p + ".v-genesis")
     os.symlink(idx_p + ".v-genesis", idx_p)
@@ -221,7 +221,7 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
     )
     from durablestreams_spark.operators.streaming_queries import (
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -232,7 +232,7 @@ def test_refresh_matches_full_rebuild(spark, tmp_path):
     ]
     corpus = tmp_path / "documents.parquet"
     _write_docs(corpus, rows)
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
 
@@ -602,7 +602,7 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
         _await_and_audit,
         _delta_replay_stream,
         SIMHASH_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -613,7 +613,7 @@ def test_live_reader_across_concurrent_guarded_swap(spark, tmp_path):
         [(i, f"base document {i} about subject {i % 4} words")
          for i in base_ids[:10]],
     )
-    base_p = _base_index_path(SIMHASH_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(SIMHASH_FAMILY, spark, str(tmp_path), base=True)
     live_idx = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, live_idx + ".v-genesis")
     os.symlink(live_idx + ".v-genesis", live_idx)
@@ -672,7 +672,7 @@ def test_pixel_refresh_never_redecodes_the_corpus(spark, tmp_path):
     the delta (historical images never re-decoded)."""
     from durablestreams_spark.operators.streaming_queries import (
         PIXEL_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -682,7 +682,7 @@ def test_pixel_refresh_never_redecodes_the_corpus(spark, tmp_path):
         corpus,
         [(i, f"pixel base doc {i}") for i in base_ids[:20]],
     )
-    base_p = _base_index_path(PIXEL_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(PIXEL_FAMILY, spark, str(tmp_path), base=True)
     os.remove(corpus)
 
     idx_p = str(tmp_path / "live_px_index.parquet")
@@ -712,7 +712,7 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
     from durablestreams_spark.operators.multimodal import AUDIO_MOD
     from durablestreams_spark.operators.streaming_queries import (
         AUDIO_FAMILY,
-        _base_index_path,
+        _band_index_path,
         refresh_band_index,
     )
 
@@ -722,7 +722,7 @@ def test_audio_refresh_never_redecodes_the_corpus(spark, tmp_path):
         corpus,
         [(i, f"audio base doc {i}") for i in base_ids[:40]],
     )
-    base_p = _base_index_path(AUDIO_FAMILY, spark, str(tmp_path))
+    base_p = _band_index_path(AUDIO_FAMILY, spark, str(tmp_path), base=True)
     os.remove(corpus)
 
     idx_p = str(tmp_path / "live_au_index.parquet")
@@ -775,7 +775,7 @@ def test_refresh_with_overlapping_delta_matches_full_rebuild(
             for i in base_ids[:30] + new_ids
         ],
     )
-    base_p = sq._base_index_path(fam, spark, str(tmp_path))
+    base_p = sq._band_index_path(fam, spark, str(tmp_path), base=True)
     idx_p = str(tmp_path / "live_index.parquet")
     shutil.copytree(base_p, idx_p)
     # the base artifact lives under /tmp, keyed by this test's dir name

@@ -4,8 +4,9 @@ SimHash text signatures, gate-image dHash keys and audio fingerprints
 share one definition of band rows, matching, refresh and flag index.
 These tests pin what the three families must keep in common: the
 shared per-batch matcher is exact against an all-pairs reference, and
-every persisted artifact keeps its cache identity, so caches built by
-earlier versions stay valid.
+every persisted artifact (and the exact-hash index beside them) keeps
+its cache identity and its rows, so caches built by earlier versions
+stay valid.
 """
 
 import dataclasses
@@ -24,9 +25,10 @@ SF_DIR = sf_dir("0.001")
 _PX = "ham3:b4x16:w18x16:m196:n60:e11.3:md5raster"
 _AU = "ham3:b4x16:fr65:amp200:n60:m5:ne4:ge7.3:re16000.4"
 
-#: (root base, fixture name, params) of every near-dup artifact, as
-#: written by the version that first built them.  A change here
-#: silently rebuilds (or orphans) every user's cached copy.
+#: (root base, fixture name, params) of every near-dup artifact and of
+#: the exact-hash index, as written by the version that first built
+#: them.  A change here silently rebuilds (or orphans) every user's
+#: cached copy.
 _CACHE_IDENTITY = [
     ("/tmp/durablestreams_neardup_v1", "documents", "simhash32:bands4x8:v1"),
     (
@@ -66,6 +68,12 @@ _CACHE_IDENTITY = [
         "documents",
         f"audiofp64:flag:{_AU}:v1",
     ),
+    ("/tmp/durablestreams_hashidx_v1", "documents", "md5:minid:v1"),
+    (
+        "/tmp/durablestreams_hashidx_base_v1",
+        "documents",
+        "md5:minid:base<cc:ndlive:v1",
+    ),
 ]
 
 
@@ -86,9 +94,13 @@ def test_cache_identity_of_every_neardup_artifact(spark, monkeypatch):
 
     monkeypatch.setattr(sq, "build_once", record)
     queries = all_queries()
-    calls = [lambda: sq._neardup_index(spark, SF_DIR)]
+    calls = [
+        lambda: sq._band_index_path(
+            sq.SIMHASH_FAMILY, spark, SF_DIR, base=False
+        )
+    ]
     calls += [
-        lambda fam=fam: sq._base_index_path(fam, spark, SF_DIR)
+        lambda fam=fam: sq._band_index_path(fam, spark, SF_DIR, base=True)
         for fam in sq.BANDED_FAMILIES
     ]
     calls += [
@@ -103,10 +115,33 @@ def test_cache_identity_of_every_neardup_artifact(spark, monkeypatch):
         lambda fam=fam: sq._flag_index(fam, spark, SF_DIR)
         for fam in sq.BANDED_FAMILIES
     ]
+    calls += [
+        lambda base=base: sq._exact_hash_index(spark, SF_DIR, base)
+        for base in (False, True)
+    ]
     for call in calls:
         with pytest.raises(_Recorded):
             call()
     assert seen == _CACHE_IDENTITY
+
+
+def test_full_simhash_index_rows_match_the_batch_signatures(spark):
+    """The whole-corpus SimHash index builds through the family's
+    _doc_bands path; its rows and types must equal the band rows of
+    the batch dedup_simhash aggregate it was first built from, so an
+    index cached by that build stays valid."""
+    from durablestreams_spark.analytics.core import table
+    from durablestreams_spark.operators.dedup import dedup_simhash
+
+    fam = sq.SIMHASH_FAMILY
+    docs = table(spark, SF_DIR, "documents")
+    got = sq._doc_bands(fam, docs).select(*fam.index_cols)
+    want = sq._band_rows(fam, dedup_simhash(spark, SF_DIR)).select(
+        *fam.index_cols
+    )
+    assert got.dtypes == want.dtypes
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
 
 
 # -- exactness of the shared per-batch matcher ------------------------------

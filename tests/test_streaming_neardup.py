@@ -79,7 +79,8 @@ def test_neardup_stream_is_stateless_and_index_is_persisted(spark):
     signature artifact (train-once/serve-many), not a live signature
     recompute."""
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_index,
+        SIMHASH_FAMILY,
+        _band_index_path,
         _neardup_stream_df,
     )
 
@@ -96,7 +97,9 @@ def test_neardup_stream_is_stateless_and_index_is_persisted(spark):
     # exactly one streaming relation (the docs stream), one static side
     assert analyzed.count("StreamingRelation") == 1
     # the static side is the persisted artifact under the cache root
-    idx = _neardup_index(spark, SF_DIR)
+    idx = spark.read.parquet(
+        _band_index_path(SIMHASH_FAMILY, spark, SF_DIR, base=False)
+    )
     files = idx.inputFiles()
     assert files and all(
         "/durablestreams_neardup_v1/" in f for f in files
@@ -125,10 +128,11 @@ def test_neardup_index_cache_invalidates_on_params(spark, tmp_path):
         write_marker,
     )
     from durablestreams_spark.operators.streaming_queries import (
-        _neardup_index,
+        SIMHASH_FAMILY,
+        _band_index_path,
     )
 
-    _neardup_index(spark, SF_DIR)  # ensure built
+    _band_index_path(SIMHASH_FAMILY, spark, SF_DIR, base=False)
     root = os.path.join(
         "/tmp/durablestreams_neardup_v1",
         os.path.basename(os.path.normpath(SF_DIR)),
@@ -144,7 +148,7 @@ def test_neardup_index_cache_invalidates_on_params(spark, tmp_path):
         marker, SF_DIR, name="documents", params="simhash32:bands4x8:v1"
     )
     # restore by rebuilding through the public path
-    _neardup_index(spark, SF_DIR)
+    _band_index_path(SIMHASH_FAMILY, spark, SF_DIR, base=False)
     assert marker_current(
         marker, SF_DIR, name="documents", params="simhash32:bands4x8:v1"
     )

@@ -197,7 +197,7 @@ def test_streaming_epoch_writer_matches_batch_on_same_delta(spark, tmp_path):
     assert live1 == live2, "epoch delivery not reproducible"
 
     delta = table(spark, SF_DIR, "documents").where(
-        ~sq._ndlive_base_pred()
+        ~sq._base_split("doc_id", sq._NDLIVE_TAG)
     )
     batch = sorted(
         map(
